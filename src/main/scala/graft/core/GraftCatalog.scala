@@ -190,15 +190,7 @@ final class GraftCatalog(val spark: SparkSession) {
   def insertSelect(name: String, rows: DataFrame): DataFrame = {
     require(!rows.columns.contains("id"),
       "INSERT … SELECT: the dialect synthesizes id — don't project one")
-    val base = counters.getOrElse(name, 0L)
-    val pinned = rows.localCheckpoint()
-    val schema0 = pinned.schema
-    val rdd = pinned.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((base + 1 + i) +: r.toSeq) }
-    val withId = spark.createDataFrame(rdd,
-      StructType(StructField("id", LongType) +: schema0.fields))
-      .localCheckpoint()
-    counters += name -> (base + withId.count())
+    val withId = stampIds(name, rows)
     commit(name, tables.get(name) match {
       case Some(existing) => existing.unionByName(withId, allowMissingColumns = true)
       case None => withId
@@ -222,45 +214,33 @@ final class GraftCatalog(val spark: SparkSession) {
           if (table(name).columns.contains("id")) {
             require(!rows.columns.contains("id"),
               "MERGE inserts synthesize id — don't project one")
-            val base = counters.getOrElse(name, 0L)
-            val pinned = rows.localCheckpoint()
-            val rdd = pinned.rdd.zipWithIndex().map { case (r, i) =>
-              Row.fromSeq((base + 1 + i) +: r.toSeq) }
-            val withId = spark.createDataFrame(rdd,
-              StructType(StructField("id", LongType) +: pinned.schema.fields))
-              .localCheckpoint()
-            counters += name -> (base + withId.count())
-            withId
+            stampIds(name, rows)
           } else rows
         commit(name, updated.unionByName(delta, allowMissingColumns = true))
         Some(delta)
     }
 
-  /** M2 UPDATE … SET … WHERE (copy-on-write `when` projection). */
-  def update(name: String, setField: String, setValue: Any,
-             where: org.apache.spark.sql.Column): Unit = {
-    val df = table(name)
-    val v = setValue match { case i: Int => lit(i.toLong); case x => lit(x) }
-    commit(name, df.withColumn(setField,
-      when(where, v).otherwise(if (df.columns.contains(setField)) col(setField)
-      else lit(null))))
+  /** Prepend ids that continue `name`'s monotonic counter to `rows`: the
+    * rows are pinned (localCheckpoint) so the ids stay stable across
+    * re-reads, stamped by zipWithIndex — one pass over the delta only,
+    * never the table — and pinned again; the counter then advances past
+    * them. */
+  private def stampIds(name: String, rows: DataFrame): DataFrame = {
+    val base = counters.getOrElse(name, 0L)
+    val pinned = rows.localCheckpoint()
+    val rdd = pinned.rdd.zipWithIndex().map { case (r, i) =>
+      Row.fromSeq((base + 1 + i) +: r.toSeq) }
+    val withId = spark.createDataFrame(rdd,
+      StructType(StructField("id", LongType) +: pinned.schema.fields))
+      .localCheckpoint()
+    counters += name -> (base + withId.count())
+    withId
   }
 
-  /** [[update]] with a computed right-hand side (`set t.a = t.b + 1` —
-    * dialect growth): same copy-on-write `when` projection, the value a
-    * Column over the row. */
-  def updateExpr(name: String, setField: String, value: org.apache.spark.sql.Column,
-                 where: org.apache.spark.sql.Column): Unit = {
-    val df = table(name)
-    commit(name, df.withColumn(setField,
-      when(where, value).otherwise(if (df.columns.contains(setField)) col(setField)
-      else lit(null))))
-  }
-
-  /** Multi-assignment [[updateExpr]] (round 11): every right-hand side
+  /** M2 UPDATE … SET … WHERE (round 11): every right-hand side
     * evaluates against the BEFORE image SIMULTANEOUSLY (SQL UPDATE
     * semantics — `set a = b, b = a` swaps), lowered as ONE copy-on-write
-    * projection via withColumns. */
+    * `when` projection via withColumns. */
   def updateExprs(name: String,
                   sets: Seq[(String, org.apache.spark.sql.Column)],
                   where: org.apache.spark.sql.Column): Unit = {

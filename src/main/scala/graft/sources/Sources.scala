@@ -105,7 +105,7 @@ object Sources {
     * leaves no live dir at `path` and the previous contents at
     * `<path>.compact.old` — rename them back so readers see the
     * pre-compaction state (the rewrite is then simply redone). */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val old = new org.apache.hadoop.fs.Path(path + ".compact.old")
     if (!fs.exists(hp) && fs.exists(old))
@@ -149,10 +149,10 @@ object Sources {
     * for UNPARTITIONED dirs (partition columns would be dropped on
     * rewrite — rejected up front).
     *
-    * MUST run while the writing stream is STOPPED (same contract as
-    * [[graft.streaming.Streams.compactStore]]): the rewrite snapshots the
-    * file listing, so a micro-batch appended mid-compaction would be
-    * dropped by the swap. The crash-safety protocol protects against
+    * MUST run while the writing stream is STOPPED (the same contract as
+    * the per-batch store compactions in [[graft.streaming.Streams]]): the
+    * rewrite snapshots the file listing, so a micro-batch appended
+    * mid-compaction would be dropped by the swap. The crash-safety protocol protects against
     * failures, not concurrent writers. */
   def compactParquet(spark: SparkSession, path: String,
                      targetBytes: Long = 128L << 20): Unit = {

@@ -7312,7 +7312,6 @@ object HashQL {
               "linking every source (a.k = b.k) — the plan still " +
               "contains a cartesian join")
         }
-        def aggColumns: Seq[Column] = aggsOf(cat, items)
         // aggregates SPELLED in HAVING but not projected (round-12 — the
         // TPC-H Q18 idiom `having sum(l_quantity) > 300`): the grouped
         // branch adds them to the same agg pass under their auto-aliases
@@ -7986,13 +7985,6 @@ object HashQL {
     // bare names in "local" predicates resolve against the INNER frame,
     // so a silently misclassified correlation yields wrong aggregates).
     val (eqCorr, rest) = sub.wheres.partition(p => corrPairOf(subTables)(p).isDefined)
-    def flipOp(op: String): String = op match {
-      case "<" => ">"
-      case ">" => "<"
-      case "<=" => ">="
-      case ">=" => "<="
-      case o => o
-    }
     def rangePair(p: Pred): Option[(ColRef, String, ColRef)] =
       rangePairOf(subTables)(p)
     val (rangeCorr, local) = rest.partition(p => rangePair(p).isDefined)
@@ -8174,13 +8166,6 @@ object HashQL {
     // would answer wrongly instead of erroring).
     val (cross, local) = rest.partition(p =>
       predTables(p).exists(!subTables.contains(_)))
-    def flipOp(op: String): String = op match {
-      case "<" => ">"
-      case ">" => "<"
-      case "<=" => ">="
-      case ">=" => "<="
-      case o => o
-    }
     // each cross conjunct → (inner ref, outer ref, condition builder
     // taking the reserved inner Column and the outer Column)
     def crossForm(p: Pred): (ColRef, ColRef, (Column, Column) => Column) = {
@@ -8205,7 +8190,7 @@ object HashQL {
         case ExprCmp(ECol(a), op @ ("=" | "<" | ">" | "<=" | ">="), ECol(b)) =>
           oriented(a, b) match {
             case Some((i, o, flipped)) =>
-              val op2 = if (flipped) flipOp(op) else op
+              val op2 = if (flipped) flipCmp(op) else op
               (i, o, (ic, oc) =>
                 if (op2 == "=") ic === oc
                 else graft.core.Compare.cmp(ic, op2, oc))
@@ -8254,15 +8239,7 @@ object HashQL {
         // witness (`∃ s: s.a < x AND s.b > y`) that independent min/max
         // stats cannot answer — banded through [[bandedRangeExists]]'s
         // bucket equi-join, never a nested loop.
-        def rangeForm(p: Pred): Option[(ColRef, String, ColRef)] =
-          p match {
-            case ExprCmp(ECol(a), op0 @ ("<" | ">" | "<=" | ">="),
-                         ECol(b)) =>
-              if (subTables.contains(a.table)) Some((a, op0, b))
-              else Some((b, flipOp(op0), a))
-            case _ => None
-          }
-        val ranges = cross.flatMap(rangeForm)
+        val ranges = cross.flatMap(rangePairOf(subTables))
         if (crossForms.length == 2 && ranges.length == 2) {
           require(flagCol.isEmpty,
             "a two-range EXISTS is supported as a top-level WHERE " +
@@ -8296,7 +8273,7 @@ object HashQL {
             mn.isNotNull && ((mn =!= o) || (mx =!= o))
           case ExprCmp(ECol(a), op0, ECol(_)) =>
             // normalize to inner-vs-outer orientation (as crossForm)
-            val op2 = if (subTables.contains(a.table)) op0 else flipOp(op0)
+            val op2 = if (subTables.contains(a.table)) op0 else flipCmp(op0)
             op2 match {
               // the easiest witness: min for < / <=, max for > / >=;
               // NULL stats (empty/all-NULL S) and NULL x collapse to

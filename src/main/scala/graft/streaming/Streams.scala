@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured-Streaming surface (SURVEY §2.7).
   *
@@ -16,6 +18,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   2. windowed / sessionized aggregation as new capability: the same
   *      groupBy(window(...)) plan TimeSuite checks in batch runs
   *      incrementally here with watermark-bounded state.
+  *
+  * PER-BATCH STORES. Every store kept fresh here without streaming state
+  * — the near-dup signature stores, the decontamination and snapshot-diff
+  * outputs, and the summary stores (aggregate, sketch, Count-Min, OHLC,
+  * histogram, heavy-hitter, data-card partials) — follows one protocol,
+  * implemented once below:
+  *   - Sink: micro-batch `id` OVERWRITES `<store>/batch=<id>`, so a batch
+  *     replayed after a crash rewrites its own directory instead of
+  *     appending duplicates; readers see a table partitioned by `batch`.
+  *   - Seed: negative ids are seeds, clear of the stream's ids (which
+  *     start at 0). The `seed*Store` writers and every compaction write
+  *     `batch=-1`; stores compacted by older versions may hold `batch=-2`,
+  *     `-3`, … and still read as seeds.
+  *   - Watermark: a compaction records the highest batch id it folded in
+  *     `<store>/_folded_through`, and readers skip ids at or below it, so
+  *     a batch replayed after the compaction is not counted twice. Batch
+  *     ids must stay monotonic: once a store has been compacted, keep the
+  *     stream's checkpoint across restarts (a reset restarts ids at 0) or
+  *     start a fresh store.
+  *   - Compaction: run while the stream is STOPPED (a concurrent batch
+  *     could be dropped by the swap). The live rows are rewritten into one
+  *     `batch=-1` seed plus the marker and swapped in through
+  *     [[graft.sources.Sources.swapDir]]: a crash leaves either the old
+  *     store or the new one, and a crash between the swap's two renames is
+  *     recovered by the next read or compaction of the store.
   *
   * Everything takes plain DataFrames, so MemoryStream drives the tests and
   * `readStream.parquet` drives production — the plans are identical.
@@ -150,6 +177,86 @@ object Streams {
                    outPath: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     maintainJoinN(stream, Seq(dim -> joinExpr), outPath, checkpoint)
 
+  // ---- the per-batch store protocol (see the object scaladoc) ----
+
+  /** The one sink of the per-batch stores: micro-batch `id` of `stream`
+    * overwrite-writes `frame(batch)` to `<path>/batch=<id>`. */
+  private def batchSink(stream: DataFrame, path: String, checkpoint: String)(
+      frame: DataFrame => DataFrame): StreamingQuery =
+    releasingBatchSink(stream, path, checkpoint)(batch => (frame(batch), () => ()))
+
+  /** [[batchSink]] for a frame built on cached inputs: `frame` also
+    * returns their release, run once the batch's write is done. */
+  private def releasingBatchSink(stream: DataFrame, path: String, checkpoint: String)(
+      frame: DataFrame => (DataFrame, () => Unit)): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val (out, release) = frame(batch)
+        out.write.mode("overwrite").parquet(s"$path/batch=$batchId")
+        release()
+      }
+      .start()
+
+  /** The one reader of the per-batch stores: first recovers a stranded
+    * [[graft.sources.Sources.swapDir]] swap (a compaction that crashed
+    * between its two renames leaves only `<path>.compact.old`), then
+    * returns the live rows, `batch` column included — every seed (any
+    * negative id) and every batch above the `_folded_through` watermark.
+    * None when no store exists yet. */
+  private def readStore(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.sources.Sources.recoverSwap(fs, path)
+    if (!fs.exists(p)) None
+    else {
+      val w = foldedThrough(fs, p)
+      Some(spark.read.parquet(path).filter(col("batch") < 0 || col("batch") > w))
+    }
+  }
+
+  /** [[readStore]] for the folds, which need a store to fold. */
+  private def liveRows(spark: SparkSession, path: String): DataFrame =
+    readStore(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no per-batch store at $path"))
+
+  /** The highest batch id already folded into the store's seed; -1 when
+    * the store was never compacted. The marker is underscore-prefixed, so
+    * parquet reads skip it, and it lives inside the store dir, so the swap
+    * moves it together with the seed it describes. */
+  private def foldedThrough(fs: FileSystem, store: Path): Long = {
+    val p = new Path(store, "_folded_through")
+    if (!fs.exists(p)) -1L
+    else {
+      val in = fs.open(p)
+      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+        UTF_8).trim.toLong
+      finally in.close()
+    }
+  }
+
+  /** The one compaction of the per-batch stores; run it while the stream
+    * is stopped. Writes `seed(live rows)` as the single `batch=-1` seed,
+    * plus a `_folded_through` marker naming the highest batch id folded
+    * in, and swaps both in through [[graft.sources.Sources.swapDir]]. A
+    * no-op when no store exists. */
+  private def compactBatches(spark: SparkSession, path: String)(
+      seed: DataFrame => DataFrameWriter[Row]): Unit =
+    readStore(spark, path).foreach { live =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val through = fs.listStatus(p).iterator.map(_.getPath.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
+        .foldLeft(foldedThrough(fs, p))(math.max)
+      graft.sources.Sources.swapDir(spark, path) { tmp =>
+        seed(live).mode("overwrite").parquet(s"$tmp/batch=-1")
+        val out = fs.create(new Path(tmp, "_folded_through"))
+        try out.write(through.toString.getBytes(UTF_8))
+        finally out.close()
+      }
+    }
+
   /** Streaming NEAR-dup ingest — the MinHash-LSH twin of [[dedupStream]]
     * (which is exact-hash only): each micro-batch is first deduplicated
     * within itself (minhashLsh + cluster representatives), then checked
@@ -157,7 +264,7 @@ object Streams {
     * admitted; survivors are appended to `outPath` and their signatures to
     * the store.
     *
-    * State lives in three parquet stores, not executor memory:
+    * State lives in three per-batch stores, not executor memory:
     *  - `store/bands`: (doc_id, bandHash) partitioned by band — the LSH
     *    index; candidate generation is an equi-join on (band, bandHash).
     *  - `store/shingles`: (doc_id, sh) — shingle-hash sets for exact
@@ -177,18 +284,15 @@ object Streams {
     * The per-batch JOIN OUTPUT is O(batch × collisions), but each batch
     * SCANS the whole band store (it grows with the admitted corpus, like
     * any dedup index) — run [[compactStore]] periodically between restarts
-    * to rewrite the accumulated per-batch directories into one
-    * (band, bandHash)-bucketed batch so the candidate join reads co-located
-    * buckets instead of thousands of small files.
+    * so the candidate join reads co-located buckets instead of thousands
+    * of small files.
     *
-    * Replay-idempotent: every write lands in a `batch=<id>` directory with
-    * overwrite semantics, so a crashed-and-replayed micro-batch rewrites
-    * exactly the same directories instead of appending duplicates — and
-    * readers see the stores as partitioned tables. Self-matches (a
-    * replayed batch seeing its OWN hashes/signatures already in the
-    * store) are excluded by doc id in both the front gate and the
-    * candidate join, so the replay re-admits the same rows instead of
-    * rejecting everything against itself.
+    * The stores and `outPath` follow the per-batch protocol, so a replayed
+    * micro-batch rewrites its own directories. Self-matches (a replayed
+    * batch seeing its OWN hashes/signatures already in the store) are
+    * excluded by doc id in both the front gate and the candidate join, so
+    * the replay re-admits the same rows instead of rejecting everything
+    * against itself.
     *
     * Admission policy: a document is rejected iff a verified jaccard ≥
     * threshold pair links it to an already-admitted doc (or to the batch's
@@ -214,11 +318,12 @@ object Streams {
         val spark = batch.sparkSession
         val hashesPath = s"$storePath/hashes"
         if (bloom == null)
-          bloom = if (exists(spark, hashesPath)) {
-            val hist = spark.read.parquet(hashesPath)
+          bloom = readStore(spark, hashesPath) match {
             // parquet count() is footer metadata — no data scan
-            hist.stat.bloomFilter("h", math.max(1024L, hist.count() * 4), 0.01)
-          } else org.apache.spark.util.sketch.BloomFilter.create(1L << 20, 0.01)
+            case Some(hist) =>
+              hist.stat.bloomFilter("h", math.max(1024L, hist.count() * 4), 0.01)
+            case None => org.apache.spark.util.sketch.BloomFilter.create(1L << 20, 0.01)
+          }
         if (bloomBc == null) bloomBc = spark.sparkContext.broadcast(bloom)
         // 1. within-batch dedup: keep each near-dup cluster's representative
         //    (bands/rowsPerBand passed explicitly so the within-batch and
@@ -230,20 +335,22 @@ object Streams {
         //    seen) are exact-confirmed against the hash store; confirmed
         //    byte-identical re-crawls never reach candidate generation.
         //    Self-matches excluded by id for replay idempotence.
-        val fresh = if (exists(spark, hashesPath)) {
-          val bc = bloomBc
-          val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-          val suspects = withH
-            .filter(mightContain(col("__h")))
-            .select(col("__h").as("h")).distinct()
-          val seen = spark.read.parquet(hashesPath)
-            .join(broadcast(suspects), Seq("h"), "left_semi")
-            .select(col("doc_id").as("__seen_id"), col("h").as("__seen_h"))
-            .distinct()
-          withH.join(broadcast(seen),
-            col("__h") === col("__seen_h") && col(idCol) =!= col("__seen_id"),
-            "left_anti")
-        } else withH
+        val fresh = readStore(spark, hashesPath) match {
+          case Some(hashes) =>
+            val bc = bloomBc
+            val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
+            val suspects = withH
+              .filter(mightContain(col("__h")))
+              .select(col("__h").as("h")).distinct()
+            val seen = hashes
+              .join(broadcast(suspects), Seq("h"), "left_semi")
+              .select(col("doc_id").as("__seen_id"), col("h").as("__seen_h"))
+              .distinct()
+            withH.join(broadcast(seen),
+              col("__h") === col("__seen_h") && col(idCol) =!= col("__seen_id"),
+              "left_anti")
+          case None => withH
+        }
         val sh = fresh.select(col(idCol), col(textCol), col("__h"),
           shingle_hashes(col(textCol)).as("sh")).cache()
         sh.count()
@@ -254,23 +361,24 @@ object Streams {
             .as(Seq("band", "bandHash")))
         // 3. candidates vs the admitted store: band equi-join, then exact
         //    jaccard verification against stored shingle sets
-        val dropIds = if (exists(spark, s"$storePath/bands")) {
-          val storeBands = spark.read.parquet(s"$storePath/bands")
-          val cand = banded.join(storeBands
-              .select(col("doc_id").as("old_id"), col("band"), col("bandHash")),
-              Seq("band", "bandHash"))
-            .filter(col("old_id") =!= col(idCol)) // replayed batch vs itself
-            .select(col(idCol), col("old_id")).distinct()
-          val storeSh = spark.read.parquet(s"$storePath/shingles")
-          cand
-            .join(sh.select(col(idCol), col("sh").as("shNew")), idCol)
-            .join(storeSh.select(col("doc_id").as("old_id"), col("sh").as("shOld")), "old_id")
-            .withColumn("inter", size(array_intersect(col("shNew"), col("shOld"))).cast("double"))
-            .withColumn("jaccard", round(col("inter") /
-              (size(col("shNew")) + size(col("shOld")) - col("inter")), 4))
-            .filter(col("jaccard") >= threshold)
-            .select(col(idCol)).distinct()
-        } else kept.limit(0).select(col(idCol))
+        val dropIds = readStore(spark, s"$storePath/bands") match {
+          case Some(storeBands) =>
+            val cand = banded.join(storeBands
+                .select(col("doc_id").as("old_id"), col("band"), col("bandHash")),
+                Seq("band", "bandHash"))
+              .filter(col("old_id") =!= col(idCol)) // replayed batch vs itself
+              .select(col(idCol), col("old_id")).distinct()
+            val storeSh = liveRows(spark, s"$storePath/shingles")
+            cand
+              .join(sh.select(col(idCol), col("sh").as("shNew")), idCol)
+              .join(storeSh.select(col("doc_id").as("old_id"), col("sh").as("shOld")), "old_id")
+              .withColumn("inter", size(array_intersect(col("shNew"), col("shOld"))).cast("double"))
+              .withColumn("jaccard", round(col("inter") /
+                (size(col("shNew")) + size(col("shOld")) - col("inter")), 4))
+              .filter(col("jaccard") >= threshold)
+              .select(col(idCol)).distinct()
+          case None => kept.limit(0).select(col(idCol))
+        }
         val admitted = sh.join(dropIds, Seq(idCol), "left_anti").cache()
         admitted.count()
         // 4. write survivors + their signatures into per-batch directories
@@ -303,59 +411,20 @@ object Streams {
       .start()
   }
 
-
-  /** Compact the [[nearDupIngest]] signature store: the accumulated
-    * per-batch directories are rewritten into ONE consolidated batch — the
+  /** Compact the [[nearDupIngest]] signature store while the stream is
+    * stopped: each of its three stores becomes one `batch=-1` seed — the
     * band index re-bucketed on (band, bandHash) so the candidate equi-join
-    * reads co-located buckets, the shingle store coalesced out of its
-    * many tiny per-batch files. Admission semantics are unchanged (same
-    * rows, different layout) — proven by StreamsSpec.
-    *
-    * Run while the stream is STOPPED (between restarts): a concurrent
-    * micro-batch could observe a half-swapped store. The swap itself is
-    * crash-safe in every window: write the consolidated copy OUTSIDE the
-    * store, rename it in as a fresh NEGATIVE batch id (streaming batch ids
-    * start at 0, so no replayed micro-batch can ever overwrite it; each
-    * compaction takes the next unused negative id), and only then delete
-    * the superseded batch directories. A crash before the rename leaves
-    * the old store untouched; a crash between rename and deletes leaves
-    * duplicated rows, which are benign — candidate generation `distinct`s
-    * before verification. Replay idempotence (overwrite of `batch=<id>`)
-    * is preserved for every batch after the compaction point. */
+    * reads co-located buckets, the shingle and hash stores coalesced out
+    * of their many tiny per-batch files. Admission semantics are unchanged
+    * (same rows, different layout) — proven by StreamsSpec. */
   def compactStore(spark: SparkSession, storePath: String, buckets: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swap(dir: String)(rewrite: (DataFrame, String) => Unit): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) return
-      val batchIds = fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val target = s"batch=${math.min(if (batchIds.isEmpty) 0L else batchIds.min, 0L) - 1L}"
-      val tmp = new org.apache.hadoop.fs.Path(dir + ".compact_tmp")
-      fs.delete(tmp, true)
-      rewrite(spark.read.parquet(dir), tmp.toString)
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(p, target)),
-        s"compaction rename failed for $dir")
-      fs.listStatus(p).map(_.getPath)
-        .filter(q => q.getName.startsWith("batch=") && q.getName != target)
-        .foreach(q => fs.delete(q, true))
-    }
-    swap(s"$storePath/bands") { (df, out) =>
-      df.select(col("doc_id"), col("band"), col("bandHash"))
+    compactBatches(spark, s"$storePath/bands")(
+      _.select(col("doc_id"), col("band"), col("bandHash"))
         .repartition(buckets, col("band"), col("bandHash"))
-        .write.mode("overwrite").partitionBy("band").parquet(out)
-    }
-    swap(s"$storePath/shingles") { (df, out) =>
-      df.select(col("doc_id"), col("sh"))
-        .coalesce(math.max(1, buckets / 4))
-        .write.mode("overwrite").parquet(out)
-    }
-    swap(s"$storePath/hashes") { (df, out) =>
-      df.select(col("doc_id"), col("h"))
-        .coalesce(math.max(1, buckets / 4))
-        .write.mode("overwrite").parquet(out)
-    }
+        .write.partitionBy("band"))
+    for (sub <- Seq("shingles", "hashes"))
+      compactBatches(spark, s"$storePath/$sub")(
+        _.drop("batch").coalesce(math.max(1, buckets / 4)).write)
   }
 
   /** Streaming decontamination: drop, from every micro-batch, documents
@@ -365,38 +434,28 @@ object Streams {
     * instead of being scrubbed out later. The benchmark is an eval-suite
     * table (tiny, static); its signatures recompute per batch inside
     * `crossNearDup` — a few hundred rows of scan-side kernel work, the
-    * cost of keeping exactly one implementation of the check.
-    *
-    * Replay-idempotent like [[nearDupIngest]]: survivors land in
-    * overwrite-semantics `batch=<id>` directories, so a crashed-and-
-    * replayed micro-batch rewrites the same directory. */
+    * cost of keeping exactly one implementation of the check. Survivors
+    * land in a per-batch store at `outPath`. */
   def decontaminateStream(docs: DataFrame, benchmark: DataFrame,
                           textCol: String, idCol: String, threshold: Double,
                           outPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // explicit cache lifetime instead of Pipeline.decontaminate's
-        // localCheckpoint: a checkpointed frame per micro-batch would pin
-        // storage blocks until a driver GC, accumulating over a
-        // long-running stream. crossNearDup's pairs are EAGER+CACHED, so
-        // the anti-join reads the cache during the write; release after.
-        val pairs = graft.llm.Dedup.crossNearDup(
-          batch, benchmark, textCol, idCol, threshold)
-        val contaminated = pairs.select(col("a").as(idCol)).distinct()
-        batch.join(contaminated, Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        pairs.unpersist()
-        () // foreachBatch needs the Unit-returning overload
-      }
-      .start()
+    releasingBatchSink(docs, outPath, checkpoint) { batch =>
+      // explicit cache lifetime instead of Pipeline.decontaminate's
+      // localCheckpoint: a checkpointed frame per micro-batch would pin
+      // storage blocks until a driver GC, accumulating over a
+      // long-running stream. crossNearDup's pairs are EAGER+CACHED, so
+      // the anti-join reads the cache during the write; release after.
+      val pairs = graft.llm.Dedup.crossNearDup(
+        batch, benchmark, textCol, idCol, threshold)
+      val contaminated = pairs.select(col("a").as(idCol)).distinct()
+      (batch.join(contaminated, Seq(idCol), "left_anti"), () => pairs.unpersist())
+    }
 
   /** Incremental twin of [[graft.llm.Snapshot.diff]] — the new snapshot
     * (v2) arrives as a STREAM; each micro-batch classifies its documents
     * against the at-rest v1 digest table (added / changed / unchanged) and
-    * writes `(id, status)` to a replay-idempotent `batch=<id>` directory.
+    * writes `(id, status)` to a per-batch store at `outPath`.
     * The v1 side is reduced to `(id, digest)` ONCE and cached — each batch
     * joins 16-byte digests, never documents. Removals are only decidable
     * once the stream is complete: [[snapshotDiffRemoved]] anti-joins v1
@@ -410,20 +469,14 @@ object Streams {
       : (org.apache.spark.sql.streaming.StreamingQuery, DataFrame) = {
     // ONE digest definition, shared with the batch diff (Snapshot.digests)
     val v1d = graft.llm.Snapshot.digests(v1, idCol, payloadCols, "h1").cache()
-    val q = v2.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.llm.Snapshot.digests(batch, idCol, payloadCols, "h2")
-          .join(v1d, Seq(idCol), "left_outer")
-          .select(col(idCol),
-            when(col("h1").isNull, "added")
-              .when(col("h1") === col("h2"), "unchanged")
-              .otherwise("changed").as("status"))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
+    val q = batchSink(v2, outPath, checkpoint) { batch =>
+      graft.llm.Snapshot.digests(batch, idCol, payloadCols, "h2")
+        .join(v1d, Seq(idCol), "left_outer")
+        .select(col(idCol),
+          when(col("h1").isNull, "added")
+            .when(col("h1") === col("h2"), "unchanged")
+            .otherwise("changed").as("status"))
+    }
     (q, v1d)
   }
 
@@ -435,46 +488,40 @@ object Streams {
   def snapshotDiffRemoved(spark: SparkSession, v1: DataFrame, idCol: String,
                           outPath: String): DataFrame = {
     val all = v1.select(col(idCol))
-    if (!exists(spark, outPath))
-      return all.select(col(idCol), lit("removed").as("status"))
-    val seen = spark.read.parquet(outPath).select(col(idCol))
-    all.join(seen, Seq(idCol), "left_anti")
-      .select(col(idCol), lit("removed").as("status"))
+    val unseen = readStore(spark, outPath) match {
+      case Some(seen) => all.join(seen.select(col(idCol)), Seq(idCol), "left_anti")
+      case None => all
+    }
+    unseen.select(col(idCol), lit("removed").as("status"))
   }
 
-  /** Running data card: each micro-batch appends its per-language PARTIAL
+  /** Running data card: each micro-batch stores its per-language PARTIAL
     * aggregates (doc/token counts + fixed-point quality sum — all exact
     * integers, so partials fold without float drift) and
     * [[corpusStatsTotal]] re-aggregates the partials into the current
-    * card. The partial table grows by ≤ |languages| rows per batch —
+    * card. The partial store grows by ≤ |languages| rows per batch —
     * compaction-free for any realistic stream lifetime, and the fold is
     * associative so the running card always equals the batch
     * `corpus_stats_by_lang` over everything ingested so far. */
   def corpusStatsStream(docs: DataFrame, textCol: String, outPath: String,
                         checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.llm.TextAnalysis
-        batch
-          .groupBy(TextAnalysis.langId(col(textCol)).as("lang"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(TextAnalysis.tokenCount(col(textCol)).cast("long")).as("n_tokens"),
-            sum(round(TextAnalysis.qualityScore(col(textCol)) * 10000, 0)
-              .cast("long")).as("quality_fp"))
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(docs, outPath, checkpoint) { batch =>
+      import graft.llm.TextAnalysis
+      batch
+        .groupBy(TextAnalysis.langId(col(textCol)).as("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(TextAnalysis.tokenCount(col(textCol)).cast("long")).as("n_tokens"),
+          sum(round(TextAnalysis.qualityScore(col(textCol)) * 10000, 0)
+            .cast("long")).as("quality_fp"))
+    }
 
   /** Fold the partials of [[corpusStatsStream]] into the current
     * per-language card (avg quality = exact fixed-point sum over exact
     * count, one double division at the end — same arithmetic as the batch
     * corpus_stats_by_lang oracle query). */
   def corpusStatsTotal(spark: SparkSession, outPath: String): DataFrame =
-    spark.read.parquet(outPath)
+    liveRows(spark, outPath)
       .groupBy(col("lang"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
@@ -528,8 +575,8 @@ object Streams {
 
   /** Incremental maintenance for a registered AGGREGATE view (the
     * generalization of [[corpusStatsStream]] to arbitrary count/sum/min/max
-    * summaries — VERDICT r5 §2): each micro-batch writes its per-group
-    * PARTIAL aggregates under `storePath/batch=<id>`, and [[foldAggregate]]
+    * summaries — VERDICT r5 §2): each micro-batch stores its per-group
+    * PARTIAL aggregates in a per-batch store, and [[foldAggregate]]
     * re-aggregates the partials into the CURRENT summary — associative, so
     * the fold always equals the batch re-materialization over everything
     * ingested so far (StreamsSpec equivalence). Feed the folded frame to
@@ -538,14 +585,10 @@ object Streams {
     *
     * Contract: INSERT-only maintenance (append streams — min/max cannot
     * retract; the reference's insert-time view maintenance has the same
-    * shape, server.py:806-894). Replay-idempotent: a restarted batch
-    * OVERWRITES its own `batch=<id>` directory, never double-counts —
-    * including a replay AFTER a compaction folded that batch into the
-    * seed (the compaction watermark excludes it from later folds). No
-    * streaming state store — partials are plain files, growing by
-    * ≤ |groups in batch| rows per batch; [[compactAggregateStore]] folds
-    * the accumulated partials back into one seed when the file count
-    * matters. Seed a non-empty table's initial summary with
+    * shape, server.py:806-894). No streaming state store — partials are
+    * plain files, growing by ≤ |groups in batch| rows per batch;
+    * [[compactAggregateStore]] folds them back into one seed when the file
+    * count matters. Seed a non-empty table's initial summary with
     * [[seedAggregateStore]] before starting the stream. */
   def maintainAggregate(stream: DataFrame, groupCols: Seq[String],
                         specs: Seq[AggSpec], storePath: String,
@@ -554,16 +597,9 @@ object Streams {
     require(specs.nonEmpty, "at least one AggSpec")
     require(specs.map(_.alias).distinct.size == specs.size,
       "AggSpec aliases must be distinct")
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(groupCols.map(col): _*)
-          .agg(specs.head.partial, specs.tail.map(_.partial): _*)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      _.groupBy(groupCols.map(col): _*)
+        .agg(specs.head.partial, specs.tail.map(_.partial): _*))
   }
 
   /** RETRACTION-aware maintenance (the DELETE/UPDATE half of incremental
@@ -577,8 +613,7 @@ object Streams {
     * limitation; serve those from facts or recompute). Read with
     * [[foldAggregateRetractive]], which also drops groups whose net
     * count reached zero (all rows retracted ⇒ the group no longer exists
-    * in the view, exactly as a batch re-materialization would show).
-    * Same store/replay/compaction contract as [[maintainAggregate]]. */
+    * in the view, exactly as a batch re-materialization would show). */
   def maintainAggregateRetractive(stream: DataFrame, groupCols: Seq[String],
                                   specs: Seq[AggSpec], opCol: String,
                                   storePath: String, checkpoint: String)
@@ -589,22 +624,14 @@ object Streams {
         "decomposition); min/max cannot retract")
     require(specs.map(_.alias).distinct.size == specs.size,
       "AggSpec aliases must be distinct")
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val signed = specs.map { s =>
-          (s.fn match {
-            case "count" => sum(col(opCol).cast("long"))
-            case "sum" => sum(col(opCol).cast("long") * col(s.column))
-          }).as(s.alias)
-        }
-        batch.groupBy(groupCols.map(col): _*)
-          .agg(signed.head, signed.tail: _*)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    val signed = specs.map { s =>
+      (s.fn match {
+        case "count" => sum(col(opCol).cast("long"))
+        case "sum" => sum(col(opCol).cast("long") * col(s.column))
+      }).as(s.alias)
+    }
+    batchSink(stream, storePath, checkpoint)(
+      _.groupBy(groupCols.map(col): _*).agg(signed.head, signed.tail: _*))
   }
 
   /** [[foldAggregate]] over a retractive store: groups whose net
@@ -623,329 +650,183 @@ object Streams {
   }
 
   /** Write an EXISTING summary (the view's initial materialization over
-    * pre-stream facts) into the partial store as the seed partial — counts
-    * fold by summing, so a seed is just one more partial. batch=-1 keeps
-    * it clear of real batch ids. */
+    * pre-stream facts) into the partial store as the `batch=-1` seed —
+    * counts fold by summing, so a seed is just one more partial. */
   def seedAggregateStore(summary: DataFrame, storePath: String): Unit =
     summary.write.mode("overwrite").parquet(s"$storePath/batch=-1")
 
-  /** Highest batch id whose partial is already folded into the seed
-    * (written by [[compactAggregateStore]]; -2 when nothing was ever
-    * compacted, so every id passes the `batch > watermark` filter). The
-    * marker lives INSIDE the store dir — underscore-prefixed, so parquet
-    * reads skip it, and the crash-safe swap moves it atomically with the
-    * seed it describes. */
-  private def foldWatermark(spark: SparkSession, storePath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$storePath/_folded_through")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -2L
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Fold the partial store of [[maintainAggregate]] into the current
+  /** Fold the live partials of [[maintainAggregate]] into the current
     * summary: count→Σcounts, sum→Σsums, min/max→min/max — column names and
     * order match (groupCols ++ aliases), so the result is drop-in for the
-    * registered summary's schema. Batches at or below the compaction
-    * watermark are EXCLUDED: their rows are already inside the seed, so a
-    * batch replayed after compaction (crash between the sink write and the
-    * checkpoint commit, then a compact, then the restart re-runs it) is
-    * folded exactly once, not twice. */
+    * registered summary's schema. */
   def foldAggregate(spark: SparkSession, storePath: String,
-                    groupCols: Seq[String], specs: Seq[AggSpec]): DataFrame = {
-    val w = foldWatermark(spark, storePath)
-    spark.read.parquet(storePath)
-      .filter(col("batch") === -1 || col("batch") > w)
+                    groupCols: Seq[String], specs: Seq[AggSpec]): DataFrame =
+    liveRows(spark, storePath)
       .groupBy(groupCols.map(col): _*)
       .agg(specs.head.fold, specs.tail.map(_.fold): _*)
-  }
 
-  /** Fold the accumulated partials back into ONE seed partial — run while
-    * the stream is stopped (same contract as [[compactStore]]); crash-safe
-    * via the [[graft.sources.Sources.swapDir]] protocol. The store then
-    * holds a single `batch=-1` directory plus a `_folded_through` marker
-    * recording the highest folded batch id, and the stream resumes
-    * appending fresh batches beside it. The marker is what keeps
-    * [[maintainAggregate]]'s replay idempotence ACROSS compactions: a
-    * batch Structured Streaming replays after its partial was folded
-    * recreates its `batch=<id>` dir, but the fold filters ids at or below
-    * the watermark. Requires the stream to keep its checkpoint (batch ids
-    * must stay monotonic); resetting the checkpoint dir restarts ids at 0
-    * and needs a fresh store. */
+  /** Fold the accumulated partials back into ONE seed partial (the
+    * protocol's compaction); the stream then resumes storing fresh batches
+    * beside it. */
   def compactAggregateStore(spark: SparkSession, storePath: String,
-                            groupCols: Seq[String], specs: Seq[AggSpec]): Unit = {
-    val prev = foldWatermark(spark, storePath)
-    val hp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val maxId = fs.listStatus(hp).iterator
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ >= 0)
-      .foldLeft(prev)(math.max)
-    val folded = foldAggregate(spark, storePath, groupCols, specs)
-    graft.sources.Sources.swapDir(spark, storePath) { tmp =>
-      folded.write.mode("overwrite").parquet(s"$tmp/batch=-1")
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded_through"))
-      try out.write(maxId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
+                            groupCols: Seq[String], specs: Seq[AggSpec]): Unit =
+    compactBatches(spark, storePath)(
+      _.groupBy(groupCols.map(col): _*)
+        .agg(specs.head.fold, specs.tail.map(_.fold): _*).write)
 
   /** Incremental KMV sketch maintenance — distinct-count summaries kept
     * fresh under ingest (the [[maintainAggregate]] pattern applied to
     * [[graft.sketch.Kmv]] sketches, which plain distinct counts can't
     * join: counts don't pre-aggregate, sketches do). Each micro-batch
-    * writes its per-group sketch (the bounded two-phase fold over JUST
-    * the batch) under `storePath/batch=<id>`; [[foldSketch]] merges the
-    * partials into the sketch OF EVERYTHING INGESTED — exactly, because
-    * k-min union is associative.
-    *
-    * Simpler replay contract than the aggregate store: sketch merge is
-    * also IDEMPOTENT (re-merging the same sketch is a no-op), so a batch
-    * replayed after [[compactSketchStore]] folded it into the seed merges
-    * harmlessly — no fold watermark needed. Store growth is ≤ one
-    * (groups-in-batch × k-longs) file set per batch. */
+    * stores its per-group sketch (the bounded two-phase fold over JUST
+    * the batch); [[foldSketch]] merges the partials into the sketch OF
+    * EVERYTHING INGESTED — exactly, because k-min union is associative
+    * (and idempotent, so even a double-merged batch would change
+    * nothing). Store growth is ≤ one (groups-in-batch × k-longs) file set
+    * per batch. */
   def maintainSketch(stream: DataFrame, groupCols: Seq[String],
                      hash: org.apache.spark.sql.Column, k: Int,
                      storePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sketch.Kmv.sketch(batch, groupCols, hash, k)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      graft.sketch.Kmv.sketch(_, groupCols, hash, k))
 
   /** Seed the sketch store with a pre-stream sketch (e.g. the initial
-    * corpus's); batch=-1 keeps it clear of real ids. */
+    * corpus's) as its `batch=-1` seed. */
   def seedSketchStore(sketches: DataFrame, storePath: String): Unit =
     sketches.write.mode("overwrite").parquet(s"$storePath/batch=-1")
 
-  /** Merge every partial in the store into the union's sketch per group —
-    * bit-identical to re-sketching all ingested facts (StreamsSpec). */
+  /** Merge every live partial in the store into the union's sketch per
+    * group — bit-identical to re-sketching all ingested facts
+    * (StreamsSpec). */
   def foldSketch(spark: SparkSession, storePath: String,
                  groupCols: Seq[String], kmvCol: String, k: Int): DataFrame =
     graft.sketch.Kmv.merge(
-      spark.read.parquet(storePath).drop("batch"), groupCols, kmvCol, k)
+      liveRows(spark, storePath).drop("batch"), groupCols, kmvCol, k)
 
-  /** Fold accumulated partials back into one batch=-1 seed (run while the
-    * stream is stopped; crash-safe via the swapDir protocol). Idempotent
-    * merge means no `_folded_through` marker: a post-compaction replayed
-    * batch re-merges to the identical sketch. */
+  /** Merge the accumulated partials back into one seed (the protocol's
+    * compaction). */
   def compactSketchStore(spark: SparkSession, storePath: String,
-                         groupCols: Seq[String], kmvCol: String, k: Int): Unit = {
-    val folded = foldSketch(spark, storePath, groupCols, kmvCol, k)
-    graft.sources.Sources.swapDir(spark, storePath) { tmp =>
-      folded.write.mode("overwrite").parquet(s"$tmp/batch=-1")
-    }
-  }
+                         groupCols: Seq[String], kmvCol: String, k: Int): Unit =
+    compactBatches(spark, storePath)(live =>
+      graft.sketch.Kmv.merge(live.drop("batch"), groupCols, kmvCol, k).write)
 
   /** Incremental Count-Min maintenance — point-frequency grids kept fresh
     * under ingest ([[maintainSketch]]'s shape over
-    * [[graft.sketch.CountMin]]). The replay contract is the AGGREGATE
-    * store's, not the sketch store's: grid merge is associative but NOT
-    * idempotent (re-summing a grid double-counts), so a replayed batch
-    * OVERWRITES its own `batch=<id>` dir, and [[compactCountMinStore]]
-    * records a `_folded_through` watermark so a batch replayed AFTER
-    * compaction folded it into the seed is excluded from later folds. */
+    * [[graft.sketch.CountMin]]). Grid merge is associative but NOT
+    * idempotent (re-summing a grid double-counts), which is what the
+    * protocol's overwrite sink and compaction watermark guard against. */
   def maintainCountMin(stream: DataFrame, groupCols: Seq[String],
                        key: org.apache.spark.sql.Column, d: Int, w: Int,
                        storePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sketch.CountMin.sketch(batch, groupCols, key, d, w)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      graft.sketch.CountMin.sketch(_, groupCols, key, d, w))
 
-  /** Seed the grid store with a pre-stream corpus grid (batch=-1 keeps it
-    * clear of real ids). */
+  /** Seed the grid store with a pre-stream corpus grid as its `batch=-1`
+    * seed. */
   def seedCountMinStore(grids: DataFrame, storePath: String): Unit =
     grids.write.mode("overwrite").parquet(s"$storePath/batch=-1")
 
   /** Zip-sum every live partial into the grid OF EVERYTHING INGESTED —
-    * bit-identical to re-sketching all facts (StreamsSpec). Batches at or
-    * below the compaction watermark are already inside the seed and are
-    * excluded. */
+    * bit-identical to re-sketching all facts (StreamsSpec). */
   def foldCountMin(spark: SparkSession, storePath: String,
                    groupCols: Seq[String], cmCol: String,
-                   d: Int, w: Int): DataFrame = {
-    val wm = foldWatermark(spark, storePath)
+                   d: Int, w: Int): DataFrame =
     graft.sketch.CountMin.merge(
-      spark.read.parquet(storePath)
-        .filter(col("batch") === -1 || col("batch") > wm)
-        .drop("batch"),
-      groupCols, cmCol, d, w)
-  }
+      liveRows(spark, storePath).drop("batch"), groupCols, cmCol, d, w)
 
-  /** Fold accumulated grid partials into one batch=-1 seed plus the
-    * `_folded_through` marker (run while the stream is stopped; crash-safe
-    * via the swapDir protocol — same contract as
-    * [[compactAggregateStore]]). */
+  /** Zip-sum the accumulated grid partials into one seed (the protocol's
+    * compaction). */
   def compactCountMinStore(spark: SparkSession, storePath: String,
                            groupCols: Seq[String], cmCol: String,
-                           d: Int, w: Int): Unit = {
-    val prev = foldWatermark(spark, storePath)
-    val hp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val maxId = fs.listStatus(hp).iterator
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ >= 0)
-      .foldLeft(prev)(math.max)
-    val folded = foldCountMin(spark, storePath, groupCols, cmCol, d, w)
-    graft.sources.Sources.swapDir(spark, storePath) { tmp =>
-      folded.write.mode("overwrite").parquet(s"$tmp/batch=-1")
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded_through"))
-      try out.write(maxId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
+                           d: Int, w: Int): Unit =
+    compactBatches(spark, storePath)(live =>
+      graft.sketch.CountMin.merge(live.drop("batch"), groupCols, cmCol, d, w).write)
 
   /** Streaming OHLC maintenance ([[graft.operators.Resample.ohlc]]'s
     * incremental twin — the market-data/candlestick store): each
-    * micro-batch writes per-(group, tick) partials under `batch=<id>`,
-    * and [[foldOhlc]] combines them into the full-history candles. The
-    * open/close anchors make this genuinely foldable where first()/last()
-    * would not be: partials carry (open, min ord) and (close, max ord),
-    * and the fold takes min_by/max_by over those anchors — associative
-    * and exact for a unique `ordCol`. Same replay/compaction contract as
-    * the other non-idempotent stores. */
+    * micro-batch stores per-(group, tick) partials, and [[foldOhlc]]
+    * combines them into the full-history candles. The open/close anchors
+    * make this genuinely foldable where first()/last() would not be:
+    * partials carry (open, min ord) and (close, max ord), and the fold
+    * takes min_by/max_by over those anchors — associative and exact for a
+    * unique `ordCol`. */
   def maintainOhlc(stream: DataFrame, groupCol: String, tickCol: String,
                    valueCol: String, ordCol: String,
                    storePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col(groupCol), col(tickCol))
-          .agg(min_by(col(valueCol), col(ordCol)).as("open"),
-            min(col(ordCol)).as("o_ord"),
-            max(col(valueCol)).as("high"),
-            min(col(valueCol)).as("low"),
-            max_by(col(valueCol), col(ordCol)).as("close"),
-            max(col(ordCol)).as("c_ord"),
-            count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      _.groupBy(col(groupCol), col(tickCol))
+        .agg(min_by(col(valueCol), col(ordCol)).as("open"),
+          min(col(ordCol)).as("o_ord"),
+          max(col(valueCol)).as("high"),
+          min(col(valueCol)).as("low"),
+          max_by(col(valueCol), col(ordCol)).as("close"),
+          max(col(ordCol)).as("c_ord"),
+          count(lit(1)).as("n")))
 
   /** Fold the OHLC partial store into full-history candles — identical
     * to [[graft.operators.Resample.ohlc]] over all ingested facts
     * (StreamsSpec): open follows the minimum ord anchor across partials,
     * close the maximum, high/low/n fold by max/min/sum. */
   def foldOhlc(spark: SparkSession, storePath: String,
-               groupCol: String, tickCol: String): DataFrame = {
-    val wm = foldWatermark(spark, storePath)
-    spark.read.parquet(storePath)
-      .filter(col("batch") === -1 || col("batch") > wm)
+               groupCol: String, tickCol: String): DataFrame =
+    liveRows(spark, storePath)
       .groupBy(col(groupCol), col(tickCol))
       .agg(min_by(col("open"), col("o_ord")).as("open"),
         max(col("high")).as("high"),
         min(col("low")).as("low"),
         max_by(col("close"), col("c_ord")).as("close"),
         sum(col("n")).as("n"))
-  }
 
   /** Streaming histogram-grid maintenance ([[graft.sketch.Histo]]): each
-    * micro-batch writes its per-group grid under `batch=<id>`;
-    * [[foldHistogram]] zip-sums live partials into the grid of everything
-    * ingested, which then serves any quantile estimate without touching
-    * facts. Same replay/compaction contract as [[maintainCountMin]]
-    * (grid sums are not idempotent). */
+    * micro-batch stores its per-group grid; [[foldHistogram]] zip-sums
+    * live partials into the grid of everything ingested, which then
+    * serves any quantile estimate without touching facts. Grid sums are
+    * not idempotent — the protocol's watermark is what keeps replays
+    * exact. */
   def maintainHistogram(stream: DataFrame, groupCols: Seq[String],
                         value: org.apache.spark.sql.Column,
                         lo: Long, step: Long, w: Int,
                         storePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sketch.Histo.sketch(batch, groupCols, value, lo, step, w)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      graft.sketch.Histo.sketch(_, groupCols, value, lo, step, w))
 
   /** Zip-sum every live histogram partial into the grid of everything
-    * ingested — bit-identical to re-sketching all facts. Batches at or
-    * below the compaction watermark live inside the batch=-1 seed. */
+    * ingested — bit-identical to re-sketching all facts. */
   def foldHistogram(spark: SparkSession, storePath: String,
-                    groupCols: Seq[String], histCol: String, w: Int): DataFrame = {
-    val wm = foldWatermark(spark, storePath)
+                    groupCols: Seq[String], histCol: String, w: Int): DataFrame =
     graft.sketch.Histo.merge(
-      spark.read.parquet(storePath)
-        .filter(col("batch") === -1 || col("batch") > wm)
-        .drop("batch"),
-      groupCols, histCol, w)
-  }
+      liveRows(spark, storePath).drop("batch"), groupCols, histCol, w)
 
-  /** Fold accumulated grid partials into one batch=-1 seed plus the
-    * `_folded_through` marker (stream stopped; swapDir crash-safety). */
+  /** Zip-sum the accumulated grid partials into one seed (the protocol's
+    * compaction). */
   def compactHistogramStore(spark: SparkSession, storePath: String,
                             groupCols: Seq[String], histCol: String,
-                            w: Int): Unit = {
-    val prev = foldWatermark(spark, storePath)
-    val hp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val maxId = fs.listStatus(hp).iterator
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ >= 0)
-      .foldLeft(prev)(math.max)
-    val folded = foldHistogram(spark, storePath, groupCols, histCol, w)
-    graft.sources.Sources.swapDir(spark, storePath) { tmp =>
-      folded.write.mode("overwrite").parquet(s"$tmp/batch=-1")
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded_through"))
-      try out.write(maxId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
+                            w: Int): Unit =
+    compactBatches(spark, storePath)(live =>
+      graft.sketch.Histo.merge(live.drop("batch"), groupCols, histCol, w).write)
 
   /** Streaming Misra-Gries heavy-hitter maintenance: each micro-batch
-    * writes its bounded MG summary ([[graft.sketch.MisraGries.summary]] —
-    * ≤ k·tasks rows with exact error bookkeeping) under `batch=<id>`;
-    * [[foldHeavyHitters]] folds live partials into one summary OF
-    * EVERYTHING INGESTED with `est ≤ true ≤ est + err` still exact.
-    * Same replay/compaction contract as [[maintainCountMin]]: counter
-    * sums are associative but not idempotent, so a replayed batch
-    * overwrites its own dir and compaction records `_folded_through`. */
+    * stores its bounded MG summary ([[graft.sketch.MisraGries.summary]] —
+    * ≤ k·tasks rows with exact error bookkeeping); [[foldHeavyHitters]]
+    * folds live partials into one summary OF EVERYTHING INGESTED with
+    * `est ≤ true ≤ est + err` still exact. Counter sums are associative
+    * but not idempotent — the protocol's watermark keeps replays exact. */
   def maintainHeavyHitters(stream: DataFrame, keyCol: String, k: Int,
                            storePath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sketch.MisraGries.summary(batch, keyCol, k)
-          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .start()
+    batchSink(stream, storePath, checkpoint)(
+      graft.sketch.MisraGries.summary(_, keyCol, k))
 
   /** Fold every live per-batch MG summary into the all-ingested summary
     * (key, cnt, err, n): per-key count lower bounds with the folded
-    * error bound and total. Batches at or below the compaction watermark
-    * live inside the batch=-1 seed and are excluded. */
+    * error bound and total. */
   def foldHeavyHitters(spark: SparkSession, storePath: String,
-                       keyCol: String): DataFrame = {
-    val wm = foldWatermark(spark, storePath)
-    graft.sketch.MisraGries.fold(
-      spark.read.parquet(storePath)
-        .filter(col("batch") === -1 || col("batch") > wm),
-      keyCol, "batch")
-  }
+                       keyCol: String): DataFrame =
+    graft.sketch.MisraGries.fold(liveRows(spark, storePath), keyCol, "batch")
 
   /** Candidate heavy hitters from the folded store: every key whose count
     * COULD exceed n/k given the error bound, i.e. (est + err)·k > n — a
@@ -957,28 +838,14 @@ object Streams {
       .filter((col("cnt") + col("err")) * k > col("n"))
       .select(col(keyCol), col("cnt"), col("err"), col("n"))
 
-  /** Fold + prune accumulated MG partials into one ≤ k-row batch=-1 seed
-    * (pruning charges the subtracted mass to `err`, keeping the bound
-    * exact) plus the `_folded_through` marker. Run while the stream is
-    * stopped; crash-safe via the swapDir protocol. */
+  /** Fold + prune the accumulated MG partials into one ≤ k-row seed (the
+    * protocol's compaction; pruning charges the subtracted mass to `err`,
+    * keeping the bound exact). */
   def compactHeavyHitterStore(spark: SparkSession, storePath: String,
-                              keyCol: String, k: Int): Unit = {
-    val prev = foldWatermark(spark, storePath)
-    val hp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val maxId = fs.listStatus(hp).iterator
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).filter(_ >= 0)
-      .foldLeft(prev)(math.max)
-    val folded = graft.sketch.MisraGries.prune(
-      foldHeavyHitters(spark, storePath, keyCol), keyCol, k)
-    graft.sources.Sources.swapDir(spark, storePath) { tmp =>
-      folded.write.mode("overwrite").parquet(s"$tmp/batch=-1")
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded_through"))
-      try out.write(maxId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
+                              keyCol: String, k: Int): Unit =
+    compactBatches(spark, storePath)(live =>
+      graft.sketch.MisraGries.prune(
+        graft.sketch.MisraGries.fold(live, keyCol, "batch"), keyCol, k).write)
 
   final case class EwmaEvent(key: String, ord: Long, value: Double)
   final case class EwmaOut(key: String, ord: Long, value: Double, ewma: Double)
@@ -1129,11 +996,6 @@ object Streams {
             Iterator.empty
           }
       }
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** n-way twin of [[maintainJoin]] for chained CREATE JOIN views (the

@@ -297,44 +297,55 @@ class StreamsSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("compactStore preserves admission decisions and consolidates layout") {
+  // near-dup store fixtures: `seedNearDup` admits two docs through one
+  // stream and stops it; `continueNearDup` ingests a near-dup of doc 1
+  // plus one novel doc against the store (fresh query/checkpoint — the
+  // store is the cross-restart state) and returns the admitted ids
+  private val ndA = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
+  private val ndB = "completely different words describing an unrelated subject matter with no overlap at all here"
+  private val ndC = "yet another entirely fresh document about completely new things worth keeping around forever"
+
+  private def seedNearDup(): String = {
     implicit val sqlCtx = spark.sqlContext
-    val a = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
-    val b = "completely different words describing an unrelated subject matter with no overlap at all here"
-    val c = "yet another entirely fresh document about completely new things worth keeping around forever"
-    // seed a store with two admitted docs via one stream, then stop it
-    def seed(): String = {
-      val store = Files.createTempDirectory("cmp_store").toString
-      val mem = MemoryStream[(Long, String)]
-      val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
-        "text", "doc_id", 0.6,
-        Files.createTempDirectory("cmp_out").toString, store,
-        Files.createTempDirectory("cmp_ckpt").toString)
-      try { mem.addData((1L, a), (2L, b)); q.processAllAvailable() }
-      finally q.stop()
-      store
-    }
-    // continue ingesting against a store (fresh query/checkpoint — the
-    // store is the cross-restart state): near-dup of doc 1 + one novel doc
-    def continueInto(store: String): Set[Long] = {
-      val out = Files.createTempDirectory("cmp_out2").toString
-      val mem = MemoryStream[(Long, String)]
-      val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
-        "text", "doc_id", 0.6, out, store,
-        Files.createTempDirectory("cmp_ckpt2").toString)
-      try {
-        mem.addData((3L, a.substring(a.indexOf(' ') + 1)), (4L, c))
-        q.processAllAvailable()
-      } finally q.stop()
-      spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
-    }
-    val control = seed()
-    val compacted = seed()
-    Streams.compactStore(spark, compacted, buckets = 4)
-    // layout: everything consolidated under batch=-1
-    val bandDirs = new java.io.File(s"$compacted/bands").listFiles()
+    val store = Files.createTempDirectory("cmp_store").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
+      "text", "doc_id", 0.6,
+      Files.createTempDirectory("cmp_out").toString, store,
+      Files.createTempDirectory("cmp_ckpt").toString)
+    try { mem.addData((1L, ndA), (2L, ndB)); q.processAllAvailable() }
+    finally q.stop()
+    store
+  }
+
+  private def continueNearDup(store: String): Set[Long] = {
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("cmp_out2").toString
+    val mem = MemoryStream[(Long, String)]
+    val q = Streams.nearDupIngest(mem.toDF().toDF("doc_id", "text"),
+      "text", "doc_id", 0.6, out, store,
+      Files.createTempDirectory("cmp_ckpt2").toString)
+    try {
+      mem.addData((3L, ndA.substring(ndA.indexOf(' ') + 1)), (4L, ndC))
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
+  }
+
+  private def batchDirs(dir: String): Set[String] =
+    new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("batch=")).map(_.getName).toSet
-    assert(bandDirs == Set("batch=-1"), s"band dirs after compaction: $bandDirs")
+
+  test("compactStore preserves admission decisions and consolidates layout") {
+    val control = seedNearDup()
+    val compacted = seedNearDup()
+    // compacting twice rewrites the seed in place: every store still holds
+    // exactly one batch=-1 seed
+    Streams.compactStore(spark, compacted, buckets = 4)
+    Streams.compactStore(spark, compacted, buckets = 4)
+    for (sub <- Seq("bands", "shingles", "hashes"))
+      assert(batchDirs(s"$compacted/$sub") == Set("batch=-1"),
+        s"$sub dirs after compaction: ${batchDirs(s"$compacted/$sub")}")
     // identical store CONTENT (rows, not layout)
     for (sub <- Seq("bands", "shingles", "hashes")) {
       val x = spark.read.parquet(s"$control/$sub").drop("batch")
@@ -342,8 +353,63 @@ class StreamsSpec extends SparkSpec {
       assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"$sub rows differ")
     }
     // identical admission decisions against both stores
-    assert(continueInto(control) == Set(4L))
-    assert(continueInto(compacted) == Set(4L))
+    assert(continueNearDup(control) == Set(4L))
+    assert(continueNearDup(compacted) == Set(4L))
+  }
+
+  test("nearDupIngest recovers a band store stranded by a crashed compaction swap") {
+    val control = seedNearDup()
+    val stranded = seedNearDup()
+    // crash between swapDir's two renames: the live dir is gone, the old
+    // contents sit at <dir>.compact.old
+    assert(new java.io.File(s"$stranded/bands")
+      .renameTo(new java.io.File(s"$stranded/bands.compact.old")))
+    assert(continueNearDup(stranded) == continueNearDup(control))
+    assert(new java.io.File(s"$stranded/bands").isDirectory)
+    assert(!new java.io.File(s"$stranded/bands.compact.old").exists)
+  }
+
+  test("foldCountMin recovers a store stranded by a crashed compaction swap") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sketch.CountMin
+    val dir = Files.createTempDirectory("stranded").toString
+    val (d, w) = (3, 32)
+    val facts = (0L until 30L).map(i => ("a", i % 4)) :+ (("b", 9L))
+    val mem = MemoryStream[(String, Long)]
+    val q = Streams.maintainCountMin(mem.toDF().toDF("cat", "id"), Seq("cat"),
+      col("id"), d, w, s"$dir/cm", Files.createTempDirectory("stranded_ck").toString)
+    try {
+      mem.addData(facts.take(20): _*); q.processAllAvailable()
+      mem.addData(facts.drop(20): _*); q.processAllAvailable()
+    } finally q.stop()
+    def gridMap(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Seq[Long])].collect().toMap
+    def fold() = gridMap(Streams.foldCountMin(spark, s"$dir/cm", Seq("cat"), "cm", d, w))
+    val before = fold()
+    assert(before == gridMap(CountMin.sketch(facts.toDF("cat", "id"),
+      Seq("cat"), col("id"), d, w)))
+    assert(new java.io.File(s"$dir/cm").renameTo(new java.io.File(s"$dir/cm.compact.old")))
+    assert(fold() == before, "fold after a stranded swap lost the pre-compaction grid")
+    assert(!new java.io.File(s"$dir/cm.compact.old").exists)
+  }
+
+  test("a legacy batch=-2 seed folds in and compacts to batch=-1") {
+    import graft.streaming.Streams.AggSpec
+    // stores compacted by the older negative-id compaction hold their seed
+    // at batch=-2 (or lower)
+    val dir = Files.createTempDirectory("legacy").toString
+    val specs = Seq(AggSpec("count", "", "n"), AggSpec("sum", "v", "s"))
+    Seq(("a", 2L, 30L)).toDF("cat", "n", "s")
+      .write.parquet(s"$dir/agg/batch=-2")
+    Seq(("a", 1L, 5L), ("b", 1L, 7L)).toDF("cat", "n", "s")
+      .write.parquet(s"$dir/agg/batch=0")
+    def aggMap() = Streams.foldAggregate(spark, s"$dir/agg", Seq("cat"), specs)
+      .as[(String, Long, Long)].collect().toSet
+    val expected = Set(("a", 3L, 35L), ("b", 1L, 7L))
+    assert(aggMap() == expected, "legacy batch=-2 seed not folded in")
+    Streams.compactAggregateStore(spark, s"$dir/agg", Seq("cat"), specs)
+    assert(batchDirs(s"$dir/agg") == Set("batch=-1"))
+    assert(aggMap() == expected)
   }
 
   test("cleanCorpusStream filters scan-side then near-dup-admits the rest") {
