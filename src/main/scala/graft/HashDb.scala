@@ -82,22 +82,23 @@ final class HashDb(val spark: SparkSession) {
   private var mergesSinceCheckpoint = 0
 
   /** Mutating statements (MERGE / DETACH DELETE / SET) change the graph
-    * and return None; MATCH returns bindings. Every mutation deepens the
-    * graph's logical plan by one join/union layer, so unbounded statement
+    * and return None; every other statement (MATCH, WITH, UNWIND,
+    * shortestPath) returns bindings. A MERGE appends rows (a session
+    * graph stays one local relation), but DETACH DELETE and SET each add
+    * a join layer to the graph's logical plan, so unbounded statement
     * streams periodically truncate lineage (localCheckpoint) to keep
     * analysis cost flat. */
   def cypher(statement: String): Option[DataFrame] =
     Cypher.parse(statement) match {
-      case _: Cypher.Merge | _: Cypher.Delete | _: Cypher.SetAttrs =>
-        graph = graph.execute(statement)
+      case m @ (_: Cypher.Merge | _: Cypher.Delete | _: Cypher.SetAttrs) =>
+        graph = graph.execute(m)
         mergesSinceCheckpoint += 1
         if (mergesSinceCheckpoint >= 32) {
           graph = graph.checkpointLocal()
           mergesSinceCheckpoint = 0
         }
         None
-      case _: Cypher.Match | _: Cypher.With | _: Cypher.ShortestPathStmt =>
-        Some(graph.query(statement))
+      case q => Some(graph.query(q))
     }
   def graphState: PropertyGraph = graph
 }

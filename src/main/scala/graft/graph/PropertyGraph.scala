@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.LocalRows
 
 /** Distributed property graph + Cypher-subset executor (SURVEY §2.8 G1-G7).
   *
@@ -30,25 +31,25 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     if (edges.columns.contains("eattrs")) edges
     else edges.withColumn("eattrs", typedLit(Map.empty[String, String]))
 
-  /** G1/G2 MERGE: upsert the nodes and edges of one chain. Idempotent —
-    * re-merging an existing node/edge is a no-op, and deterministically so:
-    * both nodes and edges go through a full-outer join whose coalesce
-    * always prefers the EXISTING row (the reference's match-by-attributes
-    * no-op case, client.py:876-889) — for edges that means re-merging an
-    * existing (src, dst, rel) with DIFFERENT properties keeps the stored
-    * properties.
+  /** G1/G2 MERGE: upsert the nodes and edges of one chain, as
+    * probe-then-append ([[PropertyGraph.appendAbsent]]): read which of the
+    * statement's own identities — node `name`s, edge (src, dst, rel)s —
+    * already exist, and append only the absent ones, as literal rows.
+    * Idempotent: re-merging an existing node/edge appends nothing, so the
+    * existing row always wins (the reference's match-by-attributes no-op
+    * case, client.py:876-889) — a re-merge with a different label, attrs
+    * or edge properties keeps the stored row.
     *
-    * Plan-growth discipline: each merge references the previous
-    * vertices/edges plan exactly ONCE, so a stream of k statements builds a
-    * depth-k plan (an anti-join + union formulation would reference the
-    * previous plan twice and go exponential — 19 example.py merges is
-    * 2^19 plan nodes, observed as an analyzer OOM). Relies on the
-    * invariant that label/attrs are never null in `vertices` (insert paths
-    * default label to "" and attrs to the pattern map). For bulk statement
-    * streams, [[compact]] resets depth to 1. */
+    * Plan shape: each merge references the previous vertices/edges plan
+    * once (the probes run eagerly and are not kept) and adds no join,
+    * aggregate or shuffle; a session graph grown from
+    * [[PropertyGraph.empty]] stays ONE local relation, so a later MATCH
+    * plans over a flat scan however many MERGEs preceded it (the
+    * reference's in-memory upsert property). Existing rows are never
+    * rewritten: a caller-supplied edge frame that already holds duplicate
+    * identity rows keeps them (MATCH is set-semantic, so its results are
+    * unaffected). */
   def merge(stmt: Cypher.Merge): PropertyGraph = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
     val ns = stmt.chain.nodes.map(n =>
       (PropertyGraph.identityOf(n.label, n.attrs), n.label.getOrElse(""), n.attrs))
     val es = stmt.chain.rels.zipWithIndex.map { case (r, k) =>
@@ -63,33 +64,14 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     }
     // within-statement duplicates resolved driver-side, first occurrence
     // wins (deterministic — ns/es are in statement order)
-    val newV = ns.distinctBy(_._1).toDF("name", "label", "attrs")
-    val newE = es.distinctBy(t => (t._1, t._2, t._3))
-      .toDF("src", "dst", "rel", "eattrs")
-    val v2 = vertices.alias("o").join(newV.alias("n"), Seq("name"), "full_outer")
-      .select(col("name"),
-        coalesce(col("o.label"), col("n.label")).as("label"),
-        coalesce(col("o.attrs"), col("n.attrs")).as("attrs"))
-    // edge identity is (src, dst, rel); attrs are payload — re-merging an
-    // existing edge keeps the EXISTING attrs (same preference as nodes).
-    // Identity-dedup first: a CALLER-supplied edge frame may carry
-    // duplicate identity rows (merge-built frames never do) — the
-    // full-outer join would preserve that multiplicity where the old
-    // union+dropDuplicates formulation collapsed it. The winner among
-    // duplicates with DIFFERENT eattrs is chosen by min over a canonical
-    // entry-sorted JSON rendering of the map (dropDuplicates would keep an
-    // arbitrary row, so repeated merges could flip stored properties run
-    // to run); same serialization ⇒ same map, so the choice is total.
-    val eattrsCanon = coalesce(
-      to_json(map_from_entries(array_sort(map_entries(col("eattrs"))))), lit(""))
-    val dedupedOld = edgesN
-      .groupBy("src", "dst", "rel")
-      .agg(min_by(col("eattrs"), eattrsCanon).as("eattrs"))
-    val e2 = dedupedOld.alias("o")
-      .join(newE.alias("n"), Seq("src", "dst", "rel"), "full_outer")
-      .select(col("src"), col("dst"), col("rel"),
-        coalesce(col("o.eattrs"), col("n.eattrs")).as("eattrs"))
-    PropertyGraph(v2, e2)
+    val newV = ns.distinctBy(_._1).map { case (n, l, a) =>
+      Map("name" -> n, "label" -> l, "attrs" -> a) }
+    val newE = es.distinctBy(t => (t._1, t._2, t._3)).map { case (s, d, r, a) =>
+      Map("src" -> s, "dst" -> d, "rel" -> r, "eattrs" -> a) }
+    PropertyGraph(
+      PropertyGraph.appendAbsent(vertices, Seq("name"), newV),
+      if (newE.isEmpty) edgesN
+      else PropertyGraph.appendAbsent(edgesN, Seq("src", "dst", "rel"), newE))
   }
 
   def merge(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
@@ -111,7 +93,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     Some(v.select(col("name").as(as)))
   }
 
-  /** Truncate the accumulated MERGE lineage in-memory (localCheckpoint) —
+  /** Truncate the accumulated mutation lineage in-memory (localCheckpoint) —
     * plan depth back to 1 without parquet IO. For statement streams where
     * durability doesn't matter (session-local graphs); use [[compact]] to
     * land the state on disk. */
@@ -687,9 +669,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     dist.select(col("node"), col("dist"))
   }
 
-  /** Checkpoint the accumulated MERGE plan (each merge stacks a
-    * union+dropDuplicates) to parquet and re-read — plan depth back to 1.
-    * Run after bulk statement streams; semantics unchanged. */
+  /** Land the graph on parquet and re-read it — plan depth back to 1.
+    * MERGE only appends, but DETACH DELETE and SET each stack a join
+    * layer; run after long mutation streams, or to make a session graph
+    * durable. Semantics unchanged. */
   def compact(dir: String): PropertyGraph = {
     val spark = vertices.sparkSession
     vertices.write.mode("overwrite").parquet(s"$dir/vertices")
@@ -708,12 +691,15 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * list as (src=left, dst=right), `<-[:R]-` flips it, and `-[:R]-` matches
     * either orientation (a union of both before the join — final RETURN
     * distinct dedups any self-loop double-match). */
-  def query(cypher: String): DataFrame = Cypher.parse(cypher) match {
+  def query(cypher: String): DataFrame = query(Cypher.parse(cypher))
+
+  /** [[query]] over an already-parsed statement. */
+  def query(stmt: Cypher.Stmt): DataFrame = stmt match {
     case m: Cypher.Match => evalMatch(m)
     case w: Cypher.With => evalWith(w)
     case u: Cypher.Unwind => evalUnwind(u)
     case sp: Cypher.ShortestPathStmt => evalShortestPath(sp)
-    case _ => throw new IllegalArgumentException(s"not a MATCH: $cypher")
+    case _ => throw new IllegalArgumentException(s"not a MATCH: $stmt")
   }
 
   /** UNWIND (round-10 growth — see [[Cypher.Unwind]]): the literal list
@@ -1052,16 +1038,20 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     }: _*)
   }
 
-  /** Mutating statements: MERGE upserts (as [[merge]]), `MATCH … DETACH
-    * DELETE` drops the bound nodes plus ALL their incident edges (two
-    * anti-joins against the matched name set — at scale the deleted set
-    * is usually broadcast-sized and the cascade stays map-side), `MATCH …
-    * SET` upserts one attribute per set item on the bound nodes
-    * (map_filter + map_concat — scan-side map surgery, no explode). Each
-    * statement references the previous vertices/edges plan once, same
-    * depth discipline as [[merge]]; [[compact]]/[[checkpointLocal]] reset
-    * depth for long statement streams. */
-  def execute(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
+  /** Mutating statements: MERGE appends the absent identities (as
+    * [[merge]]), `MATCH … DETACH DELETE` drops the bound nodes plus ALL
+    * their incident edges (two anti-joins against the matched name set —
+    * at scale the deleted set is usually broadcast-sized and the cascade
+    * stays map-side), `MATCH … SET` upserts one attribute per set item on
+    * the bound nodes (map_filter + map_concat — scan-side map surgery, no
+    * explode). Each statement references the previous vertices/edges plan
+    * once; DELETE and SET each add a join layer, so
+    * [[compact]]/[[checkpointLocal]] reset depth for long statement
+    * streams. */
+  def execute(cypher: String): PropertyGraph = execute(Cypher.parse(cypher))
+
+  /** [[execute]] over an already-parsed statement. */
+  def execute(stmt: Cypher.Stmt): PropertyGraph = stmt match {
     case m: Cypher.Merge => merge(m)
     case Cypher.Delete(chains, wheres, vars) =>
       val bound = evalMatch(Cypher.Match(chains,
@@ -1092,7 +1082,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       }
       PropertyGraph(v2, edges)
     case _ => throw new IllegalArgumentException(
-      s"not a mutating statement: $cypher")
+      s"not a mutating statement: $stmt")
   }
 
   /** output-column naming, shared by the projection branches, the
@@ -1447,6 +1437,29 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
+
+  /** MERGE's probe-then-append: `df` plus those of `rows` (column → value,
+    * one per graph column) whose `keys` identity `df` does not hold yet;
+    * existing rows are never touched. A driver-local frame — every session
+    * graph grown from [[empty]] by MERGEs — is read whole and rebuilt as
+    * ONE local relation ([[graft.core.LocalRows]]). Any other frame
+    * (parquet, TPC-H joins, a graph after DELETE/SET or a checkpoint) is
+    * probed with one `isin` filter per key column — it may over-fetch
+    * crossed key combinations, settled exactly on the driver — and gets
+    * a union. */
+  private def appendAbsent(df: DataFrame, keys: Seq[String],
+                           rows: Seq[Map[String, Any]]): DataFrame = {
+    val local = LocalRows.of(df)
+    val have = local.getOrElse(
+        df.filter(keys.map(k => col(k).isin(rows.map(_(k)).distinct: _*))
+          .reduce(_ && _)).collect())
+      .map(r => keys.map(r.getAs[Any])).toSet
+    val fresh = rows.filterNot(r => have(keys.map(r)))
+      .map(r => Row.fromSeq(df.columns.toSeq.map(r)))
+    if (fresh.isEmpty) df
+    else local.fold(df.union(LocalRows.frame(df, fresh)))(
+      old => LocalRows.frame(df, old.toSeq ++ fresh))
+  }
 
   /** MERGE node identity: the `name` attribute when present (the
     * reference's own corpus always carries one — example.py:241-261);

@@ -1,7 +1,8 @@
 package graft.kv
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.LocalRows
 
 /** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; reference
   * /root/reference/server.py:80-168, hash-db.py:34-83) re-expressed as
@@ -23,11 +24,16 @@ final case class KvStore(df: DataFrame) {
   import KvStore.sorted
 
   // ---- writes (S1-S3). Appends are unions: at scale this is an append to a
-  // pk-partitioned table, not a rewrite.
+  // pk-partitioned table, not a rewrite. `put` overwrites (the reference's
+  // hashmap set): it drops any prior (pk, sk) row first. A session store
+  // (driver-local rows) is rebuilt as one local relation (LocalRows).
   def put(pk: String, sk: String, value: String): KvStore = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    KvStore(df.unionByName(Seq((pk, sk, value)).toDF("pk", "sk", "value")))
+    val row = Row.fromSeq(df.columns.toSeq.map(Map("pk" -> pk, "sk" -> sk, "value" -> value)))
+    KvStore(LocalRows.of(df) match {
+      case Some(rows) => LocalRows.frame(df, rows.toSeq.filterNot(r =>
+        r.getAs[String]("pk") == pk && r.getAs[String]("sk") == sk) :+ row)
+      case None => delete(pk, sk).df.union(LocalRows.frame(df, Seq(row)))
+    })
   }
   def putAll(rows: DataFrame): KvStore = KvStore(df.unionByName(rows))
   def delete(pk: String, sk: String): KvStore =

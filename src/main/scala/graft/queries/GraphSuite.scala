@@ -388,9 +388,9 @@ object GraphSuite extends Suite {
       (s, d) => {
         val names = Tables.t(s, d, "region").select("r_name")
           .collect().map(_.getString(0)).sorted // 5-row dim: driver-side ok
-        // 5 statements (each MERGE is a full-outer upsert pair — keep the
-        // statement stream short like cypher_merge_*; bulk ingest goes
-        // through DataFrames, not statement folds)
+        // 5 statements (each MERGE probes, then appends its absent
+        // identities — keep the statement stream short like cypher_merge_*;
+        // bulk ingest goes through DataFrames, not statement folds)
         val g1 = names.foldLeft(PropertyGraph.empty(s)) { (g, r) =>
           g.merge(s"merge (r:Region {'name': '$r'})" +
             s"-[:IN {'link': '$r->world'}]->(w:World {'name': 'world'})")

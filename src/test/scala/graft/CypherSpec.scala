@@ -736,4 +736,25 @@ class CypherSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(nums == Seq(1L))
   }
+
+  test("HashDb.cypher serves every read statement kind, UNWIND included") {
+    val db = new HashDb(spark)
+    Seq("Ann" -> "Oslo", "Bob" -> "Paris").foreach { case (p, c) =>
+      assert(db.cypher(
+        s"merge (p:Person {'name': '$p'})-[:LIVES]->(c:City {'name': '$c'})").isEmpty) }
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    Seq(
+      "unwind ['Ann', 'Bob'] as p match (p)-[:LIVES]->(c:City) return p, c",
+      "unwind ['x', 'y'] as v return v",
+      "match (p:Person)-[:LIVES]->(c:City) with c, count(*) as n return c, n",
+      "match (p:Person)-[:LIVES]->(c:City) return p, c"
+    ).foreach { q =>
+      val got = db.cypher(q)
+      assert(got.isDefined, q)
+      assert(rows(got.get) == rows(db.graphState.query(q)), q)
+    }
+    assert(rows(db.cypher("unwind ['Ann', 'Bob'] as p match (p)-[:LIVES]->(c:City) " +
+      "return p, c").get) == Set(Seq("Ann", "Oslo"), Seq("Bob", "Paris")))
+  }
 }

@@ -182,6 +182,112 @@ class GraphPropertySpec extends SparkSpec with PropertySampling {
     }
   }
 
+  // one MERGE chain of 1-3 nodes over a small identity pool, so streams
+  // repeat names and (src, dst, rel) identities with conflicting label,
+  // attrs and eattrs — inside one statement as well as across statements
+  private case class MNode(name: String, label: Option[String], k: String)
+  private case class MRel(rel: String, out: Boolean, w: String)
+  private val mnodeGen = for {
+    n <- Gen.oneOf("a", "b", "c", "d"); l <- Gen.oneOf(None, Some("A"), Some("B"))
+    k <- Gen.oneOf("1", "2", "3")
+  } yield MNode(n, l, k)
+  private val mrelGen = for {
+    r <- Gen.oneOf("R", "S"); out <- Gen.oneOf(true, false); w <- Gen.oneOf("1", "2")
+  } yield MRel(r, out, w)
+  private val mstmtGen = for {
+    hops <- Gen.choose(0, 2)
+    ns <- Gen.listOfN(hops + 1, mnodeGen); rs <- Gen.listOfN(hops, mrelGen)
+  } yield (ns, rs)
+
+  private def mergeText(ns: Seq[MNode], rs: Seq[MRel]): String = {
+    def node(n: MNode, i: Int) =
+      s"(v$i${n.label.fold("")(":" + _)} {'name': '${n.name}', 'k': '${n.k}'})"
+    def rel(r: MRel) =
+      if (r.out) s"-[:${r.rel} {'w': '${r.w}'}]->" else s"<-[:${r.rel} {'w': '${r.w}'}]-"
+    "merge " + node(ns.head, 0) + rs.zipWithIndex.map { case (r, i) =>
+      rel(r) + node(ns(i + 1), i + 1) }.mkString
+  }
+
+  private def vertexRows(g: PropertyGraph): Seq[(String, String, Map[String, String])] =
+    g.vertices.select("name", "label", "attrs")
+      .as[(String, String, Map[String, String])].collect().toSeq
+  private def edgeRows(g: PropertyGraph): Seq[(String, String, String, Map[String, String])] =
+    g.edges.select("src", "dst", "rel", "eattrs")
+      .as[(String, String, String, Map[String, String])].collect().toSeq
+
+  test("MERGE ≡ driver-side existing-wins model on conflicting random streams") {
+    (1 to 4).foreach { seed =>
+      val stmts = sample(Gen.listOfN(14, mstmtGen), seed + 1300)
+      val g = stmts.foldLeft(PropertyGraph.empty(spark)) { case (acc, (ns, rs)) =>
+        acc.merge(mergeText(ns, rs)) }
+      // the model: statement order, then chain order; the first row stored
+      // for an identity is never touched again
+      val mv = scala.collection.mutable.LinkedHashMap.empty[String, (String, Map[String, String])]
+      val me = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Map[String, String]]
+      stmts.foreach { case (ns, rs) =>
+        ns.foreach(n => if (!mv.contains(n.name))
+          mv(n.name) = (n.label.getOrElse(""), Map("name" -> n.name, "k" -> n.k)))
+        rs.zipWithIndex.foreach { case (r, i) =>
+          val (a, b) = (ns(i).name, ns(i + 1).name)
+          val id = if (r.out) (a, b, r.rel) else (b, a, r.rel)
+          if (!me.contains(id)) me(id) = Map("w" -> r.w)
+        }
+      }
+      val vs = vertexRows(g)
+      assert(vs.size == mv.size, s"seed=$seed duplicate vertex rows: $vs")
+      assert(vs.toSet == mv.map { case (n, (l, at)) => (n, l, at) }.toSet, s"seed=$seed vertices")
+      val es = edgeRows(g)
+      assert(es.size == me.size, s"seed=$seed duplicate edge rows: $es")
+      assert(es.toSet == me.map { case ((s, d, r), at) => (s, d, r, at) }.toSet, s"seed=$seed edges")
+    }
+  }
+
+  test("MERGE-built graphs plan without Join or Aggregate nodes") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation, LogicalPlan}
+    val stmts = sample(Gen.listOfN(40, mstmtGen), 1400)
+    val g = stmts.foldLeft(PropertyGraph.empty(spark)) { case (acc, (ns, rs)) =>
+      acc.merge(mergeText(ns, rs)) }
+    def shape(p: LogicalPlan): Seq[String] =
+      p.collect { case _: Join => "Join"; case _: Aggregate => "Aggregate" }
+    Seq(g.vertices, g.edges).foreach { df =>
+      val p = df.queryExecution.optimizedPlan
+      assert(shape(p).isEmpty, p.treeString)
+      // a session graph stays one local relation, not a union per MERGE
+      assert(p.isInstanceOf[LocalRelation], p.treeString)
+    }
+    // a MERGE onto a bare local edge frame keeps it local too
+    val bare = PropertyGraph(Seq(("a", "N", Map("name" -> "a"))).toDF("name", "label", "attrs"),
+      Seq(("a", "a", "R")).toDF("src", "dst", "rel"))
+      .merge("merge (x:N {'name': 'a'})-[:S]->(y:N {'name': 'b'})")
+    assert(bare.edges.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("MERGE onto a bare edge frame and a compacted graph appends only absent identities") {
+    val v = Seq(("a", "N", Map("name" -> "a")), ("b", "N", Map("name" -> "b")))
+      .toDF("name", "label", "attrs")
+    // a caller-supplied frame with a duplicated identity row keeps it;
+    // MATCH stays set-semantic
+    val bare = PropertyGraph(v,
+      Seq(("a", "b", "R"), ("a", "b", "R")).toDF("src", "dst", "rel"))
+    val g1 = bare.merge("merge (x:M {'name': 'a'})-[:R {'w': '9'}]->(y:N {'name': 'b'})")
+      .merge("merge (x:N {'name': 'a'})-[:S {'w': '1'}]->(z:N {'name': 'c'})")
+    assert(vertexRows(g1).sortBy(_._1) == Seq(("a", "N", Map("name" -> "a")),
+      ("b", "N", Map("name" -> "b")), ("c", "N", Map("name" -> "c"))))
+    assert(edgeRows(g1).sortBy(_._3) == Seq(("a", "b", "R", Map.empty[String, String]),
+      ("a", "b", "R", Map.empty[String, String]), ("a", "c", "S", Map("w" -> "1"))))
+    assert(g1.query("match (x)-[:R]->(y) return x, y").count() == 1)
+
+    val dir = java.nio.file.Files.createTempDirectory("graph_compact").toString
+    val c = g1.compact(dir)
+    val g2 = c.merge("merge (x:Q {'name': 'c'})-[:S {'w': '5'}]->(y:N {'name': 'a'})")
+      .merge("merge (x:Q {'name': 'c'})-[:S {'w': '7'}]->(y:N {'name': 'd'})")
+    assert(vertexRows(g2).sortBy(_._1) == vertexRows(c).sortBy(_._1) :+
+      (("d", "N", Map("name" -> "d"))))
+    assert(edgeRows(g2).sortBy(e => (e._1, e._2, e._3)) ==
+      (edgeRows(c) ++ Seq(("c", "a", "S", Map("w" -> "5")), ("c", "d", "S", Map("w" -> "7"))))
+        .sortBy(e => (e._1, e._2, e._3)))
+  }
+
   test("ssspDistances ≡ driver-side Bellman-Ford; unit weights ≡ bfs") {
     import org.apache.spark.sql.functions._
     val wEdgesGen = Gen.listOfN(12, for {

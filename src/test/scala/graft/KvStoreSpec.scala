@@ -58,4 +58,24 @@ class KvStoreSpec extends SparkSpec {
     assert(s2.get("x", "y").count() == 1)
     assert(s2.delete("x", "y").get("x", "y").count() == 0)
   }
+
+  test("put over an existing key overwrites: one row, the new value") {
+    val s = fixture.put("u", "k1", "old").put("u", "k1", "new")
+    assert(s.get("u", "k1").select("value").as[String].collect().toSeq == Seq("new"))
+    assert(s.queryBetween("u", "k0", "k2").select("sk", "value")
+      .as[(String, String)].collect().toSeq == Seq("k1" -> "new"))
+    // a fixture key too, and the façade's set/get path
+    val s2 = fixture.put("people-100", "messages-101", "edited")
+    assert(s2.queryBetween("people-100", "messages-101", "messages-101")
+      .select("value").as[String].collect().toSeq == Seq("edited"))
+    // a store that is not one local relation takes the filter + union path
+    val s3 = KvStore(fixture.df.repartition(2)).put("people-100", "messages-101", "edited")
+    assert(s3.queryBetween("people-100", "messages-101", "messages-101")
+      .select("value").as[String].collect().toSeq == Seq("edited"))
+    assert(s3.dump().count() == fixture.dump().count())
+    val db = new HashDb(spark)
+    db.set("u", "k1", "old"); db.set("u", "k1", "new")
+    assert(db.get("u", "k1").contains("new"))
+    assert(db.kv.queryBetween("u", "k1", "k1").count() == 1)
+  }
 }
