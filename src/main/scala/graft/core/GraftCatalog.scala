@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,63 +13,87 @@ import org.apache.spark.sql.types._
   * `id` (server.py:725-728,757-771), and values are `Long` when the literal
   * is numeric else `String` (server.py:477-478,500-502).
   *
-  * Row-at-a-time writes union small DataFrames — matching the reference's
-  * per-request ingest. Bulk ingest (`register`) is the scale path: any
+  * A session's tables are driver-held row stores ([[LocalRows]]): an
+  * INSERT whose fields and types fit the table appends one row on the
+  * driver, so a table written row at a time stays ONE local relation and
+  * its reads plan over one leaf however long the session runs — the
+  * reference's per-request ingest into an in-RAM dict. Every other write
+  * (UPDATE, DELETE, a schema-widening INSERT) commits its plan, which is
+  * folded back into one store when it plans to local relations only
+  * ([[LocalRows.of]]), so the dynamic-schema union and its type coercion
+  * stay Catalyst's. Bulk ingest (`register`) is the scale path: any
   * DataFrame becomes a table, and appends to parquet-backed tables stay
-  * appends. UPDATE/DELETE are copy-on-write plan rewrites; at 100 TB those
-  * rewrite only affected partitions of a partitioned table.
+  * plan-level unions. UPDATE/DELETE on those are copy-on-write plan
+  * rewrites; at 100 TB those rewrite only affected partitions of a
+  * partitioned table.
   */
 final class GraftCatalog(val spark: SparkSession) {
 
-  private var tables = Map.empty[String, DataFrame]
   private var counters = Map.empty[String, Long]
-  // version log: history(name)(v-1) = the table AS OF version v (1-based).
-  // Entries are lazy PLANS (cheap to hold), but each pins its lineage —
-  // long-lived sessions should compact() on a cadence, which snapshots
-  // the CURRENT version to parquet and frees its lineage while older
-  // versions keep theirs (the Delta-style time-travel trade, in-session).
-  private var history = Map.empty[String, Vector[DataFrame]]
+  // version log: versions(name)(v-1) = the table AS OF version v (1-based);
+  // the last entry is the current table. An entry is a row store
+  // (driver-local tables; appends share the earlier versions' rows) or a
+  // lazy PLAN, which pins its lineage — long-lived sessions over
+  // non-local tables should compact() on a cadence, which snapshots the
+  // CURRENT version to parquet and frees its lineage while older versions
+  // keep theirs (the Delta-style time-travel trade, in-session).
+  private var versions = Map.empty[String, Vector[Either[DataFrame, LocalRows]]]
 
-  private def commit(name: String, df: DataFrame): Unit = {
-    // every write path lands here — a view name can never silently
-    // become (or shadow) a table
+  // every write path lands here — a view name can never silently become
+  // (or shadow) a table
+  private def commitVersion(name: String, v: Either[DataFrame, LocalRows]): Unit = {
     require(!views.contains(name),
       s"$name is a view — views are read-only (DROP VIEW first)")
-    history += name -> (history.getOrElse(name, Vector.empty) :+ df)
-    tables += name -> df
+    versions += name -> (versions.getOrElse(name, Vector.empty) :+ v)
   }
+
+  // a plan that reads local relations only is folded into one store
+  private def commit(name: String, df: DataFrame): Unit =
+    commitVersion(name, LocalRows.of(df).toRight(df))
+
+  private def frameOf(v: Either[DataFrame, LocalRows]): DataFrame = v.fold(identity, _.frame)
 
   /** Number of committed versions of `name` (0 = never written). Every
     * register/insert/update/delete commits one; compact() swaps the
     * current version's plan for the parquet scan without adding one
     * (contents identical). */
-  def versionOf(name: String): Int = history.getOrElse(name, Vector.empty).length
+  def versionOf(name: String): Int = versions.get(name).fold(0)(_.length)
 
   /** TIME TRAVEL (growth — Delta/Iceberg `VERSION AS OF`, in-session):
     * the table exactly as of version `v` (1-based;
-    * `v == versionOf(name)` reads the current state). Every version is a
-    * lazy plan over the same immutable base data, so reads are as
-    * distributed as the current table's. */
+    * `v == versionOf(name)` reads the current state). Versions are kept
+    * for the session's life, unbounded, and share row storage instead: a
+    * driver-local version is a row store, and the rows an INSERT appends
+    * extend a persistent `Vector` that every earlier version also reads,
+    * so a version costs the rows it changed, not a copy of the table
+    * (an UPDATE or DELETE holds its own rows, as copy-on-write does).
+    * Any other version is a lazy plan over the same immutable base data,
+    * so reads are as distributed as the current table's. */
   def tableAsOf(name: String, v: Int): DataFrame = {
-    val h = history.getOrElse(name,
+    val h = versions.getOrElse(name,
       throw new IllegalArgumentException(s"no such table: $name"))
     require(v >= 1 && v <= h.length,
       s"version $v out of range 1..${h.length} for $name")
-    h(v - 1)
+    frameOf(h(v - 1))
   }
 
   def register(name: String, df: DataFrame): Unit = commit(name, df)
+
+  /** Commit `rows` as the next version of `name`. */
+  def register(name: String, rows: LocalRows): Unit = commitVersion(name, Right(rows))
+
+  /** The current version's row store, when `name` is driver-local. */
+  def rowsOf(name: String): Option[LocalRows] = versions.get(name).flatMap(_.last.toOption)
 
   /** ALTER TABLE … RENAME TO (round-15): move the registration, its
     * version history and id counter under the new name. Metadata-only;
     * plans already built against the old frame stay valid (they pinned
     * their lineage), like drop(). */
   def rename(from: String, to: String): Unit = {
-    require(tables.contains(from), s"no such table: $from")
-    require(!tables.contains(to) && !views.contains(to),
+    require(versions.contains(from), s"no such table: $from")
+    require(!versions.contains(to) && !views.contains(to),
       s"$to already exists — drop it first or pick another name")
-    tables += to -> tables(from); tables -= from
-    history += to -> history.getOrElse(from, Vector.empty); history -= from
+    versions += to -> versions(from); versions -= from
     counters.get(from).foreach { c => counters += to -> c }
     counters -= from
   }
@@ -77,9 +103,8 @@ final class GraftCatalog(val spark: SparkSession) {
     * captured stay valid (they pinned their lineage at build time), and
     * backing parquet is untouched. */
   def drop(name: String): Unit = {
-    require(tables.contains(name), s"no such table: $name")
-    tables -= name
-    history -= name
+    require(versions.contains(name), s"no such table: $name")
+    versions -= name
     counters -= name
   }
 
@@ -110,7 +135,7 @@ final class GraftCatalog(val spark: SparkSession) {
   def table(name: String): DataFrame =
     // resolution order: CTE scope shadows everything (standard SQL),
     // then real tables, then logical views (re-planned per read)
-    scope.getOrElse(name, tables.getOrElse(name,
+    scope.getOrElse(name, versions.get(name).map(v => frameOf(v.last)).getOrElse(
       views.get(name).map { thunk =>
         require(!resolvingViews.contains(name),
           s"view cycle detected through $name — re-create one of the " +
@@ -120,7 +145,7 @@ final class GraftCatalog(val spark: SparkSession) {
       }.getOrElse(
         throw new IllegalArgumentException(s"no such table: $name"))))
 
-  def exists(name: String): Boolean = tables.contains(name)
+  def exists(name: String): Boolean = versions.contains(name)
 
   // ── logical views (round-15: CREATE [OR REPLACE] VIEW) ──
   // name → a THUNK that re-plans the body on every read, so view reads
@@ -131,7 +156,7 @@ final class GraftCatalog(val spark: SparkSession) {
   private var views = Map.empty[String, () => DataFrame]
   def registerView(name: String, plan: () => DataFrame,
                    orReplace: Boolean): Unit = {
-    require(!tables.contains(name),
+    require(!versions.contains(name),
       s"$name is a table — drop it first or pick another name")
     require(orReplace || !views.contains(name),
       s"view $name exists — use CREATE OR REPLACE VIEW")
@@ -142,14 +167,20 @@ final class GraftCatalog(val spark: SparkSession) {
     require(ifExists || views.contains(name), s"no such view: $name")
     views -= name
   }
-  def names: Seq[String] = tables.keys.toSeq.sorted
+  def names: Seq[String] = versions.keys.toSeq.sorted
 
   /** M1 INSERT: dynamic-schema append with synthesized id. Returns the
     * appended one-row frame (a LocalRelation over the literals) — the
     * O(delta) feed for incremental view maintenance. The caller already
     * holds these values as literals; deriving them back by anti-joining
     * the full post-insert table would turn a 1-row INSERT into a
-    * table-sized shuffle at 100 TB. */
+    * table-sized shuffle at 100 TB.
+    *
+    * On a driver-local table a row whose fields all exist in the table
+    * with the same types (missing fields read NULL) is appended to the
+    * row store, with no plan built. Any other row unions by name — new
+    * fields widen the schema, mismatched types coerce as Catalyst's union
+    * does — and the union folds back into one store ([[commit]]). */
   def insert(name: String, values: Seq[(String, Any)]): DataFrame = {
     val id = counters.getOrElse(name, 0L) + 1
     counters += name -> id
@@ -172,12 +203,26 @@ final class GraftCatalog(val spark: SparkSession) {
     })
     val rowDf = spark.createDataFrame(
       java.util.Collections.singletonList(row), schema)
-    commit(name, tables.get(name) match {
-      case Some(existing) => existing.unionByName(rowDf, allowMissingColumns = true)
-      case None => rowDf
-    })
+    val one = rowDf.queryExecution.logical.asInstanceOf[LocalRelation].data.head
+    versions.get(name).map(_.last) match {
+      case Some(Right(s)) if fits(s.schema, schema) =>
+        val at = s.schema.fields.map(f => (schema.fieldNames.indexOf(f.name), f.dataType))
+        commitVersion(name, Right(s.appendInternal(Seq(new GenericInternalRow(
+          at.map { case (i, t) => if (i < 0) null else one.get(i, t) })))))
+      case Some(existing) =>
+        commit(name, frameOf(existing).unionByName(rowDf, allowMissingColumns = true))
+      case None => commitVersion(name, Right(LocalRows.internal(spark, schema, Vector(one))))
+    }
     rowDf
   }
+
+  // an insert of `row`'s fields appends to a store of `table` unchanged:
+  // every field exists in the table with its type (distinct names, so
+  // none is read twice), and the table's columns are nullable, as the
+  // union's columns would be
+  private def fits(table: StructType, row: StructType): Boolean =
+    table.forall(_.nullable) && row.map(_.name).distinct.length == row.length &&
+      row.forall(f => table.find(_.name == f.name).exists(_.dataType == f.dataType))
 
   /** M1 growth (round-12): INSERT … SELECT — bulk append of a query's
     * rows. The delta materializes ONCE (localCheckpoint) so the
@@ -191,8 +236,8 @@ final class GraftCatalog(val spark: SparkSession) {
     require(!rows.columns.contains("id"),
       "INSERT … SELECT: the dialect synthesizes id — don't project one")
     val withId = stampIds(name, rows)
-    commit(name, tables.get(name) match {
-      case Some(existing) => existing.unionByName(withId, allowMissingColumns = true)
+    commit(name, versions.get(name) match {
+      case Some(h) => frameOf(h.last).unionByName(withId, allowMissingColumns = true)
       case None => withId
     })
     withId
@@ -268,11 +313,13 @@ final class GraftCatalog(val spark: SparkSession) {
   def delete(name: String, where: org.apache.spark.sql.Column): Unit =
     commit(name, table(name).filter(!coalesce(where, lit(false))))
 
-  /** Checkpoint a table's accumulated plan (row-at-a-time inserts build a
-    * union per row; updates stack projections) to parquet and re-register
-    * the scan — plan depth returns to 1, results unchanged. The analog of
-    * log compaction for the copy-on-write surfaces; at scale run it on a
-    * cadence (or via Streams ingest, which lands in parquet directly).
+  /** Checkpoint a table's accumulated plan (appends to a non-local table
+    * build a union each; updates stack projections) to parquet and
+    * re-register the scan — plan depth returns to 1, results unchanged.
+    * The analog of log compaction for the copy-on-write surfaces; at
+    * scale run it on a cadence (or via Streams ingest, which lands in
+    * parquet directly). A driver-local table needs none — it is one
+    * local relation already — and after compact() it is a parquet table.
     *
     * Safe to run REPEATEDLY against the same path: the write lands in a
     * tmp dir and swaps in via [[graft.sources.Sources.swapDir]] (a direct
@@ -295,8 +342,6 @@ final class GraftCatalog(val spark: SparkSession) {
     // same contents, new plan: replace the CURRENT version in place so
     // versionOf stays aligned and the latest version's lineage is freed
     val scan = spark.read.parquet(path)
-    tables += name -> scan
-    history += name -> (history.getOrElse(name, Vector.empty)
-      .dropRight(1) :+ scan)
+    versions += name -> (versions.getOrElse(name, Vector.empty).dropRight(1) :+ Left(scan))
   }
 }

@@ -1,7 +1,17 @@
 package graft.doc
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Document store (SURVEY §2.1 S9/S10, §2.2 P2, §2.6 F3/F4).
   *
@@ -16,19 +26,104 @@ import org.apache.spark.sql.functions._
   */
 object DocStore {
 
-  /** Save path (S9): raw JSON strings → nested rows, schema inferred —
-    * the Spark-native equivalent of the reference's shredder. Pass
-    * `docSchema` to parse against a collection's established schema (the
-    * reference keeps a per-collection path registry, server.py:289-331;
-    * here that registry IS the collection's StructType). */
-  def fromJson(spark: SparkSession, idAndJson: DataFrame,
-               docSchema: Option[org.apache.spark.sql.types.DataType] = None): DataFrame = {
+  /** Bulk save path (S9): raw JSON strings → nested rows, schema
+    * inferred — the Spark-native equivalent of the reference's shredder.
+    * A collection's schema plays the reference's per-collection path
+    * registry (server.py:289-331); [[parseAgainst]] grows it one document
+    * at a time. */
+  def fromJson(spark: SparkSession, idAndJson: DataFrame): DataFrame = {
     import spark.implicits._
-    val schema = docSchema.getOrElse {
-      spark.read.json(idAndJson.select(col("json")).as[String]).schema
-    }
+    val schema = spark.read.json(idAndJson.select(col("json")).as[String]).schema
     idAndJson.withColumn("doc", from_json(col("json"), schema)).drop("json")
   }
+
+  // the JSON reader leniencies Spark's own JSON source has on by default
+  private val mapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /** Driver-side save path ([[graft.HashDb.saveDocument]]): `json`, one
+    * JSON object, as a Catalyst struct of the collection's doc type
+    * `docType` (None: a new collection) widened by every field the
+    * collection has not seen yet — no Spark job, and no plan. New fields
+    * take the types Spark's JSON inference gives them (integers `bigint`,
+    * other numbers `double`, all-null fields `string`), and a struct that
+    * gains fields keeps them sorted by name, as inference does. Numbers
+    * widen `bigint` → `decimal(38,0)` → `double`; any other value whose
+    * JSON type differs from its field's type throws an
+    * IllegalArgumentException that names `what` and the field. Returns the
+    * widened type and the document in it. */
+  def parseAgainst(json: String, docType: Option[DataType],
+                   what: String): (StructType, InternalRow) = {
+    val node = try mapper.readTree(json) catch {
+      case e: JsonProcessingException =>
+        throw new IllegalArgumentException(s"$what: not valid JSON: ${e.getOriginalMessage}")
+    }
+    require(node != null && node.isObject, s"$what: a document must be a JSON object")
+    val t = canonical(widen(docType.getOrElse(new StructType()), node, "", what))
+    (t.asInstanceOf[StructType], toCatalyst(node, t).asInstanceOf[InternalRow])
+  }
+
+  private def widen(t: DataType, v: JsonNode, path: String, what: String): DataType = {
+    def conflict = throw new IllegalArgumentException(
+      s"$what: field ${path.stripPrefix(".")} holds a JSON " +
+        s"${v.getNodeType.toString.toLowerCase}, but the collection stores it as ${t.simpleString}")
+    def rank(n: DataType) = n match {
+      case LongType => 0; case _: DecimalType => 1; case _ => 2 }
+    if (v.isNull) t
+    else (t, v) match {
+      case (NullType, _) =>
+        if (v.isObject) widen(new StructType(), v, path, what)
+        else if (v.isArray) widen(ArrayType(NullType), v, path, what)
+        else if (v.isTextual) StringType
+        else if (v.isBoolean) BooleanType
+        else if (v.isFloatingPointNumber) DoubleType
+        else if (v.isNumber) {
+          if (v.canConvertToLong) LongType
+          else if (v.bigIntegerValue.toString.length <= 38) DecimalType(38, 0)
+          else DoubleType
+        }
+        else conflict
+      case (s: StructType, _) if v.isObject =>
+        val kept = s.fields.map(f => Option(v.get(f.name)).fold(f)(x =>
+          f.copy(dataType = widen(f.dataType, x, s"$path.${f.name}", what))))
+        val added = v.fieldNames.asScala.filterNot(s.fieldNames.toSet).map(k =>
+          StructField(k, widen(NullType, v.get(k), s"$path.$k", what))).toSeq
+        if (added.isEmpty) StructType(kept.toSeq) else StructType((kept ++ added).sortBy(_.name).toSeq)
+      case (ArrayType(e, nulls), _) if v.isArray =>
+        ArrayType(v.elements.asScala.foldLeft(e)((acc, x) => widen(acc, x, s"$path[]", what)), nulls)
+      case (StringType, _) if v.isTextual => t
+      case (BooleanType, _) if v.isBoolean => t
+      case (LongType | DoubleType | _: DecimalType, _) if v.isNumber =>
+        val n = widen(NullType, v, path, what)
+        if (rank(n) > rank(t)) n else t
+      case _ => conflict
+    }
+  }
+
+  // an all-null field reads as a string, as Spark's JSON inference has it
+  private def canonical(t: DataType): DataType = t match {
+    case NullType => StringType
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = canonical(f.dataType))))
+    case ArrayType(e, n) => ArrayType(canonical(e), n)
+    case other => other
+  }
+
+  // `v` in Catalyst form; `t` is [[widen]]'s type for it
+  private def toCatalyst(v: JsonNode, t: DataType): Any =
+    if (v == null || v.isNull) null
+    else t match {
+      case s: StructType => new GenericInternalRow(s.fields.map(f => toCatalyst(v.get(f.name), f.dataType)))
+      case ArrayType(e, _) => new GenericArrayData(v.elements.asScala.map(toCatalyst(_, e)).toArray)
+      case StringType => UTF8String.fromString(v.textValue)
+      case BooleanType => v.booleanValue
+      case LongType => v.longValue
+      case DoubleType => v.doubleValue
+      case d: DecimalType =>
+        val dec = Decimal(v.decimalValue)
+        require(dec.changePrecision(d.precision, d.scale), s"$v does not fit ${d.simpleString}")
+        dec
+    }
 
   /** Read path (S10): hydrate a nested doc column back to a JSON string. */
   def hydrate(docs: DataFrame, docCol: String = "doc"): DataFrame =

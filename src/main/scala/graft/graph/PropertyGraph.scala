@@ -1441,8 +1441,9 @@ object PropertyGraph {
   /** MERGE's probe-then-append: `df` plus those of `rows` (column → value,
     * one per graph column) whose `keys` identity `df` does not hold yet;
     * existing rows are never touched. A driver-local frame — every session
-    * graph grown from [[empty]] by MERGEs — is read whole and rebuilt as
-    * ONE local relation ([[graft.core.LocalRows]]). Any other frame
+    * graph grown from [[empty]] by MERGEs — is read as its row store and
+    * the absent rows appended, so it stays ONE local relation
+    * ([[graft.core.LocalRows]]). Any other frame
     * (parquet, TPC-H joins, a graph after DELETE/SET or a checkpoint) is
     * probed with one `isin` filter per key column — it may over-fetch
     * crossed key combinations, settled exactly on the driver — and gets
@@ -1450,15 +1451,15 @@ object PropertyGraph {
   private def appendAbsent(df: DataFrame, keys: Seq[String],
                            rows: Seq[Map[String, Any]]): DataFrame = {
     val local = LocalRows.of(df)
-    val have = local.getOrElse(
+    val have = local.fold(
         df.filter(keys.map(k => col(k).isin(rows.map(_(k)).distinct: _*))
-          .reduce(_ && _)).collect())
+          .reduce(_ && _)).collect().toSeq)(_.toRows)
       .map(r => keys.map(r.getAs[Any])).toSet
     val fresh = rows.filterNot(r => have(keys.map(r)))
       .map(r => Row.fromSeq(df.columns.toSeq.map(r)))
     if (fresh.isEmpty) df
-    else local.fold(df.union(LocalRows.frame(df, fresh)))(
-      old => LocalRows.frame(df, old.toSeq ++ fresh))
+    else local.fold(df.union(LocalRows(df.sparkSession, df.schema, fresh).frame))(
+      _.append(fresh).frame)
   }
 
   /** MERGE node identity: the `name` attribute when present (the

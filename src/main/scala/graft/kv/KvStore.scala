@@ -1,7 +1,10 @@
 package graft.kv
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.LocalRows
 
 /** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; reference
@@ -20,29 +23,53 @@ import graft.core.LocalRows
   * reference's `sorted(items, key=sort_key, reverse=…)` postcondition
   * (server.py:126,139-140,153-154,167-168).
   */
-final case class KvStore(df: DataFrame) {
+final class KvStore private (held: Either[DataFrame, LocalRows]) {
   import KvStore.sorted
 
-  // ---- writes (S1-S3). Appends are unions: at scale this is an append to a
-  // pk-partitioned table, not a rewrite. `put` overwrites (the reference's
-  // hashmap set): it drops any prior (pk, sk) row first. A session store
-  // (driver-local rows) is rebuilt as one local relation (LocalRows).
+  /** The store as a frame: for a session store, the one local relation
+    * over its held rows. */
+  lazy val df: DataFrame = held.fold(identity, _.frame)
+
+  // ---- writes (S1-S3). `put` overwrites (the reference's hashmap set): it
+  // drops any prior (pk, sk) row first. A session store — [[KvStore.empty]]
+  // grown by puts, or any driver-local frame — holds its rows on the driver
+  // ([[graft.core.LocalRows]]): put and delete edit them there, with no
+  // Spark plan built. Any other store (parquet, a union from putAll) is a
+  // plan: a delete is a filter, a put a filter plus a one-row union — at
+  // scale an append to a pk-partitioned table, not a rewrite.
   def put(pk: String, sk: String, value: String): KvStore = {
-    val row = Row.fromSeq(df.columns.toSeq.map(Map("pk" -> pk, "sk" -> sk, "value" -> value)))
-    KvStore(LocalRows.of(df) match {
-      case Some(rows) => LocalRows.frame(df, rows.toSeq.filterNot(r =>
-        r.getAs[String]("pk") == pk && r.getAs[String]("sk") == sk) :+ row)
-      case None => delete(pk, sk).df.union(LocalRows.frame(df, Seq(row)))
-    })
+    def row(schema: StructType) =
+      Row.fromSeq(schema.fieldNames.toSeq.map(Map("pk" -> pk, "sk" -> sk, "value" -> value)))
+    local match {
+      case Some(s) => KvStore(s.filterNot(KvStore.isKey(s, pk, sk)).append(Seq(row(s.schema))))
+      case None => KvStore(delete(pk, sk).df.union(
+        LocalRows(df.sparkSession, df.schema, Seq(row(df.schema))).frame))
+    }
   }
   def putAll(rows: DataFrame): KvStore = KvStore(df.unionByName(rows))
-  def delete(pk: String, sk: String): KvStore =
-    KvStore(df.filter(!(col("pk") === pk && col("sk") === sk)))
+  def delete(pk: String, sk: String): KvStore = held match {
+    case Right(s) => KvStore(s.filterNot(KvStore.isKey(s, pk, sk)))
+    case Left(d) => KvStore(d.filter(!(col("pk") === pk && col("sk") === sk)))
+  }
+
+  // the held rows; a frame store is read once, if it is driver-local
+  private def local: Option[LocalRows] = held.fold(LocalRows.of, Some(_))
 
   /** Exact get — with the optimized layout this prunes to one partition +
     * one row group (reference: md5-ring route + dict lookup, client.py:59-64). */
   def get(pk: String, sk: String): DataFrame =
     df.filter(col("pk") === pk && col("sk") === sk)
+
+  /** The value at (pk, sk): a key lookup over a session store's held rows,
+    * the reference's dict lookup (client.py:25); a collect of [[get]] for
+    * any other store. */
+  def lookup(pk: String, sk: String): Option[String] = held match {
+    case Right(s) =>
+      val v = s.schema.fieldIndex("value")
+      s.rows.find(KvStore.isKey(s, pk, sk)).map(r =>
+        if (r.isNullAt(v)) null else r.getUTF8String(v).toString)
+    case Left(_) => get(pk, sk).select("value").collect().headOption.map(_.getString(0))
+  }
 
   /** D1 `query_begins`: pk exact + sk prefix (server.py:113-126). */
   def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame =
@@ -88,13 +115,22 @@ final case class KvStore(df: DataFrame) {
 }
 
 object KvStore {
+  /** A store over any frame of (pk, sk, value). */
+  def apply(df: DataFrame): KvStore = new KvStore(Left(df))
+  private def apply(rows: LocalRows): KvStore = new KvStore(Right(rows))
+
   private def sorted(d: DataFrame, desc: Boolean): DataFrame =
     d.orderBy(if (desc) col("sk").desc else col("sk").asc)
 
-  def empty(spark: SparkSession): KvStore = {
-    import spark.implicits._
-    KvStore(Seq.empty[(String, String, String)].toDF("pk", "sk", "value"))
+  private def isKey(s: LocalRows, pk: String, sk: String): InternalRow => Boolean = {
+    val (p, k) = (s.schema.fieldIndex("pk"), s.schema.fieldIndex("sk"))
+    val (pu, ku) = (UTF8String.fromString(pk), UTF8String.fromString(sk))
+    r => pu == r.getUTF8String(p) && ku == r.getUTF8String(k)
   }
+
+  /** An empty session store: its rows live on the driver. */
+  def empty(spark: SparkSession): KvStore = KvStore(LocalRows(spark,
+    StructType(Seq("pk", "sk", "value").map(StructField(_, StringType))), Nil))
 
   /** events table → KV view used by the t2 harness: the reference's
     * `people-100 / messages-0000000042` key style (FIXTURES.md §A1) mapped

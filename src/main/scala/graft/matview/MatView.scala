@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Attribu
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Materialized-view routing (SURVEY §2.3 J5 / §2.10 M3 / §4 "candidate for
@@ -36,7 +36,21 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object MatView {
 
-  private final case class Key(leaves: Set[String], cond: Set[(String, String)])
+  private final case class Key(leaves: Set[LeafId], cond: Set[(String, String)])
+
+  /** A relation's identity in a route: its canonical form, which names a
+    * scan's files. A local relation's form prints no rows, so it also
+    * carries the relation's rows, compared by reference: the same held
+    * rows are the same object, and every write to a driver-held table
+    * makes a new one ([[graft.core.LocalRows]]). */
+  private final class LeafId(val canonical: String, val rows: Option[AnyRef]) {
+    override def equals(o: Any): Boolean = o match {
+      case l: LeafId => l.canonical == canonical && l.rows.size == rows.size &&
+        l.rows.zip(rows).forall { case (a, b) => a eq b }
+      case _ => false
+    }
+    override def hashCode: Int = canonical.hashCode
+  }
   private sealed trait ViewEntry { def name: String; def replacement: LogicalPlan }
   private final case class JoinEntry(name: String, key: Key,
                                      replacement: LogicalPlan) extends ViewEntry
@@ -107,8 +121,13 @@ object MatView {
     * `WHERE maybe IS NOT NULL` on a nullable payload column used to be
     * swallowed here, silently routing to rows the filter should have
     * dropped. */
+  private def leafId(leaf: LogicalPlan): LeafId = leaf match {
+    case l: LocalRelation => new LeafId(l.canonicalized.toString, Some(l.data))
+    case _ => new LeafId(leaf.canonicalized.toString, None)
+  }
+
   private def flatten(plan: LogicalPlan)
-      : Option[(Set[String], Set[(String, String)], Set[String])] =
+      : Option[(Set[LeafId], Set[(String, String)], Set[String])] =
     plan match {
       case Project(projectList, child)
           if projectList.forall(_.isInstanceOf[AttributeReference]) =>
@@ -132,7 +151,7 @@ object MatView {
         else for ((ll, lc, ln) <- flatten(j.left); (rl, rc, rn) <- flatten(j.right))
           yield (ll ++ rl, lc ++ rc ++ eqs, ln ++ rn)
       case leaf if leaf.children.isEmpty =>
-        Some((Set(leaf.canonicalized.toString), Set.empty, Set.empty))
+        Some((Set(leafId(leaf)), Set.empty, Set.empty))
       case _ => None
     }
 
@@ -147,7 +166,7 @@ object MatView {
     * is returned and must rewrite against the summary or the route is
     * abandoned. */
   private def flattenCollect(plan: LogicalPlan, joinCols: Set[String])
-      : Option[(Set[String], Set[(String, String)], Seq[Expression])] = plan match {
+      : Option[(Set[LeafId], Set[(String, String)], Seq[Expression])] = plan match {
     case Project(projectList, child)
         if projectList.forall(_.isInstanceOf[AttributeReference]) =>
       flattenCollect(child, joinCols)
@@ -169,7 +188,7 @@ object MatView {
            (rl, rc, rp) <- flattenCollect(j.right, joinCols))
         yield (ll ++ rl, lc ++ rc ++ eqs, lp ++ rp ++ rest)
     case leaf if leaf.children.isEmpty =>
-      Some((Set(leaf.canonicalized.toString), Set.empty, Nil))
+      Some((Set(leafId(leaf)), Set.empty, Nil))
     case _ => None
   }
 
