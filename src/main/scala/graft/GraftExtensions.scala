@@ -11,10 +11,14 @@ import graft.functions.{CosineSim, LshBucket, NfcNormalize, RollingHash, VectorK
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * }}}
   * Registers the custom codegen SQL functions: `rolling_hash`,
-  * `cosine_sim`, `lsh_bucket`, `nfc_normalize`. The materialized-view routing rule installs
-  * per-view at `MatView.materialize` time via
-  * experimental.extraOptimizations (it needs runtime registry state, not a
-  * static rule), and is therefore not listed here.
+  * `cosine_sim`, `lsh_bucket`, `nfc_normalize`. The engine's two optimizer
+  * rules are not listed here, because they install themselves at run time
+  * with `experimental.extraOptimizations`, once per session, into any
+  * session however it was built: the materialized-view route at
+  * `MatView.materialize` time (it needs runtime registry state, and runs
+  * first), and the driver-side fold of plans over driver-held rows
+  * (`graft.core.LocalFold`) when the session first holds a
+  * `graft.core.LocalRows` store.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

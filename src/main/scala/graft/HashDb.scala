@@ -24,8 +24,12 @@ import graft.sql.HashQL
   * ([[graft.core.LocalRows]]) — the reference's in-RAM dicts
   * (client.py:25): a write appends to or filters the rows on the driver,
   * [[get]] and [[getDocument]] are lookups there, and every read plans
-  * over one local relation however long the session runs. Tables
-  * registered from parquet (and graphs from TPC-H) stay plans.
+  * over one local relation however long the session runs. The session
+  * graph is held the same way, through MERGE, DETACH DELETE and SET
+  * alike. Reads that sort, join or deduplicate those rows — a KV range, a
+  * Cypher MATCH, a SQL join — fold to one local relation on the driver
+  * ([[graft.core.LocalFold]]) and run no Spark job. Tables registered
+  * from parquet (and graphs from TPC-H) stay plans.
   *
   * Every entry point that touches session state holds this instance's
   * lock, so concurrent callers are serialized and no write is lost (an
@@ -126,24 +130,18 @@ final class HashDb(val spark: SparkSession) {
   }
 
   // ---------------- graph surface (POST /cypher) ------------------------
-  private var mergesSinceCheckpoint = 0
-
   /** Mutating statements (MERGE / DETACH DELETE / SET) change the graph
     * and return None; every other statement (MATCH, WITH, UNWIND,
-    * shortestPath) returns bindings. A MERGE appends rows (a session
-    * graph stays one local relation), but DETACH DELETE and SET each add
-    * a join layer to the graph's logical plan, so unbounded statement
-    * streams periodically truncate lineage (localCheckpoint) to keep
-    * analysis cost flat. */
+    * shortestPath) returns bindings. A session graph stays one local
+    * relation through every mutation: a MERGE appends rows, and DETACH
+    * DELETE and SET re-root the graph on the rows their plans fold to on
+    * the driver ([[PropertyGraph.execute]]), so neither a mutation nor a
+    * later MATCH runs a Spark job or plans over a lineage that grows with
+    * the session. */
   def cypher(statement: String): Option[DataFrame] = synchronized {
     Cypher.parse(statement) match {
       case m @ (_: Cypher.Merge | _: Cypher.Delete | _: Cypher.SetAttrs) =>
         graph = graph.execute(m)
-        mergesSinceCheckpoint += 1
-        if (mergesSinceCheckpoint >= 32) {
-          graph = graph.checkpointLocal()
-          mergesSinceCheckpoint = 0
-        }
         None
       case q => Some(graph.query(q))
     }

@@ -2,26 +2,33 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
 
 /** A driver-held row store: a session's rows plus their schema, immutable,
   * with one cached [[frame]] that is ONE local relation over exactly these
   * rows. It is the write primitive behind every session write of
   * [[graft.HashDb]] — KV pairs ([[graft.kv.KvStore]]), SQL rows and
-  * documents ([[GraftCatalog]]), Cypher MERGE appends — so a write is an
+  * documents ([[GraftCatalog]]), the Cypher graph — so a write is an
   * append to (or a filter of) a persistent `Vector`, with no Catalyst
-  * analysis, optimization or collect, and every read plans over one leaf
-  * that Catalyst folds at plan time (`ConvertToLocalRelation`): no Spark
-  * job, and a plan whose size does not grow with the session. An append
-  * shares the earlier rows' storage, so versions of an append-only table
-  * cost O(1) rows each, not a copy.
+  * analysis, optimization or collect. An append shares the earlier rows'
+  * storage, so versions of an append-only table cost O(1) rows each, not
+  * a copy.
   *
-  * Spark does not fold a union of local relations into one, and a union
-  * per write scans as one partition per write and keeps filters from
-  * folding; that is why writes append here instead of unioning frames.
-  * Frames that are not driver-local (parquet, joins, checkpoints) have no
-  * store and keep their plans. */
+  * Reads plan over one leaf per store, and the session's optimizer folds
+  * them on the driver: Spark's `ConvertToLocalRelation` folds a Project,
+  * Filter or Limit over a local relation, and [[LocalFold]], installed
+  * once per session by every store, folds sorts, joins, distincts and
+  * unions, so a KV range, a Cypher MATCH or a join of session tables
+  * optimizes to one local relation and runs no Spark job, with a plan
+  * whose size does not grow with the session. A write that plans over
+  * stores (an UPDATE, a DELETE, a schema-widening insert, a Cypher SET)
+  * folds the same way, and [[of]] re-roots its result on a store.
+  *
+  * A union per write would scan as one partition per write and keep
+  * filters from folding; that is why writes append here instead of
+  * unioning frames. Frames that are not driver-local (parquet, RDDs,
+  * checkpoints) have no store and keep their plans. */
 final class LocalRows private (spark: SparkSession, val schema: StructType,
                                val rows: Vector[InternalRow]) {
 
@@ -53,41 +60,41 @@ object LocalRows {
 
   /** A store holding `rows` (external rows in `schema`'s column order). */
   def apply(spark: SparkSession, schema: StructType, rows: Seq[Row]): LocalRows =
-    new LocalRows(spark, schema, rows.iterator.map(toInternal(schema)).toVector)
+    internal(spark, schema, rows.iterator.map(toInternal(schema)).toVector)
 
   /** A store holding `rows`, already in Catalyst form. */
-  def internal(spark: SparkSession, schema: StructType, rows: Vector[InternalRow]): LocalRows =
+  def internal(spark: SparkSession, schema: StructType, rows: Vector[InternalRow]): LocalRows = {
+    install(spark)
     new LocalRows(spark, schema, rows)
+  }
+
+  /** Add [[LocalFold]] to `spark`'s optimizer, once. */
+  private[graft] def install(spark: SparkSession): Unit =
+    if (!spark.experimental.extraOptimizations.contains(LocalFold))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ LocalFold
 
   private def toInternal(schema: StructType): Row => InternalRow = {
     val conv = CatalystTypeConverters.createToCatalystConverter(schema)
     r => conv(r).asInstanceOf[InternalRow]
   }
 
-  /** The store under a driver-local frame: one whose optimized plan is one
-    * local relation, or a union of them (what an UPDATE, DELETE or
-    * schema-widening insert over a store plans to). Reading it runs no
-    * Spark job: the rows are the relations' own. None for any other
-    * frame; a frame with a leaf that is not a local relation (a parquet
-    * scan, an RDD) is rejected from its analyzed plan, without being
-    * optimized. */
+  /** The store under a driver-local frame: one whose optimized plan is
+    * one local relation, as every plan over stores folds to
+    * ([[LocalFold]]) unless a join outgrows its bound or an operator does
+    * not fold. Reading it runs no Spark job: the rows are the relation's
+    * own. None for any other frame; a frame with a leaf that is not a
+    * local relation (a parquet scan, an RDD) is rejected from its analyzed
+    * plan, without being optimized. */
   def of(df: DataFrame): Option[LocalRows] = {
     val qe = df.queryExecution
     if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
     else {
-      val parts = qe.optimizedPlan match {
-        case r: LocalRelation => Seq(r)
-        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-          u.children.map(_.asInstanceOf[LocalRelation])
-        case _ => Nil
+      install(df.sparkSession)
+      qe.optimizedPlan match {
+        case r: LocalRelation if r.schema.map(_.dataType) == df.schema.map(_.dataType) =>
+          Some(new LocalRows(df.sparkSession, df.schema, r.data.toVector))
+        case _ => None
       }
-      val types = df.schema.map(_.dataType)
-      if (parts.isEmpty || parts.exists(_.schema.map(_.dataType) != types)) None
-      else Some(new LocalRows(df.sparkSession, df.schema,
-        parts match {
-          case Seq(one) => one.data.toVector
-          case _ => parts.iterator.flatMap(_.data).toVector
-        }))
     }
   }
 }

@@ -1045,9 +1045,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * stays map-side), `MATCH … SET` upserts one attribute per set item on
     * the bound nodes (map_filter + map_concat — scan-side map surgery, no
     * explode). Each statement references the previous vertices/edges plan
-    * once; DELETE and SET each add a join layer, so
-    * [[compact]]/[[checkpointLocal]] reset depth for long statement
-    * streams. */
+    * once; DELETE and SET each add a join layer, which a driver-local
+    * graph folds away: when a frame's plan folds to one local relation
+    * ([[graft.core.LocalFold]]) it is re-rooted on that store, so a
+    * session graph stays one local relation through every mutation. Any
+    * other graph keeps the layer; [[compact]]/[[checkpointLocal]] reset
+    * its depth for long statement streams. */
   def execute(cypher: String): PropertyGraph = execute(Cypher.parse(cypher))
 
   /** [[execute]] over an already-parsed statement. */
@@ -1058,11 +1061,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         vars.map(v => Cypher.Ret(v, None)), wheres))
       val del = vars.map(v => bound.select(col(v).as("name")))
         .reduce(_ unionByName _).distinct()
-      PropertyGraph(
+      PropertyGraph.rooted(PropertyGraph(
         vertices.join(del, Seq("name"), "left_anti"),
         edgesN.join(del.select(col("name").as("src")), Seq("src"), "left_anti")
           .join(del.select(col("name").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"), col("rel"), col("eattrs")))
+          .select(col("src"), col("dst"), col("rel"), col("eattrs"))))
     case Cypher.SetAttrs(chains, wheres, sets) =>
       sets.foreach { case (_, attr, _) =>
         require(attr != "name", "cannot SET the identity attribute 'name'") }
@@ -1080,7 +1083,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
                 map(lit(attr), lit(value))))
               .otherwise(col("attrs")).as("attrs"))
       }
-      PropertyGraph(v2, edges)
+      PropertyGraph.rooted(PropertyGraph(v2, edges))
     case _ => throw new IllegalArgumentException(
       s"not a mutating statement: $stmt")
   }
@@ -1438,13 +1441,22 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
 object PropertyGraph {
 
+  /** `g` with each frame whose plan folds to one local relation re-rooted
+    * on its row store ([[graft.core.LocalRows.of]]) — the fold-back
+    * [[graft.core.GraftCatalog]] does for UPDATE and DELETE. */
+  private def rooted(g: PropertyGraph): PropertyGraph = {
+    def root(df: DataFrame): DataFrame = LocalRows.of(df).fold(df)(_.frame)
+    PropertyGraph(root(g.vertices), root(g.edges))
+  }
+
   /** MERGE's probe-then-append: `df` plus those of `rows` (column → value,
     * one per graph column) whose `keys` identity `df` does not hold yet;
     * existing rows are never touched. A driver-local frame — every session
     * graph grown from [[empty]] by MERGEs — is read as its row store and
     * the absent rows appended, so it stays ONE local relation
-    * ([[graft.core.LocalRows]]). Any other frame
-    * (parquet, TPC-H joins, a graph after DELETE/SET or a checkpoint) is
+    * ([[graft.core.LocalRows]]); DETACH DELETE and SET keep it so
+    * ([[rooted]]). Any other frame (parquet, TPC-H joins, a checkpoint, a
+    * local graph whose mutation did not fold to one local relation) is
     * probed with one `isin` filter per key column — it may over-fetch
     * crossed key combinations, settled exactly on the driver — and gets
     * a union. */

@@ -22,6 +22,11 @@ import graft.core.LocalRows
   * All query methods return rows ordered by sort key asc/desc, matching the
   * reference's `sorted(items, key=sort_key, reverse=…)` postcondition
   * (server.py:126,139-140,153-154,167-168).
+  *
+  * A session store holds its pairs on the driver ([[graft.core.LocalRows]]),
+  * the reference's per-node dict: a query's filter and sort fold there at
+  * plan time ([[graft.core.LocalFold]]), so a range read, like
+  * [[lookup]], runs no Spark job.
   */
 final class KvStore private (held: Either[DataFrame, LocalRows]) {
   import KvStore.sorted

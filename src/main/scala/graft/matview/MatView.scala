@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import graft.core.LocalFold
 
 /** Materialized-view routing (SURVEY §2.3 J5 / §2.10 M3 / §4 "candidate for
   * a custom Rule").
@@ -29,7 +30,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * leaf relations are the view's leaf relations and (b) its inner
   * equi-condition involves the same column-name pairs. The substitute scan
   * is wrapped in a by-name Project aliased to the join's original
-  * expression ids, so pruned queries and parents keep resolving.
+  * expression ids, so pruned queries and parents keep resolving. It runs
+  * before the driver-side fold of local plans ([[graft.core.LocalFold]]),
+  * and a view registers its plan as Spark alone optimizes it
+  * ([[graft.core.LocalFold.unfolded]]), so views over driver-held tables
+  * match as views over any other tables do.
   * Limitation (by construction of CREATE JOIN views): column names across
   * the joined tables must be distinct — true for every view the HashQL
   * surface can register.
@@ -421,7 +426,7 @@ object MatView {
     // materializing write) to the STALE parquet: the key extraction below
     // would then see a scan instead of a join and throw.
     drop(spark, name)
-    val analyzed = view.queryExecution.optimizedPlan
+    val analyzed = LocalFold.unfolded(view).optimizedPlan
     // collectFirst visits pre-order, so the first Join is the topmost —
     // keyOf flattens the whole chain under it.
     val joinKey = analyzed.collectFirst { case j: Join => keyOf(j) }.flatten.getOrElse(
@@ -433,10 +438,12 @@ object MatView {
     installRule(spark)
   }
 
+  // first among the extra rules, so it sees the plan before the
+  // driver-side fold of local plans (LocalFold) does
   private def installRule(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[Rewrite]))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new Rewrite(spark)
+        new Rewrite(spark) +: spark.experimental.extraOptimizations
 
   /** Materialize an AGGREGATE view (a group-by over a relation or join
     * chain) and route matching aggregations to the summary parquet — the
@@ -486,7 +493,7 @@ object MatView {
     // same refresh-ordering contract as materialize: unregister before
     // planning or writing, so the stale route can't capture either
     drop(spark, name)
-    val plan = view.queryExecution.optimizedPlan
+    val plan = LocalFold.unfolded(view).optimizedPlan
     // the ROOT must be the Aggregate: the rule only compares Aggregate
     // nodes against the stored canonical, so registering e.g. a
     // Filter-over-aggregate would be a dead entry that never routes

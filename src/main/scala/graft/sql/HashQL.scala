@@ -7295,12 +7295,13 @@ object HashQL {
         // whose WHERE fails to link every source leaves a cartesian in
         // the plan — at 100 TB that is |A|×|B| work. Reject with the
         // remedy instead of executing it. (Plan-only check: the
-        // optimizer runs, nothing executes.)
+        // optimizer runs, nothing executes; over the plan without the
+        // driver-side fold, so session tables are judged as any others.)
         if (sel.froms.nonEmpty) {
           // a ≤1-row side is NOT a cartesian risk — the uncorrelated
           // scalar-subquery/EXISTS probes legitimately broadcast one row
           // on a condition-less cross join, and maxRows proves it
-          val cartesian = df.queryExecution.optimizedPlan.collectFirst {
+          val cartesian = graft.core.LocalFold.unfolded(df).optimizedPlan.collectFirst {
             case j: org.apache.spark.sql.catalyst.plans.logical.Join
                 if j.condition.isEmpty &&
                   j.joinType == org.apache.spark.sql.catalyst.plans.Cross &&

@@ -2,8 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` API — the one place the engine
@@ -14,7 +16,11 @@ import org.apache.spark.sql.types.StructType
   *    custom Catalyst expressions as Columns;
   *  - a DataFrame over a local relation whose rows are already in Catalyst
   *    form ([[graft.core.LocalRows]]), so a driver-held row store builds
-  *    its frame without converting or copying a row. */
+  *    its frame without converting or copying a row;
+  *  - for the driver-side fold of local plans ([[graft.core.LocalFold]]):
+  *    a frame planned afresh (a new `QueryExecution`), and the NaN/-0.0
+  *    normalization the hash aggregate applies to floating-point grouping
+  *    keys. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -23,4 +29,10 @@ object GraftBridge {
                  rows: Seq[InternalRow]): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows.toVector))
+
+  def planAfresh(df: DataFrame): QueryExecution =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sessionState
+      .executePlan(df.queryExecution.logical)
+
+  def normalizeFloats(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

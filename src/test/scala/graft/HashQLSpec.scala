@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftCatalog
+import graft.core.{GraftCatalog, LocalFold}
 import graft.sql.HashQL
 import org.apache.spark.sql.functions.{col, count, lit}
 
@@ -160,9 +160,10 @@ class HashQLSpec extends SparkSpec {
     assert(nms("select c.nm from c left join o on c.nm = o.who " +
       "where o.amt is not null") == Seq("ann", "ann", "cat"))
     // the join type survives optimization: projecting a right-side column
-    // keeps LeftOuter (no silent inner-join degrade)
-    assert(lj.queryExecution.optimizedPlan.toString.contains("LeftOuter"),
-      lj.queryExecution.optimizedPlan.toString)
+    // keeps LeftOuter (no silent inner-join degrade); checked on the plan
+    // Spark makes, as these driver-held tables would otherwise fold away
+    assert(LocalFold.unfolded(lj).optimizedPlan.toString.contains("LeftOuter"),
+      LocalFold.unfolded(lj).optimizedPlan.toString)
     // on an ordinary table, is not null is the missing-field skip made
     // explicit; is null selects the schema-union null rows
     HashQL.execute(cat, "insert into c (nm, extra) values ('dan', 9)")
@@ -300,7 +301,8 @@ class HashQLSpec extends SparkSpec {
       "select m.nm, m.v from m order by m.v desc limit 2").get
     assert(top.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("c", 7L), ("d", 5L)))
-    val plan = top.queryExecution.executedPlan.toString
+    // the plan Spark makes, as these driver-held rows would otherwise fold
+    val plan = LocalFold.unfolded(top).executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"order by + limit did not plan top-k:\n$plan")
     assert(!plan.contains("Exchange rangepartitioning"),
@@ -1024,9 +1026,10 @@ class HashQLSpec extends SparkSpec {
       "select cust.nm from cust where not exists (select ord.id from ord " +
         "where ord.ck = cust.k and ord.st = 'open')").get
     assert(nex.as[String].collect().toSet == Set("b"))
-    // the plan is a join, not a cartesian/filter shape
-    assert(ex.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-    assert(nex.queryExecution.optimizedPlan.toString.contains("LeftAnti"))
+    // the plan is a join, not a cartesian/filter shape (the plan Spark
+    // makes, as these driver-held tables would otherwise fold away)
+    assert(LocalFold.unfolded(ex).optimizedPlan.toString.contains("LeftSemi"))
+    assert(LocalFold.unfolded(nex).optimizedPlan.toString.contains("LeftAnti"))
   }
 
   test("uncorrelated EXISTS is an all-or-nothing gate") {
@@ -2578,8 +2581,9 @@ class HashQLSpec extends SparkSpec {
     assert(j.as[(String, Long)].collect().toSeq ==
       Seq(("B", 10L), ("A", 12L)))
     // the equality folded into the join condition — the physical plan is
-    // a hash join, not a cartesian pair scan
-    val ep = j.queryExecution.executedPlan.toString
+    // a hash join, not a cartesian pair scan (the plan Spark makes, as
+    // these driver-held tables would otherwise fold away)
+    val ep = LocalFold.unfolded(j).executedPlan.toString
     assert(!ep.contains("CartesianProduct") &&
       (ep.contains("HashJoin") || ep.contains("SortMergeJoin")), ep)
     // aliases compose (comma self-join)

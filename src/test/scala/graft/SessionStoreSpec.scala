@@ -118,6 +118,99 @@ class SessionStoreSpec extends SparkSpec {
     assert(jobs.isEmpty, s"jobs started: $jobs")
   }
 
+  test("session range reads, Cypher MATCH, joins, order by and distinct run no Spark job") {
+    val db = new HashDb(spark)
+    val kv = mutable.TreeMap.empty[String, String]
+    (1 to 12).foreach { i => db.set("p", f"s$i%02d", s"v$i"); kv(f"s$i%02d") = s"v$i" }
+    db.set("q", "s05", "other")
+    db.sql("create join inner join people on items.owner = people.pid " +
+      "inner join products on items.search = products.name")
+    val people = Seq((1L, "ann", 30L), (2L, "bob", 25L), (3L, "cat", 30L))
+    people.foreach { case (pid, n, age) =>
+      db.sql(s"insert into people (pid, people_name, age) values ($pid, '$n', $age)") }
+    Seq(("pen", 100L), ("cup", 200L)).foreach { case (n, price) =>
+      db.sql(s"insert into products (name, price) values ('$n', $price)") }
+    Seq(("pen", 1L), ("pen", 3L), ("cup", 2L), ("pen", 9L)).foreach { case (s, o) =>
+      db.sql(s"insert into items (search, owner, note) values ('$s', $o, 'x')") }
+    Seq("a" -> "b", "a" -> "c", "b" -> "c").foreach { case (a, b) =>
+      db.cypher(s"merge (a:P {'name': '$a'})-[:R]->(b:P {'name': '$b'})") }
+    def col0(df: DataFrame): Seq[String] = df.collect().map(_.get(0).toString).toSeq
+    val jobs = jobsOf {
+      val range = kv.range("s03", "s08\u0000").map { case (k, v) => s"$k=$v" }.toSeq
+      def pairs(df: DataFrame) = df.collect().map(r => s"${r.getString(1)}=${r.getString(2)}").toSeq
+      assert(pairs(db.kv.queryBetween("p", "s03", "s08")) == range)
+      assert(pairs(db.kv.queryBetween("p", "s03", "s08", desc = true)) == range.reverse)
+      assert(col0(db.cypher("match (a:P {name: 'a'})-[:R]->(b:P) return b").get).sorted == Seq("b", "c"))
+      assert(col0(db.cypher("match (a:P)-[:R]->(b:P {name: 'c'}) return a").get).sorted == Seq("a", "b"))
+      val joined = db.sql("select products.price, people.people_name, items.search from items " +
+        "inner join people on items.owner = people.pid " +
+        "inner join products on items.search = products.name where items.search = 'pen'").get
+      assert(joined.collect().map(_.mkString("|")).sorted.toSeq == Seq("100|ann|pen", "100|cat|pen"))
+      assert(col0(db.sql("select people.people_name from people order by people.age desc, " +
+        "people.people_name").get) == Seq("ann", "cat", "bob"))
+      assert(col0(db.sql("select distinct people.age from people").get).sorted == Seq("25", "30"))
+    }
+    assert(jobs.isEmpty, s"jobs started: $jobs")
+  }
+
+  test("a 240-statement MERGE/SET/DETACH DELETE session stays one local relation and runs no job") {
+    val db = new HashDb(spark)
+    val rnd = new Random(11)
+    val names = (0 until 10).map(i => s"n$i")
+    val colors = Seq("red", "blue")
+    val attrs = mutable.Map.empty[String, Map[String, String]] // name -> attrs but name
+    val edges = mutable.Set.empty[(String, String)]
+    def pick(): String = names(rnd.nextInt(names.length))
+    def names0(df: DataFrame): Set[String] = df.collect().map(_.getString(0)).toSet
+    def statement(): Unit = rnd.nextInt(10) match {
+      case 0 | 1 | 2 | 3 | 4 =>
+        val (a, b) = (pick(), pick())
+        db.cypher(s"merge (a:P {'name': '$a'})-[:R]->(b:P {'name': '$b'})")
+        Seq(a, b).foreach(n => attrs.getOrElseUpdate(n, Map.empty)); edges += ((a, b))
+      case 5 | 6 =>
+        val (a, c) = (pick(), colors(rnd.nextInt(2)))
+        db.cypher(s"match (p:P {name: '$a'}) set p.color = '$c'")
+        attrs.get(a).foreach(m => attrs(a) = m + ("color" -> c))
+      case 7 =>
+        val c = colors(rnd.nextInt(2))
+        db.cypher(s"match (p:P) where p.color = '$c' set p.seen = 'y'")
+        attrs.foreach { case (n, m) => if (m.get("color").contains(c)) attrs(n) = m + ("seen" -> "y") }
+      case _ =>
+        val a = pick()
+        if (rnd.nextBoolean()) {
+          db.cypher(s"match (p:P {name: '$a'}) detach delete p")
+          attrs.remove(a); edges.filterInPlace { case (s, d) => s != a && d != a }
+        } else {
+          db.cypher(s"match (a:P {name: '$a'})-[:R]->(b:P) detach delete b")
+          val gone = edges.collect { case (`a`, b) => b }.toSet
+          gone.foreach(attrs.remove); edges.filterInPlace { case (s, d) => !gone(s) && !gone(d) }
+        }
+    }
+    def check(): Unit = {
+      val g = db.graphState
+      Seq(g.vertices, g.edges).foreach(df => assert(isOneLocalRelation(df), df.queryExecution.analyzed.treeString))
+      assert(names0(g.vertices.select("name")) == attrs.keySet)
+      assert(g.edges.collect().map(r => (r.getString(0), r.getString(1))).toSet == edges)
+      val a = pick()
+      assert(names0(db.cypher(s"match (a:P {name: '$a'})-[:R]->(b:P) return b").get) ==
+        edges.collect { case (`a`, b) => b }.toSet)
+      val c = colors(rnd.nextInt(2))
+      assert(names0(db.cypher(s"match (p:P) where p.color = '$c' return p").get) ==
+        attrs.collect { case (n, m) if m.get("color").contains(c) => n }.toSet)
+      assert(names0(db.cypher("match (p:P) where p.seen = 'y' return p").get) ==
+        attrs.collect { case (n, m) if m.contains("seen") => n }.toSet)
+    }
+    (1 to 40).foreach(_ => statement())
+    check()
+    // past the old 32-mutation checkpoint, mutations and reads stay on the driver
+    val jobs = jobsOf((1 to 20).foreach { k =>
+      (1 to 10).foreach(_ => statement())
+      if (k % 4 == 0) check()
+    })
+    assert(jobs.isEmpty, s"jobs started: $jobs")
+    check()
+  }
+
   test("saveDocument widens the collection schema for a new field; earlier docs keep theirs") {
     val db = new HashDb(spark)
     db.saveDocument("c", 1, """{"age":30,"name":"a"}""")
