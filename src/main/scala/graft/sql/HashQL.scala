@@ -265,6 +265,128 @@ object HashQL {
       "array_agg_distinct").contains(fn),
       s"unsupported aggregate: $fn")
   }
+  /** [[EFunc]]'s function inventory: name → accepted arities (built
+    * once, not per node). */
+  private lazy val funcArity: Map[String, Set[Int]] = Map(
+    "upper" -> Set(1), "lower" -> Set(1),
+    "length" -> Set(1), "trim" -> Set(1), "abs" -> Set(1),
+    "floor" -> Set(1), "ceil" -> Set(1), "substr" -> Set(2, 3),
+    "year" -> Set(1), "month" -> Set(1), "day" -> Set(1),
+    "coalesce" -> Set(2, 3, 4), "nullif" -> Set(2),
+    "concat" -> (2 to 8).toSet, "round" -> Set(1, 2),
+    "replace" -> Set(3), "mod" -> Set(2),
+    "hour" -> Set(1), "minute" -> Set(1), "date_trunc" -> Set(2),
+    // round-11 date-part growth: quarter/week/dayofyear agree between
+    // engines (week = ISO week number on both; dayofweek does NOT —
+    // deliberately absent)
+    "quarter" -> Set(1), "week" -> Set(1), "dayofyear" -> Set(1),
+    // round-11 regexp/string tier 2 (Java regex semantics; the oracle
+    // notes pin the DuckDB equivalences): regexp_replace replaces ALL
+    // occurrences (DuckDB spells that with the 'g' flag),
+    // regexp_extract returns '' on no match (both engines), split is
+    // regex-delimited (DuckDB string_split_regex), split_part is
+    // 1-based on a LITERAL delimiter (both engines)
+    "regexp_replace" -> Set(3), "regexp_extract" -> Set(3),
+    "split" -> Set(2), "split_part" -> Set(3),
+    // date_add/date_sub(d, n): n whole days; the operand casts to
+    // DATE first (Spark semantics — the oracle spells
+    // CAST(x AS DATE) ± n)
+    "date_add" -> Set(2), "date_sub" -> Set(2),
+    // round-11 string tier 3 — semantics identical on both engines:
+    // instr is 1-based (0 when absent), lpad/rpad truncate when the
+    // input exceeds the length, contains/starts_with/ends_with are
+    // boolean (null-propagating)
+    "instr" -> Set(2), "lpad" -> Set(3), "rpad" -> Set(3),
+    "contains" -> Set(2), "starts_with" -> Set(2), "ends_with" -> Set(2),
+    // round-13 tier 4 — semantics shared with DuckDB where noted:
+    // datediff(end, start) counts DAY BOUNDARIES (timestamps truncate
+    // to dates; the oracle spells date_diff('day', start, end)),
+    // last_day returns the month's last DATE, sqrt is IEEE correctly
+    // rounded (bitwise-identical doubles on both engines),
+    // greatest/least SKIP NULLs on both engines
+    "datediff" -> Set(2), "last_day" -> Set(1), "sqrt" -> Set(1),
+    "greatest" -> (2 to 6).toSet, "least" -> (2 to 6).toSet,
+    // round-13 tier 5 — semantics identical on both engines where
+    // noted: ltrim/rtrim strip spaces; reverse flips; repeat takes a
+    // static count; left/right clamp at the string length for n ≥ 0
+    // (lowered via 1-based substr composition — negative n is DuckDB's
+    // drop-from-the-other-end, deliberately out); strpos is instr's
+    // DuckDB spelling (1-based, 0 absent); translate maps chars
+    // positionally with static from/to (unmatched FROM chars delete);
+    // ascii is the first codepoint (INT on both); md5 the lowercase
+    // hex digest; sign pins BIGINT (DuckDB keeps the argument's type —
+    // oracles cast); power is IEEE correctly rounded like sqrt
+    "ltrim" -> Set(1), "rtrim" -> Set(1), "reverse" -> Set(1),
+    "repeat" -> Set(2), "left" -> Set(2), "right" -> Set(2),
+    "strpos" -> Set(2), "translate" -> Set(3), "ascii" -> Set(1),
+    "md5" -> Set(1), "sign" -> Set(1), "power" -> Set(2),
+    // strftime(x, '<fmt>') (round-13): temporal rendering under
+    // DuckDB's %-code spelling, lowered to Spark's date_format with a
+    // translated pattern; the format is a static literal restricted
+    // to the codes both engines render identically (%Y %y %m %d %H
+    // %M %S %j) plus plain separators. strptime is its parsing
+    // inverse (string → TIMESTAMP, Spark to_timestamp) — on
+    // WELL-FORMED input the engines agree, and under Spark 4's ANSI
+    // default a malformed string RAISES on both engines (round-14:
+    // the r13 divergence note predates ANSI; try_strptime below is
+    // the forgiving NULL pair, also engine-shared)
+    "strftime" -> Set(2), "strptime" -> Set(2),
+    // round-14 tier 6: concat_ws skips NULL arguments on BOTH engines
+    // (unlike the null-propagating concat/|| chain) — the separator
+    // is a static literal (Spark's concat_ws signature); ln/exp/
+    // log2/log10 agree with DuckDB within 1 ulp but are NOT
+    // correctly-rounded across libms (probed — unlike sqrt/power),
+    // so exact cross-engine checks compare a scaled-integer rendering
+    "concat_ws" -> (3 to 8).toSet,
+    "ln" -> Set(1), "exp" -> Set(1), "log2" -> Set(1),
+    "log10" -> Set(1),
+    // round-14 list tier (composes with split's regex-delimited
+    // arrays): len = element count (BIGINT on both engines — Spark
+    // size pins long), list_contains = membership (null-propagating
+    // both), array_to_string joins with a STATIC separator (DuckDB
+    // array_to_string ≡ Spark array_join; both skip nothing — NULL
+    // elements become empty on neither engine's split output)
+    "len" -> Set(1), "list_contains" -> Set(2),
+    "array_to_string" -> Set(2),
+    // epoch/epoch_ms (round-15): DuckDB epoch = fractional SECONDS as
+    // DOUBLE (micros/1e6 — one exact division both engines share);
+    // epoch_ms = exact BIGINT milliseconds (Spark unix_millis)
+    "epoch" -> Set(1), "epoch_ms" -> Set(1),
+    // millis → TIMESTAMP (time_bucket's rebuild leg; also user-facing)
+    "timestamp_millis" -> Set(1),
+    // list tier 2 (round-15, pairs with the lambda tier; all also
+    // legal INSIDE lambda bodies through the shared dispatch):
+    // list_distinct is SORTED here — DuckDB's is hash-ordered, so the
+    // deterministic mirror is list_sort(list_distinct(l));
+    // list_extract is 1-based, NULL out of bounds (try_element_at);
+    // array_slice is INCLUSIVE [b, e] like DuckDB; list_sum is for
+    // integer lists (exact fold, order-free); list_unique counts
+    // distinct elements
+    "list_sort" -> Set(1), "list_reverse" -> Set(1),
+    "list_distinct" -> Set(1), "list_concat" -> Set(2),
+    "list_extract" -> Set(2), "array_slice" -> Set(3),
+    "flatten" -> Set(1), "list_position" -> Set(2),
+    "list_min" -> Set(1), "list_max" -> Set(1),
+    "list_sum" -> Set(1), "list_unique" -> Set(1),
+    // make_date(y, m, d) — a DATE from integer parts, identical on
+    // both engines (round-14); date_part desugars at parse like
+    // extract, so it never reaches lowering
+    "make_date" -> Set(3),
+    // round-16 membership/edit tier: levenshtein (both engines
+    // native, exact integer); list_has_any/list_has_all (DuckDB
+    // parity over Spark arrays_overlap / array_except);
+    // list_intersect is SORTED here (DuckDB's order is
+    // input-dependent — the deterministic mirror is
+    // list_sort(list_intersect(a, b)))
+    "levenshtein" -> Set(2), "list_has_any" -> Set(2),
+    "list_has_all" -> Set(2), "list_intersect" -> Set(2),
+    // try_strptime (round-14 — closes the r13 documented divergence):
+    // under Spark 4's ANSI default, to_timestamp RAISES on malformed
+    // input exactly like DuckDB's strptime — so plain strptime is
+    // already strict on both engines (the r13 note predates ANSI).
+    // try_strptime is the forgiving pair (NULL on malformed), DuckDB's
+    // try_strptime to Spark's try_to_timestamp — NULLs hash-compare.
+    "try_strptime" -> Set(2))
   /** Scalar function call (round-10 growth — the string/date/math tier a
     * dialect user reaches for first): fn ∈ upper | lower | length | trim
     * | abs | floor | ceil | substr(x, start [, len]) | year | month |
@@ -281,125 +403,7 @@ object HashQL {
     * (Spark's round takes a static scale). Arity is validated at parse
     * time. */
   final case class EFunc(fn: String, args: Seq[Expr]) extends Expr {
-    private val arity = Map("upper" -> Set(1), "lower" -> Set(1),
-      "length" -> Set(1), "trim" -> Set(1), "abs" -> Set(1),
-      "floor" -> Set(1), "ceil" -> Set(1), "substr" -> Set(2, 3),
-      "year" -> Set(1), "month" -> Set(1), "day" -> Set(1),
-      "coalesce" -> Set(2, 3, 4), "nullif" -> Set(2),
-      "concat" -> (2 to 8).toSet, "round" -> Set(1, 2),
-      "replace" -> Set(3), "mod" -> Set(2),
-      "hour" -> Set(1), "minute" -> Set(1), "date_trunc" -> Set(2),
-      // round-11 date-part growth: quarter/week/dayofyear agree between
-      // engines (week = ISO week number on both; dayofweek does NOT —
-      // deliberately absent)
-      "quarter" -> Set(1), "week" -> Set(1), "dayofyear" -> Set(1),
-      // round-11 regexp/string tier 2 (Java regex semantics; the oracle
-      // notes pin the DuckDB equivalences): regexp_replace replaces ALL
-      // occurrences (DuckDB spells that with the 'g' flag),
-      // regexp_extract returns '' on no match (both engines), split is
-      // regex-delimited (DuckDB string_split_regex), split_part is
-      // 1-based on a LITERAL delimiter (both engines)
-      "regexp_replace" -> Set(3), "regexp_extract" -> Set(3),
-      "split" -> Set(2), "split_part" -> Set(3),
-      // date_add/date_sub(d, n): n whole days; the operand casts to
-      // DATE first (Spark semantics — the oracle spells
-      // CAST(x AS DATE) ± n)
-      "date_add" -> Set(2), "date_sub" -> Set(2),
-      // round-11 string tier 3 — semantics identical on both engines:
-      // instr is 1-based (0 when absent), lpad/rpad truncate when the
-      // input exceeds the length, contains/starts_with/ends_with are
-      // boolean (null-propagating)
-      "instr" -> Set(2), "lpad" -> Set(3), "rpad" -> Set(3),
-      "contains" -> Set(2), "starts_with" -> Set(2), "ends_with" -> Set(2),
-      // round-13 tier 4 — semantics shared with DuckDB where noted:
-      // datediff(end, start) counts DAY BOUNDARIES (timestamps truncate
-      // to dates; the oracle spells date_diff('day', start, end)),
-      // last_day returns the month's last DATE, sqrt is IEEE correctly
-      // rounded (bitwise-identical doubles on both engines),
-      // greatest/least SKIP NULLs on both engines
-      "datediff" -> Set(2), "last_day" -> Set(1), "sqrt" -> Set(1),
-      "greatest" -> (2 to 6).toSet, "least" -> (2 to 6).toSet,
-      // round-13 tier 5 — semantics identical on both engines where
-      // noted: ltrim/rtrim strip spaces; reverse flips; repeat takes a
-      // static count; left/right clamp at the string length for n ≥ 0
-      // (lowered via 1-based substr composition — negative n is DuckDB's
-      // drop-from-the-other-end, deliberately out); strpos is instr's
-      // DuckDB spelling (1-based, 0 absent); translate maps chars
-      // positionally with static from/to (unmatched FROM chars delete);
-      // ascii is the first codepoint (INT on both); md5 the lowercase
-      // hex digest; sign pins BIGINT (DuckDB keeps the argument's type —
-      // oracles cast); power is IEEE correctly rounded like sqrt
-      "ltrim" -> Set(1), "rtrim" -> Set(1), "reverse" -> Set(1),
-      "repeat" -> Set(2), "left" -> Set(2), "right" -> Set(2),
-      "strpos" -> Set(2), "translate" -> Set(3), "ascii" -> Set(1),
-      "md5" -> Set(1), "sign" -> Set(1), "power" -> Set(2),
-      // strftime(x, '<fmt>') (round-13): temporal rendering under
-      // DuckDB's %-code spelling, lowered to Spark's date_format with a
-      // translated pattern; the format is a static literal restricted
-      // to the codes both engines render identically (%Y %y %m %d %H
-      // %M %S %j) plus plain separators. strptime is its parsing
-      // inverse (string → TIMESTAMP, Spark to_timestamp) — on
-      // WELL-FORMED input the engines agree, and under Spark 4's ANSI
-      // default a malformed string RAISES on both engines (round-14:
-      // the r13 divergence note predates ANSI; try_strptime below is
-      // the forgiving NULL pair, also engine-shared)
-      "strftime" -> Set(2), "strptime" -> Set(2),
-      // round-14 tier 6: concat_ws skips NULL arguments on BOTH engines
-      // (unlike the null-propagating concat/|| chain) — the separator
-      // is a static literal (Spark's concat_ws signature); ln/exp/
-      // log2/log10 agree with DuckDB within 1 ulp but are NOT
-      // correctly-rounded across libms (probed — unlike sqrt/power),
-      // so exact cross-engine checks compare a scaled-integer rendering
-      "concat_ws" -> (3 to 8).toSet,
-      "ln" -> Set(1), "exp" -> Set(1), "log2" -> Set(1),
-      "log10" -> Set(1),
-      // round-14 list tier (composes with split's regex-delimited
-      // arrays): len = element count (BIGINT on both engines — Spark
-      // size pins long), list_contains = membership (null-propagating
-      // both), array_to_string joins with a STATIC separator (DuckDB
-      // array_to_string ≡ Spark array_join; both skip nothing — NULL
-      // elements become empty on neither engine's split output)
-      "len" -> Set(1), "list_contains" -> Set(2),
-      "array_to_string" -> Set(2),
-      // epoch/epoch_ms (round-15): DuckDB epoch = fractional SECONDS as
-      // DOUBLE (micros/1e6 — one exact division both engines share);
-      // epoch_ms = exact BIGINT milliseconds (Spark unix_millis)
-      "epoch" -> Set(1), "epoch_ms" -> Set(1),
-      // millis → TIMESTAMP (time_bucket's rebuild leg; also user-facing)
-      "timestamp_millis" -> Set(1),
-      // list tier 2 (round-15, pairs with the lambda tier; all also
-      // legal INSIDE lambda bodies through the shared dispatch):
-      // list_distinct is SORTED here — DuckDB's is hash-ordered, so the
-      // deterministic mirror is list_sort(list_distinct(l));
-      // list_extract is 1-based, NULL out of bounds (try_element_at);
-      // array_slice is INCLUSIVE [b, e] like DuckDB; list_sum is for
-      // integer lists (exact fold, order-free); list_unique counts
-      // distinct elements
-      "list_sort" -> Set(1), "list_reverse" -> Set(1),
-      "list_distinct" -> Set(1), "list_concat" -> Set(2),
-      "list_extract" -> Set(2), "array_slice" -> Set(3),
-      "flatten" -> Set(1), "list_position" -> Set(2),
-      "list_min" -> Set(1), "list_max" -> Set(1),
-      "list_sum" -> Set(1), "list_unique" -> Set(1),
-      // make_date(y, m, d) — a DATE from integer parts, identical on
-      // both engines (round-14); date_part desugars at parse like
-      // extract, so it never reaches lowering
-      "make_date" -> Set(3),
-      // round-16 membership/edit tier: levenshtein (both engines
-      // native, exact integer); list_has_any/list_has_all (DuckDB
-      // parity over Spark arrays_overlap / array_except);
-      // list_intersect is SORTED here (DuckDB's order is
-      // input-dependent — the deterministic mirror is
-      // list_sort(list_intersect(a, b)))
-      "levenshtein" -> Set(2), "list_has_any" -> Set(2),
-      "list_has_all" -> Set(2), "list_intersect" -> Set(2),
-      // try_strptime (round-14 — closes the r13 documented divergence):
-      // under Spark 4's ANSI default, to_timestamp RAISES on malformed
-      // input exactly like DuckDB's strptime — so plain strptime is
-      // already strict on both engines (the r13 note predates ANSI).
-      // try_strptime is the forgiving pair (NULL on malformed), DuckDB's
-      // try_strptime to Spark's try_to_timestamp — NULLs hash-compare.
-      "try_strptime" -> Set(2))
+    private def arity = funcArity
     // list lambdas (round-15): `list_transform:<var>` / `list_filter:
     // <var>` carry the variable name after ':' (the percentile_cont:q
     // pattern); args are (list expr, body expr), parser-constructed only
@@ -1264,6 +1268,181 @@ object HashQL {
     * belong on the QUERIES over the view, which route regardless). */
   final case class CreateAggView(sel: Select) extends Stmt
 
+  // ---------------- one child traversal over the AST ----------------
+
+  /** What one traversal step does with each kind of child a node holds:
+    * column references, sub-expressions, sub-predicates and subquery
+    * bodies. [[mapPred]], [[mapExpr]], [[mapItem]] and [[mapSelect]]
+    * rebuild a node from its direct children mapped through these (the
+    * `mapChildren` idiom of Catalyst's TreeNode); an identity default
+    * leaves that kind alone. Subquery bodies are their own scope, so a
+    * rewrite reaches into them only through an explicit `sub`. */
+  private[graft] final case class Kids(
+      ref: ColRef => ColRef = identity,
+      expr: Expr => Expr = identity,
+      pred: Pred => Pred = identity,
+      sub: Select => Select = identity)
+
+  /** Rebuild a predicate from its mapped children. Every variant is
+    * listed and there is NO wildcard case — keep it that way: a new
+    * variant then fails the build here (non-exhaustive matches are
+    * errors) instead of silently falling out of every rewrite and scope
+    * guard built on this traversal. A subquery arm hands its OUTER-side
+    * refs and expression to `ref`/`expr` and its body to `sub`. */
+  private[graft] def mapPred(p: Pred, k: Kids): Pred = p match {
+    case Eq(r, v) => Eq(k.ref(r), v)
+    case Cmp(r, op, v) => Cmp(k.ref(r), op, v)
+    case FtsMatch(r, q) => FtsMatch(k.ref(r), q)
+    case And(ps) => And(ps.map(k.pred))
+    case Or(ps) => Or(ps.map(k.pred))
+    case InList(r, vs) => InList(k.ref(r), vs)
+    case InSelect(r, s) => InSelect(k.ref(r), k.sub(s))
+    case InSelectTuple(rs, s) => InSelectTuple(rs.map(k.ref), k.sub(s))
+    case InSelectExpr(e, s) => InSelectExpr(k.expr(e), k.sub(s))
+    case EqCol(a, b) => EqCol(k.ref(a), k.ref(b))
+    case ExistsSelect(s) => ExistsSelect(k.sub(s))
+    case CmpSelect(r, op, s) => CmpSelect(k.ref(r), op, k.sub(s))
+    case QuantCmp(r, op, q, s) => QuantCmp(k.ref(r), op, q, k.sub(s))
+    case CmpNotTrue(i, op, o) => CmpNotTrue(k.ref(i), op, k.ref(o))
+    case BoolFuncPred(e) => BoolFuncPred(k.expr(e))
+    case ExprCmp(l, op, r) => ExprCmp(k.expr(l), op, k.expr(r))
+    case Like(r, pat) => Like(k.ref(r), pat)
+    case Rlike(r, pat) => Rlike(k.ref(r), pat)
+    case Ilike(r, pat) => Ilike(k.ref(r), pat)
+    case IsNullP(r, n) => IsNullP(k.ref(r), n)
+    case DistinctFrom(r, rhs, n) => DistinctFrom(k.ref(r), rhs.left.map(k.ref), n)
+    case Not(x) => Not(k.pred(x))
+    case SampleBucket(r, pm) => SampleBucket(k.ref(r), pm)
+    case f: FlagPred => f
+  }
+
+  /** [[mapPred]]'s expression twin — same rule: every variant, no
+    * wildcard. */
+  private[graft] def mapExpr(e: Expr, k: Kids): Expr = e match {
+    case l: ELit => l
+    case ECol(r) => ECol(k.ref(r))
+    case EArith(l, op, r) => EArith(k.expr(l), op, k.expr(r))
+    case ECase(brs, els) =>
+      ECase(brs.map { case (p, v) => (k.pred(p), k.expr(v)) }, els.map(k.expr))
+    case ECast(x, ty) => ECast(k.expr(x), ty)
+    case i: EInterval => i
+    case EAgg(fn, a) => EAgg(fn, k.expr(a))
+    case EFunc(fn, args) => EFunc(fn, args.map(k.expr))
+  }
+
+  /** [[mapPred]]'s projection-item twin (window specs with their
+    * tiebreak and OVER-clause aggregates, coalesce defaults and grouping
+    * keys included) — same rule: every variant, no wildcard. */
+  private[graft] def mapItem(it: SelectItem, k: Kids): SelectItem = it match {
+    case Star => Star
+    case StarMod(ex, rep) => StarMod(ex, rep.map { case (e, c) => (k.expr(e), c) })
+    case Field(r) => Field(k.ref(r))
+    case CountStar => CountStar
+    case AggCall(fn, r) => AggCall(fn, k.ref(r))
+    case w: WinCall => w.copy(arg = w.arg.map(k.ref), part = w.part.map(k.ref),
+      order = w.order.map { case (r, d) => (k.ref(r), d) },
+      aggDeps = w.aggDeps.map { case (n, d) => (n, mapItem(d, k)) },
+      tiebreak = w.tiebreak.map(k.ref))
+    case Coalesce2(r, d) => Coalesce2(k.ref(r), d match {
+      case r2: ColRef => k.ref(r2)
+      case v => v
+    })
+    case ScalarSubItem(s, a) => ScalarSubItem(k.sub(s), a)
+    case ExistsItem(s, a) => ExistsItem(k.sub(s), a)
+    case ExprItem(e, a) => ExprItem(k.expr(e), a)
+    case AggExprItem(fn, e, a) => AggExprItem(fn, k.expr(e), a)
+    case s: StringAggItem => s.copy(e = k.expr(s.e),
+      order = s.order.map { case (o, d) => (k.expr(o), d) })
+    case ArgExtremeItem(fn, v, x, a) => ArgExtremeItem(fn, k.expr(v), k.expr(x), a)
+    case GroupingItem(r, a) => GroupingItem(k.ref(r), a)
+  }
+
+  /** Map every reference-holding field of a SELECT: items, join keys and
+    * ON extras, WHERE, GROUP BY and grouping sets, HAVING/QUALIFY
+    * aggregates, UNNEST expressions and lateral bodies (as subqueries)
+    * through `k`; the fields that address OUTPUT columns — ORDER BY and
+    * DISTINCT ON keys, HAVING/QUALIFY values — through `out`. Derived
+    * bodies are self-contained and stay as they are. */
+  private[graft] def mapSelect(s: Select, k: Kids, out: Kids): Select = {
+    def having(h: HavingPred): HavingPred = h.copy(
+      value = h.value match {
+        case e: Expr => out.expr(e)
+        case SubVal(b) => SubVal(out.sub(b))
+        case v => v
+      },
+      agg = h.agg.map(mapItem(_, k)))
+    s.copy(items = s.items.map(mapItem(_, k)),
+      joins = s.joins.map(j => j.copy(l = k.ref(j.l), r = k.ref(j.r),
+        extra = j.extra.map { case (l, op, rhs) =>
+          (k.ref(l), op, rhs match { case r: ColRef => k.ref(r); case v => v }) })),
+      wheres = s.wheres.map(k.pred),
+      groupBy = s.groupBy.map(k.ref),
+      groupSets = s.groupSets.map(_.map(k.ref)),
+      having = s.having.map(having),
+      qualify = s.qualify.map(having),
+      orderBy = s.orderBy.map { case (e, d, nf) => (out.expr(e), d, nf) },
+      distinctOn = s.distinctOn.map(out.ref),
+      laterals = s.laterals.map { case (n, b, o) => (n, k.sub(b), o) },
+      unnests = s.unnests.map { case (n, c, e) => (n, c, k.expr(e)) })
+  }
+
+  /** Kids that rewrite top-down at every depth: where `expr`/`pred` is
+    * defined its result replaces the node (and is not descended into);
+    * elsewhere the node's children are rewritten. Refs go through `ref`,
+    * subquery bodies through `sub`. The ref maps, collectors and
+    * substitutions over the AST are all built on this. */
+  private[graft] def rewrite(ref: ColRef => ColRef = identity,
+                             sub: Select => Select = identity,
+                             expr: PartialFunction[Expr, Expr] = PartialFunction.empty,
+                             pred: PartialFunction[Pred, Pred] = PartialFunction.empty)
+      : Kids = {
+    lazy val k: Kids = Kids(ref,
+      e => expr.applyOrElse(e, (x: Expr) => mapExpr(x, k)),
+      p => pred.applyOrElse(p, (x: Pred) => mapPred(x, k)), sub)
+    k
+  }
+
+  /** A deep ref rewrite for the contexts that plan no subquery (recursive
+    * steps, MERGE / UPDATE … FROM / ON CONFLICT source renames,
+    * range-lateral slots): a node holding a subquery body rejects with
+    * `s"$what: <node>"`. */
+  private def refsNoSubquery(f: ColRef => ColRef, what: String): Kids = {
+    def reject(node: Any): Select => Select =
+      _ => throw new IllegalArgumentException(s"$what: $node")
+    lazy val k: Kids = Kids(f, mapExpr(_, k),
+      p => mapPred(p, k.copy(sub = reject(p))), reject("a subquery"))
+    k
+  }
+
+  /** The column refs a traversal reaches from `start` (`_.expr(e)`,
+    * `_.pred(p)`, …), subquery bodies excluded, in traversal order.
+    * `outputSide` hides aggregate arguments (pre-aggregation scan
+    * columns) and lambda binders (no column at all) — the view the
+    * grouped-select guard checks against the grouping keys. */
+  private[graft] def refsOf(start: Kids => Any,
+                            outputSide: Boolean = false): Seq[ColRef] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[ColRef]
+    lazy val k: Kids = rewrite(ref = r => { out += r; r }, expr = {
+      case a: EAgg if outputSide => a
+      case f @ EFunc(fn, Seq(list, body)) if outputSide &&
+          (fn.startsWith("list_transform:") || fn.startsWith("list_filter:")) =>
+        k.expr(list)
+        val v = fn.substring(fn.indexOf(':') + 1)
+        out ++= refsOf(_.expr(body), outputSide).filterNot(_.column == v)
+        f
+    })
+    start(k)
+    out.toSeq
+  }
+
+  /** The subquery bodies a traversal reaches from `start` (bodies nested
+    * inside those stay inside them). */
+  private def subqueriesOf(start: Kids => Any): Seq[Select] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Select]
+    start(rewrite(sub = s => { out += s; s }))
+    out.toSeq
+  }
+
   // ---------------- lexer/parser ----------------
 
   private def coerce(tok: String): Any =
@@ -1945,49 +2124,6 @@ object HashQL {
         ExistsSelect(sub)
       }
       else exprTree() match {
-        // a computed head compares with = <> < > <= >= against another
-        // expression — `where t.a * t.b > 100`, `where case … end = 1`.
-        // A bare t.f head keeps the full ref-grammar below (doc-paths,
-        // IN/LIKE/BETWEEN/IS NULL, subquery arms). A BOOLEAN function
-        // call with no comparison following is itself the predicate
-        // (round-11: `where contains(t.f, '#')`).
-        case e if !e.isInstanceOf[ECol] =>
-          val boolFns = Set("contains", "starts_with", "ends_with")
-          val isBool = PartialFunction.cond(e) {
-            case EFunc(fn, _) if boolFns(fn) => true }
-          if (isBool && !Seq("=", "<>", "<", ">", "<=", ">=").contains(peek))
-            return BoolFuncPred(e)
-          // computed heads also take IN lists and BETWEEN (round-11:
-          // `where year(t.d) in (1996, 1998)`) — desugared to ExprCmp
-          // disjunctions/conjunctions at parse — and IN subqueries
-          // (round-12: `where year(t.d) in (select …)`, the semi-join on
-          // a computed key); negate with `not (…)`
-          if (is("in")) {
-            next(); kw("(")
-            if (is("select")) {
-              next()
-              val sub = selectRest()
-              kw(")")
-              return InSelectExpr(e, sub)
-            }
-            val vs = scala.collection.mutable.ArrayBuffer(literal())
-            while (is(",")) { next(); vs += literal() }
-            kw(")")
-            return Or(vs.toSeq.map(v => ExprCmp(e, "=", ELit(v))))
-          }
-          if (peek.equalsIgnoreCase("between")) {
-            next()
-            val lo = literal(); kw("and"); val hi = literal()
-            return And(Seq(ExprCmp(e, ">=", ELit(lo)), ExprCmp(e, "<=", ELit(hi))))
-          }
-          val op = next() match {
-            case o @ ("=" | "<>" | "<" | ">" | "<=" | ">=") => o
-            case o => throw new IllegalArgumentException(
-              s"a computed expression compares with = <> < > <= >= or " +
-                s"IN/BETWEEN — got $o")
-          }
-          val rhs = exprTree()
-          if (op == "<>") Not(ExprCmp(e, "=", rhs)) else ExprCmp(e, op, rhs)
         case ECol(headRef) =>
         val ref = headRef
         if (is("is")) {
@@ -2151,6 +2287,49 @@ object HashQL {
               "use `not (…)` otherwise")
           Not(atom)
         } else atom
+        // a computed head compares with = <> < > <= >= against another
+        // expression — `where t.a * t.b > 100`, `where case … end = 1`.
+        // A bare t.f head keeps the full ref-grammar above (doc-paths,
+        // IN/LIKE/BETWEEN/IS NULL, subquery arms). A BOOLEAN function
+        // call with no comparison following is itself the predicate
+        // (round-11: `where contains(t.f, '#')`).
+        case e =>
+          val boolFns = Set("contains", "starts_with", "ends_with")
+          val isBool = PartialFunction.cond(e) {
+            case EFunc(fn, _) if boolFns(fn) => true }
+          if (isBool && !Seq("=", "<>", "<", ">", "<=", ">=").contains(peek))
+            return BoolFuncPred(e)
+          // computed heads also take IN lists and BETWEEN (round-11:
+          // `where year(t.d) in (1996, 1998)`) — desugared to ExprCmp
+          // disjunctions/conjunctions at parse — and IN subqueries
+          // (round-12: `where year(t.d) in (select …)`, the semi-join on
+          // a computed key); negate with `not (…)`
+          if (is("in")) {
+            next(); kw("(")
+            if (is("select")) {
+              next()
+              val sub = selectRest()
+              kw(")")
+              return InSelectExpr(e, sub)
+            }
+            val vs = scala.collection.mutable.ArrayBuffer(literal())
+            while (is(",")) { next(); vs += literal() }
+            kw(")")
+            return Or(vs.toSeq.map(v => ExprCmp(e, "=", ELit(v))))
+          }
+          if (peek.equalsIgnoreCase("between")) {
+            next()
+            val lo = literal(); kw("and"); val hi = literal()
+            return And(Seq(ExprCmp(e, ">=", ELit(lo)), ExprCmp(e, "<=", ELit(hi))))
+          }
+          val op = next() match {
+            case o @ ("=" | "<>" | "<" | ">" | "<=" | ">=") => o
+            case o => throw new IllegalArgumentException(
+              s"a computed expression compares with = <> < > <= >= or " +
+                s"IN/BETWEEN — got $o")
+          }
+          val rhs = exprTree()
+          if (op == "<>") Not(ExprCmp(e, "=", rhs)) else ExprCmp(e, op, rhs)
       }
 
     /** A SELECT (already past the keyword), optionally continued by a
@@ -4443,8 +4622,8 @@ object HashQL {
     // off by existsJoin before this runs; what reaches here compares two
     // columns of the current frame)
     case EqCol(a, b) => col(a.column) === col(b.column)
-    case _: InSelect | _: InSelectExpr | _: ExistsSelect | _: CmpSelect |
-         _: QuantCmp =>
+    case _: InSelect | _: InSelectTuple | _: InSelectExpr | _: ExistsSelect |
+         _: CmpSelect | _: QuantCmp =>
       // unreachable from WHERE (applyWheres plans conjunct forms as
       // semi/anti joins and OR/NOT trees through flaggedFilter) — this
       // guards the remaining Column-only surfaces: CASE conditions
@@ -4454,6 +4633,11 @@ object HashQL {
           "WHERE clauses, not inside CASE conditions or view definitions")
     case SampleBucket(ref, permille) =>
       graft.llm.Sampling.arithBucket(col(ref.column)) < permille
+    // the ALL rewrite's violation test, `(outer op inner) IS NOT TRUE`
+    // (existsJoin lowers it inside the join condition; this is the same
+    // test over one frame)
+    case CmpNotTrue(inner, op, outer) =>
+      !(graft.core.Compare.cmp(col(outer.column), op, col(inner.column)) <=> lit(true))
   }
 
   /** Lower a scalar expression to a Column. Arithmetic rides Spark's
@@ -4800,77 +4984,22 @@ object HashQL {
   /** Column names a scalar expression references (CASE conditions
     * included) — the grouped-select guard checks these against the
     * grouping keys. */
-  private def exprRefs(e: Expr): Set[String] = e match {
-    case ELit(_) => Set.empty
-    case ECol(r) => Set(r.column)
-    case EArith(l, _, r) => exprRefs(l) ++ exprRefs(r)
-    case ECase(brs, els) =>
-      brs.flatMap { case (p, v) => predRefs(p) ++ exprRefs(v) }.toSet ++
-        els.toSeq.flatMap(exprRefs)
-    // the lambda VARIABLE is a binder, not a column reference (round-15)
-    case EFunc(fn, args) if fn.startsWith("list_transform:") ||
-                            fn.startsWith("list_filter:") =>
-      exprRefs(args(0)) ++
-        (exprRefs(args(1)) - fn.substring(fn.indexOf(':') + 1))
-    case EFunc(_, args) => args.flatMap(exprRefs).toSet
-    case ECast(e0, _) => exprRefs(e0)
-    // an aggregate's INNER refs are pre-aggregation scan columns, not
-    // output references — the grouped-select guard must not see them
-    case _: EAgg => Set.empty
-    case _: EInterval => Set.empty
-  }
+  private def exprRefs(e: Expr): Set[String] =
+    refsOf(_.expr(e), outputSide = true).map(_.column).toSet
 
-  /** The distinct aggregate calls inside an expression tree, in first-
-    * occurrence order. CASE conditions are walked through their
-    * comparison predicates (round 15 — `case when sum(x) > 0 then …`,
-    * the aggregate-threshold branch the regr_r2 expansion needs);
-    * column-shaped predicate forms inside CASE keep failing at lowering
-    * with exprColumn's clear message when they hide an aggregate. */
-  private def aggNodes(e: Expr): Seq[EAgg] = (e match {
-    case a: EAgg => Seq(a)
-    case EArith(l, _, r) => aggNodes(l) ++ aggNodes(r)
-    case ECase(brs, els) =>
-      brs.flatMap { case (p, v) => predAggNodes(p) ++ aggNodes(v) } ++
-        els.toSeq.flatMap(aggNodes)
-    case EFunc(_, args) => args.flatMap(aggNodes)
-    case ECast(e0, _) => aggNodes(e0)
-    case _ => Seq.empty
-  }).distinct
-
-  /** Aggregate calls reachable inside a CASE condition — only the
-    * expression-comparison forms can carry them. */
-  private def predAggNodes(p: Pred): Seq[EAgg] = p match {
-    case ExprCmp(l, _, r) => aggNodes(l) ++ aggNodes(r)
-    case BoolFuncPred(e) => aggNodes(e)
-    case Not(x) => predAggNodes(x)
-    case And(ps) => ps.flatMap(predAggNodes)
-    case Or(ps) => ps.flatMap(predAggNodes)
-    case _ => Seq.empty
+  /** The distinct aggregate calls inside an expression tree (CASE
+    * conditions included — `case when sum(x) > 0 then …`), in first-
+    * occurrence order. */
+  private def aggNodes(e: Expr): Seq[EAgg] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[EAgg]
+    rewrite(expr = { case a: EAgg => out += a; a }).expr(e)
+    out.distinct.toSeq
   }
 
   /** Replace each EAgg with a bare reference to its reserved aggregate
     * output column — the post-aggregation rewrite. */
-  private def substAggs(e: Expr, m: Map[EAgg, String]): Expr = e match {
-    case a: EAgg => ECol(ColRef("", m(a)))
-    case EArith(l, op, r) => EArith(substAggs(l, m), op, substAggs(r, m))
-    case ECase(brs, els) =>
-      ECase(brs.map { case (p, v) => (substAggsPred(p, m), substAggs(v, m)) },
-        els.map(substAggs(_, m)))
-    case EFunc(fn, args) => EFunc(fn, args.map(substAggs(_, m)))
-    case ECast(e0, ty) => ECast(substAggs(e0, m), ty)
-    case other => other
-  }
-
-  /** The CASE-condition twin of substAggs — rewrites aggregates inside
-    * the expression-comparison predicate forms. */
-  private def substAggsPred(p: Pred, m: Map[EAgg, String]): Pred = p match {
-    case ExprCmp(l, op, r) => ExprCmp(substAggs(l, m), op, substAggs(r, m))
-    case BoolFuncPred(e) => BoolFuncPred(substAggs(e, m))
-    case Not(x) => Not(substAggsPred(x, m))
-    case And(ps) => And(ps.map(substAggsPred(_, m)))
-    case Or(ps) => Or(ps.map(substAggsPred(_, m)))
-    case other => other
-  }
+  private def substAggs(e: Expr, m: Map[EAgg, String]): Expr =
+    rewrite(expr = { case a: EAgg => ECol(ColRef("", m(a))) }).expr(e)
 
   private def aggColumnOf(cat: GraftCatalog, a: EAgg, name: String): Column =
     a.fn match {
@@ -4896,67 +5025,19 @@ object HashQL {
         val arr = sort_array(collect_set(exprColumn(cat, a.arg)))
         when(size(arr) === 0, lit(null)).otherwise(arr).as(name)
     }
-  private def predRefs(p: Pred): Set[String] = p match {
-    case Eq(r, _) => Set(r.column)
-    case Cmp(r, _, _) => Set(r.column)
-    case Like(r, _) => Set(r.column)
-    case Rlike(r, _) => Set(r.column)
-    case Ilike(r, _) => Set(r.column)
-    case InList(r, _) => Set(r.column)
-    case IsNullP(r, _) => Set(r.column)
-    case DistinctFrom(r, rhs, _) =>
-      Set(r.column) ++ rhs.left.toOption.map(_.column)
-    case EqCol(a, b) => Set(a.column, b.column)
-    case FtsMatch(r, _) => Set(r.column)
-    case SampleBucket(r, _) => Set(r.column)
-    case ExprCmp(l, _, r) => exprRefs(l) ++ exprRefs(r)
-    case InSelectExpr(e, _) => exprRefs(e) // the sub has its own scope
-    case InSelectTuple(rs, _) => rs.map(_.column).toSet
-    case BoolFuncPred(e) => exprRefs(e)
-    case Not(x) => predRefs(x)
-    case And(ps) => ps.flatMap(predRefs).toSet
-    case Or(ps) => ps.flatMap(predRefs).toSet
-    case _ => Set.empty // subquery preds carry their own FROM scope
-  }
+  private def predRefs(p: Pred): Set[String] =
+    refsOf(_.pred(p), outputSide = true).map(_.column).toSet
 
   /** TABLE qualifiers a scalar expression references (bare output-alias
     * refs carry no table and don't count) — subquery planning uses these
     * to classify conjuncts as local vs correlated. */
-  private def exprTables(e: Expr): Set[String] = e match {
-    case ECol(r) => if (r.table.nonEmpty) Set(r.table) else Set.empty
-    case EArith(l, _, r) => exprTables(l) ++ exprTables(r)
-    case ECase(brs, els) =>
-      brs.flatMap { case (p, v) => predTables(p) ++ exprTables(v) }.toSet ++
-        els.toSeq.flatMap(exprTables)
-    case EFunc(_, args) => args.flatMap(exprTables).toSet
-    case ECast(e0, _) => exprTables(e0)
-    case EAgg(_, arg) => exprTables(arg)
-    case _ => Set.empty
-  }
-  /** TABLE qualifiers a predicate references. Nested subquery predicates
-    * contribute nothing (they carry their own FROM scope). */
-  private def predTables(p: Pred): Set[String] = (p match {
-    case Eq(r, _) => Set(r.table)
-    case Cmp(r, _, _) => Set(r.table)
-    case Like(r, _) => Set(r.table)
-    case Rlike(r, _) => Set(r.table)
-    case Ilike(r, _) => Set(r.table)
-    case InList(r, _) => Set(r.table)
-    case IsNullP(r, _) => Set(r.table)
-    case DistinctFrom(r, rhs, _) =>
-      Set(r.table) ++ rhs.left.toOption.map(_.table)
-    case FtsMatch(r, _) => Set(r.table)
-    case SampleBucket(r, _) => Set(r.table)
-    case EqCol(a, b) => Set(a.table, b.table)
-    case CmpNotTrue(a, _, b) => Set(a.table, b.table)
-    case ExprCmp(l, _, r) => exprTables(l) ++ exprTables(r)
-    case InSelectExpr(e, _) => exprTables(e) // the sub has its own scope
-    case BoolFuncPred(e) => exprTables(e)
-    case Not(x) => predTables(x)
-    case And(ps) => ps.flatMap(predTables).toSet
-    case Or(ps) => ps.flatMap(predTables).toSet
-    case _ => Set.empty[String]
-  }).filter(_.nonEmpty)
+  private def exprTables(e: Expr): Set[String] =
+    refsOf(_.expr(e)).map(_.table).filter(_.nonEmpty).toSet
+  /** TABLE qualifiers a predicate references — a subquery arm's OUTER
+    * side included (`t.n in (select …)` reads t), its body not (that
+    * carries its own FROM scope). */
+  private def predTables(p: Pred): Set[String] =
+    refsOf(_.pred(p)).map(_.table).filter(_.nonEmpty).toSet
 
   /** Outer-table references inside a subquery's PROJECTED items — a
     * correlation form no branch supports (r12 advice: exprColumn ignores
@@ -4966,18 +5047,8 @@ object HashQL {
     * covers the uncorrelated and eq-correlated branches exactly like the
     * range branch's per-node check. */
   private def scalarItemLeak(sub: Select, subTables: Set[String]): Seq[String] =
-    sub.items.flatMap {
-      case Field(r) if r.table.nonEmpty && !subTables(r.table) => Seq(r.table)
-      case AggCall(_, r) if r.table.nonEmpty && !subTables(r.table) => Seq(r.table)
-      case AggExprItem(_, e, _) => exprTables(e).filterNot(subTables).toSeq
-      case ExprItem(e, _) => exprTables(e).filterNot(subTables).toSeq
-      case StringAggItem(e, _, _, ord, _, _) =>
-        (exprTables(e) ++ ord.toSeq.flatMap(o => exprTables(o._1)))
-          .filterNot(subTables).toSeq
-      case ArgExtremeItem(_, v, k, _) =>
-        (exprTables(v) ++ exprTables(k)).filterNot(subTables).toSeq
-      case _ => Nil
-    }.distinct
+    refsOf(k => sub.items.map(mapItem(_, k))).map(_.table)
+      .filter(t => t.nonEmpty && !subTables(t)).distinct
 
   /** HAVING/QUALIFY right-hand side: a raw literal compares as ever; an
     * [[Expr]] (round-12 — `having sum_x > cnt * 2`) lowers over the
@@ -5451,7 +5522,8 @@ object HashQL {
               case "-" => base - n
               case "*" => base * n
             }
-          case SetExpr(e) => exprColumn(cat, renameSourceRefs(u, mcol)(e))
+          case SetExpr(e) => exprColumn(cat,
+            renameSource(u, mcol, "a MERGE/UPDATE-FROM expression").expr(e))
           case sv0 => throw new IllegalStateException(s"unreachable: $sv0")
         }
         val assigns = sets.map { case (ref, sv) => ref.column -> setColF(sv) }
@@ -5722,11 +5794,10 @@ object HashQL {
         require(!cat.exists(srcName) && !cat.isShadowed(srcName),
           s"reserved name $srcName is taken")
         val srcDf = inlineFrame(cat, InlineValues(fields, rows))
-        def rex(e: Expr): Expr = mapExprRefs(
+        def rex(e: Expr): Expr = refsNoSubquery(
           r => if (r.table == "excluded") ColRef(srcName, r.column) else r,
-          mapPredRefsSimple(
-            r => if (r.table == "excluded") ColRef(srcName, r.column) else r,
-            "an ON CONFLICT DO UPDATE expression"))(e)
+          "unsupported predicate inside an ON CONFLICT DO UPDATE expression")
+          .expr(e)
         val matched = action match {
           case None => Nil
           case Some(sets) =>
@@ -5868,8 +5939,10 @@ object HashQL {
           .withColumn("graft_mrg_hit", lit(true))
         val cond = on.map { case (tr, ur) =>
           pre(tr.column) === srcR(mcol(ur.column)) }.reduce(_ && _)
-        def rexpr(e: Expr): Expr = renameSourceRefs(u, mcol)(e)
-        def rpredCol(p: Pred): Column = predColumn(cat, renameSourcePred(u, mcol)(p))
+        def rexpr(e: Expr): Expr =
+          renameSource(u, mcol, "a MERGE/UPDATE-FROM expression").expr(e)
+        def rpredCol(p: Pred): Column =
+          predColumn(cat, renameSource(u, mcol, "a MERGE clause condition").pred(p))
         val hit = coalesce(col("graft_mrg_hit"), lit(false))
         val reserved = srcR.columns.toSeq
         val needJoin = matched.nonEmpty || bySource.nonEmpty
@@ -5954,8 +6027,9 @@ object HashQL {
               .foldRight(lit(null).cast("int")) {
                 case (((_, _, icond), i), acc) =>
                   val fire = icond.map(p => predColumn(cat,
-                    mapPredRefsSimple(srcRef,
-                      "a MERGE clause condition")(p)))
+                    refsNoSubquery(srcRef,
+                      "unsupported predicate inside a MERGE clause condition")
+                      .pred(p)))
                     .getOrElse(lit(true))
                   when(fire, lit(i)).otherwise(acc)
               }
@@ -6224,9 +6298,8 @@ object HashQL {
           .explainString(org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted"))
           .linesIterator.toSeq.toDF("plan_line"))
-      case sel: Select => Some(selectFrame(cat, sel, registry))
-      case u: Union => Some(unionFrame(cat, u, registry))
-      case so: SetOpChain => Some(setOpFrame(cat, so, registry))
+      case q @ (_: Select | _: Union | _: SetOpChain | _: InlineValues |
+                _: GenSeries) => Some(queryFrame(cat, q, registry))
       case WithCtes(ctes, body) =>
         // build each CTE's plan inside the scope of the earlier ones,
         // then the body inside all of them; a built plan captured its
@@ -6343,27 +6416,6 @@ object HashQL {
     * rejected with a clear message (recursion composes with them through
     * the OUTER body instead). */
   private def retargetRecursive(step: Select, name: String): Select = {
-    def ref(r: ColRef): ColRef =
-      if (r.table == name) ColRef(r.table, s"__rec_${r.column}") else r
-    def pred(p: Pred): Pred = p match {
-      case Eq(r, v) => Eq(ref(r), v)
-      case Cmp(r, op, v) => Cmp(ref(r), op, v)
-      case Like(r, v) => Like(ref(r), v)
-      case Rlike(r, v) => Rlike(ref(r), v)
-      case Ilike(r, v) => Ilike(ref(r), v)
-      case InList(r, vs) => InList(ref(r), vs)
-      case IsNullP(r, n) => IsNullP(ref(r), n)
-      case DistinctFrom(r, rhs, n) =>
-        DistinctFrom(ref(r), rhs.left.map(ref), n)
-      case EqCol(a, b) => EqCol(ref(a), ref(b))
-      case FtsMatch(r, q) => FtsMatch(ref(r), q)
-      case SampleBucket(r, pm) => SampleBucket(ref(r), pm)
-      case Not(x) => Not(pred(x))
-      case And(ps) => And(ps.map(pred))
-      case Or(ps) => Or(ps.map(pred))
-      case other => throw new IllegalArgumentException(
-        s"a recursive step supports simple predicates only, got: $other")
-    }
     require(step.having.isEmpty &&
       step.orderBy.isEmpty && step.limit.isEmpty && step.offset.isEmpty &&
       !step.distinct && step.qualify.isEmpty,
@@ -6398,24 +6450,21 @@ object HashQL {
         "a grouped recursive step projects its GROUP BY keys first, in " +
           "order, then the aggregates (the grouped plan's output order)")
     }
-    val items = step.items.map {
-      case Field(r) => Field(ref(r))
-      case CountStar => CountStar
-      case AggCall(fn, r) => AggCall(fn, ref(r))
-      case AggExprItem(fn, e, a) =>
-        AggExprItem(fn, mapExprRefs(ref, pred)(e), a)
+    step.items.foreach {
+      case _: Field | CountStar | _: AggCall | _: AggExprItem =>
       case other => throw new IllegalArgumentException(
         s"a recursive step projects plain columns or aggregates, got: $other")
     }
-    step.copy(items = items,
-      joins = step.joins.map(j => j.copy(l = ref(j.l), r = ref(j.r))),
-      wheres = step.wheres.map(pred),
-      groupBy = step.groupBy.map(ref))
+    val k = refsNoSubquery(
+      r => if (r.table == name) ColRef(r.table, s"__rec_${r.column}") else r,
+      "a recursive step supports simple predicates only, got")
+    mapSelect(step, k, k)
   }
 
   /** Evaluate a query-shaped Stmt (Select or Union) to a frame. */
   /** Occurrences of table name `n` in a query AST — FROM, JOIN clauses,
-    * and subquery predicates (IN / EXISTS / scalar compare), recursively.
+    * and every subquery body (predicate arms, projected scalars,
+    * laterals, HAVING values), recursively.
     * Drives the multi-reference CTE checkpoint decision. */
   private def tableRefCount(st: Stmt, n: String): Int = st match {
     case s: Select =>
@@ -6426,12 +6475,7 @@ object HashQL {
         // own references
         s.aliases.count(_._2 == n) +
         s.derived.map(d => tableRefCount(d._2, n)).sum +
-        s.laterals.map(l => tableRefCount(l._2, n)).sum +
-        s.wheres.map(predTableRefCount(_, n)).sum +
-        s.items.collect {
-          case ScalarSubItem(sub, _) => tableRefCount(sub, n)
-          case ExistsItem(sub, _) => tableRefCount(sub, n)
-        }.sum
+        subqueriesOf(k => mapSelect(s, k, k)).map(tableRefCount(_, n)).sum
     case Union(ss, _, _) => ss.map(tableRefCount(_, n)).sum
     case SetOpChain(_, ss, _) => ss.map(tableRefCount(_, n)).sum
     // DML bodies (round-15 — CTE-headed DML): count the plan-level reads
@@ -6441,9 +6485,9 @@ object HashQL {
     // scan + the delta capture).
     case i: InsertSelect => tableRefCount(i.body, n)
     case d: Delete => (if (d.using.contains(n)) 2 else 0) +
-      d.wheres.map(predTableRefCount(_, n)).sum
+      subqueriesOf(k => d.wheres.map(k.pred)).map(tableRefCount(_, n)).sum
     case u0: Update => (if (u0.from.contains(n)) 2 else 0) +
-      u0.wheres.map(predTableRefCount(_, n)).sum
+      subqueriesOf(k => u0.wheres.map(k.pred)).map(tableRefCount(_, n)).sum
     case m: Merge => if (m.source == n) 3 else 0
     case Returning(inner, _) => tableRefCount(inner, n)
     case _ => 0
@@ -6466,18 +6510,6 @@ object HashQL {
     case Union(ss, all, _) => !all || ss.exists(heavyCte) // plain UNION dedups
     case SetOpChain(_, _, _) => true
     case _ => true
-  }
-
-  private def predTableRefCount(p: Pred, n: String): Int = p match {
-    case InSelect(_, sub) => tableRefCount(sub, n)
-    case InSelectExpr(_, sub) => tableRefCount(sub, n)
-    case ExistsSelect(sub) => tableRefCount(sub, n)
-    case CmpSelect(_, _, sub) => tableRefCount(sub, n)
-    case QuantCmp(_, _, _, sub) => tableRefCount(sub, n)
-    case Not(x) => predTableRefCount(x, n)
-    case And(ps) => ps.map(predTableRefCount(_, n)).sum
-    case Or(ps) => ps.map(predTableRefCount(_, n)).sum
-    case _ => 0
   }
 
   private def queryFrame(cat: GraftCatalog, stmt: Stmt,
@@ -6623,14 +6655,7 @@ object HashQL {
 
   /** Does a conjunct contain a subquery predicate ANYWHERE in its tree
     * (needs join machinery, not a plain Column)? */
-  private def subqueryPred(p: Pred): Boolean = p match {
-    case _: InSelect | _: InSelectExpr | _: ExistsSelect | _: CmpSelect |
-         _: QuantCmp | _: InSelectTuple => true
-    case Not(x) => subqueryPred(x)
-    case And(ps) => ps.exists(subqueryPred)
-    case Or(ps) => ps.exists(subqueryPred)
-    case _ => false
-  }
+  private def subqueryPred(p: Pred): Boolean = subqueriesOf(_.pred(p)).nonEmpty
 
   /** Internal marker for a lowered subquery leaf: the named boolean flag
     * column, attached by [[flaggedFilter]], never produced by the parser.
@@ -6639,7 +6664,7 @@ object HashQL {
     * top-level anti-join forms, now reachable under OR. SCALAR-COMPARE
     * flags set threeValued: their UNKNOWN must stay NULL so NOT remains
     * three-valued (matching the conjunct spelling and ANSI). */
-  private final case class FlagPred(colName: String,
+  private[graft] final case class FlagPred(colName: String,
                                     threeValued: Boolean = false) extends Pred
 
   /** Plan a predicate TREE containing subquery leaves in non-conjunct
@@ -6658,7 +6683,7 @@ object HashQL {
     var n = 0
     val flags = scala.collection.mutable.ArrayBuffer.empty[String]
     def newFlag(): String = { n += 1; val f = s"graft_flag_$n"; flags += f; f }
-    def lower(p: Pred): Pred = p match {
+    val lowered = rewrite(pred = {
       case InSelect(ref, sub) =>
         val f = newFlag()
         val sf = subqueryFrame(cat, sub, registry).distinct()
@@ -6695,12 +6720,7 @@ object HashQL {
           quantCompare(cat, df, ref, op, quant, sub, registry)
         df = joined.withColumn(f, qC).drop(reserved: _*)
         FlagPred(f, threeValued = true)
-      case Not(x) => Not(lower(x))
-      case And(ps) => And(ps.map(lower))
-      case Or(ps) => Or(ps.map(lower))
-      case other => other
-    }
-    val lowered = lower(pr)
+    }).pred(pr)
     df.filter(predColumn(cat, lowered)).drop(flags.toSeq: _*)
   }
 
@@ -6814,62 +6834,27 @@ object HashQL {
     (scope, rewriteAliases(expanded, names.toSet))
   }
 
-  /** Generic ColRef map over an expression; subquery descent is the
-    * predicate mapper's job. */
-  private def mapExprRefs(rf: ColRef => ColRef, pf: Pred => Pred)(e: Expr): Expr =
-    e match {
-      case ECol(r) => ECol(rf(r))
-      case EArith(l, op, r) =>
-        EArith(mapExprRefs(rf, pf)(l), op, mapExprRefs(rf, pf)(r))
-      case ECase(brs, els) =>
-        ECase(brs.map { case (p, v) => (pf(p), mapExprRefs(rf, pf)(v)) },
-          els.map(mapExprRefs(rf, pf)))
-      case EFunc(fn, args) => EFunc(fn, args.map(mapExprRefs(rf, pf)))
-      case ECast(e0, ty) => ECast(mapExprRefs(rf, pf)(e0), ty)
-      case EAgg(fn, a) => EAgg(fn, mapExprRefs(rf, pf)(a))
-      case other => other
-    }
-
   /** Rewrite every alias reference in a SELECT to its reserved renamed
-    * column. Top-level projection items are RESTRUCTURED so outputs keep
-    * their user-visible names; nested subqueries get a pure ref rewrite
-    * (their own FROM names SHADOW outer aliases — standard scoping). */
+    * column. Top-level projection items are RESTRUCTURED first so outputs
+    * keep their user-visible names; nested subqueries get a pure ref
+    * rewrite (their own FROM names SHADOW outer aliases — standard
+    * scoping). */
   private def rewriteAliases(sel: Select, aliases: Set[String]): Select = {
-    val ren = aliasedRef(aliases) _
-    def pred(p: Pred): Pred = p match {
-      case Eq(r, v) => Eq(ren(r), v)
-      case Cmp(r, op, v) => Cmp(ren(r), op, v)
-      case Like(r, v) => Like(ren(r), v)
-      case Rlike(r, v) => Rlike(ren(r), v)
-      case Ilike(r, v) => Ilike(ren(r), v)
-      case InList(r, vs) => InList(ren(r), vs)
-      case IsNullP(r, n) => IsNullP(ren(r), n)
-      case FtsMatch(r, q) => FtsMatch(ren(r), q)
-      case SampleBucket(r, pm) => SampleBucket(ren(r), pm)
-      case EqCol(a, b) => EqCol(ren(a), ren(b))
-      case ExprCmp(l, op, r) => ExprCmp(expr(l), op, expr(r))
-      case BoolFuncPred(e) => BoolFuncPred(expr(e))
-      case Not(x) => Not(pred(x))
-      case And(ps) => And(ps.map(pred))
-      case Or(ps) => Or(ps.map(pred))
-      case InSelect(r, s0) => InSelect(ren(r), subSel(s0))
-      case InSelectTuple(rs, s0) => InSelectTuple(rs.map(ren), subSel(s0))
-      case InSelectExpr(e, s0) => InSelectExpr(expr(e), subSel(s0))
-      case ExistsSelect(s0) => ExistsSelect(subSel(s0))
-      case CmpSelect(r, op, s0) => CmpSelect(ren(r), op, subSel(s0))
-      case QuantCmp(r, op, q, s0) => QuantCmp(ren(r), op, q, subSel(s0))
-      case DistinctFrom(r, rhs, n) =>
-        DistinctFrom(ren(r), rhs.left.map(ren), n)
-      case other => other
-    }
-    def expr(e: Expr): Expr = mapExprRefs(ren, pred)(e)
-    // a nested subquery's own FROM/JOIN names shadow the outer aliases
-    def subSel(s0: Select): Select =
-      deepAliasMap(s0, aliases.diff(fromTables(s0)))
+    def aliased(r: ColRef): Boolean = aliases.contains(r.table)
+    // ORDER BY, DISTINCT ON and HAVING/QUALIFY values address OUTPUT
+    // columns — an aliased ref there maps to its restored output name
+    def outRef(r: ColRef): ColRef = if (aliased(r)) ColRef("", r.column) else r
     def autoAggName(fn: String, column: String): String = fn match {
       case "count" => s"cnt_$column"
       case "count_distinct" => s"cntd_$column"
       case f => s"${f}_$column"
+    }
+    // aliased plain aggregates keep their natural auto-alias (sum_x, not
+    // sum_<reserved>)
+    def pinAgg(it: SelectItem): SelectItem = it match {
+      case AggCall(fn, r) if aliased(r) =>
+        AggExprItem(fn, ECol(r), autoAggName(fn, r.column))
+      case other => other
     }
     val itemsBuf = scala.collection.mutable.ArrayBuffer.empty[SelectItem]
     sel.items.foreach {
@@ -6881,176 +6866,63 @@ object HashQL {
         "unexpanded * EXCLUDE/REPLACE under table aliases")
       // a plain aliased field projects under its ORIGINAL column name (a
       // pure rename — keeps the missing-field row skip)
-      case Field(r) if aliases.contains(r.table) =>
-        itemsBuf += ExprItem(ECol(ren(r)), r.column)
-      case f: Field => itemsBuf += f
-      // aliased plain aggregates keep their natural auto-alias (sum_x,
-      // not sum_<reserved>)
-      case AggCall(fn, r) if aliases.contains(r.table) =>
-        itemsBuf += AggExprItem(fn, ECol(ren(r)), autoAggName(fn, r.column))
-      case a: AggCall => itemsBuf += a
-      case CountStar => itemsBuf += CountStar
-      case AggExprItem(fn, e, a) => itemsBuf += AggExprItem(fn, expr(e), a)
-      case ExprItem(e, a) => itemsBuf += ExprItem(expr(e), a)
+      case Field(r) if aliased(r) => itemsBuf += ExprItem(ECol(r), r.column)
+      // pin the auto-alias BEFORE renaming so wsum_<col> keeps the
+      // user-visible column name. OVER-clause agg deps keep their
+      // auto-alias NAME (the order refs address it).
       case w: WinCall =>
-        // pin the auto-alias BEFORE renaming so wsum_<col> keeps the
-        // user-visible column name. OVER-clause agg deps keep their
-        // auto-alias NAME (the order refs address it) but compute over
-        // the renamed column.
-        val named = w.copy(alias = Some(winAlias(w)))
-        itemsBuf += named.copy(arg = named.arg.map(ren),
-          part = named.part.map(ren),
-          order = named.order.map { case (r, d) => (ren(r), d) },
-          aggDeps = named.aggDeps.map {
-            case (n, AggCall(fn, r)) if aliases.contains(r.table) =>
-              (n, AggExprItem(fn, ECol(ren(r)), n))
-            case (n, ExprItem(e, a)) => (n, ExprItem(expr(e), a))
-            case d => d
-          })
-      case c: Coalesce2
-          if aliases.contains(c.ref.table) ||
-            PartialFunction.cond(c.default) {
-              case r2: ColRef => aliases.contains(r2.table) } =>
+        itemsBuf += w.copy(alias = Some(winAlias(w)), aggDeps = w.aggDeps.map {
+          case (n, AggCall(fn, r)) if aliased(r) => (n, AggExprItem(fn, ECol(r), n))
+          case d => d
+        })
+      case c: Coalesce2 if aliased(c.ref) || PartialFunction.cond(c.default) {
+          case r2: ColRef => aliased(r2) } =>
         val d = c.default match {
-          case r2: ColRef => ECol(ren(r2))
+          case r2: ColRef => ECol(r2)
           case v => ELit(v)
         }
-        itemsBuf += ExprItem(EFunc("coalesce", Seq(ECol(ren(c.ref)), d)),
-          coalAlias(c))
-      case c: Coalesce2 => itemsBuf += c
-      case ScalarSubItem(s0, a) => itemsBuf += ScalarSubItem(subSel(s0), a)
-      case ExistsItem(s0, a) => itemsBuf += ExistsItem(subSel(s0), a)
-      case StringAggItem(e, sep, a, ord, l, dist) => itemsBuf +=
-        StringAggItem(expr(e), sep, a,
-          ord.map { case (o, d) => (expr(o), d) }, l, dist)
-      case ArgExtremeItem(fn, v, k, a) =>
-        itemsBuf += ArgExtremeItem(fn, expr(v), expr(k), a)
+        itemsBuf += ExprItem(EFunc("coalesce", Seq(ECol(c.ref), d)), coalAlias(c))
       // grouping's key addresses the RESTORED output name (the grouped
       // branch rewrites aliased keys to it)
-      case g0: GroupingItem =>
-        itemsBuf += (if (aliases.contains(g0.ref.table))
-          g0.copy(ref = ColRef("", g0.ref.column)) else g0)
+      case g0: GroupingItem => itemsBuf += g0.copy(ref = outRef(g0.ref))
+      case other => itemsBuf += pinAgg(other)
     }
     // an aliased GROUP BY key addresses the OUTPUT name (the projection
     // restored it); if the key is not projected, auto-project the rename
     // — matching the unaliased dialect, where grouping keys always land
     // in the output
-    val groupBy2 = sel.groupBy.map { g =>
-      if (!aliases.contains(g.table)) g
-      else {
-        val produced = itemsBuf.exists {
-          case ExprItem(_, a) => a == g.column
-          case Field(r) => r.column == g.column
-          case _ => false
-        }
-        if (!produced) itemsBuf += ExprItem(ECol(ren(g)), g.column)
-        ColRef("", g.column)
+    sel.groupBy.filter(aliased).foreach { g =>
+      val produced = itemsBuf.exists {
+        case ExprItem(_, a) => a == g.column
+        case Field(r) => r.column == g.column
+        case _ => false
       }
+      if (!produced) itemsBuf += ExprItem(ECol(g), g.column)
     }
-    // ORDER BY and HAVING/QUALIFY values address OUTPUT columns — an
-    // aliased ref maps to its restored output name, not the renamed one
-    val outRef = (r: ColRef) =>
-      if (aliases.contains(r.table)) ColRef("", r.column) else r
-    val outExpr = mapExprRefs(outRef, pred) _
-    def hp(h: HavingPred): HavingPred = h.copy(
-      value = h.value match {
-        case e: Expr => outExpr(e)
-        case v => v
-      },
-      agg = h.agg.map {
-        case AggCall(fn, r) if aliases.contains(r.table) =>
-          AggExprItem(fn, ECol(ren(r)), autoAggName(fn, r.column))
-        case other => other
-      })
-    sel.copy(items = itemsBuf.toSeq,
-      joins = sel.joins.map(j => j.copy(l = ren(j.l), r = ren(j.r),
-        extra = j.extra.map { case (l2, op2, rhs) =>
-          (ren(l2), op2, rhs match { case r2: ColRef => ren(r2); case v => v }) })),
-      wheres = sel.wheres.map(pred),
-      groupBy = groupBy2,
-      groupSets = sel.groupSets.map(_.map(g =>
-        if (aliases.contains(g.table)) ColRef("", g.column) else g)),
-      having = sel.having.map(hp),
-      qualify = sel.qualify.map(hp),
-      orderBy = sel.orderBy.map { case (e, d, nf) => (outExpr(e), d, nf) },
-      // lateral bodies correlate with the outer aliases — pure ref
-      // rewrite under the subquery visibility rule (their own FROM
-      // names shadow)
-      laterals = sel.laterals.map { case (n, b, o) => (n, subSel(b), o) },
-      unnests = sel.unnests.map { case (n, c, e) => (n, c, expr(e)) },
-      aliases = Nil)
+    // a nested subquery's (and a lateral body's) own FROM names shadow
+    // the outer aliases
+    def subSel(s0: Select): Select = deepAliasMap(s0, aliases.diff(fromTables(s0)))
+    mapSelect(sel.copy(items = itemsBuf.toSeq,
+        groupBy = sel.groupBy.map(outRef),
+        groupSets = sel.groupSets.map(_.map(outRef)),
+        having = sel.having.map(h => h.copy(agg = h.agg.map(pinAgg))),
+        qualify = sel.qualify.map(h => h.copy(agg = h.agg.map(pinAgg))),
+        aliases = Nil),
+      rewrite(ref = aliasedRef(aliases), sub = subSel),
+      rewrite(ref = outRef, sub = subSel))
   }
 
   /** Pure ref rewrite for a NESTED subquery under outer aliases: every
     * reference to a still-visible outer alias renames; structure is
     * untouched (the sub's own aliases resolve later, in its own
     * selectFrame). */
-  private def deepAliasMap(s0: Select, vis: Set[String]): Select = {
-    if (vis.isEmpty) return s0
-    val ren = aliasedRef(vis) _
-    def pred(p: Pred): Pred = p match {
-      case Eq(r, v) => Eq(ren(r), v)
-      case Cmp(r, op, v) => Cmp(ren(r), op, v)
-      case Like(r, v) => Like(ren(r), v)
-      case Rlike(r, v) => Rlike(ren(r), v)
-      case Ilike(r, v) => Ilike(ren(r), v)
-      case InList(r, vs) => InList(ren(r), vs)
-      case IsNullP(r, n) => IsNullP(ren(r), n)
-      case FtsMatch(r, q) => FtsMatch(ren(r), q)
-      case SampleBucket(r, pm) => SampleBucket(ren(r), pm)
-      case EqCol(a, b) => EqCol(ren(a), ren(b))
-      case ExprCmp(l, op, r) => ExprCmp(expr(l), op, expr(r))
-      case BoolFuncPred(e) => BoolFuncPred(expr(e))
-      case Not(x) => Not(pred(x))
-      case And(ps) => And(ps.map(pred))
-      case Or(ps) => Or(ps.map(pred))
-      case InSelect(r, s1) => InSelect(ren(r), subSel(s1))
-      case InSelectTuple(rs, s1) => InSelectTuple(rs.map(ren), subSel(s1))
-      case InSelectExpr(e, s1) => InSelectExpr(expr(e), subSel(s1))
-      case ExistsSelect(s1) => ExistsSelect(subSel(s1))
-      case CmpSelect(r, op, s1) => CmpSelect(ren(r), op, subSel(s1))
-      case QuantCmp(r, op, q, s1) => QuantCmp(ren(r), op, q, subSel(s1))
-      case DistinctFrom(r, rhs, n) =>
-        DistinctFrom(ren(r), rhs.left.map(ren), n)
-      case other => other
+  private def deepAliasMap(s0: Select, vis: Set[String]): Select =
+    if (vis.isEmpty) s0
+    else {
+      val k = rewrite(ref = aliasedRef(vis),
+        sub = s1 => deepAliasMap(s1, vis.diff(fromTables(s1))))
+      mapSelect(s0, k, k)
     }
-    def expr(e: Expr): Expr = mapExprRefs(ren, pred)(e)
-    def subSel(s1: Select): Select =
-      deepAliasMap(s1, vis.diff(fromTables(s1)))
-    s0.copy(items = s0.items.map {
-        case Field(r) => Field(ren(r))
-        case AggCall(fn, r) => AggCall(fn, ren(r))
-        case AggExprItem(fn, e, a) => AggExprItem(fn, expr(e), a)
-        case ExprItem(e, a) => ExprItem(expr(e), a)
-        case w: WinCall => w.copy(arg = w.arg.map(ren),
-          part = w.part.map(ren),
-          order = w.order.map { case (r, d) => (ren(r), d) },
-          aggDeps = w.aggDeps.map {
-            case (n, AggCall(fn, r)) => (n, AggCall(fn, ren(r)))
-            case (n, ExprItem(e, a)) => (n, ExprItem(expr(e), a))
-            case d => d
-          })
-        case ScalarSubItem(s1, a) => ScalarSubItem(subSel(s1), a)
-        case ExistsItem(s1, a) => ExistsItem(subSel(s1), a)
-        case StringAggItem(e, sep, a, ord, l, dist) => StringAggItem(expr(e),
-          sep, a, ord.map { case (o, d) => (expr(o), d) }, l, dist)
-        case ArgExtremeItem(fn, v, k, a) =>
-          ArgExtremeItem(fn, expr(v), expr(k), a)
-        case other => other
-      },
-      joins = s0.joins.map(j => j.copy(l = ren(j.l), r = ren(j.r),
-        extra = j.extra.map { case (l2, op2, rhs) =>
-          (ren(l2), op2, rhs match { case r2: ColRef => ren(r2); case v => v }) })),
-      wheres = s0.wheres.map(pred),
-      groupBy = s0.groupBy.map(ren),
-      groupSets = s0.groupSets.map(_.map(ren)),
-      orderBy = s0.orderBy.map { case (e, d, nf) => (expr(e), d, nf) },
-      // lateral bodies CORRELATE with the outer scope — rewrite their
-      // outer refs under the same visibility rule as subquery predicates
-      // (the body's own FROM names shadow)
-      laterals = s0.laterals.map { case (n, b, o) => (n, subSel(b), o) },
-      unnests = s0.unnests.map { case (n, c, e) => (n, c, expr(e)) })
-  }
 
   private def selectFrame(cat: GraftCatalog, sel: Select,
                           registry: Option[JoinRegistry],
@@ -8029,15 +7901,9 @@ object HashQL {
       * set: counts are 0, sum/avg/min/max are NULL — substituted as
       * literals and constant-folded, so a join MISS serves exactly what a
       * per-row execution would. */
-    def missExpr(e: Expr): Expr = e match {
+    def missExpr(e: Expr): Expr = rewrite(expr = {
       case EAgg(fn, _) => if (countFns(fn)) ELit(0L) else ELit(null)
-      case EArith(l, op, r) => EArith(missExpr(l), op, missExpr(r))
-      case ECase(brs, els) =>
-        ECase(brs.map { case (p, v) => (p, missExpr(v)) }, els.map(missExpr))
-      case EFunc(fn, args) => EFunc(fn, args.map(missExpr))
-      case ECast(e0, ty) => ECast(missExpr(e0), ty)
-      case other => other
-    }
+    }).expr(e)
     /** Coalesce a join-miss NULL to the empty-set value — but ONLY when
       * every aggregate node is a count (then a MATCHED group's value is
       * built from non-null counts, so a NULL scalar always means "miss");
@@ -8454,54 +8320,16 @@ object HashQL {
     outer.join(unified, jcond, if (anti) "left_anti" else "left_semi")
   }
 
-  /** Rewrite every reference to `srcTable` inside an expression to its
-    * reserved renamed column (`mcol`) — shared by MERGE and UPDATE …
-    * FROM, whose joined frames rename the whole source side so it can
-    * never collide with target columns. */
-  private def renameSourceRefs(srcTable: String, mcol: String => String)
-                              (e0: Expr): Expr = {
-    def rren(r: ColRef): ColRef =
-      if (r.table == srcTable) ColRef("", mcol(r.column)) else r
-    mapExprRefs(rren,
-      mapPredRefsSimple(rren, "a MERGE/UPDATE-FROM expression"))(e0)
-  }
-
-  /** [[renameSourceRefs]]'s predicate twin — MERGE clause conditions
-    * (`when matched and <cond> then …`, round-15). */
-  private def renameSourcePred(srcTable: String, mcol: String => String)
-                              (p0: Pred): Pred = {
-    def rren(r: ColRef): ColRef =
-      if (r.table == srcTable) ColRef("", mcol(r.column)) else r
-    mapPredRefsSimple(rren, "a MERGE clause condition")(p0)
-  }
-
-  /** Rewrite every column ref of a SIMPLE predicate (no subquery arms)
-    * through `rf` — shared by MERGE/UPDATE-FROM source renaming and the
-    * range-lateral slot substitution. Subquery-carrying shapes reject
-    * with the caller's context in the message. */
-  private def mapPredRefsSimple(rf: ColRef => ColRef, ctx: String)
-                               (p0: Pred): Pred = {
-    def rpred(p: Pred): Pred = p match {
-      case Eq(r, v) => Eq(rf(r), v)
-      case Cmp(r, op, v) => Cmp(rf(r), op, v)
-      case EqCol(a, b) => EqCol(rf(a), rf(b))
-      case IsNullP(r, n) => IsNullP(rf(r), n)
-      case InList(r, vs) => InList(rf(r), vs)
-      case Like(r, v) => Like(rf(r), v)
-      case Ilike(r, v) => Ilike(rf(r), v)
-      case Rlike(r, v) => Rlike(rf(r), v)
-      case DistinctFrom(r, rhs, n) => DistinctFrom(rf(r), rhs.left.map(rf), n)
-      case ExprCmp(l, op, r) => ExprCmp(rexpr(l), op, rexpr(r))
-      case BoolFuncPred(e) => BoolFuncPred(rexpr(e))
-      case Not(x) => Not(rpred(x))
-      case And(ps) => And(ps.map(rpred))
-      case Or(ps) => Or(ps.map(rpred))
-      case other => throw new IllegalArgumentException(
-        s"unsupported predicate inside $ctx: $other")
-    }
-    def rexpr(e: Expr): Expr = mapExprRefs(rf, rpred)(e)
-    rpred(p0)
-  }
+  /** Rewrite every reference to `srcTable` to its reserved renamed
+    * column (`mcol`) — shared by MERGE and UPDATE … FROM, whose joined
+    * frames rename the whole source side so it can never collide with
+    * target columns. `ctx` names the statement part in the reject of a
+    * subquery there. */
+  private def renameSource(srcTable: String, mcol: String => String,
+                           ctx: String): Kids =
+    refsNoSubquery(
+      r => if (r.table == srcTable) ColRef("", mcol(r.column)) else r,
+      s"unsupported predicate inside $ctx")
 
   /** Does a quantified subquery carry NON-EQUALITY correlation — a
     * conjunct referencing an outer table that is not an outer↔inner
@@ -8873,8 +8701,8 @@ object HashQL {
         }
         AggExprItem(fn, ECol(ColRef("", s"graft_lat_i$i")), auto)
       case AggExprItem(fn, e, a) =>
-        AggExprItem(fn, mapExprRefs(slotRef,
-          mapPredRefsSimple(slotRef, "a range-lateral aggregate"))(e), a)
+        AggExprItem(fn, refsNoSubquery(slotRef,
+          "unsupported predicate inside a range-lateral aggregate").expr(e), a)
       case it => it
     }
     val aggCols = aggsRaw(cat, items2)

@@ -970,6 +970,14 @@ class HashQLSpec extends SparkSpec {
         "union select e.d from r inner join e on e.s = r.d) " +
         "select count(*) as reached from r").get
     assert(aggOver.as[Long].collect().toSeq == Seq(4L))
+    // a COMPUTED predicate in the step (ExprCmp) plans like the simple
+    // spelling `where e2.d < 4`
+    HashQL.execute(cat, "insert into e2 (s, d) values (1, 2), (2, 3), (3, 4)")
+    val computed = HashQL.execute(cat,
+      "with recursive r as (select e2.d from e2 where e2.s = 1 " +
+        "union select e2.d from r inner join e2 on e2.s = r.d " +
+        "where e2.d + 0 < 4) select r.d from r").get
+    assert(computed.as[Long].collect().toSet == Set(2L, 3L))
     // the recursive name doesn't leak past the statement
     intercept[IllegalArgumentException](cat.table("r"))
   }
@@ -1070,14 +1078,27 @@ class HashQLSpec extends SparkSpec {
       "select r.v from r where r.v = 1 or not exists " +
         "(select r2.v from r2 where r2.v = r.v)").get
     assert(orNotEx.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 9L))
-    // still rejected: a subquery inside a CASE condition (Column-only
-    // surface — no join machinery there)
+    // a subquery inside a CASE condition of a WHERE comparison is a
+    // subquery leaf like any other: it lowers to a flag join too
+    val caseIn = HashQL.execute(cat,
+      "select r.v from r where case when r.v in (select r2.v from r2) " +
+        "then 1 else 0 end = 1").get
+    assert(caseIn.as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    // still rejected: a subquery inside a projected CASE condition
+    // (Column-only surface — no join machinery there)
     val e = intercept[IllegalArgumentException] {
       HashQL.execute(cat,
         "select case when r.v in (select r2.v from r2) then 1 else 0 end " +
           "as hit from r").get.collect()
     }
     assert(e.getMessage.contains("CASE conditions"), e.getMessage)
+    // …and so is the multi-key (tuple) membership there
+    val eTuple = intercept[IllegalArgumentException] {
+      HashQL.execute(cat,
+        "select r.v, case when (r.v, r.w) in (select r2.v, r2.v from r2) " +
+          "then 1 else 0 end as hit from r").get.collect()
+    }
+    assert(eTuple.getMessage.contains("CASE conditions"), eTuple.getMessage)
   }
 
   test("column-to-column equality filters the same frame") {
@@ -1650,6 +1671,22 @@ class HashQLSpec extends SparkSpec {
       "select par2.k from par2 where exists ( select ch2.id from ch2 " +
         "where ch2.k = par2.k and upper(par2.k) = ch2.k )"))
     assert(e2.getMessage.contains("unsupported correlation form"), e2.getMessage)
+    // an outer ref on the OUTER side of a nested subquery arm
+    // (`t.n in (select …)`) is a correlation too — never bound to the
+    // inner table's same-named column
+    HashQL.execute(cat, "insert into t (k, n) values (1, 10), (2, 20), (3, 30)")
+    HashQL.execute(cat,
+      "insert into u (k, v, n) values (1, 5, 100), (1, 7, 100), (2, 9, 200)")
+    HashQL.execute(cat, "insert into w (n) values (10)")
+    Seq(
+      "select t.k, ( select count(*) from u where u.k = t.k and " +
+        "t.n in (select w.n from w) ) as s from t",
+      "select t.k from t where exists ( select u.k from u where " +
+        "u.k = t.k and t.n in (select w.n from w) )").foreach { q =>
+      val e = intercept[IllegalArgumentException](
+        HashQL.execute(cat, q).get.collect())
+      assert(e.getMessage.contains("unsupported correlation form"), e.getMessage)
+    }
     // range-only correlation (no equality key) rejects toward adding one
     val e3 = intercept[IllegalArgumentException](HashQL.execute(cat,
       "select par2.k from par2 where par2.thresh > " +
@@ -1686,6 +1723,13 @@ class HashQLSpec extends SparkSpec {
         "where child.k = par.k ) as n from par order by n desc, par.k limit 1").get
       .collect().head
     assert(ordered.getLong(0) == 1L && ordered.getLong(1) == 2L)
+    // an aggregate inside a CASE condition: a join miss serves the
+    // empty-set value through the same condition (count 0 → else branch)
+    val cased = HashQL.execute(cat,
+      "select par.k, ( select case when count(*) > 0 then 1 else 0 end " +
+        "as c from child where child.k = par.k ) as s from par").get
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cased == Map(1L -> 1L, 2L -> 1L, 3L -> 0L))
     // guards: GROUP BY mix, reserved alias
     val e1 = intercept[IllegalArgumentException](HashQL.execute(cat,
       "select par.k, ( select count(*) from child ) as n from par group by par.k"))
@@ -2372,6 +2416,16 @@ class HashQLSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((1L, 10L, 20L), (2L, 10L, 20L), (3L, 10L, 30L),
       (4L, 40L, 40L)))
+    // under a table alias the tiebreak renames with the rest of the
+    // window — alone, and joined to a table with its own `k`
+    HashQL.execute(cat, "insert into m (j, k) values (1, 9), (2, 1), (3, 5), (4, 6)")
+    Seq("from fl a", "from fl a inner join m on m.j = a.k").foreach { src =>
+      val aliased = HashQL.execute(cat,
+        "select a.k, first_value(a.v, a.k) over (order by a.d " +
+          s"range between interval '2' day preceding and current row) as fv $src").get
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(aliased == Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 40L)), src)
+    }
     // the tiebreak form is RANGE-frame-only
     val e = intercept[IllegalArgumentException](HashQL.parse(
       "select first_value(t.v, t.k) over (order by t.d) as fv from t"))
