@@ -17,8 +17,8 @@ import graft.functions.{CosineSim, LshBucket, NfcNormalize, RollingHash, VectorK
   * session however it was built: the materialized-view route at
   * `MatView.materialize` time (it needs runtime registry state, and runs
   * first), and the driver-side fold of plans over driver-held rows
-  * (`graft.core.LocalFold`) when the session first holds a
-  * `graft.core.LocalRows` store.
+  * (`graft.core.LocalFold`) when the session first holds rows in a
+  * `graft.core.Store`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

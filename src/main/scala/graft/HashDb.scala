@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.core.{GraftCatalog, LocalRows}
+import graft.core.{GraftCatalog, LocalRows, Store}
 import graft.doc.DocStore
 import graft.graph.{Cypher, PropertyGraph}
 import graft.kv.KvStore
@@ -19,17 +19,17 @@ import graft.sql.HashQL
   * whole thing distributes.
   *
   * Mutability model: the façade holds the current KV store, catalog
-  * tables and graph, each immutable and swapped on write. A session's KV
-  * pairs, SQL rows and documents are driver-held row stores
-  * ([[graft.core.LocalRows]]) — the reference's in-RAM dicts
-  * (client.py:25): a write appends to or filters the rows on the driver,
-  * [[get]] and [[getDocument]] are lookups there, and every read plans
-  * over one local relation however long the session runs. The session
-  * graph is held the same way, through MERGE, DETACH DELETE and SET
-  * alike. Reads that sort, join or deduplicate those rows — a KV range, a
-  * Cypher MATCH, a SQL join — fold to one local relation on the driver
-  * ([[graft.core.LocalFold]]) and run no Spark job. Tables registered
-  * from parquet (and graphs from TPC-H) stay plans.
+  * tables and graph, each immutable and swapped on write. Every session
+  * write goes through one keyed store ([[graft.core.Store]]), the
+  * reference's in-RAM dict (client.py:25): KV put and document save are
+  * its upsert, Cypher MERGE its keep-on-key insert, SQL INSERT its
+  * append, [[get]] and [[getDocument]] its lookups. A session's rows are
+  * held on the driver, where all of these run with no plan built, and
+  * other writes' plans fold back into held rows, so reads plan over one
+  * local relation however long the session runs; a KV range, a Cypher
+  * MATCH or a SQL join folds there too ([[graft.core.LocalFold]]) and
+  * runs no Spark job. Tables from parquet (and graphs from TPC-H) stay
+  * plans, written by filters and unions.
   *
   * Every entry point that touches session state holds this instance's
   * lock, so concurrent callers are serialized and no write is lost (an
@@ -86,47 +86,27 @@ final class HashDb(val spark: SparkSession) {
     * widens that type — earlier documents read NULL there — and a value
     * whose type conflicts with its field's throws an
     * IllegalArgumentException naming the collection, id and field. A
-    * driver-local collection replaces the row by id in its row store;
-    * one whose type widened, or that is not driver-local (parquet, after
-    * compact), commits a filter plus a one-row union instead. */
+    * widened type moves the earlier documents to it through JSON; the
+    * save is then the collection store's upsert on `id` ([[graft.core.Store]]). */
   def saveDocument(collection: String, id: Long, json: String): Unit = synchronized {
-    val old = if (catalog.exists(collection)) Some(catalog.table(collection)) else None
+    val old = catalog.storeOf(collection)
     val oldType = old.map(_.schema("doc").dataType)
     val (docType, doc) = DocStore.parseAgainst(json, oldType, s"saveDocument($collection, $id)")
-    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
-      StructField("doc", docType)))
-    val row = LocalRows.internal(spark, schema, Vector(InternalRow(id, doc)))
-    val replaced = for (s <- catalog.rowsOf(collection)
-                        if oldType.contains(docType) && s.schema.fieldNames.sameElements(schema.fieldNames);
-                        p <- hasId(s, id)) yield s.filterNot(p).appendInternal(row.rows)
-    (old, replaced) match {
-      case (None, _) => catalog.register(collection, row)
-      case (_, Some(s)) => catalog.register(collection, s)
-      case (Some(df), None) =>
-        // earlier documents move to the widened type by name, through JSON
-        val widened = if (oldType.contains(docType)) df
-          else df.withColumn("doc", from_json(to_json(col("doc")), docType))
-        catalog.register(collection, widened.filter(col("id") =!= id)
-          .unionByName(row.frame, allowMissingColumns = true))
-    }
+    val row = LocalRows.internal(spark, StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("doc", docType))), Vector(InternalRow(id, doc)))
+    catalog.register(collection, old.fold(Store(row)) { s =>
+      val widened = if (oldType.contains(docType)) s
+        else Store.of(s.frame.withColumn("doc", from_json(to_json(col("doc")), docType)))
+      widened.upsert(Seq("id"), row)
+    })
   }
 
-  // a driver-local collection's rows with document id `id`, when ids are
-  // the dialect's bigint
-  private def hasId(s: LocalRows, id: Long): Option[InternalRow => Boolean] = {
-    val i = s.schema.fieldNames.indexOf("id")
-    if (i < 0 || s.schema(i).dataType != LongType) None
-    else Some(r => !r.isNullAt(i) && r.getLong(i) == id)
-  }
-
-  /** Hydrate a document back to JSON (S10); in a driver-local collection
-    * only the stored row with that id is hydrated. */
+  /** Hydrate a document back to JSON (S10): only the stored row with that
+    * id is hydrated, and a miss among held rows plans nothing. */
   def getDocument(collection: String, id: Long): Option[String] = synchronized {
-    val held = catalog.rowsOf(collection).flatMap(s =>
-      hasId(s, id).map(p => LocalRows.internal(spark, s.schema, s.rows.filter(p))))
-    if (!catalog.exists(collection) || held.exists(_.rows.isEmpty)) None
-    else DocStore.hydrate(held.fold(catalog.table(collection).filter(col("id") === id))(_.frame))
-      .select("json").collect().headOption.map(_.getString(0))
+    catalog.storeOf(collection).map(_.lookup(Seq("id"), Seq(id)))
+      .filterNot(_.rows.exists(_.rows.isEmpty))
+      .flatMap(hit => DocStore.hydrate(hit.frame).select("json").collect().headOption.map(_.getString(0)))
   }
 
   // ---------------- graph surface (POST /cypher) ------------------------
@@ -134,8 +114,8 @@ final class HashDb(val spark: SparkSession) {
     * and return None; every other statement (MATCH, WITH, UNWIND,
     * shortestPath) returns bindings. A session graph stays one local
     * relation through every mutation: a MERGE appends rows, and DETACH
-    * DELETE and SET re-root the graph on the rows their plans fold to on
-    * the driver ([[PropertyGraph.execute]]), so neither a mutation nor a
+    * DELETE and SET fold back into the rows their plans fold to on the
+    * driver ([[PropertyGraph.execute]]), so neither a mutation nor a
     * later MATCH runs a Spark job or plans over a lineage that grows with
     * the session. */
   def cypher(statement: String): Option[DataFrame] = synchronized {

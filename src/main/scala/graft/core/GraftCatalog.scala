@@ -1,8 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,45 +11,40 @@ import org.apache.spark.sql.types._
   * `id` (server.py:725-728,757-771), and values are `Long` when the literal
   * is numeric else `String` (server.py:477-478,500-502).
   *
-  * A session's tables are driver-held row stores ([[LocalRows]]): an
-  * INSERT whose fields and types fit the table appends one row on the
-  * driver, so a table written row at a time stays ONE local relation and
-  * its reads plan over one leaf however long the session runs — the
+  * Every version of a table is a keyed session store ([[Store]]), as KV
+  * pairs, documents and the graph are: an INSERT is the store's append,
+  * so a table written row at a time stays ONE driver-held local relation
+  * whose reads plan over one leaf however long the session runs — the
   * reference's per-request ingest into an in-RAM dict. Every other write
-  * (UPDATE, DELETE, a schema-widening INSERT) commits its plan, which is
-  * folded back into one store when it plans to local relations only
-  * ([[LocalRows.of]]), so the dynamic-schema union and its type coercion
-  * stay Catalyst's. Bulk ingest (`register`) is the scale path: any
-  * DataFrame becomes a table, and appends to parquet-backed tables stay
-  * plan-level unions. UPDATE/DELETE on those are copy-on-write plan
-  * rewrites; at 100 TB those rewrite only affected partitions of a
-  * partitioned table.
+  * (UPDATE, DELETE, a schema-widening INSERT) commits its plan through
+  * the store's one fold-back rule ([[Store.of]]), so the dynamic-schema
+  * union and its type coercion stay Catalyst's. Bulk ingest (`register`)
+  * is the scale path: any DataFrame becomes a table, and appends to
+  * parquet-backed tables stay plan-level unions. UPDATE/DELETE on those
+  * are copy-on-write plan rewrites; at 100 TB those rewrite only affected
+  * partitions of a partitioned table.
   */
 final class GraftCatalog(val spark: SparkSession) {
 
   private var counters = Map.empty[String, Long]
   // version log: versions(name)(v-1) = the table AS OF version v (1-based);
-  // the last entry is the current table. An entry is a row store
-  // (driver-local tables; appends share the earlier versions' rows) or a
-  // lazy PLAN, which pins its lineage — long-lived sessions over
+  // the last entry is the current table. An entry is a store of held rows
+  // (driver-local tables; appends share the earlier versions' rows) or of
+  // a lazy PLAN, which pins its lineage — long-lived sessions over
   // non-local tables should compact() on a cadence, which snapshots the
   // CURRENT version to parquet and frees its lineage while older versions
   // keep theirs (the Delta-style time-travel trade, in-session).
-  private var versions = Map.empty[String, Vector[Either[DataFrame, LocalRows]]]
+  private var versions = Map.empty[String, Vector[Store]]
 
   // every write path lands here — a view name can never silently become
   // (or shadow) a table
-  private def commitVersion(name: String, v: Either[DataFrame, LocalRows]): Unit = {
+  private def commitVersion(name: String, v: Store): Unit = {
     require(!views.contains(name),
       s"$name is a view — views are read-only (DROP VIEW first)")
     versions += name -> (versions.getOrElse(name, Vector.empty) :+ v)
   }
 
-  // a plan that reads local relations only is folded into one store
-  private def commit(name: String, df: DataFrame): Unit =
-    commitVersion(name, LocalRows.of(df).toRight(df))
-
-  private def frameOf(v: Either[DataFrame, LocalRows]): DataFrame = v.fold(identity, _.frame)
+  private def commit(name: String, df: DataFrame): Unit = commitVersion(name, Store.of(df))
 
   /** Number of committed versions of `name` (0 = never written). Every
     * register/insert/update/delete commits one; compact() swaps the
@@ -74,16 +67,19 @@ final class GraftCatalog(val spark: SparkSession) {
       throw new IllegalArgumentException(s"no such table: $name"))
     require(v >= 1 && v <= h.length,
       s"version $v out of range 1..${h.length} for $name")
-    frameOf(h(v - 1))
+    h(v - 1).frame
   }
 
   def register(name: String, df: DataFrame): Unit = commit(name, df)
 
-  /** Commit `rows` as the next version of `name`. */
-  def register(name: String, rows: LocalRows): Unit = commitVersion(name, Right(rows))
+  /** Commit `store` as the next version of `name`. */
+  def register(name: String, store: Store): Unit = commitVersion(name, store)
 
-  /** The current version's row store, when `name` is driver-local. */
-  def rowsOf(name: String): Option[LocalRows] = versions.get(name).flatMap(_.last.toOption)
+  /** The current version of `name`. */
+  def storeOf(name: String): Option[Store] = versions.get(name).map(_.last)
+
+  /** The current version's held rows, when `name` is driver-local. */
+  def rowsOf(name: String): Option[LocalRows] = storeOf(name).flatMap(_.rows)
 
   /** ALTER TABLE … RENAME TO (round-15): move the registration, its
     * version history and id counter under the new name. Metadata-only;
@@ -135,7 +131,7 @@ final class GraftCatalog(val spark: SparkSession) {
   def table(name: String): DataFrame =
     // resolution order: CTE scope shadows everything (standard SQL),
     // then real tables, then logical views (re-planned per read)
-    scope.getOrElse(name, versions.get(name).map(v => frameOf(v.last)).getOrElse(
+    scope.getOrElse(name, storeOf(name).map(_.frame).getOrElse(
       views.get(name).map { thunk =>
         require(!resolvingViews.contains(name),
           s"view cycle detected through $name — re-create one of the " +
@@ -162,7 +158,6 @@ final class GraftCatalog(val spark: SparkSession) {
       s"view $name exists — use CREATE OR REPLACE VIEW")
     views += name -> plan
   }
-  def isView(name: String): Boolean = views.contains(name)
   def dropView(name: String, ifExists: Boolean): Unit = {
     require(ifExists || views.contains(name), s"no such view: $name")
     views -= name
@@ -176,11 +171,11 @@ final class GraftCatalog(val spark: SparkSession) {
     * the full post-insert table would turn a 1-row INSERT into a
     * table-sized shuffle at 100 TB.
     *
-    * On a driver-local table a row whose fields all exist in the table
-    * with the same types (missing fields read NULL) is appended to the
-    * row store, with no plan built. Any other row unions by name — new
-    * fields widen the schema, mismatched types coerce as Catalyst's union
-    * does — and the union folds back into one store ([[commit]]). */
+    * The row is the table's [[Store.append]]: on a driver-local table a
+    * row whose fields all exist in the table with the same types (missing
+    * fields read NULL) is appended on the driver, with no plan built. Any
+    * other row unions by name — new fields widen the schema, mismatched
+    * types coerce as Catalyst's union does — and the union folds back. */
   def insert(name: String, values: Seq[(String, Any)]): DataFrame = {
     val id = counters.getOrElse(name, 0L) + 1
     counters += name -> id
@@ -201,28 +196,10 @@ final class GraftCatalog(val spark: SparkSession) {
       case (_, v: Int) => v.toLong
       case (_, v) => v
     })
-    val rowDf = spark.createDataFrame(
-      java.util.Collections.singletonList(row), schema)
-    val one = rowDf.queryExecution.logical.asInstanceOf[LocalRelation].data.head
-    versions.get(name).map(_.last) match {
-      case Some(Right(s)) if fits(s.schema, schema) =>
-        val at = s.schema.fields.map(f => (schema.fieldNames.indexOf(f.name), f.dataType))
-        commitVersion(name, Right(s.appendInternal(Seq(new GenericInternalRow(
-          at.map { case (i, t) => if (i < 0) null else one.get(i, t) })))))
-      case Some(existing) =>
-        commit(name, frameOf(existing).unionByName(rowDf, allowMissingColumns = true))
-      case None => commitVersion(name, Right(LocalRows.internal(spark, schema, Vector(one))))
-    }
-    rowDf
+    val one = LocalRows(spark, schema, Seq(row))
+    commitVersion(name, storeOf(name).fold(Store(one))(_.append(one)))
+    one.frame
   }
-
-  // an insert of `row`'s fields appends to a store of `table` unchanged:
-  // every field exists in the table with its type (distinct names, so
-  // none is read twice), and the table's columns are nullable, as the
-  // union's columns would be
-  private def fits(table: StructType, row: StructType): Boolean =
-    table.forall(_.nullable) && row.map(_.name).distinct.length == row.length &&
-      row.forall(f => table.find(_.name == f.name).exists(_.dataType == f.dataType))
 
   /** M1 growth (round-12): INSERT … SELECT — bulk append of a query's
     * rows. The delta materializes ONCE (localCheckpoint) so the
@@ -236,10 +213,7 @@ final class GraftCatalog(val spark: SparkSession) {
     require(!rows.columns.contains("id"),
       "INSERT … SELECT: the dialect synthesizes id — don't project one")
     val withId = stampIds(name, rows)
-    commit(name, versions.get(name) match {
-      case Some(h) => frameOf(h.last).unionByName(withId, allowMissingColumns = true)
-      case None => withId
-    })
+    commit(name, storeOf(name).fold(withId)(_.frame.unionByName(withId, allowMissingColumns = true)))
     withId
   }
 
@@ -342,6 +316,6 @@ final class GraftCatalog(val spark: SparkSession) {
     // same contents, new plan: replace the CURRENT version in place so
     // versionOf stays aligned and the latest version's lineage is freed
     val scan = spark.read.parquet(path)
-    versions += name -> (versions.getOrElse(name, Vector.empty).dropRight(1) :+ Left(scan))
+    versions += name -> (versions.getOrElse(name, Vector.empty).dropRight(1) :+ Store.of(scan))
   }
 }

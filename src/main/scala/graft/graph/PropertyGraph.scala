@@ -1,8 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.LocalRows
+import graft.core.Store
 
 /** Distributed property graph + Cypher-subset executor (SURVEY §2.8 G1-G7).
   *
@@ -31,24 +31,23 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     if (edges.columns.contains("eattrs")) edges
     else edges.withColumn("eattrs", typedLit(Map.empty[String, String]))
 
-  /** G1/G2 MERGE: upsert the nodes and edges of one chain, as
-    * probe-then-append ([[PropertyGraph.appendAbsent]]): read which of the
-    * statement's own identities — node `name`s, edge (src, dst, rel)s —
-    * already exist, and append only the absent ones, as literal rows.
+  /** G1/G2 MERGE: upsert the nodes and edges of one chain, as each
+    * frame's keep-on-key insert ([[graft.core.Store.insertAbsent]]): of
+    * the statement's own identities — node `name`s, edge (src, dst,
+    * rel)s — append only those not stored yet, as literal rows.
     * Idempotent: re-merging an existing node/edge appends nothing, so the
     * existing row always wins (the reference's match-by-attributes no-op
     * case, client.py:876-889) — a re-merge with a different label, attrs
     * or edge properties keeps the stored row.
     *
-    * Plan shape: each merge references the previous vertices/edges plan
-    * once (the probes run eagerly and are not kept) and adds no join,
-    * aggregate or shuffle; a session graph grown from
-    * [[PropertyGraph.empty]] stays ONE local relation, so a later MATCH
-    * plans over a flat scan however many MERGEs preceded it (the
-    * reference's in-memory upsert property). Existing rows are never
-    * rewritten: a caller-supplied edge frame that already holds duplicate
-    * identity rows keeps them (MATCH is set-semantic, so its results are
-    * unaffected). */
+    * Plan shape: a session graph grown from [[PropertyGraph.empty]] is
+    * matched and appended on the driver and stays ONE local relation, so
+    * a later MATCH plans over a flat scan however many MERGEs preceded it
+    * (the reference's in-memory upsert property); any other frame gets
+    * one probe and a union, no join, aggregate or shuffle. Existing rows
+    * are never rewritten: a caller-supplied edge frame that already holds
+    * duplicate identity rows keeps them (MATCH is set-semantic, so its
+    * results are unaffected). */
   def merge(stmt: Cypher.Merge): PropertyGraph = {
     val ns = stmt.chain.nodes.map(n =>
       (PropertyGraph.identityOf(n.label, n.attrs), n.label.getOrElse(""), n.attrs))
@@ -68,10 +67,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       Map("name" -> n, "label" -> l, "attrs" -> a) }
     val newE = es.distinctBy(t => (t._1, t._2, t._3)).map { case (s, d, r, a) =>
       Map("src" -> s, "dst" -> d, "rel" -> r, "eattrs" -> a) }
-    PropertyGraph(
-      PropertyGraph.appendAbsent(vertices, Seq("name"), newV),
-      if (newE.isEmpty) edgesN
-      else PropertyGraph.appendAbsent(edgesN, Seq("src", "dst", "rel"), newE))
+    def merged(df: DataFrame, keys: Seq[String], rows: Seq[Map[String, Any]]): DataFrame = {
+      val s = Store.of(df)
+      s.insertAbsent(keys, s.newRows(rows)).frame
+    }
+    PropertyGraph(merged(vertices, Seq("name"), newV),
+      if (newE.isEmpty) edgesN else merged(edgesN, Seq("src", "dst", "rel"), newE))
   }
 
   def merge(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
@@ -1046,9 +1047,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * the bound nodes (map_filter + map_concat — scan-side map surgery, no
     * explode). Each statement references the previous vertices/edges plan
     * once; DELETE and SET each add a join layer, which a driver-local
-    * graph folds away: when a frame's plan folds to one local relation
-    * ([[graft.core.LocalFold]]) it is re-rooted on that store, so a
-    * session graph stays one local relation through every mutation. Any
+    * graph folds away: each frame goes through the store's fold-back
+    * rule ([[graft.core.Store.of]]), so a session graph stays one local
+    * relation through every mutation ([[graft.core.LocalFold]]). Any
     * other graph keeps the layer; [[compact]]/[[checkpointLocal]] reset
     * its depth for long statement streams. */
   def execute(cypher: String): PropertyGraph = execute(Cypher.parse(cypher))
@@ -1061,11 +1062,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         vars.map(v => Cypher.Ret(v, None)), wheres))
       val del = vars.map(v => bound.select(col(v).as("name")))
         .reduce(_ unionByName _).distinct()
-      PropertyGraph.rooted(PropertyGraph(
-        vertices.join(del, Seq("name"), "left_anti"),
-        edgesN.join(del.select(col("name").as("src")), Seq("src"), "left_anti")
+      PropertyGraph(Store.of(vertices.join(del, Seq("name"), "left_anti")).frame,
+        Store.of(edgesN.join(del.select(col("name").as("src")), Seq("src"), "left_anti")
           .join(del.select(col("name").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"), col("rel"), col("eattrs"))))
+          .select(col("src"), col("dst"), col("rel"), col("eattrs"))).frame)
     case Cypher.SetAttrs(chains, wheres, sets) =>
       sets.foreach { case (_, attr, _) =>
         require(attr != "name", "cannot SET the identity attribute 'name'") }
@@ -1083,7 +1083,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
                 map(lit(attr), lit(value))))
               .otherwise(col("attrs")).as("attrs"))
       }
-      PropertyGraph.rooted(PropertyGraph(v2, edges))
+      PropertyGraph(Store.of(v2).frame, Store.of(edges).frame)
     case _ => throw new IllegalArgumentException(
       s"not a mutating statement: $stmt")
   }
@@ -1440,39 +1440,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
-
-  /** `g` with each frame whose plan folds to one local relation re-rooted
-    * on its row store ([[graft.core.LocalRows.of]]) — the fold-back
-    * [[graft.core.GraftCatalog]] does for UPDATE and DELETE. */
-  private def rooted(g: PropertyGraph): PropertyGraph = {
-    def root(df: DataFrame): DataFrame = LocalRows.of(df).fold(df)(_.frame)
-    PropertyGraph(root(g.vertices), root(g.edges))
-  }
-
-  /** MERGE's probe-then-append: `df` plus those of `rows` (column → value,
-    * one per graph column) whose `keys` identity `df` does not hold yet;
-    * existing rows are never touched. A driver-local frame — every session
-    * graph grown from [[empty]] by MERGEs — is read as its row store and
-    * the absent rows appended, so it stays ONE local relation
-    * ([[graft.core.LocalRows]]); DETACH DELETE and SET keep it so
-    * ([[rooted]]). Any other frame (parquet, TPC-H joins, a checkpoint, a
-    * local graph whose mutation did not fold to one local relation) is
-    * probed with one `isin` filter per key column — it may over-fetch
-    * crossed key combinations, settled exactly on the driver — and gets
-    * a union. */
-  private def appendAbsent(df: DataFrame, keys: Seq[String],
-                           rows: Seq[Map[String, Any]]): DataFrame = {
-    val local = LocalRows.of(df)
-    val have = local.fold(
-        df.filter(keys.map(k => col(k).isin(rows.map(_(k)).distinct: _*))
-          .reduce(_ && _)).collect().toSeq)(_.toRows)
-      .map(r => keys.map(r.getAs[Any])).toSet
-    val fresh = rows.filterNot(r => have(keys.map(r)))
-      .map(r => Row.fromSeq(df.columns.toSeq.map(r)))
-    if (fresh.isEmpty) df
-    else local.fold(df.union(LocalRows(df.sparkSession, df.schema, fresh).frame))(
-      _.append(fresh).frame)
-  }
 
   /** MERGE node identity: the `name` attribute when present (the
     * reference's own corpus always carries one — example.py:241-261);

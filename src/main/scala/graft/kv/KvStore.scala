@@ -1,11 +1,9 @@
 package graft.kv
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
-import graft.core.LocalRows
+import graft.core.{LocalRows, Store}
 
 /** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; reference
   * /root/reference/server.py:80-168, hash-db.py:34-83) re-expressed as
@@ -23,42 +21,25 @@ import graft.core.LocalRows
   * reference's `sorted(items, key=sort_key, reverse=…)` postcondition
   * (server.py:126,139-140,153-154,167-168).
   *
-  * A session store holds its pairs on the driver ([[graft.core.LocalRows]]),
-  * the reference's per-node dict: a query's filter and sort fold there at
-  * plan time ([[graft.core.LocalFold]]), so a range read, like
-  * [[lookup]], runs no Spark job.
+  * The pairs are a keyed store on (pk, sk) ([[graft.core.Store]]); a
+  * session store holds them on the driver, the reference's per-node dict,
+  * where [[lookup]] and a query's filter and sort run with no Spark job.
   */
-final class KvStore private (held: Either[DataFrame, LocalRows]) {
-  import KvStore.sorted
+final class KvStore private (store: Store) {
+  import KvStore.{key, sorted}
 
   /** The store as a frame: for a session store, the one local relation
     * over its held rows. */
-  lazy val df: DataFrame = held.fold(identity, _.frame)
+  lazy val df: DataFrame = store.frame
 
-  // ---- writes (S1-S3). `put` overwrites (the reference's hashmap set): it
-  // drops any prior (pk, sk) row first. A session store — [[KvStore.empty]]
-  // grown by puts, or any driver-local frame — holds its rows on the driver
-  // ([[graft.core.LocalRows]]): put and delete edit them there, with no
-  // Spark plan built. Any other store (parquet, a union from putAll) is a
-  // plan: a delete is a filter, a put a filter plus a one-row union — at
-  // scale an append to a pk-partitioned table, not a rewrite.
-  def put(pk: String, sk: String, value: String): KvStore = {
-    def row(schema: StructType) =
-      Row.fromSeq(schema.fieldNames.toSeq.map(Map("pk" -> pk, "sk" -> sk, "value" -> value)))
-    local match {
-      case Some(s) => KvStore(s.filterNot(KvStore.isKey(s, pk, sk)).append(Seq(row(s.schema))))
-      case None => KvStore(delete(pk, sk).df.union(
-        LocalRows(df.sparkSession, df.schema, Seq(row(df.schema))).frame))
-    }
-  }
-  def putAll(rows: DataFrame): KvStore = KvStore(df.unionByName(rows))
-  def delete(pk: String, sk: String): KvStore = held match {
-    case Right(s) => KvStore(s.filterNot(KvStore.isKey(s, pk, sk)))
-    case Left(d) => KvStore(d.filter(!(col("pk") === pk && col("sk") === sk)))
-  }
-
-  // the held rows; a frame store is read once, if it is driver-local
-  private def local: Option[LocalRows] = held.fold(LocalRows.of, Some(_))
+  // ---- writes (S1-S3): the store's upsert (`put` overwrites, the
+  // reference's hashmap set) and delete on (pk, sk). A session store —
+  // [[KvStore.empty]] or any driver-local frame — edits its held rows on
+  // the driver with no Spark plan built; on parquet a delete is a filter
+  // and a put a filter plus a one-row union, not a rewrite.
+  def put(pk: String, sk: String, value: String): KvStore =
+    new KvStore(store.upsert(key, store.newRows(Seq(Map("pk" -> pk, "sk" -> sk, "value" -> value)))))
+  def delete(pk: String, sk: String): KvStore = new KvStore(store.deleteKey(key, Seq(pk, sk)))
 
   /** Exact get — with the optimized layout this prunes to one partition +
     * one row group (reference: md5-ring route + dict lookup, client.py:59-64). */
@@ -66,15 +47,10 @@ final class KvStore private (held: Either[DataFrame, LocalRows]) {
     df.filter(col("pk") === pk && col("sk") === sk)
 
   /** The value at (pk, sk): a key lookup over a session store's held rows,
-    * the reference's dict lookup (client.py:25); a collect of [[get]] for
+    * the reference's dict lookup (client.py:25); a filter and collect for
     * any other store. */
-  def lookup(pk: String, sk: String): Option[String] = held match {
-    case Right(s) =>
-      val v = s.schema.fieldIndex("value")
-      s.rows.find(KvStore.isKey(s, pk, sk)).map(r =>
-        if (r.isNullAt(v)) null else r.getUTF8String(v).toString)
-    case Left(_) => get(pk, sk).select("value").collect().headOption.map(_.getString(0))
-  }
+  def lookup(pk: String, sk: String): Option[String] =
+    store.lookup(key, Seq(pk, sk)).toRows.headOption.map(_.getAs[String]("value"))
 
   /** D1 `query_begins`: pk exact + sk prefix (server.py:113-126). */
   def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame =
@@ -121,21 +97,16 @@ final class KvStore private (held: Either[DataFrame, LocalRows]) {
 
 object KvStore {
   /** A store over any frame of (pk, sk, value). */
-  def apply(df: DataFrame): KvStore = new KvStore(Left(df))
-  private def apply(rows: LocalRows): KvStore = new KvStore(Right(rows))
+  def apply(df: DataFrame): KvStore = new KvStore(Store.of(df))
+
+  private val key = Seq("pk", "sk")
 
   private def sorted(d: DataFrame, desc: Boolean): DataFrame =
     d.orderBy(if (desc) col("sk").desc else col("sk").asc)
 
-  private def isKey(s: LocalRows, pk: String, sk: String): InternalRow => Boolean = {
-    val (p, k) = (s.schema.fieldIndex("pk"), s.schema.fieldIndex("sk"))
-    val (pu, ku) = (UTF8String.fromString(pk), UTF8String.fromString(sk))
-    r => pu == r.getUTF8String(p) && ku == r.getUTF8String(k)
-  }
-
   /** An empty session store: its rows live on the driver. */
-  def empty(spark: SparkSession): KvStore = KvStore(LocalRows(spark,
-    StructType(Seq("pk", "sk", "value").map(StructField(_, StringType))), Nil))
+  def empty(spark: SparkSession): KvStore = new KvStore(Store(LocalRows(spark,
+    StructType(Seq("pk", "sk", "value").map(StructField(_, StringType))), Nil)))
 
   /** events table → KV view used by the t2 harness: the reference's
     * `people-100 / messages-0000000042` key style (FIXTURES.md §A1) mapped

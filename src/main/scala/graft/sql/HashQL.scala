@@ -588,11 +588,11 @@ object HashQL {
   final case class InSelect(ref: ColRef, sub: Select) extends Pred
   /** `(a, b) in (select x, y from …)` (round-15 — the multi-key
     * membership test, the composite-key dedup/decontamination idiom):
-    * ONE semi join on ALL the key pairs. WHERE-conjunct context;
-    * NULL keys never match (FALSE ≡ UNKNOWN under WHERE). The NOT form
-    * rejects toward NOT EXISTS — multi-column NOT IN under ANSI turns
-    * UNKNOWN for every row once the subquery holds one NULL, a trap
-    * better spelled explicitly. */
+    * ONE semi join on ALL the key pairs as a WHERE conjunct, one flag
+    * join under OR or NOT (a miss reads FALSE, so NOT is NOT EXISTS).
+    * NULL keys never match. `(a, b) NOT IN (…)` rejects toward NOT EXISTS
+    * — multi-column NOT IN under ANSI turns UNKNOWN for every row once
+    * the subquery holds one NULL, a trap better spelled explicitly. */
   final case class InSelectTuple(refs: Seq[ColRef], sub: Select)
       extends Pred {
     require(refs.length >= 2, "a tuple IN needs two or more columns")
@@ -6592,19 +6592,8 @@ object HashQL {
       // pairs — the composite-key decontamination idiom. NULL keys
       // never match (FALSE ≡ UNKNOWN under WHERE).
       case InSelectTuple(refs, sub) =>
-        val subT = fromTables(sub)
-        val foreign = sub.wheres.flatMap(predTables).filterNot(subT).distinct
-        require(foreign.isEmpty,
-          s"a tuple IN subquery is uncorrelated — it references " +
-            s"${foreign.mkString(", ")}; correlate through EXISTS")
-        val sf = selectFrame(cat, sub, registry)
-        require(sf.columns.length == refs.length,
-          s"tuple IN: the subquery projects ${sf.columns.length} " +
-            s"column(s) for ${refs.length} key(s)")
-        val renamed = sf.toDF(refs.indices.map(i => s"graft_in_$i"): _*)
-        df = df.join(renamed, refs.zipWithIndex.map { case (r, i) =>
-          df(r.column) === renamed(s"graft_in_$i") }.reduce(_ && _),
-          "left_semi")
+        val (sf, on) = tupleIn(cat, df, refs, sub, registry)
+        df = df.join(sf, on, "left_semi")
       case Not(InSelect(ref, sub)) =>
         val sf = subqueryFrame(cat, sub, registry)
         df = df.join(sf, df(ref.column) === sf("graft_in_sub"), "left_anti")
@@ -6653,6 +6642,22 @@ object HashQL {
     df
   }
 
+  /** A tuple IN's uncorrelated subquery, columns renamed `graft_in_<i>`
+    * and then `shape`d, and the join condition pairing `df`'s keys with them. */
+  private def tupleIn(cat: GraftCatalog, df: DataFrame, refs: Seq[ColRef], sub: Select,
+                      registry: Option[JoinRegistry],
+                      shape: DataFrame => DataFrame = identity): (DataFrame, Column) = {
+    val foreign = sub.wheres.flatMap(predTables).filterNot(fromTables(sub)).distinct
+    require(foreign.isEmpty, s"a tuple IN subquery is uncorrelated — it references " +
+      s"${foreign.mkString(", ")}; correlate through EXISTS")
+    val raw = selectFrame(cat, sub, registry)
+    require(raw.columns.length == refs.length, s"tuple IN: the subquery projects " +
+      s"${raw.columns.length} column(s) for ${refs.length} key(s)")
+    val names = refs.indices.map(i => s"graft_in_$i")
+    val sf = shape(raw.toDF(names: _*))
+    (sf, refs.zip(names).map { case (r, n) => df(r.column) === sf(n) }.reduce(_ && _))
+  }
+
   /** Does a conjunct contain a subquery predicate ANYWHERE in its tree
     * (needs join machinery, not a plain Column)? */
   private def subqueryPred(p: Pred): Boolean = subqueriesOf(_.pred(p)).nonEmpty
@@ -6697,6 +6702,12 @@ object HashQL {
           .withColumn(f, lit(true))
         df = df.join(sf, exprColumn(cat, e) === sf("graft_in_sub"), "left")
           .drop("graft_in_sub")
+        FlagPred(f)
+      case InSelectTuple(refs, sub) =>
+        val f = newFlag()
+        val (sf, on) = tupleIn(cat, df, refs, sub, registry,
+          _.distinct().withColumn(f, lit(true)))
+        df = df.join(sf, on, "left").drop(refs.indices.map(i => s"graft_in_$i"): _*)
         FlagPred(f)
       case ExistsSelect(sub) =>
         val f = newFlag()

@@ -1078,6 +1078,15 @@ class HashQLSpec extends SparkSpec {
       "select r.v from r where r.v = 1 or not exists " +
         "(select r2.v from r2 where r2.v = r.v)").get
     assert(orNotEx.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 9L))
+    // a tuple membership under OR and under NOT: a flag and an anti join
+    // on all key pairs (DuckDB over the same rows: 1, 2, 9 and 3, 9)
+    HashQL.execute(cat, "insert into r3 (v, x) values (1, 10), (3, 99), (2, 20)")
+    val orTuple = HashQL.execute(cat,
+      "select r.v from r where r.v = 9 or (r.v, r.w) in (select r3.v, r3.x from r3)").get
+    assert(orTuple.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 9L))
+    val notTuple = HashQL.execute(cat,
+      "select r.v from r where not ((r.v, r.w) in (select r3.v, r3.x from r3))").get
+    assert(notTuple.as[Long].collect().sorted.toSeq == Seq(3L, 9L))
     // a subquery inside a CASE condition of a WHERE comparison is a
     // subquery leaf like any other: it lowers to a flag join too
     val caseIn = HashQL.execute(cat,

@@ -238,6 +238,28 @@ class SessionStoreSpec extends SparkSpec {
       Set("1|[a]|null", "1|null|t", "2|[bb]|null"))
   }
 
+  test("saveDocument on a compacted collection replaces by id and appends new ids") {
+    val db = new HashDb(spark)
+    (1 to 3).foreach(i => db.saveDocument("c", i, s"""{"n":$i,"name":"d$i"}"""))
+    val dir = java.nio.file.Files.createTempDirectory("store").toString
+    db.catalog.compact("c", s"$dir/c")
+    assert(db.catalog.rowsOf("c").isEmpty)
+    def ids(where: String): Seq[Long] =
+      db.sql(s"select c.id from c where $where").get.as[Long].collect().sorted.toSeq
+    db.saveDocument("c", 2, """{"n":20,"name":"two"}""")
+    assert(db.getDocument("c", 2).contains("""{"n":20,"name":"two"}"""))
+    assert(ids("c.id = 2") == Seq(2L))
+    assert(ids("c.~name = 'two'") == Seq(2L) && ids("c.~name = 'd2'").isEmpty)
+    db.saveDocument("c", 4, """{"n":4,"name":"d4"}""")
+    assert(db.getDocument("c", 4).contains("""{"n":4,"name":"d4"}"""))
+    assert(ids("c.id > 0") == Seq(1L, 2L, 3L, 4L))
+    // a new field widens the compacted documents too
+    db.saveDocument("c", 3, """{"extra":"x","n":3,"name":"d3"}""")
+    assert(db.getDocument("c", 3).contains("""{"extra":"x","n":3,"name":"d3"}"""))
+    assert(db.getDocument("c", 1).contains("""{"n":1,"name":"d1"}"""))
+    assert(ids("c.id = 3") == Seq(3L) && ids("c.id > 0") == Seq(1L, 2L, 3L, 4L))
+  }
+
   test("saveDocument throws on a type conflict, naming the collection, id and field") {
     val db = new HashDb(spark)
     db.saveDocument("c", 1, """{"age":30,"name":"a"}""")
@@ -282,6 +304,25 @@ class SessionStoreSpec extends SparkSpec {
     val notes = mutable.ArrayBuffer.empty[String]
     val docs = mutable.LinkedHashMap.empty[Long, String]
     var nextPid = 0L
+    // the graph's writes draw from their own generator, so the other
+    // surfaces' writes are the same with or without them
+    val grnd = new Random(13)
+    val vertices = mutable.Map.empty[String, Map[String, String]] // name -> attrs but name
+    val edges = mutable.Set.empty[(String, String)]
+    def graphWrite(): Unit = {
+      def node(): (String, String) = (s"g${grnd.nextInt(12)}", s"t${grnd.nextInt(3)}")
+      if (grnd.nextInt(5) == 0) {
+        val (n, c) = (s"g${grnd.nextInt(12)}", Seq("red", "blue")(grnd.nextInt(2)))
+        db.cypher(s"match (p:P {name: '$n'}) set p.color = '$c'")
+        vertices.get(n).foreach(m => vertices(n) = m + ("color" -> c))
+      } else {
+        // a re-merge of a stored name with another tier keeps the stored row
+        val ((a, ta), (b, tb)) = (node(), node())
+        db.cypher(s"merge (a:P {'name': '$a', 'tier': '$ta'})-[:R]->(b:P {'name': '$b', 'tier': '$tb'})")
+        Seq(a -> ta, b -> tb).foreach { case (n, t) => vertices.getOrElseUpdate(n, Map("tier" -> t)) }
+        edges += ((a, b))
+      }
+    }
     def doc(id: Long, city: Boolean): String = {
       val hs = rnd.shuffle(hobbies).take(1 + rnd.nextInt(2))
       s"""{"age":${20 + rnd.nextInt(5)},""" + (if (city) """"city":"x",""" else "") +
@@ -338,12 +379,25 @@ class SessionStoreSpec extends SparkSpec {
         docs.collect { case (id, j) if j.contains(s""""name":"$h"""") => id }.toSeq.sorted)
       docs.keys.take(3).foreach(id => assert(db.getDocument("docs", id) == docs.get(id)))
       planSizes += Seq(range, select, fts, path).map(nodes)
+      val g = db.graphState
+      Seq(g.vertices, g.edges).foreach(df => assert(isOneLocalRelation(df), df.queryExecution.analyzed.treeString))
+      def names(stmt: String): Set[String] = db.cypher(stmt).get.collect().map(_.getString(0)).toSet
+      val a = s"g${grnd.nextInt(12)}"
+      assert(names(s"match (a:P {name: '$a'})-[:R]->(b:P) return b") ==
+        edges.collect { case (`a`, b) => b }.toSet)
+      val t = s"t${grnd.nextInt(3)}"
+      assert(names(s"match (p:P) where p.tier = '$t' return p") ==
+        vertices.collect { case (n, m) if m("tier") == t => n }.toSet)
+      assert(names("match (p:P) where p.color = 'red' return p") ==
+        vertices.collect { case (n, m) if m.get("color").contains("red") => n }.toSet)
     }
     (1 to 1200).foreach { k =>
       write(k)
+      if (grnd.nextInt(6) == 0) graphWrite()
       if (k % 150 == 0) check()
     }
     assert(people.nonEmpty && notes.nonEmpty && docs.size > 100 && kv.nonEmpty)
+    assert(vertices.size == 12 && vertices.values.exists(_.contains("color")))
     assert(db.catalog.table("people").columns.contains("city"))
     assert(db.catalog.table("docs").schema("doc").dataType.simpleString.contains("city"))
     // every table is still one local relation, so plan size does not grow
