@@ -47,10 +47,16 @@ final class KvStore private (store: Store) {
     df.filter(col("pk") === pk && col("sk") === sk)
 
   /** The value at (pk, sk): a key lookup over a session store's held rows,
-    * the reference's dict lookup (client.py:25); a filter and collect for
-    * any other store. */
-  def lookup(pk: String, sk: String): Option[String] =
-    store.lookup(key, Seq(pk, sk)).toRows.headOption.map(_.getAs[String]("value"))
+    * the reference's dict lookup (client.py:25), read by ordinal from the
+    * matched row with no row converted; a filter and collect for any
+    * other store. */
+  def lookup(pk: String, sk: String): Option[String] = {
+    val hit = store.lookup(key, Seq(pk, sk))
+    hit.rows.fold(hit.toRows.headOption.map(_.getAs[String]("value"))) { held =>
+      val v = held.schema.fieldIndex("value")
+      held.rows.headOption.map(r => if (r.isNullAt(v)) null else r.getUTF8String(v).toString)
+    }
+  }
 
   /** D1 `query_begins`: pk exact + sk prefix (server.py:113-126). */
   def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame =

@@ -113,10 +113,6 @@ object HashQL {
       "duplicate column in * REPLACE")
   }
   final case class Field(ref: ColRef) extends SelectItem
-  case object CountStar extends SelectItem
-  /** sum/avg/min/max(t.f) — dialect growth beyond the reference's count
-    * (the generic `ident(args)` parse at server.py:433-445 invites it). */
-  final case class AggCall(fn: String, ref: ColRef) extends SelectItem
   /** Window calls (dialect growth — no analog anywhere in the reference):
     * `row_number() over (partition by t.p order by t.o [desc])` → `rn`,
     * `rank() over (…)` → `rnk`, `sum(t.x) over (…)` → `wsum_x` (a RUNNING
@@ -143,7 +139,8 @@ object HashQL {
     * day window semantics, the sliding-time-window idiom). */
   /** `aggDeps` (round-13 — windows over GROUPED selects): aggregate
     * calls SPELLED inside the OVER clause (`rank() over (order by
-    * sum(t.x) desc)`), parsed to (auto-alias, agg item) pairs. The
+    * sum(t.x) desc)`), parsed to (auto-alias, [[AggExprItem]]) pairs
+    * (expression keys ride as (reserved name, [[ExprItem]])). The
     * order/part refs address the auto-alias; the grouped executor adds
     * any dep the select list does not already produce to the SAME
     * aggregation pass and drops it after the window computes — exactly
@@ -177,15 +174,6 @@ object HashQL {
                            // values when picking the offset/frame row
                            ignoreNulls: Boolean = false)
     extends SelectItem
-  /** `coalesce(t.f, <literal> | u.g)` — null replacement in the
-    * projection, the natural companion of LEFT/FULL JOIN extensions and
-    * schema-union gaps. Two-arg forms: column+literal (fill a default)
-    * and column+column (the FULL JOIN key-merge idiom —
-    * `coalesce(a.k, b.k)` is the unified key). Output alias
-    * `coalesce_<first col>`. A COMPUTED output like window calls: exempt
-    * from the missing-field row skip (its value is never "missing" —
-    * that is its whole point). `default` holds a literal or a ColRef. */
-  final case class Coalesce2(ref: ColRef, default: Any) extends SelectItem
 
   /** Scalar expression tree (round-9 growth — the first thing every
     * interactive user types: `select t.a + t.b`, `case when … then … end`,
@@ -257,14 +245,91 @@ object HashQL {
     * surrounding arithmetic on the aggregated frame and drops the
     * reserved columns. Anywhere else (WHERE, UPDATE SET, grouping keys)
     * lowering rejects with a clear message — filter on aggregates
-    * through HAVING. fn reuses [[AggExprItem]]'s inventory;
-    * `count_star`'s arg is a placeholder. */
+    * through HAVING. fn is one of [[aggFn]]'s, like [[AggExprItem]]'s
+    * (the parser decides which of them may appear inside an
+    * expression); `count_star`'s arg is a placeholder. */
   final case class EAgg(fn: String, arg: Expr) extends Expr {
-    require(Set("count_star", "count", "count_distinct", "sum",
-      "sum_distinct", "avg", "min", "max", "array_agg",
-      "array_agg_distinct").contains(fn),
-      s"unsupported aggregate: $fn")
+    require(aggFn.isDefinedAt(fn), s"unsupported aggregate: $fn")
   }
+  /** The aggregate inventory: each function's lowering over its argument
+    * column — the one table [[AggExprItem]] and [[EAgg]] lower through.
+    * Every entry is a native partial-agg'd aggregate or a sorted collect,
+    * so results are partitioning-independent. */
+  private lazy val aggFn: PartialFunction[String, Column => Column] = {
+    case "count_star" => _ => count(lit(1))
+    // null-aware: rows where the column is null (schema-union gaps,
+    // LEFT JOIN extensions) don't count — standard SQL count(col)
+    case "count" => count(_)
+    // exact distinct count — the partial-agg expand/shuffle plan
+    // q_count_distinct proves; excluded from matview containment by
+    // registration (distinct aggs don't re-aggregate)
+    case "count_distinct" => count_distinct(_)
+    case "sum" => sum(_)
+    case "sum_distinct" => sum_distinct(_)
+    case "avg" => avg(_)
+    // exact median (round-12): both engines linearly interpolate even
+    // counts, so integer-valued inputs hash-match (DuckDB: median);
+    // non-reaggregable — MatView containment skips it by construction
+    case "median" => median(_)
+    case "min" => min(_)
+    case "max" => max(_)
+    // bitwise aggregates (round-16): order-free, so exact anywhere
+    case "bit_and" => bit_and(_)
+    case "bit_or" => bit_or(_)
+    case "bit_xor" => bit_xor(_)
+    // deterministic mode (round-16): sort-collect, then ONE run-length
+    // fold over the sorted array — the longest run wins and STRICT
+    // improvement keeps the earliest (smallest) value on ties.
+    // try_element_at(arr, MaxValue) seeds element-typed NULLs without
+    // knowing the type statically. Same memory profile as string_agg
+    // (per-group collected array).
+    case "mode" => c =>
+      val arr = sort_array(collect_list(c))
+      val nul = try_element_at(arr, lit(Int.MaxValue))
+      val st0 = struct(nul.as("prev"), lit(0L).as("run"),
+        nul.as("best"), lit(0L).as("bestRun"))
+      aggregate(arr, st0, (acc, x) => {
+        val run = when(x <=> acc.getField("prev"),
+          acc.getField("run") + 1).otherwise(lit(1L))
+        val better = run > acc.getField("bestRun")
+        struct(x.as("prev"), run.as("run"),
+          when(better, x).otherwise(acc.getField("best")).as("best"),
+          when(better, run).otherwise(acc.getField("bestRun"))
+            .as("bestRun"))
+      }, acc => acc.getField("best"))
+    // value-sorted deterministic list aggregation (round-15) —
+    // collect_list skips NULLs; empty → NULL like DuckDB's
+    // NULL-filtered array_agg, not []
+    case "array_agg" => c =>
+      val arr = sort_array(collect_list(c))
+      when(size(arr) === 0, lit(null)).otherwise(arr)
+    // the sorted value SET (round-16) — collect_set skips NULLs like
+    // collect_list; same empty → NULL rule. DuckDB mirror:
+    // list_sort(list_distinct(array_agg(x) FILTER (WHERE x IS NOT
+    // NULL)))
+    case "array_agg_distinct" => c =>
+      val arr = sort_array(collect_set(c))
+      when(size(arr) === 0, lit(null)).otherwise(arr)
+    // exact interpolated quantile (round-13): percentile_cont(x, q) —
+    // Spark's exact percentile and DuckDB's quantile_cont share the
+    // rank formula (index q·(n−1), linear interpolation), so
+    // integer-valued inputs hash-match exactly like median (the q=0.5
+    // special case). The static fraction rides the fn name, so the
+    // item flows through every rewriter untouched; non-reaggregable
+    // like median.
+    case q if q.startsWith("percentile_cont:") =>
+      percentile(_, lit(q.stripPrefix("percentile_cont:").toDouble))
+  }
+  /** The output name of a bare aggregate or coalesce over a column —
+    * `cnt_<col>`, `cntd_<col>`, `<fn>_<col>` (`sum_x`, `coalesce_a`) —
+    * for the parser to pin on the item it builds. */
+  private def autoAlias(fn: String, column: String): String = fn match {
+    case "count" => s"cnt_$column"
+    case "count_distinct" => s"cntd_$column"
+    case f => s"${f}_$column"
+  }
+  /** `count(*)`: the projection's row count, `cnt`. */
+  private val countStarItem = AggExprItem("count_star", ELit(1L), "cnt")
   /** [[EFunc]]'s function inventory: name → accepted arities (built
     * once, not per node). */
   private lazy val funcArity: Map[String, Set[Int]] = Map(
@@ -512,10 +577,12 @@ object HashQL {
     * Computed outputs are exempt from the reference's missing-field row
     * skip (they are never "missing"; their NULLs are data). */
   final case class ExprItem(expr: Expr, alias: String) extends SelectItem
-  /** `sum|avg|min|max(<expr>) as alias`, `count(*) as alias`, … — an
-    * aggregate over a computed expression (or an explicitly re-aliased
-    * plain aggregate). fn ∈ count_star | count | count_distinct | sum |
-    * avg | min | max. The alias is addressable in HAVING and ORDER BY. */
+  /** An aggregate projection: `count(*)`, `sum(t.f)`, `sum|avg|min|max(
+    * <expr>) as alias`, … — fn is one of [[aggFn]]'s, over a column or a
+    * computed expression. A bare call over a column carries its
+    * auto-alias (`cnt`, `sum_f`, `cntd_f`, pinned by the parser), an AS
+    * names it otherwise. The alias is addressable in HAVING and ORDER
+    * BY. */
   final case class AggExprItem(fn: String, expr: Expr, alias: String) extends SelectItem
   /** `string_agg(<expr>, '<sep>') as alias` (round-12): SORTED string
     * aggregation — elements collect, sort, and join with the literal
@@ -1331,22 +1398,16 @@ object HashQL {
   }
 
   /** [[mapPred]]'s projection-item twin (window specs with their
-    * tiebreak and OVER-clause aggregates, coalesce defaults and grouping
-    * keys included) — same rule: every variant, no wildcard. */
+    * tiebreak and OVER-clause aggregates, and grouping keys included) —
+    * same rule: every variant, no wildcard. */
   private[graft] def mapItem(it: SelectItem, k: Kids): SelectItem = it match {
     case Star => Star
     case StarMod(ex, rep) => StarMod(ex, rep.map { case (e, c) => (k.expr(e), c) })
     case Field(r) => Field(k.ref(r))
-    case CountStar => CountStar
-    case AggCall(fn, r) => AggCall(fn, k.ref(r))
     case w: WinCall => w.copy(arg = w.arg.map(k.ref), part = w.part.map(k.ref),
       order = w.order.map { case (r, d) => (k.ref(r), d) },
       aggDeps = w.aggDeps.map { case (n, d) => (n, mapItem(d, k)) },
       tiebreak = w.tiebreak.map(k.ref))
-    case Coalesce2(r, d) => Coalesce2(k.ref(r), d match {
-      case r2: ColRef => k.ref(r2)
-      case v => v
-    })
     case ScalarSubItem(s, a) => ScalarSubItem(k.sub(s), a)
     case ExistsItem(s, a) => ExistsItem(k.sub(s), a)
     case ExprItem(e, a) => ExprItem(k.expr(e), a)
@@ -1718,6 +1779,17 @@ object HashQL {
               s"projected field ${r.column} is not a grouping key")
             case Star => throw new IllegalArgumentException(
               "create agg view cannot project *")
+            // a plain call over a column under its auto-alias — the
+            // item `count(*)`, `sum(t.f)`, … parse to
+            case a: AggExprItem if a == countStarItem || (a.expr match {
+                case ECol(r) => a.alias == autoAlias(a.fn, r.column) &&
+                  Set("count", "count_distinct", "sum", "avg", "median",
+                    "min", "max")(a.fn)
+                case _ => false
+              }) => ()
+            // the 2-arg coalesce item, like a window, is not stored
+            case ExprItem(EFunc("coalesce", Seq(ECol(r), _: ELit | _: ECol)), a)
+                if a == autoAlias("coalesce", r.column) => ()
             case _: ExprItem | _: AggExprItem | _: ScalarSubItem |
                  _: ExistsItem | _: StringAggItem | _: ArgExtremeItem |
                  _: GroupingItem =>
@@ -1726,7 +1798,7 @@ object HashQL {
                   "(count/sum/avg/min/max(t.f)) — expression aggregates " +
                   "and scalar subqueries don't re-aggregate for " +
                   "containment routing or DML folds")
-            case _ => () // agg calls
+            case _ => ()
           }
           CreateAggView(sel)
         } else { kw("join"); createJoinRest() }
@@ -2508,20 +2580,15 @@ object HashQL {
         else if (is("count")) {
           // count(*) counts rows; count(t.f) counts NON-NULL f — the SQL
           // distinction starts mattering once LEFT JOIN can produce nulls
-          next(); kw("(")
-          val item0: SelectItem =
-            if (is("*")) { next(); CountStar }
-            else if (is("distinct")) { next(); AggCall("count_distinct", colRef()) }
-            else AggCall("count", colRef())
-          kw(")")
+          val item0 = plainAgg()
           // `count(*)|count(t.f) over (…)` — a window count (round 11:
           // running/frame counts, the group-size-per-row idiom); the
           // distinct form stays out (neither engine windows a distinct
           // count without rewrites)
           if (is("over")) {
             val warg = item0 match {
-              case CountStar => None
-              case AggCall("count", r) => Some(r)
+              case AggExprItem("count", ECol(r), _) => Some(r)
+              case AggExprItem("count_star", _, _) => None
               case _ => throw new IllegalArgumentException(
                 "count(distinct …) cannot be a window function — " +
                   "aggregate through GROUP BY instead")
@@ -2534,34 +2601,19 @@ object HashQL {
           else if (is("filter")) {
             next(); kw("("); kw("where")
             val p = predExpr(); kw(")")
-            val gated = item0 match {
-              case CountStar => ECase(Seq((p, ELit(1L))), None)
-              case AggCall(_, r) => ECase(Seq((p, ECol(r))), None)
-              case other => throw new IllegalStateException(s"$other")
-            }
-            val fn = item0 match {
-              case CountStar => "count"
-              case AggCall(fn0, _) => fn0
-              case other => throw new IllegalStateException(s"$other")
-            }
-            items += AggExprItem(fn, gated, aliasAfterAs("count(…) filter (…)"))
+            val fn = if (item0.fn == "count_star") "count" else item0.fn
+            items += AggExprItem(fn, ECase(Seq((p, item0.expr)), None),
+              aliasAfterAs("count(…) filter (…)"))
           }
           // `count(…) as alias` re-aliases the aggregate (the alias then
           // addresses it in HAVING/ORDER BY in place of the auto-alias);
           // an arithmetic continuation makes it an expression over
           // aggregates — `count(*) * 1.0 / n as share`
-          else items += (if (arithOps.exists(is)) {
-            val lead = item0 match {
-              case CountStar => EAgg("count_star", ELit(1L))
-              case AggCall(fn0, r) => EAgg(fn0, ECol(r))
-              case other => throw new IllegalStateException(s"$other")
-            }
-            ExprItem(exprTreeFrom(lead), aliasAfterAs("count(…) <op> …"))
-          } else if (is("as")) item0 match {
-            case CountStar => AggExprItem("count_star", ELit(1L), aliasAfterAs("count(*)"))
-            case AggCall(fn, r) => AggExprItem(fn, ECol(r), aliasAfterAs(fn))
-            case other => other
-          } else item0)
+          else items += (if (arithOps.exists(is))
+            ExprItem(exprTreeFrom(EAgg(item0.fn, item0.expr)),
+              aliasAfterAs("count(…) <op> …"))
+          else if (is("as")) item0.copy(alias = aliasAfterAs("count(…)"))
+          else item0)
         }
         else if (is("string_agg") && peekAt(1) == "(") {
           // `string_agg([distinct] <expr>, '<sep>') as alias` —
@@ -2882,24 +2934,26 @@ object HashQL {
           }
           // an arithmetic continuation makes the whole item an expression
           // OVER aggregates — `sum(a) / sum(b) as r`, the ratio idiom
-          else items += (if (arithOps.exists(is))
+          else items += (if (arithOps.exists(is)) {
+            require(fn != "median",
+              "median(…) cannot continue into an expression — project " +
+                "it `as <alias>` and compute over it through a CTE")
             ExprItem(exprTreeFrom(EAgg(fn, e)),
               aliasAfterAs(s"$fn(<expression>) <op> …"))
-          else e match {
-            // plain-column forms keep their round-7 shapes: window call
-            // when OVER follows, auto-aliased AggCall otherwise
+          } else e match {
+            // plain-column forms: window call when OVER follows, the
+            // call under its auto-alias (sum_x) otherwise
             case ECol(r) if is("over") => windowSpec(fn, Some(r))
-            case ECol(r) if !is("as") => AggCall(fn, r)
-            case ECol(r) => AggExprItem(fn, ECol(r), aliasAfterAs(fn))
+            case ECol(r) if !is("as") => AggExprItem(fn, e, autoAlias(fn, r.column))
             // aggregate over a computed expression — the revenue idiom
             // sum(l_extendedprice * (1 - l_discount)); AS names the output
             case _ => AggExprItem(fn, e, aliasAfterAs(s"$fn(<expression>)"))
           })
         }
         else if (is("coalesce") && coalesce2Shape()) {
-          // the LEGACY 2-arg projection form `coalesce(t.a, v)` keeps its
-          // Coalesce2 item (auto-alias `coalesce_a`, the FULL-JOIN key
-          // merge); anything richer — 3+ args, nested calls, arithmetic
+          // the 2-arg projection form `coalesce(t.a, v)` names its output
+          // `coalesce_a` (the FULL-JOIN key merge `coalesce(a.k, b.k)`);
+          // anything richer — 3+ args, nested calls, arithmetic
           // continuation, an AS alias — parses through the expression
           // grammar's n-ary coalesce below
           next(); kw("(")
@@ -2909,9 +2963,10 @@ object HashQL {
           // null gets its own rejection
           require(!is("null"),
             "coalesce(…, null) is a no-op — use a typed literal or column default")
-          val v: Any = if (peekIsColRef) colRef() else literal()
+          val d = if (peekIsColRef) ECol(colRef()) else ELit(literal())
           kw(")")
-          items += Coalesce2(r, v)
+          items += ExprItem(EFunc("coalesce", Seq(ECol(r), d)),
+            autoAlias("coalesce", r.column))
         }
         else if (peek == "(" && peekAt(1).equalsIgnoreCase("select")) {
           // scalar subquery in the projection list (round-11) — the
@@ -3960,19 +4015,14 @@ object HashQL {
       // executor computes in the same aggregation pass.
       val deps = scala.collection.mutable.ArrayBuffer.empty[(String, SelectItem)]
       def winKey(): ColRef =
-        if (Seq("sum", "avg", "min", "max").exists(is) && peekAt(1) == "(") {
-          val fn0 = next().toLowerCase; kw("("); val r = colRef(); kw(")")
-          val n = s"${fn0}_${r.column}"
-          deps += n -> AggCall(fn0, r)
-          ColRef("", n)
-        } else if (is("count") && peekAt(1) == "(") {
-          next(); kw("(")
-          val (n, item): (String, SelectItem) =
-            if (is("*")) { next(); ("cnt", CountStar) }
-            else { val r = colRef(); (s"cnt_${r.column}", AggCall("count", r)) }
-          kw(")")
-          deps += n -> item
-          ColRef("", n)
+        if (Seq("count", "sum", "avg", "min", "max").exists(is) &&
+            peekAt(1) == "(") {
+          val a = plainAgg()
+          require(a.fn != "count_distinct",
+            "count(distinct …) cannot key a window — project it and " +
+              "order by its output name")
+          deps += a.alias -> a
+          ColRef("", a.alias)
         } else if ((exprFuncs.contains(peek.toLowerCase) && peekAt(1) == "(")
             || ((is("cast") || is("try_cast")) && peekAt(1) == "(") || is("case")) {
           // EXPRESSION keys (round-13 — `partition by year(t.d)`): the
@@ -4192,6 +4242,23 @@ object HashQL {
         default = default, tiebreak = tiebreak, ignoreNulls = ignoreNulls)
     }
 
+    /** A plain aggregate call from its function name to its `)` —
+      * `count(*)`, `count([distinct] t.f)`, `sum|avg|min|max(t.f)` — as
+      * the item the same bare call projects (auto-aliased: `cnt`,
+      * `cnt_f`, `cntd_f`, `sum_f`, …). */
+    private def plainAgg(): AggExprItem = {
+      val fn0 = next().toLowerCase; kw("(")
+      val a =
+        if (fn0 == "count" && is("*")) { next(); countStarItem }
+        else {
+          val fn = if (fn0 == "count" && is("distinct")) { next(); "count_distinct" }
+                   else fn0
+          val r = colRef()
+          AggExprItem(fn, ECol(r), autoAlias(fn, r.column))
+        }
+      kw(")"); a
+    }
+
     /** A HAVING target resolves to an OUTPUT column name: agg-call
       * spellings map to the same auto-aliases the projection generates
       * (`count(*)`→cnt, `sum(t.f)`→sum_f, …), a `t.f` grouping column to
@@ -4200,20 +4267,10 @@ object HashQL {
       * [[HavingPred.agg]] — so an unprojected aggregate can still be
       * computed by the grouped select (round-12). */
     private def havingTarget(): (String, Option[SelectItem]) =
-      if (is("count")) {
-        next(); kw("(")
-        val t: (String, Option[SelectItem]) =
-          if (is("*")) { next(); ("cnt", Some(CountStar)) }
-          else if (is("distinct")) {
-            next(); val r = colRef()
-            (s"cntd_${r.column}", Some(AggCall("count_distinct", r)))
-          }
-          else { val r = colRef(); (s"cnt_${r.column}", Some(AggCall("count", r))) }
-        kw(")"); t
-      }
-      else if (Seq("sum", "avg", "min", "max").exists(is) && peekAt(1) == "(") {
-        val fn = next().toLowerCase; kw("("); val r = colRef(); kw(")")
-        (s"${fn}_${r.column}", Some(AggCall(fn, r)))
+      if (is("count") ||
+          (Seq("sum", "avg", "min", "max").exists(is) && peekAt(1) == "(")) {
+        val a = plainAgg()
+        (a.alias, Some(a))
       } else {
         val t = next()
         val i = t.indexOf('.')
@@ -4452,55 +4509,43 @@ object HashQL {
                         added: Option[DataFrame]): Boolean = {
       val sel = reg.sel
       if (sel.joins.nonEmpty || sel.table != table) return false
-      val calls = sel.items.collect { case a: AggCall => a }
+      // the agg-view parse guard admits plain calls only: fn over a
+      // column (or count(*)) under its auto-alias
+      val aggs = sel.items.collect { case a: AggExprItem => a }
+      val calls = aggs.filter(_ != countStarItem)
       val retracts = removed.isDefined
       val okFns = if (retracts) Set("count", "sum")
         else Set("count", "sum", "min", "max")
       if (!calls.forall(c => okFns(c.fn))) return false
       if (retracts) {
-        if (!(sel.items.contains(CountStar) || calls.isEmpty)) return false
-        val cntCols = calls.filter(_.fn == "count").map(_.ref.column).toSet
-        if (!calls.filter(_.fn == "sum").forall(c => cntCols(c.ref.column)))
+        if (!(aggs.contains(countStarItem) || calls.isEmpty)) return false
+        val cntArgs = calls.filter(_.fn == "count").map(_.expr).toSet
+        if (!calls.filter(_.fn == "sum").forall(c => cntArgs(c.expr)))
           return false
       }
       val spark = reg.spark
       val groupCols = sel.groupBy.map(_.column)
-      // signed partials under the registered aliases (aggsOf's naming);
-      // min/max only ever appear on the append side (okFns above)
+      // the view's stored columns (aggsOf's: count(*) when none is named)
+      val stored = if (aggs.isEmpty) Seq(countStarItem) else aggs
+      // counts and sums fold by summation (sum() skips nulls, so an
+      // all-null partial is a no-op — those rows contributed nothing to
+      // the stored value either); min/max fold by min/max
+      def refold(fn: String): String = if (fn == "min" || fn == "max") fn else "sum"
+      // signed partials under the stored aliases; min/max only ever
+      // appear on the append side (okFns above)
       def partials(rows: DataFrame, sign: Int): DataFrame = {
         var r = rows
         sel.wheres.foreach(p => r = r.filter(predColumn(cat, p)))
-        val cols: Seq[Column] =
-          if (calls.isEmpty) Seq((count(lit(1)) * sign).as("cnt"))
-          else sel.items.collect {
-            case CountStar => (count(lit(1)) * sign).as("cnt")
-            case AggCall("count", c) =>
-              (count(col(c.column)) * sign).as(s"cnt_${c.column}")
-            case AggCall("sum", c) =>
-              (sum(col(c.column)) * sign).as(s"sum_${c.column}")
-            case AggCall("min", c) => min(col(c.column)).as(s"min_${c.column}")
-            case AggCall("max", c) => max(col(c.column)).as(s"max_${c.column}")
-          }
+        val cols = stored.map { a =>
+          val c = aggFn(a.fn)(exprColumn(cat, a.expr))
+          (if (refold(a.fn) == "sum") c * sign else c).as(a.alias)
+        }
         r.groupBy(groupCols.map(col): _*).agg(cols.head, cols.tail: _*)
       }
       val old = spark.read.parquet(reg.path)
       val deltas = removed.map(partials(_, -1)).toSeq ++
         added.map(partials(_, 1)).toSeq
-      // counts and sums fold by summation (sum() skips nulls, so an
-      // all-null partial is a no-op — those rows contributed nothing to
-      // the stored value either); min/max fold by min/max
-      val foldCols = (if (calls.isEmpty) Seq(sum(col("cnt")).as("cnt"))
-        else sel.items.collect {
-          case CountStar => sum(col("cnt")).as("cnt")
-          case AggCall("count", c) =>
-            sum(col(s"cnt_${c.column}")).as(s"cnt_${c.column}")
-          case AggCall("sum", c) =>
-            sum(col(s"sum_${c.column}")).as(s"sum_${c.column}")
-          case AggCall("min", c) =>
-            min(col(s"min_${c.column}")).as(s"min_${c.column}")
-          case AggCall("max", c) =>
-            max(col(s"max_${c.column}")).as(s"max_${c.column}")
-        })
+      val foldCols = stored.map(a => aggFn(refold(a.fn))(col(a.alias)).as(a.alias))
       var folded = deltas.foldLeft(old)(_ unionByName _)
         .groupBy(groupCols.map(col): _*)
         .agg(foldCols.head, foldCols.tail: _*)
@@ -4509,9 +4554,9 @@ object HashQL {
         // GLOBAL aggregation (no GROUP BY) keeps its one row — a
         // recompute over zero facts still yields (0, NULL, …)
         if (groupCols.nonEmpty) folded = folded.filter(col("cnt") > 0)
-        calls.filter(_.fn == "sum").foreach { c =>
-          val (s, n) = (s"sum_${c.ref.column}", s"cnt_${c.ref.column}")
-          folded = folded.withColumn(s, when(col(n) > 0, col(s)))
+        calls.filter(_.fn == "sum").foreach { s =>
+          val n = calls.find(c => c.fn == "count" && c.expr == s.expr).get
+          folded = folded.withColumn(s.alias, when(col(n.alias) > 0, col(s.alias)))
         }
       }
       // the old scan keeps reading reg.path while the fold lands in the
@@ -4822,9 +4867,7 @@ object HashQL {
         case "year" => year(a(0)).cast("long")
         case "month" => month(a(0)).cast("long")
         case "day" => dayofmonth(a(0)).cast("long")
-        // n-ary first-non-null / ANSI NULLIF — inside expressions; the
-        // projection-level 2-arg `coalesce(t.a, v)` item keeps its
-        // dedicated Coalesce2 form (auto-alias, FULL-JOIN key merge)
+        // n-ary first-non-null / ANSI NULLIF
         case "coalesce" => coalesce(a: _*)
         case "nullif" => when(a(0) === a(1), lit(null)).otherwise(a(0))
         // null-propagating, like the SQL `||` chain (the DuckDB oracle
@@ -5002,29 +5045,7 @@ object HashQL {
     rewrite(expr = { case a: EAgg => ECol(ColRef("", m(a))) }).expr(e)
 
   private def aggColumnOf(cat: GraftCatalog, a: EAgg, name: String): Column =
-    a.fn match {
-      case "count_star" => count(lit(1)).as(name)
-      case "count" => count(exprColumn(cat, a.arg)).as(name)
-      case "count_distinct" => count_distinct(exprColumn(cat, a.arg)).as(name)
-      case "sum" => sum(exprColumn(cat, a.arg)).as(name)
-      case "sum_distinct" => sum_distinct(exprColumn(cat, a.arg)).as(name)
-      case "avg" => avg(exprColumn(cat, a.arg)).as(name)
-      case "min" => min(exprColumn(cat, a.arg)).as(name)
-      case "max" => max(exprColumn(cat, a.arg)).as(name)
-      // value-sorted deterministic list aggregation (round-15) —
-      // collect_list skips NULLs; empty → NULL like DuckDB's
-      // NULL-filtered array_agg, not []
-      case "array_agg" =>
-        val arr = sort_array(collect_list(exprColumn(cat, a.arg)))
-        when(size(arr) === 0, lit(null)).otherwise(arr).as(name)
-      // the sorted value SET (round-16) — collect_set skips NULLs like
-      // collect_list; same empty → NULL rule. DuckDB mirror:
-      // list_sort(list_distinct(array_agg(x) FILTER (WHERE x IS NOT
-      // NULL)))
-      case "array_agg_distinct" =>
-        val arr = sort_array(collect_set(exprColumn(cat, a.arg)))
-        when(size(arr) === 0, lit(null)).otherwise(arr).as(name)
-    }
+    aggFn(a.fn)(exprColumn(cat, a.arg)).as(name)
   private def predRefs(p: Pred): Set[String] =
     refsOf(_.pred(p), outputSide = true).map(_.column).toSet
 
@@ -5080,24 +5101,17 @@ object HashQL {
     case v => v
   }
 
-  private def coalAlias(c: Coalesce2): String = s"coalesce_${c.ref.column}"
-
   /** The OUTPUT column name a select item produces (the projection's
     * auto-aliases for aggregate/window calls) — ORDER BY ALL expands
     * through this; None for items with no single addressable name
     * (Star, doc paths). */
   private def outputNameOf(it: SelectItem): Option[String] = it match {
     case Field(r) if !r.column.startsWith("~") => Some(r.column)
-    case CountStar => Some("cnt")
-    case AggCall("count", r) => Some(s"cnt_${r.column}")
-    case AggCall("count_distinct", r) => Some(s"cntd_${r.column}")
-    case AggCall(fn, r) => Some(s"${fn}_${r.column}")
     case AggExprItem(_, _, a) => Some(a)
     case ExprItem(_, a) => Some(a)
     case StringAggItem(_, _, a, _, _, _) => Some(a)
     case ArgExtremeItem(_, _, _, a) => Some(a)
     case GroupingItem(_, a) => Some(a)
-    case c: Coalesce2 => Some(coalAlias(c))
     case w: WinCall => Some(winAlias(w))
     case s0: ScalarSubItem => Some(s0.alias)
     case x: ExistsItem => Some(x.alias)
@@ -5235,72 +5249,9 @@ object HashQL {
     * supply their own aggregate columns (expressions over aggregates). */
   private def aggsRaw(cat: GraftCatalog, items: Seq[SelectItem]): Seq[Column] =
     items.collect {
-      case CountStar => count(lit(1)).as("cnt")
-      // null-aware: rows where the column is null (schema-union gaps,
-      // LEFT JOIN extensions) don't count — standard SQL count(col)
-      case AggCall("count", r) => count(col(r.column)).as(s"cnt_${r.column}")
-      // exact distinct count — the partial-agg expand/shuffle plan
-      // q_count_distinct proves; excluded from matview containment by
-      // registration (distinct aggs don't re-aggregate)
-      case AggCall("count_distinct", r) =>
-        count_distinct(col(r.column)).as(s"cntd_${r.column}")
-      case AggCall("sum", r) => sum(col(r.column)).as(s"sum_${r.column}")
-      case AggCall("avg", r) => avg(col(r.column)).as(s"avg_${r.column}")
-      // exact median (round-12): both engines linearly interpolate even
-      // counts, so integer-valued inputs hash-match (DuckDB: median);
-      // non-reaggregable — MatView containment skips it by construction
-      case AggCall("median", r) => median(col(r.column)).as(s"median_${r.column}")
-      case AggCall("min", r) => min(col(r.column)).as(s"min_${r.column}")
-      case AggCall("max", r) => max(col(r.column)).as(s"max_${r.column}")
-      // aggregates over computed expressions (round-9 growth): same
-      // partial-agg shapes, the expression evaluated scan-side inside
-      // whole-stage codegen; the AS alias names the output
-      case AggExprItem("count_star", _, a) => count(lit(1)).as(a)
-      case AggExprItem("count", e, a) => count(exprColumn(cat, e)).as(a)
-      case AggExprItem("count_distinct", e, a) =>
-        count_distinct(exprColumn(cat, e)).as(a)
-      case AggExprItem("sum", e, a) => sum(exprColumn(cat, e)).as(a)
-      case AggExprItem("sum_distinct", e, a) =>
-        sum_distinct(exprColumn(cat, e)).as(a)
-      case AggExprItem("avg", e, a) => avg(exprColumn(cat, e)).as(a)
-      case AggExprItem("median", e, a) => median(exprColumn(cat, e)).as(a)
-      case AggExprItem("min", e, a) => min(exprColumn(cat, e)).as(a)
-      case AggExprItem("max", e, a) => max(exprColumn(cat, e)).as(a)
-      // bitwise aggregates (round-16): native partial-agg'd on both
-      // engines; order-free, so exact anywhere
-      case AggExprItem("bit_and", e, a) => bit_and(exprColumn(cat, e)).as(a)
-      case AggExprItem("bit_or", e, a) => bit_or(exprColumn(cat, e)).as(a)
-      case AggExprItem("bit_xor", e, a) => bit_xor(exprColumn(cat, e)).as(a)
-      // deterministic mode (round-16): sort-collect, then ONE
-      // run-length fold over the sorted array — the longest run wins
-      // and STRICT improvement keeps the earliest (smallest) value on
-      // ties. try_element_at(arr, MaxValue) seeds element-typed NULLs
-      // without knowing the type statically. Same memory profile as
-      // string_agg (per-group collected array).
-      case AggExprItem("mode", e, a) =>
-        val arr = sort_array(collect_list(exprColumn(cat, e)))
-        val nul = try_element_at(arr, lit(Int.MaxValue))
-        val st0 = struct(nul.as("prev"), lit(0L).as("run"),
-          nul.as("best"), lit(0L).as("bestRun"))
-        aggregate(arr, st0, (acc, x) => {
-          val run = when(x <=> acc.getField("prev"),
-            acc.getField("run") + 1).otherwise(lit(1L))
-          val better = run > acc.getField("bestRun")
-          struct(x.as("prev"), run.as("run"),
-            when(better, x).otherwise(acc.getField("best")).as("best"),
-            when(better, run).otherwise(acc.getField("bestRun"))
-              .as("bestRun"))
-        }, acc => acc.getField("best")).as(a)
-      // exact interpolated quantile (round-13): percentile_cont(x, q) —
-      // Spark's exact percentile and DuckDB's quantile_cont share the
-      // rank formula (index q·(n−1), linear interpolation), so
-      // integer-valued inputs hash-match exactly like median (the q=0.5
-      // special case). The static fraction rides the fn name
-      // ("percentile_cont:<q>"), so the item flows through every
-      // rewriter untouched; non-reaggregable like median.
-      case AggExprItem(fn, e, a) if fn.startsWith("percentile_cont:") =>
-        percentile(exprColumn(cat, e),
-          lit(fn.stripPrefix("percentile_cont:").toDouble)).as(a)
+      // aggregates over columns and computed expressions alike: the
+      // expression evaluates scan-side inside whole-stage codegen
+      case AggExprItem(fn, e, a) => aggFn(fn)(exprColumn(cat, e)).as(a)
       // sorted-deterministic string aggregation (round-12): collect,
       // sort, join — partitioning-independent; all-NULL/empty groups
       // yield NULL like DuckDB's string_agg, not ''
@@ -6451,7 +6402,7 @@ object HashQL {
           "order, then the aggregates (the grouped plan's output order)")
     }
     step.items.foreach {
-      case _: Field | CountStar | _: AggCall | _: AggExprItem =>
+      case _: Field | _: AggExprItem =>
       case other => throw new IllegalArgumentException(
         s"a recursive step projects plain columns or aggregates, got: $other")
     }
@@ -6502,8 +6453,7 @@ object HashQL {
       s.joins.nonEmpty || s.froms.nonEmpty || s.groupBy.nonEmpty ||
         s.distinct ||
         s.items.exists {
-          case CountStar | _: AggCall | _: AggExprItem | _: WinCall |
-               _: ScalarSubItem | _: ExistsItem => true
+          case _: AggExprItem | _: WinCall | _: ScalarSubItem | _: ExistsItem => true
           case e: ExprItem => aggNodes(e.expr).nonEmpty
           case _ => false
         } || s.wheres.exists(subqueryPred)
@@ -6855,18 +6805,6 @@ object HashQL {
     // ORDER BY, DISTINCT ON and HAVING/QUALIFY values address OUTPUT
     // columns — an aliased ref there maps to its restored output name
     def outRef(r: ColRef): ColRef = if (aliased(r)) ColRef("", r.column) else r
-    def autoAggName(fn: String, column: String): String = fn match {
-      case "count" => s"cnt_$column"
-      case "count_distinct" => s"cntd_$column"
-      case f => s"${f}_$column"
-    }
-    // aliased plain aggregates keep their natural auto-alias (sum_x, not
-    // sum_<reserved>)
-    def pinAgg(it: SelectItem): SelectItem = it match {
-      case AggCall(fn, r) if aliased(r) =>
-        AggExprItem(fn, ECol(r), autoAggName(fn, r.column))
-      case other => other
-    }
     val itemsBuf = scala.collection.mutable.ArrayBuffer.empty[SelectItem]
     sel.items.foreach {
       // resolveAliases expands Star to per-source items BEFORE the
@@ -6879,24 +6817,13 @@ object HashQL {
       // pure rename — keeps the missing-field row skip)
       case Field(r) if aliased(r) => itemsBuf += ExprItem(ECol(r), r.column)
       // pin the auto-alias BEFORE renaming so wsum_<col> keeps the
-      // user-visible column name. OVER-clause agg deps keep their
-      // auto-alias NAME (the order refs address it).
-      case w: WinCall =>
-        itemsBuf += w.copy(alias = Some(winAlias(w)), aggDeps = w.aggDeps.map {
-          case (n, AggCall(fn, r)) if aliased(r) => (n, AggExprItem(fn, ECol(r), n))
-          case d => d
-        })
-      case c: Coalesce2 if aliased(c.ref) || PartialFunction.cond(c.default) {
-          case r2: ColRef => aliased(r2) } =>
-        val d = c.default match {
-          case r2: ColRef => ECol(r2)
-          case v => ELit(v)
-        }
-        itemsBuf += ExprItem(EFunc("coalesce", Seq(ECol(c.ref), d)), coalAlias(c))
+      // user-visible column name (aggregates and coalesce items carry
+      // theirs from the parser)
+      case w: WinCall => itemsBuf += w.copy(alias = Some(winAlias(w)))
       // grouping's key addresses the RESTORED output name (the grouped
       // branch rewrites aliased keys to it)
       case g0: GroupingItem => itemsBuf += g0.copy(ref = outRef(g0.ref))
-      case other => itemsBuf += pinAgg(other)
+      case other => itemsBuf += other
     }
     // an aliased GROUP BY key addresses the OUTPUT name (the projection
     // restored it); if the key is not projected, auto-project the rename
@@ -6916,8 +6843,6 @@ object HashQL {
     mapSelect(sel.copy(items = itemsBuf.toSeq,
         groupBy = sel.groupBy.map(outRef),
         groupSets = sel.groupSets.map(_.map(outRef)),
-        having = sel.having.map(h => h.copy(agg = h.agg.map(pinAgg))),
-        qualify = sel.qualify.map(h => h.copy(agg = h.agg.map(pinAgg))),
         aliases = Nil),
       rewrite(ref = aliasedRef(aliases), sub = subSel),
       rewrite(ref = outRef, sub = subSel))
@@ -7212,8 +7137,6 @@ object HashQL {
         var winPost: Seq[(String, Column)] = Nil
         val out = groupBy match {
           case gs if gs.nonEmpty =>
-            require(!items.exists(_.isInstanceOf[Coalesce2]),
-              "coalesce cannot mix with GROUP BY in one select")
             require(!items.exists(_.isInstanceOf[ScalarSubItem]),
               "scalar subqueries cannot mix with GROUP BY in one select — " +
                 "stage through a CTE")
@@ -7266,10 +7189,6 @@ object HashQL {
             // HAVING aggregates the select list does NOT produce: same
             // agg pass (one shuffle), auto-aliased, dropped post-filter
             val itemAliases = items.flatMap {
-              case CountStar => Seq("cnt")
-              case AggCall("count", r) => Seq(s"cnt_${r.column}")
-              case AggCall("count_distinct", r) => Seq(s"cntd_${r.column}")
-              case AggCall(fn, r) => Seq(s"${fn}_${r.column}")
               case AggExprItem(_, _, a) => Seq(a)
               case StringAggItem(_, _, a, _, _, _) => Seq(a)
               case ArgExtremeItem(_, _, _, a) => Seq(a)
@@ -7335,7 +7254,7 @@ object HashQL {
               }
             }
             aggWins.foreach {
-              case (_, CountStar | _: AggCall | _: AggExprItem) => ()
+              case (_, _: AggExprItem) => ()
               case (_, other) => throw new IllegalArgumentException(
                 s"unsupported grouped-window dependency: $other")
             }
@@ -7380,8 +7299,6 @@ object HashQL {
             if (docPaths.nonEmpty) {
               require(!items.exists(_.isInstanceOf[WinCall]),
                 "window calls cannot mix with doc-path projection")
-              require(!items.exists(_.isInstanceOf[Coalesce2]),
-                "coalesce cannot mix with doc-path projection")
               require(!items.exists(i => i.isInstanceOf[ExprItem] ||
                 i.isInstanceOf[AggExprItem]),
                 "expressions cannot mix with doc-path projection")
@@ -7457,11 +7374,9 @@ object HashQL {
                     "that bounds the input (LIMIT cannot help: it applies " +
                     "after the window has already sorted every row)")
               }
-              val coals = items.collect { case c: Coalesce2 => c }
               val exprs = items.collect { case e: ExprItem => e }
-              val computedAliases = wins.map(winAlias) ++ coals.map(coalAlias) ++
-                exprs.map(_.alias) ++ scalarSubs.map(_.alias) ++
-                existsItems.map(_.alias)
+              val computedAliases = wins.map(winAlias) ++ exprs.map(_.alias) ++
+                scalarSubs.map(_.alias) ++ existsItems.map(_.alias)
               require(computedAliases.distinct.size == computedAliases.size,
                 s"duplicate computed output aliases: $computedAliases")
               // a computed alias shadowing a projected plain field would
@@ -7480,17 +7395,15 @@ object HashQL {
                   "unexpanded * EXCLUDE/REPLACE") // desugared at entry
                 case Field(ref) => Seq(ref.column)
                 case w: WinCall => Seq(winAlias(w))
-                case c: Coalesce2 => Seq(coalAlias(c))
                 case e: ExprItem => Seq(e.alias)
                 case s0: ScalarSubItem => Seq(s0.alias)
                 case x: ExistsItem => Seq(x.alias)
-                case CountStar | _: AggCall | _: AggExprItem |
-                     _: StringAggItem | _: ArgExtremeItem |
+                case _: AggExprItem | _: StringAggItem | _: ArgExtremeItem |
                      _: GroupingItem => Seq.empty
               }
               val isAggItem = (i: SelectItem) => i match {
-                case CountStar | _: AggCall | _: AggExprItem |
-                     _: StringAggItem | _: ArgExtremeItem => true
+                case _: AggExprItem | _: StringAggItem |
+                     _: ArgExtremeItem => true
                 // an expression over aggregates is itself an aggregate
                 // output (`sum(a) / sum(b) as r`)
                 case e: ExprItem => aggNodes(e.expr).nonEmpty
@@ -7525,15 +7438,9 @@ object HashQL {
                 }
                 val withWins = wins.foldLeft(withWinKeys)((d, w) =>
                   d.withColumn(winAlias(w), winColumn(w)))
-                val withCoals = coals.foldLeft(withWins)((d, c) =>
-                  d.withColumn(coalAlias(c), coalesce(col(c.ref.column),
-                    c.default match {
-                      case r2: ColRef => col(r2.column)
-                      case v => lit(v)
-                    })))
                 // scalar expressions evaluate per-row inside the same
                 // projection — codegen'd, no extra pass
-                val withExprs = exprs.foldLeft(withCoals)((d, e) =>
+                val withExprs = exprs.foldLeft(withWins)((d, e) =>
                   d.withColumn(e.alias, exprColumn(cat, e.expr)))
                 // projection-list scalar subqueries attach their value by
                 // the shared scalarJoin plan (broadcast row or
@@ -7571,7 +7478,7 @@ object HashQL {
                 // exemption as lateral outputs and inline VALUES
                 val latNames = (sel.laterals.map(_._1) ++
                   sel.unnests.map(_._1)).toSet
-                val skipExempt = (wins.map(winAlias) ++ coals.map(coalAlias) ++
+                val skipExempt = (wins.map(winAlias) ++
                   scalarSubs.map(_.alias) ++ existsItems.map(_.alias) ++
                   items.collect {
                     case Field(r) if inlineNames(r.table) ||
@@ -7879,7 +7786,7 @@ object HashQL {
         "through equality (u.k = t.k) or range (u.d < t.d) conjuncts " +
         "between one inner and one outer column")
     require(sub.groupBy.isEmpty && sub.items.nonEmpty && sub.items.forall {
-      case CountStar | _: AggCall | _: AggExprItem => true
+      case _: AggExprItem => true
       // an expression OVER aggregates (round-12 growth — TPC-H Q17's
       // `0.2 * avg(l_quantity)`) is itself a one-row scalar
       case e: ExprItem => aggNodes(e.expr).nonEmpty
@@ -7896,8 +7803,6 @@ object HashQL {
       require(sub.items.length == 1,
         "a correlated scalar subquery projects exactly one aggregate")
       val ve = sub.items.head match {
-        case CountStar => EAgg("count_star", ELit(1L))
-        case AggCall(fn, r) => EAgg(fn, ECol(r))
         case AggExprItem(fn, e, _) => EAgg(fn, e)
         case ExprItem(e, _) => e
         case other => throw new IllegalArgumentException(
@@ -8547,7 +8452,7 @@ object HashQL {
       return lateralTopK(cat, outer, nm, body, registry, bodyTables,
         outerJoin)
     require(body.items.nonEmpty && body.items.forall {
-      case _: AggCall | CountStar | _: AggExprItem | _: StringAggItem |
+      case _: AggExprItem | _: StringAggItem |
            _: ArgExtremeItem => true
       case _ => false
     }, s"a LATERAL subquery ($nm) projects AGGREGATES only, or plain " +
@@ -8609,19 +8514,17 @@ object HashQL {
         }.reduce(_ && _)
         outer.join(lat, cond, "left")
       }
-    val dropped = joined.drop(keyRename.values.toSeq: _*)
-    // ANSI cross-lateral: an aggregate over an empty group still yields
-    // one row — count 0, sum/min/max NULL; the LEFT join's miss gives
-    // the NULLs, counts coalesce here
-    val countCols = body.items.collect {
-      case CountStar => "cnt"
-      case AggCall("count", r) => s"cnt_${r.column}"
-      case AggCall("count_distinct", r) => s"cntd_${r.column}"
-      case AggExprItem(fn, _, a) if fn.startsWith("count") => a
-    }
-    countCols.foldLeft(dropped)((d, c) =>
-      d.withColumn(c, coalesce(col(c), lit(0L))))
+    countsZeroFilled(joined.drop(keyRename.values.toSeq: _*), body)
   }
+
+  /** ANSI cross-lateral: an aggregate over an empty group still yields
+    * one row — count 0, sum/min/max NULL. A lateral's LEFT join misses
+    * give the NULLs; its count outputs coalesce to 0 here. */
+  private def countsZeroFilled(joined: DataFrame, body: Select): DataFrame =
+    body.items.collect {
+      case AggExprItem(fn, _, a) if fn.startsWith("count") => a
+    }.foldLeft(joined)((d, c) =>
+      d.withColumn(c, coalesce(col(c), lit(0L))))
 
   /** RANGE-correlated LATERAL aggregates (round-14 — completing the r13
     * missing #6): `lateral (select <aggs> from u where u.k = t.k and
@@ -8647,7 +8550,7 @@ object HashQL {
         "(u.k = t.k) alongside the range — a pure range correlation " +
         "would plan a nested-loop join at scale")
     body.items.foreach {
-      case CountStar | _: AggCall | _: AggExprItem => ()
+      case _: AggExprItem => ()
       case other => throw new IllegalArgumentException(
         s"a range-correlated LATERAL ($nm) projects count/sum/avg/min/" +
           s"max aggregates only, got: $other")
@@ -8662,7 +8565,6 @@ object HashQL {
     // names plus every column the aggregates read under their own names
     val innerFieldRefs = corrPairs.map(_._1) ++ ranges.map(_._1)
     val aggRefs = body.items.flatMap {
-      case AggCall(_, r) => Seq(r.column)
       case AggExprItem(_, e, _) => exprRefs(e).toSeq
       case _ => Nil
     }.distinct.filterNot(c => innerFieldRefs.exists(_.column == c))
@@ -8688,32 +8590,21 @@ object HashQL {
         keysDf(s"graft_lat_k${keyIdx(o.column)}")) }
     val matched = keysDf.join(innerRows,
       (eqConds ++ rangeConds).reduce(_ && _), "inner")
-    // (3) every aggregate in ONE pass, under the SAME auto-aliases the
+    // (3) every aggregate in ONE pass, under the SAME aliases the
     // ordinary lateral path produces (aggsRaw) — except that references
     // to correlation/range columns were renamed into reserved inner
-    // slots and must read from there. AggExprItem EXPRESSIONS get the
-    // same slot substitution as AggCall arguments (r14 advice: a
-    // `sum(u.d * 2)` whose u.d also serves the range conjunct would
+    // slots and must read from there (r14 advice: a `sum(u.d * 2)` or
+    // `count(u.d)` whose u.d also serves the range conjunct would
     // otherwise reference a name that no longer exists on innerRows).
     def slotRef(r: ColRef): ColRef =
       innerFieldRefs.indexWhere(_.column == r.column) match {
         case -1 => r
         case i => ColRef("", s"graft_lat_i$i")
       }
+    val slots = refsNoSubquery(slotRef,
+      "unsupported predicate inside a range-lateral aggregate")
     val items2 = body.items.map {
-      case AggCall(fn, r) if innerFieldRefs.exists(_.column == r.column) =>
-        // the arg column rode in as a reserved correlation slot — read
-        // it from there but KEEP the user-visible auto-alias
-        val i = innerFieldRefs.indexWhere(_.column == r.column)
-        val auto = fn match {
-          case "count" => s"cnt_${r.column}"
-          case "count_distinct" => s"cntd_${r.column}"
-          case f => s"${f}_${r.column}"
-        }
-        AggExprItem(fn, ECol(ColRef("", s"graft_lat_i$i")), auto)
-      case AggExprItem(fn, e, a) =>
-        AggExprItem(fn, refsNoSubquery(slotRef,
-          "unsupported predicate inside a range-lateral aggregate").expr(e), a)
+      case a: AggExprItem => a.copy(expr = slots.expr(a.expr))
       case it => it
     }
     val aggCols = aggsRaw(cat, items2)
@@ -8732,14 +8623,7 @@ object HashQL {
       outer(outerCols(i)) === agged(s"graft_lat_k$i")).reduce(_ && _)
     val joined = outer.join(agged, back, "left")
       .drop(outerCols.indices.map(i => s"graft_lat_k$i"): _*)
-    val countCols = body.items.collect {
-      case CountStar => "cnt"
-      case AggCall("count", r) => s"cnt_${r.column}"
-      case AggCall("count_distinct", r) => s"cntd_${r.column}"
-      case AggExprItem(fn, _, a) if fn.startsWith("count") => a
-    }
-    countCols.foldLeft(joined)((d, c) =>
-      d.withColumn(c, coalesce(col(c), lit(0L))))
+    countsZeroFilled(joined, body)
   }
 
   /** ROW-RETURNING lateral (round-14 — the r13 queue's #2): `lateral

@@ -206,6 +206,21 @@ class HashQLSpec extends SparkSpec {
       ("dan", 0L)), co.toString)
     intercept[IllegalArgumentException](HashQL.execute(cat,
       "select c.nm, coalesce(o.amt, 0) from c group by c.nm"))
+    // …but over a grouping key it computes per group, in any GROUP BY
+    // spelling (DuckDB gives the same rows)
+    val byKey = HashQL.execute(cat,
+      "select o.who, coalesce(o.who, 'none'), count(*) from c full join o " +
+        "on c.nm = o.who group by o.who").get
+      .select("coalesce_who", "cnt").as[(String, Long)].collect().sorted.toSeq
+    assert(byKey == Seq(("ann", 2L), ("cat", 1L), ("eve", 1L), ("none", 2L)),
+      byKey.toString)
+    Seq("group by coalesce(o.who, 'none')", "group by 1", "group by all")
+      .foreach { g =>
+        val got = HashQL.execute(cat, "select coalesce(o.who, 'none'), " +
+          s"count(*) from c full join o on c.nm = o.who $g").get
+          .as[(String, Long)].collect().sorted.toSeq
+        assert(got == byKey, s"$g: $got")
+      }
     // coalesce(a.k, b.k) merges the two sides of a FULL JOIN into one
     // non-null key column
     val merged = HashQL.execute(cat,
@@ -707,6 +722,20 @@ class HashQLSpec extends SparkSpec {
       assert(ratio.select("g", "mean", "n").as[(String, Double, Long)]
         .collect().toSet == Set(("x", 15.0, 2L), ("y", 9.0, 1L)))
     } finally graft.matview.MatView.drop(spark, name)
+    // a view that spells out the auto-aliases is the same view, and the
+    // verbatim query routes to it (DuckDB gives the same rows)
+    val spelled = HashQL.materializeAggView(cat,
+      "create agg view as select t.g, count(*) as cnt, sum(t.v) as sum_v, " +
+        "coalesce(t.g, 'none') as coalesce_g from t group by t.g",
+      s"$dir/spelled", Some(reg))
+    try {
+      val q = HashQL.execute(cat,
+        "select t.g, count(*), sum(t.v) from t group by t.g", Some(reg)).get
+      assert(q.queryExecution.executedPlan.toString.contains(s"$dir/spelled"),
+        q.queryExecution.executedPlan.toString)
+      assert(q.as[(String, Long, Long)].collect().toSet ==
+        Set(("x", 2L, 30L), ("y", 1L, 9L)))
+    } finally graft.matview.MatView.drop(spark, spelled)
   }
 
   test("DML DELETE delta-folds count/sum agg views; min/max views invalidate") {
@@ -1721,6 +1750,16 @@ class HashQLSpec extends SparkSpec {
         "where child.k = par.k ) as n from par").get
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(c == Map(1L -> 2L, 2L -> 1L, 3L -> 0L))
+    // any aggregate of the inventory correlates: median, and mode with
+    // its smallest-value tiebreak (DuckDB: median, and the count-desc/
+    // value-asc pick)
+    val md = HashQL.execute(cat,
+      "select par.k, ( select median(child.v) from child " +
+        "where child.k = par.k ) as md, ( select mode(child.v) as mo " +
+        "from child where child.k = par.k ) as mo from par").get
+      .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(md == Map(1L -> (Some(6.0), Some(5L)), 2L -> (Some(50.0), Some(50L)),
+      3L -> (None, None)), md.toString)
     // uncorrelated: one broadcast value on every row
     val u = HashQL.execute(cat,
       "select par.k, ( select sum(child.v) from child ) as s from par").get
@@ -2897,6 +2936,12 @@ class HashQLSpec extends SparkSpec {
     // …and ANY over the empty per-key set is FALSE
     assert(vs("select q13.v from q13 where q13.v >= any " +
       "(select qs.x from qs where qs.x = q13.v)") == Seq(5L))
+    // a 2-arg coalesce is a computed column here too (DuckDB: the same
+    // rows)
+    assert(vs("select q13.v from q13 where q13.v > all " +
+      "(select coalesce(qs.x, 0) from qs where qs.x = q13.v)") == Seq(1L, 10L))
+    assert(vs("select q13.v from q13 where q13.v > all " +
+      "(select coalesce(qs.x, 0) from qs)") == Seq(10L))
     // PURE range correlation (round-14: non-eq correlation now rewrites
     // through EXISTS, which still demands an equality key alongside)
     val e = intercept[IllegalArgumentException](HashQL.execute(cat,
@@ -3892,6 +3937,15 @@ class HashQLSpec extends SparkSpec {
         "limit 1 ) x order by cust14.ck").get
       .as[(Long, Long)].collect().toSeq
     assert(top1 == Seq((1L, 11L), (2L, 20L)))
+    // the 2-arg coalesce projects like any computed column (DuckDB: the
+    // same rows)
+    val coal = HashQL.execute(cat,
+      "select cust14.ck, x.coalesce_amt from cust14, " +
+        "lateral ( select coalesce(ord14.amt, 0) from ord14 " +
+        "where ord14.ck = cust14.ck order by ord14.amt desc, ord14.ok " +
+        "limit 1 ) x order by cust14.ck").get
+      .as[(Long, Long)].collect().toSeq
+    assert(coal == Seq((1L, 300L), (2L, 50L)))
     // limit 2 fans out: up to two rows per outer row
     val top2 = HashQL.execute(cat,
       "select cust14.ck, x.ok from cust14, " +
@@ -5083,5 +5137,93 @@ class HashQLSpec extends SparkSpec {
       assert(HashQL.execute(cat, q, Some(reg)).get
         .as[(String, Long, Option[Long])].collect().toSet == rows)
     } finally graft.matview.MatView.drop(spark, name)
+  }
+
+  test("aggregate items keep their output names and values in every position") {
+    // rows cross-checked against DuckDB 1.0 over the same data
+    val cat = new GraftCatalog(spark)
+    HashQL.execute(cat, "insert into pa (g, v, k) values ('a', 1, 1), " +
+      "('a', 2, 1), ('a', 2, 2), ('b', 5, 2), ('c', 7, 4)")
+    HashQL.execute(cat, "insert into pa (g, k) values ('b', 3)") // v null
+    HashQL.execute(cat,
+      "insert into pu (uk, d) values (1, 10), (1, 20), (2, 5), (4, 1), (4, 9)")
+    HashQL.execute(cat, "insert into fa (ka) values (1), (2)")
+    HashQL.execute(cat, "insert into fb (kb) values (2), (3)")
+    def out(sql: String): (Seq[String], Seq[Seq[Any]]) = {
+      val df = HashQL.execute(cat, sql).get
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSeq)
+    }
+    def sorted(sql: String): (Seq[String], Seq[Seq[Any]]) = {
+      val (cs, rs) = out(sql)
+      (cs, rs.sortBy(_.map(String.valueOf).mkString("|")))
+    }
+    val calls = Seq("count(*)", "count(pa.v)", "count(distinct pa.v)",
+      "sum(pa.v)", "avg(pa.v)", "min(pa.v)", "max(pa.v)", "median(pa.v)")
+    val auto = Seq("cnt", "cnt_v", "cntd_v", "sum_v", "avg_v", "min_v",
+      "max_v", "median_v")
+    val aliased = calls.zipWithIndex.map { case (c, i) => s"$c as o$i" }
+    val byGroup = Seq(
+      Seq("a", 3L, 3L, 2L, 5L, 5.0 / 3, 1L, 2L, 2.0),
+      Seq("b", 2L, 1L, 1L, 5L, 5.0, 5L, 5L, 5.0),
+      Seq("c", 1L, 1L, 1L, 7L, 7.0, 7L, 7L, 7.0))
+    val global = Seq(Seq(6L, 5L, 4L, 17L, 3.4, 1L, 7L, 2.0))
+    assert(sorted(s"select pa.g, ${calls.mkString(", ")} from pa group by pa.g")
+      == (("g" +: auto), byGroup))
+    assert(sorted(s"select pa.g, ${aliased.mkString(", ")} from pa group by pa.g")
+      == (("g" +: auto.indices.map(i => s"o$i")), byGroup))
+    assert(out(s"select ${calls.mkString(", ")} from pa") == ((auto, global)))
+    assert(out(s"select ${aliased.mkString(", ")} from pa")
+      == ((auto.indices.map(i => s"o$i"), global)))
+    // the same calls under a table alias keep the bare column's names
+    assert(sorted(s"select a.g, ${calls.map(_.replace("pa.", "a.")).mkString(", ")} " +
+      "from pa a group by a.g") == (("g" +: auto), byGroup))
+    assert(sorted("select pa.g, count(*) filter (where pa.v > 1) as big " +
+      "from pa group by pa.g") == ((Seq("g", "big"),
+        Seq(Seq("a", 2L), Seq("b", 1L), Seq("c", 1L)))))
+    // HAVING over aggregates the select does not project
+    assert(sorted("select pa.g, count(*) from pa group by pa.g " +
+      "having sum(pa.v) > 5") == ((Seq("g", "cnt"), Seq(Seq("c", 1L)))))
+    assert(sorted("select pa.g, count(*) from pa group by pa.g " +
+      "having count(pa.v) > 1") == ((Seq("g", "cnt"), Seq(Seq("a", 3L)))))
+    assert(sorted("select a.g, count(*), sum(a.v), count(distinct a.v) " +
+      "from pa a group by a.g having max(a.v) >= 5") ==
+      ((Seq("g", "cnt", "sum_v", "cntd_v"),
+        Seq(Seq("b", 2L, 5L, 1L), Seq("c", 1L, 7L, 1L)))))
+    // aggregates spelled inside OVER, projected and not
+    assert(sorted("select pa.g, sum(pa.v), rank() over (order by sum(pa.v) " +
+      "desc) from pa group by pa.g") == ((Seq("g", "sum_v", "rnk"),
+        Seq(Seq("a", 5L, 2), Seq("b", 5L, 2), Seq("c", 7L, 1)))))
+    assert(sorted("select pa.g, rank() over (order by max(pa.v) desc) " +
+      "from pa group by pa.g") == ((Seq("g", "rnk"),
+        Seq(Seq("a", 3), Seq("b", 2), Seq("c", 1)))))
+    // correlated scalar and LATERAL aggregates; lateral counts zero-fill
+    assert(sorted("select pa.g, pa.k, (select count(*) from pu " +
+      "where pu.uk = pa.k) as n from pa") == ((Seq("g", "k", "n"),
+        Seq(Seq("a", 1L, 2L), Seq("a", 1L, 2L), Seq("a", 2L, 1L),
+          Seq("b", 2L, 1L), Seq("b", 3L, 0L), Seq("c", 4L, 2L)))))
+    assert(sorted("select pa.g, pa.k, x.cnt, x.sum_d, x.cnt_d from pa, " +
+      "lateral (select count(*), sum(pu.d), count(pu.d) from pu " +
+      "where pu.uk = pa.k) x") == ((Seq("g", "k", "cnt", "sum_d", "cnt_d"),
+        Seq(Seq("a", 1L, 2L, 30L, 2L), Seq("a", 1L, 2L, 30L, 2L),
+          Seq("a", 2L, 1L, 5L, 1L), Seq("b", 2L, 1L, 5L, 1L),
+          Seq("b", 3L, 0L, null, 0L), Seq("c", 4L, 2L, 10L, 2L)))))
+    // range lateral: count(pu.d) reads the column the range compares
+    assert(sorted("select pa.g, pa.k, x.cnt_d, x.sum_d, x.cnt from pa, " +
+      "lateral (select count(pu.d), sum(pu.d), count(*) from pu " +
+      "where pu.uk = pa.k and pu.d > pa.v) x") ==
+      ((Seq("g", "k", "cnt_d", "sum_d", "cnt"),
+        Seq(Seq("a", 1L, 2L, 30L, 2L), Seq("a", 1L, 2L, 30L, 2L),
+          Seq("a", 2L, 1L, 5L, 1L), Seq("b", 2L, 0L, null, 0L),
+          Seq("b", 3L, 0L, null, 0L), Seq("c", 4L, 1L, 9L, 1L)))))
+    // the 2-arg projection coalesce: a literal default, a FULL JOIN key
+    assert(sorted("select pa.g, coalesce(pa.v, 0) from pa") ==
+      ((Seq("g", "coalesce_v"), Seq(Seq("a", 1L), Seq("a", 2L), Seq("a", 2L),
+        Seq("b", 0L), Seq("b", 5L), Seq("c", 7L)))))
+    assert(sorted("select coalesce(fa.ka, fb.kb) from fa full join fb " +
+      "on fa.ka = fb.kb") == ((Seq("coalesce_ka"), Seq(Seq(1L), Seq(2L), Seq(3L)))))
+    // ORDER BY ALL expands through the auto-aliases
+    assert(out("select pa.g, count(*), sum(pa.v) from pa group by pa.g " +
+      "order by all") == ((Seq("g", "cnt", "sum_v"),
+        Seq(Seq("a", 3L, 5L), Seq("b", 2L, 5L), Seq("c", 1L, 7L)))))
   }
 }

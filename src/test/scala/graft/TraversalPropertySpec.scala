@@ -116,15 +116,20 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
       Gen.const(Star),
       Gen.zip(e, Gen.const("c")).map { case (x, c) => StarMod(Nil, Seq(x -> c)) },
       refGen.map(Field(_)),
-      Gen.const(CountStar),
-      refGen.map(AggCall("sum", _)),
+      // the parser's two plain-aggregate forms: count(*) and an
+      // auto-aliased call over a column
+      Gen.const(AggExprItem("count_star", ELit(1L), "cnt")),
+      refGen.map(r => AggExprItem("sum", ECol(r), s"sum_${r.column}")),
       for {
         arg <- Gen.option(refGen); part <- Gen.listOfN(1, refGen)
         ord <- refGen; tb <- Gen.option(refGen); dep <- refGen
       } yield WinCall("first_value", arg, part, Seq(ord -> false),
-        aggDeps = Seq("graft_w1" -> AggCall("sum", dep)), tiebreak = tb),
-      Gen.zip(refGen, Gen.oneOf[Any](0L, ColRef("u", "b"))).map {
-        case (r, d) => Coalesce2(r, d) },
+        aggDeps = Seq(s"sum_${dep.column}" ->
+          AggExprItem("sum", ECol(dep), s"sum_${dep.column}")), tiebreak = tb),
+      // the 2-arg projection coalesce: a literal or column default
+      Gen.zip(refGen, Gen.oneOf[Expr](ELit(0L), ECol(ColRef("u", "b")))).map {
+        case (r, d) => ExprItem(EFunc("coalesce", Seq(ECol(r), d)),
+          s"coalesce_${r.column}") },
       subGen.map(ScalarSubItem(_, "s")),
       subGen.map(ExistsItem(_, "f")),
       e.map(ExprItem(_, "x")),
@@ -141,7 +146,8 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
     wheres <- Gen.listOfN(2, predGen(1))
     gb <- Gen.listOfN(1, refGen)
     hv <- Gen.oneOf[Any](5L, ECol(ColRef("", "cnt")))
-    hagg <- refGen
+    hagg <- Gen.oneOf(refGen.map(r => AggExprItem("sum", ECol(r), s"sum_${r.column}")),
+      Gen.const(AggExprItem("count_star", ELit(1L), "cnt")))
     ob <- exprGen(1)
     don <- refGen
     lat <- subGen
@@ -150,7 +156,7 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
   } yield Select(items, "t",
     Seq(JoinClause("u", jl, jr, extra = Seq((xl, "<", xr), (xl, "=", 3L)))),
     wheres, gb,
-    having = Seq(HavingPred("cnt", ">", hv, Some(AggCall("sum", hagg))),
+    having = Seq(HavingPred(hagg.alias, ">", hv, Some(hagg)),
       HavingPred("cnt", ">", SubVal(sv))),
     orderBy = Seq((ob, false, None)),
     qualify = Seq(HavingPred("rn", "<=", ECol(ColRef("", "n")))),
