@@ -1,14 +1,14 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{ilike, like, lit, rlike}
 
-/** The ONE 5-way comparison dispatch shared by every predicate surface
-  * (HashQL WHERE and HAVING, Cypher WHERE). Callers coerce the column
-  * first — that is the only place the surfaces legitimately differ
-  * (dialect WHERE casts to long on a numeric literal, Cypher try_casts so
-  * junk attrs drop instead of throwing, HAVING compares output columns
-  * as-is) — so the dialect's comparison semantics live here once. */
+/** The ONE comparison dispatch shared by every predicate surface
+  * (HashQL WHERE and HAVING, Cypher WHERE). `v` is a literal or a
+  * Column. The surfaces differ only in what they compare: the dialect
+  * WHERE compares its operands as typed (Catalyst's ANSI coercion
+  * decides), Cypher try_casts so junk attrs drop instead of throwing,
+  * and HAVING compares output columns as-is. */
 object Compare {
   def cmp(c: Column, op: String, v: Any): Column = op match {
     case "=" => c === lit(v)
@@ -19,6 +19,11 @@ object Compare {
     // three-valued inequality (round-13): NULL input → NULL → row
     // dropped, exactly like every comparison above
     case "<>" => !(c === lit(v))
+    // null-safe equality: two NULLs are equal, never UNKNOWN
+    case "<=>" => c <=> lit(v)
+    case "like" => like(c, lit(v))
+    case "ilike" => ilike(c, lit(v))
+    case "rlike" => rlike(c, lit(v))
     case other => throw new IllegalArgumentException(s"unsupported comparison op: $other")
   }
 }

@@ -177,6 +177,10 @@ final class GraftCatalog(val spark: SparkSession) {
     * other row unions by name — new fields widen the schema, mismatched
     * types coerce as Catalyst's union does — and the union folds back. */
   def insert(name: String, values: Seq[(String, Any)]): DataFrame = {
+    // before anything commits: a second `id` field would register the
+    // table with a duplicate column that every later read rejects
+    require(!values.exists(_._1 == "id"),
+      s"INSERT INTO $name: the dialect synthesizes id — don't supply one")
     val id = counters.getOrElse(name, 0L) + 1
     counters += name -> id
     val fields = ("id" -> (id: Any)) +: values

@@ -13,7 +13,8 @@ import graft.sql.HashQL
   * Catalyst execution are all under test at once.
   *
   * Domain is kept in small non-negative longs (values/literals ≤ 9,
-  * tree depth ≤ 3) so ANSI overflow can never fire on either path, and
+  * tree depth ≤ 3) so ANSI overflow can never fire on either path (the
+  * comparison property below widens to doubles with NULLs), and
   * division is excluded (its double typing belongs to the oracle-checked
   * driver queries, not a long-valued differential test). CASE condition
   * operands are leaves: a '(' opening a WHEN condition is predicate
@@ -101,6 +102,59 @@ class ExprPropertySpec extends SparkSpec with PropertySampling {
             }
           } => (i + 1).toLong }.toSet
       assert(got == expected, s"seed $seed diverged on: $ls $op $rs")
+    }
+  }
+
+  // ---- comparisons over a double column with NULLs ----
+  // Fractional values and NULLs beside integer literals: each generated
+  // comparison is spelled with a bare head (`tx.x op …`) and a computed
+  // one (`tx.x + 0 op …`), and both must keep the interpreter's rows —
+  // SQL three-valued logic, the integer literal compared as a double
+  // (DuckDB's answer), never the column truncated to the literal's type.
+  private type Keep = Option[Double] => Boolean
+
+  private val cmpLitGen: Gen[Double] = Gen.oneOf(-1.0, 0.0, 1.0, 2.0, 3.0, 1.5)
+  private def sqlLit(d: Double): String =
+    if (d.isWhole) d.toLong.toString else d.toString
+  private val notGen: Gen[Boolean] = Gen.oneOf(true, false)
+  private def not(n: Boolean): String = if (n) "not " else ""
+
+  private val cmpFormGen: Gen[(String, Keep)] = Gen.oneOf(
+    for {
+      op <- Gen.oneOf("=", "<>", "<", ">", "<=", ">=")
+      v <- cmpLitGen
+    } yield (s"$op ${sqlLit(v)}", (x: Option[Double]) => x.exists(a => op match {
+      case "=" => a == v; case "<>" => a != v; case "<" => a < v
+      case ">" => a > v; case "<=" => a <= v; case ">=" => a >= v
+    })),
+    for { lo <- cmpLitGen; hi <- cmpLitGen; n <- notGen } yield (
+      s"${not(n)}between ${sqlLit(lo)} and ${sqlLit(hi)}",
+      (x: Option[Double]) => x.exists(a => (a >= lo && a <= hi) != n)),
+    for { vs <- Gen.listOfN(2, cmpLitGen); n <- notGen } yield (
+      s"${not(n)}in (${vs.map(sqlLit).mkString(", ")})",
+      (x: Option[Double]) => x.exists(a => vs.contains(a) != n)),
+    for { v <- cmpLitGen; n <- notGen } yield (
+      s"is ${not(n)}distinct from ${sqlLit(v)}",
+      (x: Option[Double]) => x.contains(v) == n),
+    notGen.map(n => (s"is ${not(n)}null", (x: Option[Double]) => x.isEmpty != n)))
+
+  test("random comparisons over a double column with NULLs: bare head ≡ " +
+    "computed head ≡ interpreter") {
+    val cat = new GraftCatalog(spark)
+    val xs = Seq(Some(1.5), Some(1.0), Some(2.7), None, Some(0.5), Some(-1.0),
+      Some(2.0), None, Some(3.0), Some(-0.5))
+    xs.foreach(x => HashQL.execute(cat,
+      s"insert into tx (x) values (${x.fold("null")(_.toString)})"))
+    (1 to 40).foreach { seed =>
+      val (form, keep) = sample(cmpFormGen, seed)
+      val expected = xs.zipWithIndex.collect {
+        case (x, i) if keep(x) => (i + 1).toLong }.toSet
+      Seq("tx.x", "tx.x + 0").foreach { head =>
+        val got = HashQL.execute(cat,
+          s"select tx.id from tx where $head $form").get
+          .as[Long].collect().toSet
+        assert(got == expected, s"seed $seed diverged on: $head $form")
+      }
     }
   }
 

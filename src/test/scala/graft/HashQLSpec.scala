@@ -725,9 +725,19 @@ class HashQLSpec extends SparkSpec {
     // a view that spells out the auto-aliases is the same view, and the
     // verbatim query routes to it (DuckDB gives the same rows)
     val spelled = HashQL.materializeAggView(cat,
-      "create agg view as select t.g, count(*) as cnt, sum(t.v) as sum_v, " +
-        "coalesce(t.g, 'none') as coalesce_g from t group by t.g",
+      "create agg view as select t.g, count(*) as cnt, sum(t.v) as sum_v " +
+        "from t group by t.g",
       s"$dir/spelled", Some(reg))
+    // the summary stores keys and plain aggregates only: a projected
+    // coalesce or window would be silently missing from it, so the
+    // definition rejects, naming the item
+    Seq("coalesce(t.g, 'none')" -> "coalesce_g",
+      "rank() over (order by count(*))" -> "rnk").foreach { case (item, nm) =>
+      val e = intercept[IllegalArgumentException](HashQL.materializeAggView(
+        cat, s"create agg view as select t.g, count(*), $item from t " +
+          "group by t.g", s"$dir/rejected", Some(reg)))
+      assert(e.getMessage.contains(s"does not store $nm"), e.getMessage)
+    }
     try {
       val q = HashQL.execute(cat,
         "select t.g, count(*), sum(t.v) from t group by t.g", Some(reg)).get
@@ -1248,9 +1258,11 @@ class HashQLSpec extends SparkSpec {
     val exprIn = HashQL.execute(cat,
       "select e.a from e where e.a + 1 in (2, 3)").get
     assert(exprIn.as[Long].collect().nonEmpty)
-    // a computed head with a genuinely unsupported op still rejects
+    // a computed head with a genuinely unsupported op still rejects (FTS
+    // `~` keys on a plain column; LIKE joined the grammar with the one
+    // comparison node)
     val e1 = intercept[IllegalArgumentException](
-      HashQL.execute(cat, "select e.a from e where e.a + 1 like 'x'"))
+      HashQL.execute(cat, "select e.a from e where e.a + 1 ~ 'x'"))
     assert(e1.getMessage.contains("computed expression compares with"), e1.getMessage)
   }
 
@@ -5225,5 +5237,102 @@ class HashQLSpec extends SparkSpec {
     assert(out("select pa.g, count(*), sum(pa.v) from pa group by pa.g " +
       "order by all") == ((Seq("g", "cnt", "sum_v"),
         Seq(Seq("a", 3L, 5L), Seq("b", 2L, 5L), Seq("c", 1L, 7L)))))
+  }
+
+  /** `d` holds x = 1.5, 1.0, 2.7 and NULL (ids 1-4), with a string `s`
+    * and a long `k` beside it. Expected rows are DuckDB 1.0's. */
+  private def cmpCat(): GraftCatalog = {
+    val cat = new GraftCatalog(spark)
+    HashQL.execute(cat, "insert into d (x, s, k) values (1.5, 'apple', 2), " +
+      "(1.0, 'Avocado', 2), (2.7, 'berry', 4), (null, null, 5)")
+    cat
+  }
+  private def ids(cat: GraftCatalog, where: String): Seq[Long] =
+    HashQL.execute(cat, s"select d.id from d where $where").get
+      .as[Long].collect().sorted.toSeq
+
+  test("one comparison: an integer literal meets a double column as a double, " +
+    "bare or computed head") {
+    val cat = cmpCat()
+    assert(ids(cat, "d.x = 1") == Seq(2L))
+    assert(ids(cat, "d.x + 0 = 1") == Seq(2L))
+    assert(ids(cat, "d.x > 1") == Seq(1L, 3L))
+    assert(ids(cat, "d.x + 0 > 1") == Seq(1L, 3L))
+    assert(ids(cat, "d.x between 1 and 2") == Seq(1L, 2L))
+    assert(ids(cat, "d.x in (1, 2.7)") == Seq(2L, 3L))
+    assert(ids(cat, "d.x not in (1, 2.7)") == Seq(1L))
+  }
+
+  test("one comparison: a doc-path leaf compares the same way for every op") {
+    val db = new HashDb(spark)
+    db.saveDocument("people", 1, """{"hobbies": [{"lvl": 1.5}]}""")
+    db.saveDocument("people", 2, """{"hobbies": [{"lvl": 1.0}, {"lvl": 0.5}]}""")
+    db.saveDocument("people", 3, """{"hobbies": [{"lvl": 0.5}, {"lvl": 2.0}]}""")
+    def docIds(where: String): Seq[Long] =
+      db.sql(s"select people.id from people where $where").get
+        .as[Long].collect().sorted.toSeq
+    assert(docIds("people.~hobbies[]~lvl = 1") == Seq(2L))
+    assert(docIds("people.~hobbies[]~lvl > 1") == Seq(1L, 3L))
+    assert(docIds("people.~hobbies[]~lvl is not distinct from 1") == Seq(2L))
+  }
+
+  test("one comparison: list_filter bodies parse the WHERE grammar") {
+    val cat = new GraftCatalog(spark)
+    HashQL.execute(cat, "insert into lf (s) values ('ab-b-abc')")
+    def filtered(body: String): Seq[String] = {
+      val r = HashQL.execute(cat,
+        s"select list_filter(split(lf.s, '-'), x -> $body) as f from lf")
+        .get.collect().head
+      r.getSeq[String](0)
+    }
+    // AND binds tighter than OR, as in WHERE
+    assert(filtered("length(x) = 1 or length(x) = 2 and length(x) = 3") ==
+      Seq("b"))
+    assert(filtered("x like 'a%'") == Seq("ab", "abc"))
+    assert(filtered("x in ('b', 'abc')") == Seq("b", "abc"))
+    assert(filtered("nullif(x, 'b') is not null") == Seq("ab", "abc"))
+    assert(filtered("contains(x, 'c')") == Seq("abc"))
+  }
+
+  test("one comparison: computed heads take LIKE / IS NULL / IS DISTINCT " +
+    "FROM, ref heads an arithmetic right-hand side") {
+    val cat = cmpCat()
+    assert(ids(cat, "upper(d.s) like 'A%'") == Seq(1L, 2L))
+    assert(ids(cat, "d.x + 0 is null") == Seq(4L))
+    assert(ids(cat, "d.x * 2 is not distinct from 3") == Seq(1L))
+    assert(ids(cat, "d.k = d.id + 1") == Seq(1L, 3L, 4L))
+    assert(ids(cat, "d.k in (d.id + 1, 0)") == Seq(1L, 3L, 4L))
+    assert(ids(cat, "d.k is not distinct from d.id + 1") == Seq(1L, 3L, 4L))
+    assert(ids(cat, "d.k between d.id and d.id + 1") == Seq(1L, 2L, 3L, 4L))
+    assert(ids(cat, "d.x = d.x + 0") == Seq(1L, 2L, 3L))
+  }
+
+  test("INSERT rejects a caller-supplied id before anything commits") {
+    val cat = new GraftCatalog(spark)
+    val e = intercept[IllegalArgumentException](
+      HashQL.execute(cat, "insert into t (id, v) values (0, 0)"))
+    assert(e.getMessage.contains("id"), e.getMessage)
+    assert(!cat.names.contains("t"))
+    HashQL.execute(cat, "insert into u (v) values (1)")
+    intercept[IllegalArgumentException](
+      HashQL.execute(cat, "insert into u (v, id) values (2, 7)"))
+    HashQL.execute(cat, "insert into u (v) values (3)")
+    assert(cat.table("u").columns.toSeq == Seq("id", "v"))
+    assert(HashQL.execute(cat, "select * from u").get.as[(Long, Long)]
+      .collect().sorted.toSeq == Seq((1L, 1L), (2L, 3L)))
+  }
+
+  test("grouped select: computed outputs keep their select-list slot") {
+    val cat = new GraftCatalog(spark)
+    HashQL.execute(cat,
+      "insert into pa (g, v) values ('a', 1), ('a', 2), ('b', 5)")
+    def cols(q: String): Seq[String] = HashQL.execute(cat, q).get.columns.toSeq
+    // DuckDB 1.0 names the same columns in the same order
+    assert(cols("select pa.g, coalesce(pa.g, 'x'), count(*) from pa " +
+      "group by pa.g") == Seq("g", "coalesce_g", "cnt"))
+    assert(cols("select pa.g, sum(pa.v) / count(*) as m, count(*) from pa " +
+      "group by pa.g") == Seq("g", "m", "cnt"))
+    assert(cols("select pa.g, pa.g || 'x' as gx, sum(pa.v) from pa " +
+      "group by pa.g") == Seq("g", "gx", "sum_v"))
   }
 }

@@ -43,13 +43,17 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
   } yield ColRef(t, c)
   private val litGen: Gen[Any] = Gen.oneOf[Any](1L, 2.5, "s", null)
   private val opGen: Gen[String] = Gen.oneOf("<", ">", "<=", ">=", "=", "<>")
+  private val cmpOpGen: Gen[String] = Gen.oneOf(Cmp.ops.toSeq)
+  private val docRefGen: Gen[ColRef] =
+    Gen.oneOf("t", "u").map(ColRef(_, "~hobbies[]~name"))
 
   /** A subquery body whose own refs the traversal must not reach. */
   private val subGen: Gen[Select] = for {
     r <- refGen
     v <- litGen
   } yield Select(Seq(Field(ColRef("inner", "v"))), "inner", Nil,
-    Seq(Eq(ColRef("inner", "k"), v), EqCol(ColRef("inner", "k"), r)), Nil)
+    Seq(Cmp(ECol(ColRef("inner", "k")), "=", ELit(v)),
+      Cmp(ECol(ColRef("inner", "k")), "=", ECol(r))), Nil)
 
   private def exprGen(depth: Int): Gen[Expr] = {
     val leaf: Gen[Expr] = Gen.oneOf(
@@ -76,24 +80,20 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
 
   private def predGen(depth: Int): Gen[Pred] = {
     val leaf: Gen[Pred] = Gen.oneOf(
-      Gen.zip(refGen, litGen).map { case (r, v) => Eq(r, v) },
-      Gen.zip(refGen, opGen, litGen).map { case (r, op, v) => Cmp(r, op, v) },
+      // the one comparison over a plain ref, a doc-path and a ref pair
+      Gen.zip(refGen, cmpOpGen, litGen).map {
+        case (r, op, v) => Cmp(ECol(r), op, ELit(v)) },
+      Gen.zip(docRefGen, cmpOpGen, litGen).map {
+        case (r, op, v) => Cmp(ECol(r), op, ELit(v)) },
       refGen.map(FtsMatch(_, "cat | dog")),
-      Gen.zip(refGen, Gen.listOfN(2, litGen)).map { case (r, vs) => InList(r, vs) },
       Gen.zip(refGen, subGen).map { case (r, s) => InSelect(r, s) },
       Gen.zip(Gen.listOfN(2, refGen), subGen).map { case (rs, s) => InSelectTuple(rs, s) },
-      Gen.zip(refGen, refGen).map { case (a, b) => EqCol(a, b) },
+      Gen.zip(refGen, refGen).map { case (a, b) => Cmp(ECol(a), "=", ECol(b)) },
       subGen.map(ExistsSelect(_)),
       Gen.zip(refGen, opGen, subGen).map { case (r, op, s) => CmpSelect(r, op, s) },
       Gen.zip(refGen, opGen, Gen.oneOf("any", "all"), subGen).map {
         case (r, op, q, s) => QuantCmp(r, op, q, s) },
       Gen.zip(refGen, opGen, refGen).map { case (i, op, o) => CmpNotTrue(i, op, o) },
-      refGen.map(Like(_, "a%")),
-      refGen.map(Rlike(_, "^a")),
-      refGen.map(Ilike(_, "A%")),
-      Gen.zip(refGen, Gen.oneOf(true, false)).map { case (r, n) => IsNullP(r, n) },
-      Gen.zip(refGen, Gen.either(refGen, litGen), Gen.oneOf(true, false)).map {
-        case (r, rhs, n) => DistinctFrom(r, rhs, n) },
       refGen.map(SampleBucket(_, 100)),
       Gen.oneOf(true, false).map(FlagPred("graft_flag_1", _)))
     if (depth == 0) leaf
@@ -105,8 +105,9 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
         Gen.listOfN(2, sub).map(Or(_)),
         sub.map(Not(_)),
         Gen.zip(e, subGen).map { case (x, s) => InSelectExpr(x, s) },
-        e.map(BoolFuncPred(_)),
-        Gen.zip(e, opGen, e).map { case (l, op, r) => ExprCmp(l, op, r) })
+        e.map(BoolExpr(_)),
+        // the one comparison over a computed head
+        Gen.zip(e, cmpOpGen, e).map { case (l, op, r) => Cmp(l, op, r) })
     }
   }
 
