@@ -7083,17 +7083,8 @@ object HashQL {
             val aggd = grouped.agg(aggAll.head, aggAll.tail: _*)
             postExprs.foreach(e => require(!aggd.columns.contains(e.alias),
               s"computed alias ${e.alias} collides with an output column"))
-            val post = postExprs.foldLeft(aggd)((d, e) =>
+            postExprs.foldLeft(aggd)((d, e) =>
               d.withColumn(e.alias, exprColumn(cat, substAggs(e.expr, aggMap))))
-            // the outputs the select list names come out in its order
-            // (the grouping keys lead, internal extras keep their slots)
-            val listed = items.flatMap(outputNameOf).distinct
-              .filter(n => post.columns.contains(n) && !gkSet(n))
-            val inOrder = listed.iterator
-            val order = post.columns.toSeq.map(c =>
-              if (listed.contains(c)) inOrder.next() else c)
-            (if (order == post.columns.toSeq) post
-             else post.select(order.map(col): _*))
               .drop(aggMap.values.toSeq: _*)
               // reserved graft_gk keys carry the BARE `group by <expr>`
               // spelling (no user-visible name) — stripped from the
@@ -7316,7 +7307,7 @@ object HashQL {
         val groupedWins =
           if (groupBy.nonEmpty) items.collect { case w: WinCall => w }
           else Nil
-        val (afterWin, havingDone) =
+        val (windowed, havingDone) =
           if (groupedWins.isEmpty) (out, false)
           else {
             val h = applyHavingPreds(cat, out, having, registry)
@@ -7328,6 +7319,21 @@ object HashQL {
             val w = groupedWins.foldLeft(hp)((d, wc) =>
               d.withColumn(winAlias(wc), winColumn(wc)))
             (w.drop((havingDrop ++ winDrop).distinct: _*), true)
+          }
+        // a grouped select's outputs come out in select-list order: the
+        // aggregation puts aggregates before post-aggregation items and
+        // the windows after both. The grouping keys lead, and extras
+        // still to drop (HAVING-only aggregates) keep their slots.
+        val afterWin =
+          if (groupBy.isEmpty) windowed
+          else {
+            val listed = items.flatMap(outputNameOf).distinct.filter(n =>
+              windowed.columns.contains(n) && !groupBy.exists(_.column == n))
+            val inOrder = listed.iterator
+            val order = windowed.columns.toSeq.map(c =>
+              if (listed.contains(c)) inOrder.next() else c)
+            if (order == windowed.columns.toSeq) windowed
+            else windowed.select(order.map(col): _*)
           }
         // QUALIFY filters the post-window frame's OUTPUT columns (the
         // grouped-top-k idiom `qualify rn <= 3`); Catalyst plans it as

@@ -5334,5 +5334,7 @@ class HashQLSpec extends SparkSpec {
       "group by pa.g") == Seq("g", "m", "cnt"))
     assert(cols("select pa.g, pa.g || 'x' as gx, sum(pa.v) from pa " +
       "group by pa.g") == Seq("g", "gx", "sum_v"))
+    assert(cols("select pa.g, rank() over (order by count(*)), count(*) " +
+      "from pa group by pa.g") == Seq("g", "rnk", "cnt"))
   }
 }
