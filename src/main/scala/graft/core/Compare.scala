@@ -10,20 +10,28 @@ import org.apache.spark.sql.functions.{ilike, like, lit, rlike}
   * decides), Cypher try_casts so junk attrs drop instead of throwing,
   * and HAVING compares output columns as-is. */
 object Compare {
-  def cmp(c: Column, op: String, v: Any): Column = op match {
-    case "=" => c === lit(v)
-    case "<" => c < lit(v)
-    case ">" => c > lit(v)
-    case "<=" => c <= lit(v)
-    case ">=" => c >= lit(v)
+  private val table: Map[String, (Column, Column) => Column] = Map(
+    "=" -> (_ === _),
+    "<" -> (_ < _),
+    ">" -> (_ > _),
+    "<=" -> (_ <= _),
+    ">=" -> (_ >= _),
     // three-valued inequality (round-13): NULL input → NULL → row
     // dropped, exactly like every comparison above
-    case "<>" => !(c === lit(v))
-    // null-safe equality: two NULLs are equal, never UNKNOWN
-    case "<=>" => c <=> lit(v)
-    case "like" => like(c, lit(v))
-    case "ilike" => ilike(c, lit(v))
-    case "rlike" => rlike(c, lit(v))
-    case other => throw new IllegalArgumentException(s"unsupported comparison op: $other")
+    "<>" -> ((c, v) => !(c === v)),
+    // null-safe equality and its negation: two NULLs are equal, never
+    // UNKNOWN
+    "<=>" -> (_ <=> _),
+    "is distinct from" -> ((c, v) => !(c <=> v)),
+    "like" -> (like(_, _)),
+    "ilike" -> (ilike(_, _)),
+    "rlike" -> (rlike(_, _)))
+
+  /** Every operator [[cmp]] takes. */
+  val ops: Set[String] = table.keySet
+
+  def cmp(c: Column, op: String, v: Any): Column = table.get(op) match {
+    case Some(f) => f(c, lit(v))
+    case None => throw new IllegalArgumentException(s"unsupported comparison op: $op")
   }
 }

@@ -633,33 +633,34 @@ object HashQL {
     * one of these over two scalar [[Expr]] operands (plain refs, doc-paths,
     * literals and computed expressions alike), built by one grammar
     * (`P.comparison` — WHERE, CASE conditions and list_filter bodies share
-    * it) and lowered once ([[predColumn]], lambda bodies included). Ops:
+    * it) and lowered once ([[predColumn]], lambda bodies included). Ops
+    * (the table of [[graft.core.Compare]]):
     *  - `=` `<` `>` `<=` `>=` — three-valued (a NULL side is UNKNOWN, so
-    *    the row drops, and NOT keeps it dropped). `<>` is spelled
-    *    `Not(Cmp(l, "=", r))`, the one inequality in the tree; `between a
+    *    the row drops, and NOT keeps it dropped). The parser spells `<>`
+    *    as `Not(Cmp(l, "=", r))`, the one inequality in its trees; `between a
     *    and b` desugars to `>= a AND <= b`, `in (v, …)` to the OR of one
     *    `=` per member.
-    *  - `<=>` — null-safe equality: `is not distinct from` (two NULLs are
-    *    equal, never UNKNOWN); `is null` is `<=> NULL`, and `is distinct
-    *    from` / `is not null` are its `Not`, a true negation.
+    *  - `<=>` and `is distinct from` — null-safe equality (`is not
+    *    distinct from`) and its negation: two NULLs are equal, never
+    *    UNKNOWN. `is null` is `<=> NULL`, `is not null` is `is distinct
+    *    from NULL`.
     *  - `like` `ilike` `rlike` — against a quoted pattern (`%`/`_`
     *    wildcards; rlike is a Java regex, unanchored like DuckDB's
     *    regexp_matches).
     *
     * A doc-path left operand (`people.~hobbies[]~lvl`) dispatches to
     * [[graft.doc.DocStore.pathMatches]] with the same op for every op:
-    * ANY addressed leaf satisfies it (reference README.md:123-145). No
+    * ANY addressed leaf satisfies it (reference README.md:123-145), so
+    * `is not null` keeps a document with some non-NULL leaf, while a `Not`
+    * negates the whole scan (`<>`, `not like`, `not (… is null)`: no leaf
+    * matches). No
     * cast is injected on either side: the literal is typed at parse (an
     * integer token is a long, the reference's int coercion,
     * server.py:471-483) and Catalyst's ANSI coercion types the comparison,
     * so `d.x > 1` over a double column compares as double, as DuckDB
     * does. */
   final case class Cmp(l: Expr, op: String, r: Expr) extends Pred {
-    require(Cmp.ops(op), s"bad comparison operator: $op")
-  }
-  object Cmp {
-    val ops: Set[String] =
-      Set("=", "<", ">", "<=", ">=", "<=>", "like", "ilike", "rlike")
+    require(graft.core.Compare.ops(op), s"bad comparison operator: $op")
   }
   /** A bare BOOLEAN expression as a predicate (round-11): `where
     * contains(t.f, '#')`, `where not starts_with(t.f, 'x')` — the
@@ -2211,8 +2212,7 @@ object HashQL {
           if (!distinct) { kw("null"); ELit(null) }
           else if (is("null")) { next(); ELit(null) }
           else operand()
-        val same = Cmp(head, "<=>", rhs)
-        return if (n != distinct) Not(same) else same
+        return Cmp(head, if (n != distinct) "is distinct from" else "<=>", rhs)
       }
       // a BOOLEAN function call with no comparison following is itself
       // the predicate (round-11: `where contains(t.f, '#')`)
@@ -2269,7 +2269,10 @@ object HashQL {
           else if (subqueryNext)
             CmpSelect(refHead(s"$o (select …)"), o, subquery())
           else {
-            val rhs = operand()
+            // a computed head compares with a full expression, where a
+            // bare word is a column (`sum_v * 2 > cnt` over a grouped
+            // select's outputs); every other right-hand side is an operand
+            val rhs = if (head.isInstanceOf[ECol]) operand() else exprTree()
             if (o == "<>") Not(Cmp(head, "=", rhs)) else Cmp(head, o, rhs)
           }
         case "~" => FtsMatch(refHead("~"), literal().toString)
@@ -2309,7 +2312,9 @@ object HashQL {
       * that a bare word keeps [[literal]]'s meaning — a string (`t.name =
       * alice`), not an output column — unless it names a lambda variable
       * in scope; bare NULL rejects there too. Typed temporals (`date
-      * '…'`) are the same literal either way. */
+      * '…'`) are the same literal either way. The right of `= <> < > <=
+      * >=` after a computed head is the one exception: a full expression
+      * (see [[comparison]]). */
     private def operand(): Expr = {
       val bareWord = peek.matches("[A-Za-z_][A-Za-z0-9_]*") &&
         peekAt(1) != "(" && !peekAt(1).startsWith("'") && !is("case") &&
@@ -7323,9 +7328,13 @@ object HashQL {
         // a grouped select's outputs come out in select-list order: the
         // aggregation puts aggregates before post-aggregation items and
         // the windows after both. The grouping keys lead, and extras
-        // still to drop (HAVING-only aggregates) keep their slots.
+        // still to drop (HAVING-only aggregates) keep their slots. A
+        // repeated output name (`count(*), count(*)`) cannot be selected
+        // by name, so that frame keeps the aggregation's order.
         val afterWin =
-          if (groupBy.isEmpty) windowed
+          if (groupBy.isEmpty ||
+              windowed.columns.distinct.length < windowed.columns.length)
+            windowed
           else {
             val listed = items.flatMap(outputNameOf).distinct.filter(n =>
               windowed.columns.contains(n) && !groupBy.exists(_.column == n))

@@ -5276,6 +5276,26 @@ class HashQLSpec extends SparkSpec {
     assert(docIds("people.~hobbies[]~lvl is not distinct from 1") == Seq(2L))
   }
 
+  test("one comparison: is not null / is distinct from on a doc-path test " +
+    "some leaf") {
+    val db = new HashDb(spark)
+    db.saveDocument("pets", 1, """{"tags": [{"n": null}, {"n": "x"}]}""")
+    db.saveDocument("pets", 2, """{"tags": []}""")
+    db.saveDocument("pets", 3, """{"tags": [{"n": "y"}]}""")
+    db.saveDocument("pets", 4, """{"tags": [{"n": null}]}""")
+    def docIds(where: String): Seq[Long] =
+      db.sql(s"select pets.id from pets where $where").get
+        .as[Long].collect().sorted.toSeq
+    assert(docIds("pets.~tags[]~n is not null") == Seq(1L, 3L))
+    assert(docIds("pets.~tags[]~n is null") == Seq(1L, 4L))
+    // NOT negates the whole scan: no leaf is NULL
+    assert(docIds("not (pets.~tags[]~n is null)") == Seq(2L, 3L))
+    assert(docIds("pets.~tags[]~n is distinct from 'x'") == Seq(1L, 3L, 4L))
+    // `<>` negates the whole three-valued scan: no leaf equals 'x', and
+    // a NULL leaf with no match leaves it UNKNOWN
+    assert(docIds("pets.~tags[]~n <> 'x'") == Seq(2L, 3L))
+  }
+
   test("one comparison: list_filter bodies parse the WHERE grammar") {
     val cat = new GraftCatalog(spark)
     HashQL.execute(cat, "insert into lf (s) values ('ab-b-abc')")
@@ -5305,6 +5325,10 @@ class HashQLSpec extends SparkSpec {
     assert(ids(cat, "d.k is not distinct from d.id + 1") == Seq(1L, 3L, 4L))
     assert(ids(cat, "d.k between d.id and d.id + 1") == Seq(1L, 2L, 3L, 4L))
     assert(ids(cat, "d.x = d.x + 0") == Seq(1L, 2L, 3L))
+    // after a computed head a bare word is a column, after a plain ref
+    // a string
+    assert(ids(cat, "d.x * 2 > k") == Seq(1L, 3L))
+    assert(ids(cat, "d.s = apple") == Seq(1L))
   }
 
   test("INSERT rejects a caller-supplied id before anything commits") {
@@ -5336,5 +5360,8 @@ class HashQLSpec extends SparkSpec {
       "group by pa.g") == Seq("g", "gx", "sum_v"))
     assert(cols("select pa.g, rank() over (order by count(*)), count(*) " +
       "from pa group by pa.g") == Seq("g", "rnk", "cnt"))
+    // a repeated output name keeps the aggregation's order
+    assert(cols("select pa.g, count(*), count(*) from pa group by pa.g") ==
+      Seq("g", "cnt", "cnt"))
   }
 }

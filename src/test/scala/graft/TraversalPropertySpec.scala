@@ -43,7 +43,7 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
   } yield ColRef(t, c)
   private val litGen: Gen[Any] = Gen.oneOf[Any](1L, 2.5, "s", null)
   private val opGen: Gen[String] = Gen.oneOf("<", ">", "<=", ">=", "=", "<>")
-  private val cmpOpGen: Gen[String] = Gen.oneOf(Cmp.ops.toSeq)
+  private val cmpOpGen: Gen[String] = Gen.oneOf(graft.core.Compare.ops.toSeq)
   private val docRefGen: Gen[ColRef] =
     Gen.oneOf("t", "u").map(ColRef(_, "~hobbies[]~name"))
 
