@@ -5274,26 +5274,22 @@ class HashQLSpec extends SparkSpec {
     assert(docIds("people.~hobbies[]~lvl = 1") == Seq(2L))
     assert(docIds("people.~hobbies[]~lvl > 1") == Seq(1L, 3L))
     assert(docIds("people.~hobbies[]~lvl is not distinct from 1") == Seq(2L))
-  }
-
-  test("one comparison: is not null / is distinct from on a doc-path test " +
-    "some leaf") {
-    val db = new HashDb(spark)
+    // `is not null` / `is distinct from` test some leaf too
     db.saveDocument("pets", 1, """{"tags": [{"n": null}, {"n": "x"}]}""")
     db.saveDocument("pets", 2, """{"tags": []}""")
     db.saveDocument("pets", 3, """{"tags": [{"n": "y"}]}""")
     db.saveDocument("pets", 4, """{"tags": [{"n": null}]}""")
-    def docIds(where: String): Seq[Long] =
+    def petIds(where: String): Seq[Long] =
       db.sql(s"select pets.id from pets where $where").get
         .as[Long].collect().sorted.toSeq
-    assert(docIds("pets.~tags[]~n is not null") == Seq(1L, 3L))
-    assert(docIds("pets.~tags[]~n is null") == Seq(1L, 4L))
+    assert(petIds("pets.~tags[]~n is not null") == Seq(1L, 3L))
+    assert(petIds("pets.~tags[]~n is null") == Seq(1L, 4L))
     // NOT negates the whole scan: no leaf is NULL
-    assert(docIds("not (pets.~tags[]~n is null)") == Seq(2L, 3L))
-    assert(docIds("pets.~tags[]~n is distinct from 'x'") == Seq(1L, 3L, 4L))
+    assert(petIds("not (pets.~tags[]~n is null)") == Seq(2L, 3L))
+    assert(petIds("pets.~tags[]~n is distinct from 'x'") == Seq(1L, 3L, 4L))
     // `<>` negates the whole three-valued scan: no leaf equals 'x', and
     // a NULL leaf with no match leaves it UNKNOWN
-    assert(docIds("pets.~tags[]~n <> 'x'") == Seq(2L, 3L))
+    assert(petIds("pets.~tags[]~n <> 'x'") == Seq(2L, 3L))
   }
 
   test("one comparison: list_filter bodies parse the WHERE grammar") {
