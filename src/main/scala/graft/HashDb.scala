@@ -24,12 +24,13 @@ import graft.sql.HashQL
   * reference's in-RAM dict (client.py:25): KV put and document save are
   * its upsert, Cypher MERGE its keep-on-key insert, SQL INSERT its
   * append, [[get]] and [[getDocument]] its lookups. A session's rows are
-  * held on the driver, where all of these run with no plan built, and
-  * other writes' plans fold back into held rows, so reads plan over one
-  * local relation however long the session runs; a KV range, a Cypher
-  * MATCH or a SQL join folds there too ([[graft.core.LocalFold]]) and
-  * runs no Spark job. Tables from parquet (and graphs from TPC-H) stay
-  * plans, written by filters and unions.
+  * held on the driver with a key index, where all of these run with no
+  * plan built, each in O(log n) of the rows held; KV ranges read the
+  * same index ([[graft.kv.KvStore]]). Other writes' plans fold back
+  * into held rows, so reads plan over one local relation however long
+  * the session runs; a Cypher MATCH or a SQL join folds there too
+  * ([[graft.core.LocalFold]]) and runs no Spark job. Tables from parquet
+  * (and graphs from TPC-H) stay plans, written by filters and unions.
   *
   * Every entry point that touches session state holds this instance's
   * lock, so concurrent callers are serialized and no write is lost (an
@@ -101,12 +102,20 @@ final class HashDb(val spark: SparkSession) {
     })
   }
 
-  /** Hydrate a document back to JSON (S10): only the stored row with that
-    * id is hydrated, and a miss among held rows plans nothing. */
+  /** Hydrate a document back to JSON (S10). In a collection held on the
+    * driver, the row is found through the collection's key index on `id`
+    * ([[graft.core.KeyIndex]]) and its `doc` rendered by Spark's
+    * own `to_json`, evaluated on that one row ([[DocStore.toJson]]): no
+    * plan is built and no query runs. Any other collection (one
+    * compacted to parquet) hydrates its filtered rows with a plan and a
+    * collect. Where an id is stored twice, the first row stored wins. */
   def getDocument(collection: String, id: Long): Option[String] = synchronized {
-    catalog.storeOf(collection).map(_.lookup(Seq("id"), Seq(id)))
-      .filterNot(_.rows.exists(_.rows.isEmpty))
-      .flatMap(hit => DocStore.hydrate(hit.frame).select("json").collect().headOption.map(_.getString(0)))
+    catalog.storeOf(collection).map(_.lookup(Seq("id"), Seq(id))).flatMap(hit => hit.rows match {
+      case Some(held) =>
+        val (at, docType) = (held.schema.fieldIndex("doc"), held.schema("doc").dataType)
+        held.rows.headOption.map(r => DocStore.toJson(spark, r.get(at, docType), docType))
+      case None => DocStore.hydrate(hit.frame).select("json").collect().headOption.map(_.getString(0))
+    })
   }
 
   // ---------------- graph surface (POST /cypher) ------------------------

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
 /** Whole-plan evaluation on the driver for plans over driver-held rows:
   * Spark's `ConvertToLocalRelation` folds a Project, Filter or Limit over
   * a local relation into one, and this rule carries that over to the
-  * operators it leaves out, so a read over [[LocalRows]] stores — a KV
-  * range, a Cypher MATCH, a join of session tables — plans to ONE local
-  * relation and `collect()` runs no Spark job. Bottom up, a node whose
+  * operators it leaves out, so a read over [[LocalRows]] stores — a
+  * Cypher MATCH, a join of session tables — plans to ONE local relation
+  * and `collect()` runs no Spark job. Bottom up, a node whose
   * children are all local relations folds when it is
   *  - a global `Sort`;
   *  - a `Join` (inner, cross, left outer, left semi, left anti): a hash

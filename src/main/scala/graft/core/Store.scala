@@ -1,11 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import scala.collection.immutable.TreeMap
+
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A keyed session store: a table's rows held on the driver
   * ([[LocalRows]]) or, for a frame that is not driver-local (parquet, an
@@ -14,16 +18,19 @@ import org.apache.spark.sql.types.StructType
   * surfaces share one key match, one pair of write paths and one
   * fold-back rule:
   *  - held rows are written on the driver with no plan built; a keyed
-  *    write compares the stored rows' key fields by ordinal, in Catalyst
-  *    form, and converts no stored row;
+  *    write or lookup goes through their key index
+  *    ([[KeyIndex]]), so it costs O(log n) in the rows held and
+  *    converts no stored row;
   *  - a plan is filtered on its keys, or probed for them, and an append
   *    to it is a union by name;
   *  - every plan a write builds, and every frame a caller hands in, goes
   *    through [[Store.of]], the session's one lineage policy.
-  * Keys are column names; key values are external (`String`, `Long`). */
+  * Keys are column names; key values are external (`String`, `Long`).
+  * A NULL key equals only a NULL. */
 final class Store private (held: Either[DataFrame, LocalRows]) {
 
-  /** The store as a frame: for held rows, their one local relation. */
+  /** The store as a frame: for held rows, their one local relation, in
+    * the rows' insertion order ([[LocalRows.rows]]). */
   lazy val frame: DataFrame = held.fold(identity, _.frame)
 
   /** The held rows; None for a plan. */
@@ -52,45 +59,38 @@ final class Store private (held: Either[DataFrame, LocalRows]) {
   }
 
   /** Replace on key: these rows without any whose `keys` equal one of
-    * `add`'s, then `add`. */
+    * `add`'s (all of them, where a key is stored twice), then `add`. */
   def upsert(keys: Seq[String], add: LocalRows): Store =
-    where(keys, add.rows.map(Store.keyOf(add.schema, keys)), hit = false).append(add)
+    without(keys, add.rows.map(Store.keyOf(add.schema, keys))).append(add)
 
   /** Keep on key: these rows plus those of `add` whose `keys` the store
     * does not hold. No stored row is touched, so a stored row wins over
     * an added one with its key, and keys already stored twice stay so. */
   def insertAbsent(keys: Seq[String], add: LocalRows): Store = {
     val key = Store.keyOf(add.schema, keys)
-    val have = where(keys, add.rows.map(key), hit = true).toRows
-      .map(r => keys.map(r.getAs[Any])).toSet
+    val have: Seq[Any] => Boolean = held match {
+      case Right(s) => k => s.get(keys, k).nonEmpty
+      case Left(df) => Store.of(df.filter(Store.matching(keys, add.rows.map(key)))).toRows
+        .map(r => keys.map(r.getAs[Any])).toSet
+    }
     val fresh = add.filterNot(r => have(key(r)))
     if (fresh.rows.isEmpty) this else append(fresh)
   }
 
   /** These rows without those whose `keys` equal `key`. */
-  def deleteKey(keys: Seq[String], key: Seq[Any]): Store = where(keys, Seq(key), hit = false)
+  def deleteKey(keys: Seq[String], key: Seq[Any]): Store = without(keys, Seq(key))
 
-  /** The rows whose `keys` equal `key`. */
-  def lookup(keys: Seq[String], key: Seq[Any]): Store = where(keys, Seq(key), hit = true)
+  /** The rows whose `keys` equal `key`: held rows read from the key index,
+    * in insertion order; a plan filtered. */
+  def lookup(keys: Seq[String], key: Seq[Any]): Store = held match {
+    case Right(s) => new Store(Right(LocalRows.internal(s.spark, s.schema, s.get(keys, key))))
+    case Left(df) => Store.of(df.filter(Store.matching(keys, Seq(key))))
+  }
 
-  // the rows whose `keys` equal one of `ks` (hit) or none of them (!hit);
-  // a NULL key equals only a NULL
-  private def where(keys: Seq[String], ks: Seq[Seq[Any]], hit: Boolean): Store = held match {
-    case Right(s) =>
-      val wanted = ks.map(_.map(CatalystTypeConverters.convertToCatalyst).toArray).toArray
-      val ords = keys.map(s.schema.fieldIndex).toArray
-      val gets = keys.map(k => InternalRow.getAccessor(s.schema(k).dataType)).toArray
-      // a plain loop: this runs once per stored row on every keyed write
-      def matched(r: InternalRow): Boolean = wanted.exists { w =>
-        var j = 0
-        while (j < ords.length && w(j) == gets(j)(r, ords(j))) j += 1
-        j == ords.length
-      }
-      new Store(Right(s.filterNot(r => matched(r) != hit)))
-    case Left(df) =>
-      val matched = ks.map(k => keys.zip(k).map { case (c, v) => col(c) <=> lit(v) }
-        .reduce(_ && _)).reduceOption(_ || _).getOrElse(lit(false))
-      Store.of(df.filter(if (hit) matched else !matched))
+  // the rows whose `keys` equal none of `ks`
+  private def without(keys: Seq[String], ks: Seq[Seq[Any]]): Store = held match {
+    case Right(s) => new Store(Right(s.without(keys, ks)))
+    case Left(df) => Store.of(df.filter(!Store.matching(keys, ks)))
   }
 }
 
@@ -126,6 +126,11 @@ object Store {
     r => at.map { case (i, t) => CatalystTypeConverters.convertToScala(r.get(i, t), t) }
   }
 
+  // a plan's rows whose `keys` equal one of `ks`; a NULL key equals only a NULL
+  private def matching(keys: Seq[String], ks: Seq[Seq[Any]]): Column =
+    ks.map(k => keys.zip(k).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
+      .reduceOption(_ || _).getOrElse(lit(false))
+
   // rows of `add` append to rows of `to` unchanged: `add`'s columns are
   // distinct, each is one of `to`'s with its type (and not nullable where
   // `to`'s is not), and `to`'s other columns are nullable
@@ -146,27 +151,83 @@ object Store {
 
 /** What a [[Store]] holds for a driver-local table: its rows and schema,
   * immutable, with one cached [[frame]] that is ONE local relation over
-  * exactly these rows. A write appends to (or filters) a persistent
-  * `Vector` with no Catalyst pass, and an append shares the earlier rows'
-  * storage, so versions of an append-only table cost O(1) rows each. Reads
-  * plan over one leaf, which `ConvertToLocalRelation` and [[LocalFold]]
-  * fold on the driver: a KV range, a MATCH or a session join runs no
-  * Spark job, with a plan whose size does not grow with the session. */
+  * exactly these rows, in insertion order (not key order): the order the
+  * rows were appended in, so the row an upsert writes comes last. A write
+  * makes a new version with no Catalyst pass: an append extends a
+  * persistent `Vector` of slots, and a keyed delete empties the deleted
+  * rows' slots, until more slots are empty than full and the next
+  * version keeps only the full ones. Versions share the slots' storage,
+  * so versions of an append-only table cost O(1) rows each.
+  *
+  * Keyed writes and reads go through a key index ([[KeyIndex]]): a
+  * persistent sorted map from a key, in Spark's own order, to the slots
+  * holding it. It is built on the first keyed call (and again after the
+  * slots are compacted, so O(1) amortized per delete), and every write
+  * derives the next version's index from it, sharing its structure as
+  * the slots are shared; so a keyed write or lookup costs O(log n) and no
+  * pass over the rows. Reads plan over one leaf, which
+  * `ConvertToLocalRelation` and [[LocalFold]] fold on the driver: a
+  * MATCH or a session join runs no Spark job, with a plan whose size does
+  * not grow with the session; KV reads and document gets read the index
+  * and plan nothing. */
 final class LocalRows private (val spark: SparkSession, val schema: StructType,
-                               val rows: Vector[InternalRow], built: Option[DataFrame]) {
+                               slots: Vector[InternalRow], empty: Int,
+                               built: Option[DataFrame], carried: Option[KeyIndex]) {
+
+  /** The rows, in insertion order. */
+  lazy val rows: Vector[InternalRow] = if (empty == 0) slots else slots.filter(_ != null)
 
   /** One local relation over [[rows]], built on first use; no row is
     * copied. */
   lazy val frame: DataFrame = built.getOrElse(GraftBridge.localFrame(spark, schema, rows))
 
+  @volatile private var indexed = carried
+
+  /** The index of these rows on `keys`: this version's, or one built
+    * from the rows (once; later versions derive theirs from it). Keys
+    * must be of orderable types. */
+  private def index(keys: Seq[String]): KeyIndex = indexed.filter(_.keys == keys).getOrElse {
+    val ix = KeyIndex.build(schema, keys, slots)
+    indexed = Some(ix)
+    ix
+  }
+
+  /** The rows whose `keys` equal `key` (external values), in insertion
+    * order. */
+  def get(keys: Seq[String], key: Seq[Any]): Vector[InternalRow] = {
+    val ix = index(keys)
+    ix.slotsOf(ix.catalyst(key)).map(slots)
+  }
+
+  /** The rows whose `keys` are `start` (external values) or above, in key
+    * order, each with its key in Catalyst form; rows with one key in
+    * insertion order. */
+  def from(keys: Seq[String], start: Seq[Any]): Iterator[(IndexedSeq[Any], InternalRow)] = {
+    val ix = index(keys)
+    ix.from(ix.catalyst(start)).flatMap { case (k, at) => at.iterator.map(i => (k, slots(i))) }
+  }
+
   /** These rows followed by `more`, already in Catalyst form. */
   def appendInternal(more: Seq[InternalRow]): LocalRows =
-    new LocalRows(spark, schema, rows ++ more, None)
+    new LocalRows(spark, schema, slots ++ more, empty, None,
+      indexed.map(_.added(slots.length, more)))
+
+  /** These rows minus those whose `keys` equal one of `ks` (external
+    * values); the same rows when none does. */
+  def without(keys: Seq[String], ks: Seq[Seq[Any]]): LocalRows = {
+    val ix = index(keys)
+    val gone = ks.map(ix.catalyst).distinct.map(k => k -> ix.slotsOf(k)).filter(_._2.nonEmpty)
+    val emptied = empty + gone.map(_._2.length).sum
+    lazy val left = gone.foldLeft(slots) { case (s, (_, at)) => at.foldLeft(s)(_.updated(_, null)) }
+    if (gone.isEmpty) this
+    else if (2 * emptied > slots.length) LocalRows.internal(spark, schema, left.filter(_ != null))
+    else new LocalRows(spark, schema, left, emptied, None, Some(ix.removed(gone.map(_._1))))
+  }
 
   /** These rows minus those matching `p`; the same rows when none
     * does. */
   def filterNot(p: InternalRow => Boolean): LocalRows =
-    if (rows.exists(p)) new LocalRows(spark, schema, rows.filterNot(p), None) else this
+    if (rows.exists(p)) LocalRows.internal(spark, schema, rows.filterNot(p)) else this
 }
 
 object LocalRows {
@@ -182,11 +243,79 @@ object LocalRows {
   def internal(spark: SparkSession, schema: StructType, rows: Vector[InternalRow],
                built: Option[DataFrame] = None): LocalRows = {
     install(spark)
-    new LocalRows(spark, schema, rows, built)
+    new LocalRows(spark, schema, rows, 0, built, None)
   }
 
   /** Add [[LocalFold]] to `spark`'s optimizer, once. */
   private[graft] def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(LocalFold))
       spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ LocalFold
+}
+
+/** A [[LocalRows]] version's key index on the columns `keys`: a
+  * persistent sorted map from a key, its values in Catalyst form, to the
+  * slots holding rows with that key, ascending. Keys are ordered column by
+  * column in Spark's own order (`UTF8String` binary order for strings,
+  * not `java.lang.String`'s), NULL first; so a NULL equals only a NULL,
+  * and a range of keys is a slice of the map. */
+final class KeyIndex private (val keys: Seq[String], types: IndexedSeq[DataType],
+                              ords: IndexedSeq[Int],
+                              map: TreeMap[IndexedSeq[Any], Vector[Int]]) {
+
+  /** External key values in Catalyst form, in the key columns' types. */
+  def catalyst(key: Seq[Any]): IndexedSeq[Any] = key.iterator.zip(types).map { case (v, t) =>
+    val l = Literal(v)
+    if (l.dataType == t) l.value
+    else Cast(l, t, Option(SQLConf.get.sessionLocalTimeZone)).eval()
+  }.toIndexedSeq
+
+  def slotsOf(key: IndexedSeq[Any]): Vector[Int] = map.getOrElse(key, Vector.empty)
+
+  def from(key: IndexedSeq[Any]): Iterator[(IndexedSeq[Any], Vector[Int])] = map.iteratorFrom(key)
+
+  /** The index after `more` fill slots from `at` on (NULL: an emptied
+    * slot). */
+  def added(at: Int, more: Seq[InternalRow]): KeyIndex =
+    new KeyIndex(keys, types, ords, more.iterator.zipWithIndex.foldLeft(map) { case (m, (r, j)) =>
+      if (r == null) m
+      else {
+        val k = ords.indices.map(c => if (r.isNullAt(ords(c))) null else r.get(ords(c), types(c)))
+        m.updated(k, m.getOrElse(k, Vector.empty) :+ (at + j))
+      }
+    })
+
+  /** The index without `ks`. */
+  def removed(ks: Seq[IndexedSeq[Any]]): KeyIndex = new KeyIndex(keys, types, ords, map -- ks)
+}
+
+object KeyIndex {
+
+  /** The index of `slots` (NULL: an emptied slot) in `schema` on `keys`. */
+  def build(schema: StructType, keys: Seq[String], slots: Vector[InternalRow]): KeyIndex = {
+    val types = keys.map(schema(_).dataType).toIndexedSeq
+    val ords = keys.map(schema.fieldIndex).toIndexedSeq
+    new KeyIndex(keys, types, ords, TreeMap.empty[IndexedSeq[Any], Vector[Int]](ordering(types)))
+      .added(0, slots)
+  }
+
+  // column by column in each type's Spark ordering, NULL first
+  private def ordering(types: IndexedSeq[DataType]): Ordering[IndexedSeq[Any]] = {
+    val each = types.map(TypeUtils.getInterpretedOrdering).toArray
+    new Ordering[IndexedSeq[Any]] {
+      def compare(a: IndexedSeq[Any], b: IndexedSeq[Any]): Int = {
+        var j = 0
+        var c = 0
+        while (c == 0 && j < each.length) {
+          c = (a(j), b(j)) match {
+            case (null, null) => 0
+            case (null, _) => -1
+            case (_, null) => 1
+            case (x, y) => each(j).compare(x, y)
+          }
+          j += 1
+        }
+        c
+      }
+    }
+  }
 }

@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, StructsToJson}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -128,6 +128,27 @@ object DocStore {
   /** Read path (S10): hydrate a nested doc column back to a JSON string. */
   def hydrate(docs: DataFrame, docCol: String = "doc"): DataFrame =
     docs.withColumn("json", to_json(col(docCol)))
+
+  /** [[hydrate]] for one held document: `doc`, a Catalyst value of
+    * `docType`, rendered by Spark's own `to_json` in `spark`'s session
+    * time zone, evaluated on the driver with no plan built (NULL for a
+    * NULL `doc`). */
+  def toJson(spark: SparkSession, doc: Any, docType: DataType): String = {
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    if (renderers.size > 256) renderers.clear()
+    val render = renderers.computeIfAbsent((docType, tz), _ => {
+      val e = StructsToJson(Map.empty, BoundReference(0, docType, nullable = true), Some(tz))
+      require(e.checkInputDataTypes().isSuccess, s"to_json cannot render a ${docType.simpleString}")
+      e.replacement
+    })
+    // one JSON generator per renderer, so one rendering at a time
+    render.synchronized(Option(render.eval(InternalRow(doc))).map(_.toString).orNull)
+  }
+
+  // `to_json` evaluators by doc type and time zone, a few per session: a
+  // fresh one sets up its JSON generator on first use, which costs more
+  // than the rendering
+  private val renderers = new java.util.concurrent.ConcurrentHashMap[(DataType, String), Expression]()
 
   private final case class Seg(name: String, isArray: Boolean,
                                index: Option[Int] = None)

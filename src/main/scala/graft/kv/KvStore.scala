@@ -1,32 +1,38 @@
 package graft.kv
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{LocalRows, Store}
 
-/** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; reference
-  * /root/reference/server.py:80-168, hash-db.py:34-83) re-expressed as
-  * Catalyst filters over a `(pk, sk, value)` DataFrame.
+/** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; the
+  * reference's server.py:80-168, hash-db.py:34-83) over a
+  * `(pk, sk, value)` keyed store.
   *
   * The reference routes keys over a consistent-hash ring
   * (consistent_hashing.py:10-57) and keeps four in-memory index structures
   * per node (trie, nested trie, BST, partition-tree — client.py:177-202).
-  * On Spark all of that is subsumed: hash partitioning on `pk` IS the ring,
-  * and a pk-partitioned / sk-sorted parquet layout gives partition pruning +
-  * row-group min/max pruning for every one of the five query shapes, so no
-  * secondary index structures exist in this engine at all.
+  * Here one index stands for all four: a session store holds its pairs on
+  * the driver, the reference's per-node dict, with a key index sorted on
+  * (pk, sk) in Spark's string order ([[graft.core.KeyIndex]]). A
+  * point read is an index lookup, and each of the five query shapes a
+  * slice of the index plus a residual prefix or bound test, returned as
+  * one local relation over its rows, already in order — no plan is
+  * optimized and no Spark job runs. A store over any other frame (parquet)
+  * answers the same reads as Catalyst filters and a sort: hash
+  * partitioning on `pk` is the ring, and a pk-partitioned / sk-sorted
+  * parquet layout gives partition pruning and row-group min/max pruning
+  * for every shape. Both give the same rows in the same order.
   *
   * All query methods return rows ordered by sort key asc/desc, matching the
   * reference's `sorted(items, key=sort_key, reverse=…)` postcondition
-  * (server.py:126,139-140,153-154,167-168).
-  *
-  * The pairs are a keyed store on (pk, sk) ([[graft.core.Store]]); a
-  * session store holds them on the driver, the reference's per-node dict,
-  * where [[lookup]] and a query's filter and sort run with no Spark job.
+  * (server.py:126,139-140,153-154,167-168); where the shape spans
+  * partition keys (D2, D4), rows with one sort key follow in partition-key
+  * order, and `desc` reverses the whole order.
   */
 final class KvStore private (store: Store) {
-  import KvStore.{key, sorted}
+  import KvStore.{key, sorted, u}
 
   /** The store as a frame: for a session store, the one local relation
     * over its held rows. */
@@ -34,17 +40,23 @@ final class KvStore private (store: Store) {
 
   // ---- writes (S1-S3): the store's upsert (`put` overwrites, the
   // reference's hashmap set) and delete on (pk, sk). A session store —
-  // [[KvStore.empty]] or any driver-local frame — edits its held rows on
-  // the driver with no Spark plan built; on parquet a delete is a filter
-  // and a put a filter plus a one-row union, not a rewrite.
+  // [[KvStore.empty]] or any driver-local frame — edits its held rows and
+  // their key index on the driver with no Spark plan built; on parquet a
+  // delete is a filter and a put a filter plus a one-row union, not a
+  // rewrite.
   def put(pk: String, sk: String, value: String): KvStore =
     new KvStore(store.upsert(key, store.newRows(Seq(Map("pk" -> pk, "sk" -> sk, "value" -> value)))))
   def delete(pk: String, sk: String): KvStore = new KvStore(store.deleteKey(key, Seq(pk, sk)))
 
-  /** Exact get — with the optimized layout this prunes to one partition +
-    * one row group (reference: md5-ring route + dict lookup, client.py:59-64). */
-  def get(pk: String, sk: String): DataFrame =
-    df.filter(col("pk") === pk && col("sk") === sk)
+  /** Exact get: a session store's rows at (pk, sk) from its key index
+    * (none for a NULL argument, as for the filter); with the optimized
+    * parquet layout this prunes to one partition + one row group
+    * (reference: md5-ring route + dict lookup, client.py:59-64). */
+  def get(pk: String, sk: String): DataFrame = store.rows match {
+    case Some(held) => GraftBridge.localFrame(held.spark, held.schema,
+      if (pk == null || sk == null) Vector.empty else held.get(key, Seq(pk, sk)))
+    case None => df.filter(col("pk") === pk && col("sk") === sk)
+  }
 
   /** The value at (pk, sk): a key lookup over a session store's held rows,
     * the reference's dict lookup (client.py:25), read by ordinal from the
@@ -59,43 +71,85 @@ final class KvStore private (store: Store) {
   }
 
   /** D1 `query_begins`: pk exact + sk prefix (server.py:113-126). */
-  def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk") === pk && col("sk").startsWith(skPrefix)), desc)
+  def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame = {
+    val (p, pre) = (u(pk), u(skPrefix))
+    range(col("pk") === pk && col("sk").startsWith(skPrefix), desc, p, pre)(
+      Seq(pk, skPrefix), (kp, ks) => kp == p && ks.startsWith(pre), (_, _) => true)
+  }
 
   /** D2 `query_pk_sk_begins`: both pk and sk by prefix (server.py:128-140). */
-  def queryPkSkBegins(pkPrefix: String, skPrefix: String, desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk").startsWith(pkPrefix) && col("sk").startsWith(skPrefix)), desc)
+  def queryPkSkBegins(pkPrefix: String, skPrefix: String, desc: Boolean = false): DataFrame = {
+    val (pp, sp) = (u(pkPrefix), u(skPrefix))
+    range(col("pk").startsWith(pkPrefix) && col("sk").startsWith(skPrefix), desc, pp, sp)(
+      Seq(pkPrefix, null), (kp, _) => kp.startsWith(pp), (_, ks) => ks.startsWith(sp))
+  }
 
   /** D3 `query_between`: pk exact + sk in [from, to] inclusive
     * (server.py:143-154; BST walk datastructures.py:25-31). Callers pass real
     * bounds — the reference's `~~` +∞ sentinel (hash-db.py:101) is not needed. */
-  def queryBetween(pk: String, skFrom: String, skTo: String, desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk") === pk && col("sk").between(skFrom, skTo)), desc)
+  def queryBetween(pk: String, skFrom: String, skTo: String, desc: Boolean = false): DataFrame = {
+    val (p, lo, hi) = (u(pk), u(skFrom), u(skTo))
+    range(col("pk") === pk && col("sk").between(skFrom, skTo), desc, p, lo, hi)(
+      Seq(pk, skFrom), (kp, ks) => kp == p && ks.compareTo(hi) <= 0, (_, _) => true)
+  }
 
   /** D4 `both_between`: pk range × sk range (server.py:156-168). */
   def bothBetween(pkFrom: String, pkTo: String, skFrom: String, skTo: String,
-                  desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk").between(pkFrom, pkTo) &&
-      col("sk").between(skFrom, skTo)), desc)
+                  desc: Boolean = false): DataFrame = {
+    val (plo, phi, lo, hi) = (u(pkFrom), u(pkTo), u(skFrom), u(skTo))
+    range(col("pk").between(pkFrom, pkTo) && col("sk").between(skFrom, skTo), desc,
+      plo, phi, lo, hi)(Seq(pkFrom, null), (kp, _) => kp.compareTo(phi) <= 0,
+      (_, ks) => ks.compareTo(lo) >= 0 && ks.compareTo(hi) <= 0)
+  }
 
   /** D5 `query_before_than` (hash-db.py:71-76). */
   def queryBeforeThan(pk: String, skPrefix: String, bound: String,
-                      desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk") === pk && col("sk").startsWith(skPrefix) &&
-      col("sk") < bound), desc)
+                      desc: Boolean = false): DataFrame = {
+    val (p, pre, b) = (u(pk), u(skPrefix), u(bound))
+    range(col("pk") === pk && col("sk").startsWith(skPrefix) && col("sk") < bound, desc,
+      p, pre, b)(Seq(pk, skPrefix),
+      (kp, ks) => kp == p && ks.startsWith(pre) && ks.compareTo(b) < 0, (_, _) => true)
+  }
 
   /** D5 `query_greater_than` (hash-db.py:78-83). */
   def queryGreaterThan(pk: String, skPrefix: String, bound: String,
-                       desc: Boolean = false): DataFrame =
-    sorted(df.filter(col("pk") === pk && col("sk").startsWith(skPrefix) &&
-      col("sk") > bound), desc)
+                       desc: Boolean = false): DataFrame = {
+    val (p, pre, b) = (u(pk), u(skPrefix), u(bound))
+    range(col("pk") === pk && col("sk").startsWith(skPrefix) && col("sk") > bound, desc,
+      p, pre, b)(Seq(pk, skPrefix), (kp, ks) => kp == p && ks.startsWith(pre),
+      (_, ks) => ks.compareTo(b) > 0)
+  }
+
+  // A read shape. Over a plan: the filter `cond`, sorted. Over held rows:
+  // the index slice from key `start` on while `more` holds of a key
+  // (pk, sk), its rows whose key `keep` also holds, sorted on the driver
+  // — the same rows as `cond`'s. A NULL argument in `args` matches no
+  // row, as in `cond`; so does a NULL sk (a NULL pk sorts before any
+  // start).
+  private def range(cond: Column, desc: Boolean, args: UTF8String*)(
+      start: Seq[String], more: (UTF8String, UTF8String) => Boolean,
+      keep: (UTF8String, UTF8String) => Boolean): DataFrame = store.rows match {
+    case None => sorted(df.filter(cond), desc)
+    case Some(held) =>
+      val hits = if (args.contains(null)) Vector.empty
+        else held.from(key, start).map { case (k, r) => (k(0).asInstanceOf[UTF8String],
+          k(1).asInstanceOf[UTF8String], r) }
+          .takeWhile { case (kp, ks, _) => more(kp, ks) }
+          .filter { case (kp, ks, _) => ks != null && keep(kp, ks) }.toVector
+      val asc = hits.sortWith { case ((p1, s1, _), (p2, s2, _)) =>
+        val c = s1.compareTo(s2)
+        c < 0 || (c == 0 && p1.compareTo(p2) < 0)
+      }.map(_._3)
+      GraftBridge.localFrame(held.spark, held.schema, if (desc) asc.reverse else asc)
+  }
 
   /** S7 full dump. */
   def dump(): DataFrame = df
 
   /** 100 TB layout: pk-hash-bucketed, (pk, sk)-sorted within partitions so
     * point lookups prune to one bucket and range scans prune row groups on
-    * parquet min/max. This replaces every index structure in the reference. */
+    * parquet min/max: the on-disk counterpart of a session store's key
+    * index. */
   def writeOptimized(path: String, buckets: Int = 512): Unit =
     df.repartition(buckets, col("pk")).sortWithinPartitions("pk", "sk")
       .write.mode("overwrite").parquet(path)
@@ -107,8 +161,11 @@ object KvStore {
 
   private val key = Seq("pk", "sk")
 
+  private def u(s: String): UTF8String = UTF8String.fromString(s)
+
+  // sk order, ties in pk order; `desc` reverses both
   private def sorted(d: DataFrame, desc: Boolean): DataFrame =
-    d.orderBy(if (desc) col("sk").desc else col("sk").asc)
+    if (desc) d.orderBy(col("sk").desc, col("pk").desc) else d.orderBy(col("sk"), col("pk"))
 
   /** An empty session store: its rows live on the driver. */
   def empty(spark: SparkSession): KvStore = new KvStore(Store(LocalRows(spark,

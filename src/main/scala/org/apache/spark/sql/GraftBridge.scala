@@ -25,10 +25,15 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** One local relation over `rows`, marked analyzed: the analyzer has
+    * nothing to resolve in it, and running its batches over it costs more
+    * than a key-index read. */
   def localFrame(spark: SparkSession, schema: StructType,
-                 rows: Seq[InternalRow]): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      LocalRelation(DataTypeUtils.toAttributes(schema), rows.toVector))
+                 rows: Seq[InternalRow]): DataFrame = {
+    val relation = LocalRelation(DataTypeUtils.toAttributes(schema), rows.toVector)
+    relation.setAnalyzed()
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], relation)
+  }
 
   def planAfresh(df: DataFrame): QueryExecution =
     df.sparkSession.asInstanceOf[classic.SparkSession].sessionState

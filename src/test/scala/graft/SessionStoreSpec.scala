@@ -5,15 +5,19 @@ import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.GraftCatalog
 import graft.sql.HashQL
 
 /** The driver-held row store behind `HashDb`'s session writes
   * ([[graft.core.LocalRows]]): tables written row at a time stay one local
-  * relation, versions share rows, point reads and writes run no Spark job,
-  * documents widen instead of dropping fields, concurrent writers lose
-  * nothing, and a long mixed session reads right with bounded plans. */
+  * relation, versions share rows, point reads and writes run no Spark job
+  * (document gets and KV gets no query at all), documents widen instead
+  * of dropping fields, concurrent writers lose nothing, a long mixed
+  * session reads right with bounded plans, and a 50,000-write session
+  * keeps its per-op latency. */
 class SessionStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -140,6 +144,9 @@ class SessionStoreSpec extends SparkSpec {
       def pairs(df: DataFrame) = df.collect().map(r => s"${r.getString(1)}=${r.getString(2)}").toSeq
       assert(pairs(db.kv.queryBetween("p", "s03", "s08")) == range)
       assert(pairs(db.kv.queryBetween("p", "s03", "s08", desc = true)) == range.reverse)
+      // a slice of the key index: one local relation over the range's rows
+      assert(isOneLocalRelation(db.kv.queryBetween("p", "s03", "s08")),
+        db.kv.queryBetween("p", "s03", "s08").queryExecution.analyzed.treeString)
       assert(col0(db.cypher("match (a:P {name: 'a'})-[:R]->(b:P) return b").get).sorted == Seq("b", "c"))
       assert(col0(db.cypher("match (a:P)-[:R]->(b:P {name: 'c'}) return a").get).sorted == Seq("a", "b"))
       val joined = db.sql("select products.price, people.people_name, items.search from items " +
@@ -258,6 +265,101 @@ class SessionStoreSpec extends SparkSpec {
     assert(db.getDocument("c", 3).contains("""{"extra":"x","n":3,"name":"d3"}"""))
     assert(db.getDocument("c", 1).contains("""{"n":1,"name":"d1"}"""))
     assert(ids("c.id = 3") == Seq(3L) && ids("c.id > 0") == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("getDocument over held rows runs no query and returns what a compacted collection does") {
+    val db = new HashDb(spark)
+    val docs = Seq(
+      1L -> """{"a":1.5,"b":1.0,"c":null}""",
+      2L -> """{"a":2.0,"arr":[{"k":1,"v":[{"z":"q"}]},{"k":2,"v":[]}]}""",
+      3L -> ("{\"s\":\"é \uD83D\uDE00 \uE000 \\\"q\\\"\"}"),
+      4L -> """{"a":-0.5,"arr":[{"k":3,"v":[{"z":null}]}],"s":"x"}""")
+    Seq("held", "packed").foreach { c =>
+      docs.foreach { case (id, j) => db.saveDocument(c, id, j) }
+      // SQL writes ids 1 and 2 as well; saving either id again replaces
+      // both of its rows
+      db.sql(s"insert into $c (tag) values ('t1')")
+      db.sql(s"insert into $c (tag) values ('t2')")
+      db.saveDocument(c, 1, docs.head._2)
+      db.saveDocument(c, 2, """{"a":3.25,"arr":[{"k":9,"v":[{"z":"é"}]}]}""")
+      // a new field widens every earlier document's type
+      db.saveDocument(c, 5, """{"a":1,"late":{"x":[1,2]},"s":"y"}""")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("store").toString
+    db.catalog.compact("packed", s"$dir/packed")
+    assert(db.catalog.rowsOf("held").isDefined && db.catalog.rowsOf("packed").isEmpty)
+    (0L to 6L).foreach(id => assert(db.getDocument("held", id) == db.getDocument("packed", id), s"id $id"))
+    assert(db.getDocument("held", 1).contains("""{"a":1.5,"b":1.0}"""))
+    assert(db.getDocument("held", 2).contains("""{"a":3.25,"arr":[{"k":9,"v":[{"z":"é"}]}]}"""))
+    assert(db.getDocument("held", 3).contains(docs(2)._2))
+    assert(db.getDocument("held", 6).isEmpty)
+
+    // no QueryExecution for held-row document gets and KV gets: a listener
+    // sees only the action run after them
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(f)
+    }
+    // listener events arrive in order: once a count's has, every earlier
+    // one has too
+    def countSeen(): Unit = {
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains("count") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("count"))
+    }
+    db.set("p", "a", "1")
+    spark.listenerManager.register(listener)
+    try {
+      countSeen()
+      seen.clear()
+      assert(db.getDocument("held", 4).contains("""{"a":-0.5,"arr":[{"k":3,"v":[{}]}],"s":"x"}"""))
+      assert(db.getDocument("held", 7).isEmpty && db.get("p", "a").contains("1"))
+      countSeen()
+      assert(seen.toArray.toSeq == Seq("count"), s"query executions: $seen")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a 50,000-write session reads its model, and its last ops are as fast as its first") {
+    val db = new HashDb(spark)
+    val rnd = new Random(23)
+    val kv = mutable.TreeMap.empty[(String, String), String]
+    val docs = mutable.Map.empty[Long, String]
+    val nanos = mutable.ArrayBuffer.empty[Long]
+    def timed[T](f: => T): T = { val t0 = System.nanoTime(); val r = f; nanos += System.nanoTime() - t0; r }
+    def key() = (s"p${rnd.nextInt(50)}", f"s${rnd.nextInt(1000)}%04d")
+    (1 to 50000).foreach { k =>
+      rnd.nextInt(8) match {
+        case 0 | 1 | 2 | 3 =>
+          val ((pk, sk), v) = (key(), s"v$k")
+          timed(db.set(pk, sk, v)); kv((pk, sk)) = v
+        case 4 =>
+          val (pk, sk) = key()
+          timed(db.clear(pk, sk)); kv.remove((pk, sk))
+        case _ =>
+          val id = 1L + rnd.nextInt(5000)
+          val json = s"""{"n":$k,"tag":"t${k % 7}"}"""
+          timed(db.saveDocument("docs", id, json)); docs(id) = json
+      }
+      val (pk, sk) = key()
+      assert(timed(db.get(pk, sk)) == kv.get((pk, sk)), s"get $pk $sk at $k")
+      if (k % 2 == 0) {
+        val id = 1L + rnd.nextInt(5000)
+        assert(timed(db.getDocument("docs", id)) == docs.get(id), s"getDocument $id at $k")
+      }
+      if (k % 200 == 0) {
+        val (a, b) = (key()._2, key()._2)
+        val (lo, hi) = if (a <= b) (a, b) else (b, a)
+        val got = timed(db.kv.queryBetween(pk, lo, hi).collect()).map(r => (r.getString(1), r.getString(2))).toSeq
+        assert(got == kv.range((pk, lo), (pk, hi + "\u0000")).map { case ((_, s), v) => (s, v) }.toSeq,
+          s"queryBetween $pk $lo $hi at $k")
+      }
+    }
+    assert(kv.size > 10000 && docs.size > 4000)
+    def median(xs: Seq[Long]) = xs.sorted.apply(xs.length / 2)
+    val (first, last) = (median(nanos.take(1000).toSeq), median(nanos.takeRight(1000).toSeq))
+    assert(last <= 2 * first, s"median op: first 1,000 ${first / 1000} µs, last 1,000 ${last / 1000} µs")
   }
 
   test("saveDocument throws on a type conflict, naming the collection, id and field") {
