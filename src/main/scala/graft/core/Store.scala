@@ -101,11 +101,15 @@ object Store {
     * fold to ([[LocalFold]]) unless a join outgrows its bound, and its
     * plan otherwise — told from the analyzed plan, unoptimized, when a
     * leaf is not a local relation. A frame that is one local relation
-    * already (a store's own frame) is held as it is, not optimized. */
+    * already is held as it is, not optimized; a store's own frame gives
+    * back its rows, key index included. */
   def of(df: DataFrame): Store = {
     val qe = df.queryExecution
     val local = qe.analyzed match {
-      case r: LocalRelation => Some(LocalRows.internal(df.sparkSession, df.schema, r.data.toVector, Some(df)))
+      case r: LocalRelation => Some(r.data match {
+        case d: LocalRows.Data if d.owner != null => d.owner
+        case data => LocalRows.internal(df.sparkSession, df.schema, data.toVector, Some(df))
+      })
       case a if a.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
         LocalRows.install(df.sparkSession)
         Some(qe.optimizedPlan).collect {
@@ -161,67 +165,87 @@ object Store {
   *
   * Keyed writes and reads go through a key index ([[KeyIndex]]): a
   * persistent sorted map from a key, in Spark's own order, to the slots
-  * holding it. It is built on the first keyed call (and again after the
-  * slots are compacted, so O(1) amortized per delete), and every write
-  * derives the next version's index from it, sharing its structure as
-  * the slots are shared; so a keyed write or lookup costs O(log n) and no
-  * pass over the rows. Reads plan over one leaf, which
-  * `ConvertToLocalRelation` and [[LocalFold]] fold on the driver: a
-  * MATCH or a session join runs no Spark job, with a plan whose size does
-  * not grow with the session; KV reads and document gets read the index
-  * and plan nothing. */
+  * holding it. Every write derives the next version's index from this
+  * one's, sharing its structure as the slots are shared (a compaction
+  * renumbers it in one pass), so a keyed write or lookup costs O(log n)
+  * and no pass over the rows. Rows that come with no index (a new table,
+  * or the result of a SQL UPDATE or DELETE) answer their first
+  * single-key probes by one pass over the rows, which costs less than
+  * building the index, and build it once those passes have cost about
+  * as much ([[KeyIndex.ScansPerBuild]]). The frame leads back to these
+  * rows, so [[Store.of]] over it keeps the index. Reads plan over one
+  * leaf, which `ConvertToLocalRelation` and [[LocalFold]] fold on the
+  * driver: a MATCH or a session join runs no Spark job, with a plan
+  * whose size does not grow with the session; KV reads and document gets
+  * read the index and plan nothing. */
 final class LocalRows private (val spark: SparkSession, val schema: StructType,
                                slots: Vector[InternalRow], empty: Int,
-                               built: Option[DataFrame], carried: Option[KeyIndex]) {
+                               built: Option[DataFrame], carried: Option[KeyIndex],
+                               carriedScans: Int) {
 
   /** The rows, in insertion order. */
   lazy val rows: Vector[InternalRow] = if (empty == 0) slots else slots.filter(_ != null)
 
   /** One local relation over [[rows]], built on first use; no row is
     * copied. */
-  lazy val frame: DataFrame = built.getOrElse(GraftBridge.localFrame(spark, schema, rows))
+  lazy val frame: DataFrame =
+    built.getOrElse(GraftBridge.localFrame(spark, schema, new LocalRows.Data(this, rows)))
 
   @volatile private var indexed = carried
+  // the single-key probes that this version and those it derives from
+  // answered by a scan since their last index
+  @volatile private var scans = carriedScans
 
-  /** The index of these rows on `keys`: this version's, or one built
-    * from the rows (once; later versions derive theirs from it). Keys
-    * must be of orderable types. */
+  // the index of these rows on `keys`: this version's, or one built from
+  // the rows (once; later versions derive theirs from it)
   private def index(keys: Seq[String]): KeyIndex = indexed.filter(_.keys == keys).getOrElse {
     val ix = KeyIndex.build(schema, keys, slots)
     indexed = Some(ix)
     ix
   }
 
+  // the slots holding each of `ks` (Catalyst form), in order, and the
+  // index they were read from: a lone key with no index at hand, while
+  // the scans are fewer than KeyIndex.ScansPerBuild, is found in one pass
+  // over the slots, with no index
+  private def find(keys: Seq[String], ks: Seq[IndexedSeq[Any]]): (Seq[Vector[Int]], Option[KeyIndex]) =
+    if (ks.length == 1 && !indexed.exists(_.keys == keys) && scans < KeyIndex.ScansPerBuild) {
+      scans += 1
+      (Seq(KeyIndex.scan(schema, keys, slots, ks.head)), None)
+    } else {
+      val ix = index(keys)
+      (ks.map(ix.slotsOf), Some(ix))
+    }
+
   /** The rows whose `keys` equal `key` (external values), in insertion
     * order. */
-  def get(keys: Seq[String], key: Seq[Any]): Vector[InternalRow] = {
-    val ix = index(keys)
-    ix.slotsOf(ix.catalyst(key)).map(slots)
-  }
+  def get(keys: Seq[String], key: Seq[Any]): Vector[InternalRow] =
+    find(keys, Seq(KeyIndex.catalyst(schema, keys, key)))._1.head.map(slots)
 
   /** The rows whose `keys` are `start` (external values) or above, in key
-    * order, each with its key in Catalyst form; rows with one key in
-    * insertion order. */
-  def from(keys: Seq[String], start: Seq[Any]): Iterator[(IndexedSeq[Any], InternalRow)] = {
-    val ix = index(keys)
-    ix.from(ix.catalyst(start)).flatMap { case (k, at) => at.iterator.map(i => (k, slots(i))) }
-  }
+    * order; rows with one key in insertion order. */
+  def from(keys: Seq[String], start: Seq[Any]): Iterator[InternalRow] =
+    index(keys).from(KeyIndex.catalyst(schema, keys, start)).flatMap(_.iterator.map(slots))
 
   /** These rows followed by `more`, already in Catalyst form. */
   def appendInternal(more: Seq[InternalRow]): LocalRows =
     new LocalRows(spark, schema, slots ++ more, empty, None,
-      indexed.map(_.added(slots.length, more)))
+      indexed.map(_.added(slots.length, more)), scans)
 
   /** These rows minus those whose `keys` equal one of `ks` (external
     * values); the same rows when none does. */
   def without(keys: Seq[String], ks: Seq[Seq[Any]]): LocalRows = {
-    val ix = index(keys)
-    val gone = ks.map(ix.catalyst).distinct.map(k => k -> ix.slotsOf(k)).filter(_._2.nonEmpty)
-    val emptied = empty + gone.map(_._2.length).sum
-    lazy val left = gone.foldLeft(slots) { case (s, (_, at)) => at.foldLeft(s)(_.updated(_, null)) }
-    if (gone.isEmpty) this
-    else if (2 * emptied > slots.length) LocalRows.internal(spark, schema, left.filter(_ != null))
-    else new LocalRows(spark, schema, left, emptied, None, Some(ix.removed(gone.map(_._1))))
+    val gone = ks.map(KeyIndex.catalyst(schema, keys, _)).distinct
+    val (at, ix) = find(keys, gone)
+    val emptied = empty + at.map(_.length).sum
+    lazy val left = at.foldLeft(slots)((s, is) => is.foldLeft(s)(_.updated(_, null)))
+    lazy val next = ix.map(_.removed(gone))
+    if (emptied == empty) this
+    else if (2 * emptied > slots.length) {
+      // slot i moves to the number of full slots before it
+      val to = left.iterator.scanLeft(0)((n, r) => if (r == null) n else n + 1).toArray
+      new LocalRows(spark, schema, left.filter(_ != null), 0, None, next.map(_.moved(to)), scans)
+    } else new LocalRows(spark, schema, left, emptied, None, next, scans)
   }
 
   /** These rows minus those matching `p`; the same rows when none
@@ -243,7 +267,18 @@ object LocalRows {
   def internal(spark: SparkSession, schema: StructType, rows: Vector[InternalRow],
                built: Option[DataFrame] = None): LocalRows = {
     install(spark)
-    new LocalRows(spark, schema, rows, 0, built, None)
+    new LocalRows(spark, schema, rows, 0, built, None, 0)
+  }
+
+  /** The rows of a frame that `owner` built: the local relation's data,
+    * through which [[Store.of]] finds `owner`, and its key index, again
+    * (a deserialized copy keeps only the rows). */
+  private[core] final class Data(@transient val owner: LocalRows, rows: Vector[InternalRow])
+      extends scala.collection.immutable.AbstractSeq[InternalRow]
+      with scala.collection.immutable.IndexedSeq[InternalRow] with Serializable {
+    def apply(i: Int): InternalRow = rows(i)
+    def length: Int = rows.length
+    override def iterator: Iterator[InternalRow] = rows.iterator
   }
 
   /** Add [[LocalFold]] to `spark`'s optimizer, once. */
@@ -262,16 +297,10 @@ final class KeyIndex private (val keys: Seq[String], types: IndexedSeq[DataType]
                               ords: IndexedSeq[Int],
                               map: TreeMap[IndexedSeq[Any], Vector[Int]]) {
 
-  /** External key values in Catalyst form, in the key columns' types. */
-  def catalyst(key: Seq[Any]): IndexedSeq[Any] = key.iterator.zip(types).map { case (v, t) =>
-    val l = Literal(v)
-    if (l.dataType == t) l.value
-    else Cast(l, t, Option(SQLConf.get.sessionLocalTimeZone)).eval()
-  }.toIndexedSeq
-
   def slotsOf(key: IndexedSeq[Any]): Vector[Int] = map.getOrElse(key, Vector.empty)
 
-  def from(key: IndexedSeq[Any]): Iterator[(IndexedSeq[Any], Vector[Int])] = map.iteratorFrom(key)
+  /** The slots of keys `key` and above, key by key in order. */
+  def from(key: IndexedSeq[Any]): Iterator[Vector[Int]] = map.valuesIteratorFrom(key)
 
   /** The index after `more` fill slots from `at` on (NULL: an emptied
     * slot). */
@@ -279,24 +308,63 @@ final class KeyIndex private (val keys: Seq[String], types: IndexedSeq[DataType]
     new KeyIndex(keys, types, ords, more.iterator.zipWithIndex.foldLeft(map) { case (m, (r, j)) =>
       if (r == null) m
       else {
-        val k = ords.indices.map(c => if (r.isNullAt(ords(c))) null else r.get(ords(c), types(c)))
+        val k = KeyIndex.keyOf(r, types, ords)
         m.updated(k, m.getOrElse(k, Vector.empty) :+ (at + j))
       }
     })
 
   /** The index without `ks`. */
   def removed(ks: Seq[IndexedSeq[Any]]): KeyIndex = new KeyIndex(keys, types, ords, map -- ks)
+
+  /** The index after slot i moves to `to(i)`: one pass, the map's shape
+    * kept. */
+  def moved(to: Array[Int]): KeyIndex =
+    new KeyIndex(keys, types, ords, map.transform((_, at) => at.map(to(_))))
 }
 
 object KeyIndex {
 
+  /** Single-key probes a version lineage with no index answers by a scan
+    * before it builds one: about what a build costs in scans (over 50,000
+    * rows, keyed on (pk, sk) strings or on a long id, a build took 12-15
+    * scans' time), so a lineage never pays more than twice what the
+    * cheaper of the two would have cost it. */
+  val ScansPerBuild = 12
+
   /** The index of `slots` (NULL: an emptied slot) in `schema` on `keys`. */
   def build(schema: StructType, keys: Seq[String], slots: Vector[InternalRow]): KeyIndex = {
-    val types = keys.map(schema(_).dataType).toIndexedSeq
-    val ords = keys.map(schema.fieldIndex).toIndexedSeq
+    val (types, ords) = columns(schema, keys)
     new KeyIndex(keys, types, ords, TreeMap.empty[IndexedSeq[Any], Vector[Int]](ordering(types)))
       .added(0, slots)
   }
+
+  /** The slots of `slots` whose `keys` equal `key` (Catalyst form), by
+    * one pass over them, in order. */
+  def scan(schema: StructType, keys: Seq[String], slots: Vector[InternalRow],
+           key: IndexedSeq[Any]): Vector[Int] = {
+    val (types, ords) = columns(schema, keys)
+    val each = types.map(TypeUtils.getInterpretedOrdering)
+    def holds(r: InternalRow): Boolean = ords.indices.forall { c =>
+      val y = key(c)
+      if (r.isNullAt(ords(c))) y == null else y != null && each(c).equiv(r.get(ords(c), types(c)), y)
+    }
+    slots.indices.filter(i => slots(i) != null && holds(slots(i))).toVector
+  }
+
+  /** External key values in Catalyst form, in the types of `schema`'s
+    * columns `keys`. */
+  def catalyst(schema: StructType, keys: Seq[String], key: Seq[Any]): IndexedSeq[Any] =
+    key.iterator.zip(keys).map { case (v, c) =>
+      val (l, t) = (Literal(v), schema(c).dataType)
+      if (l.dataType == t) l.value
+      else Cast(l, t, Option(SQLConf.get.sessionLocalTimeZone)).eval()
+    }.toIndexedSeq
+
+  private def columns(schema: StructType, keys: Seq[String]): (IndexedSeq[DataType], IndexedSeq[Int]) =
+    (keys.map(schema(_).dataType).toIndexedSeq, keys.map(schema.fieldIndex).toIndexedSeq)
+
+  private def keyOf(r: InternalRow, types: IndexedSeq[DataType], ords: IndexedSeq[Int]): IndexedSeq[Any] =
+    ords.indices.map(c => if (r.isNullAt(ords(c))) null else r.get(ords(c), types(c)))
 
   // column by column in each type's Spark ordering, NULL first
   private def ordering(types: IndexedSeq[DataType]): Ordering[IndexedSeq[Any]] = {
@@ -306,12 +374,9 @@ object KeyIndex {
         var j = 0
         var c = 0
         while (c == 0 && j < each.length) {
-          c = (a(j), b(j)) match {
-            case (null, null) => 0
-            case (null, _) => -1
-            case (_, null) => 1
-            case (x, y) => each(j).compare(x, y)
-          }
+          val x = a(j)
+          val y = b(j)
+          c = if (x == null) (if (y == null) 0 else -1) else if (y == null) 1 else each(j).compare(x, y)
           j += 1
         }
         c

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, StructsToJson}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -130,13 +130,13 @@ object DocStore {
     docs.withColumn("json", to_json(col(docCol)))
 
   /** [[hydrate]] for one held document: `doc`, a Catalyst value of
-    * `docType`, rendered by Spark's own `to_json` in `spark`'s session
-    * time zone, evaluated on the driver with no plan built (NULL for a
-    * NULL `doc`). */
-  def toJson(spark: SparkSession, doc: Any, docType: DataType): String = {
-    val tz = spark.conf.get("spark.sql.session.timeZone")
+    * `docType`, rendered by Spark's own `to_json` under `spark`'s SQL conf
+    * (its session time zone and JSON options), evaluated on the driver
+    * with no plan built (NULL for a NULL `doc`). */
+  def toJson(spark: SparkSession, doc: Any, docType: DataType): String = GraftBridge.withConf(spark) { conf =>
+    val tz = conf.sessionLocalTimeZone
     if (renderers.size > 256) renderers.clear()
-    val render = renderers.computeIfAbsent((docType, tz), _ => {
+    val render = renderers.computeIfAbsent((docType, tz, conf.getAllConfs), _ => {
       val e = StructsToJson(Map.empty, BoundReference(0, docType, nullable = true), Some(tz))
       require(e.checkInputDataTypes().isSuccess, s"to_json cannot render a ${docType.simpleString}")
       e.replacement
@@ -145,10 +145,11 @@ object DocStore {
     render.synchronized(Option(render.eval(InternalRow(doc))).map(_.toString).orNull)
   }
 
-  // `to_json` evaluators by doc type and time zone, a few per session: a
-  // fresh one sets up its JSON generator on first use, which costs more
-  // than the rendering
-  private val renderers = new java.util.concurrent.ConcurrentHashMap[(DataType, String), Expression]()
+  // `to_json` evaluators by doc type, time zone and SQL conf, a few per
+  // session: a fresh one reads its JSON options from the conf and sets up
+  // its JSON generator on first use, which costs more than the rendering
+  private val renderers =
+    new java.util.concurrent.ConcurrentHashMap[(DataType, String, Map[String, String]), Expression]()
 
   private final case class Seg(name: String, isArray: Boolean,
                                index: Option[Int] = None)

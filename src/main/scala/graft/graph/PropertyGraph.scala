@@ -24,11 +24,6 @@ import graft.core.Store
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
-  // the keyed stores whose frames `vertices` and `edges` are, when a
-  // mutation built this graph: a MERGE writes them, keeping their key
-  // indexes, instead of taking new stores over the frames
-  private var stores: Option[(Store, Store)] = None
-
   /** Edge frame normalized to carry the `eattrs` property map — callers
     * may supply bare (src, dst, rel) frames (the pre-edge-property shape,
     * and the natural hand-built fixture); they behave as all-empty maps. */
@@ -72,10 +67,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       Map("name" -> n, "label" -> l, "attrs" -> a) }
     val newE = es.distinctBy(t => (t._1, t._2, t._3)).map { case (s, d, r, a) =>
       Map("src" -> s, "dst" -> d, "rel" -> r, "eattrs" -> a) }
-    def merged(s: Store, keys: Seq[String], rows: Seq[Map[String, Any]]): Store =
-      if (rows.isEmpty) s else s.insertAbsent(keys, s.newRows(rows))
-    val (vStore, eStore) = stores.getOrElse((Store.of(vertices), Store.of(edgesN)))
-    PropertyGraph.of(merged(vStore, Seq("name"), newV), merged(eStore, Seq("src", "dst", "rel"), newE))
+    def merged(df: DataFrame, keys: Seq[String], rows: Seq[Map[String, Any]]): DataFrame = {
+      val s = Store.of(df)
+      s.insertAbsent(keys, s.newRows(rows)).frame
+    }
+    PropertyGraph(merged(vertices, Seq("name"), newV),
+      if (newE.isEmpty) edgesN else merged(edgesN, Seq("src", "dst", "rel"), newE))
   }
 
   def merge(cypher: String): PropertyGraph = Cypher.parse(cypher) match {
@@ -1065,10 +1062,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         vars.map(v => Cypher.Ret(v, None)), wheres))
       val del = vars.map(v => bound.select(col(v).as("name")))
         .reduce(_ unionByName _).distinct()
-      PropertyGraph.of(Store.of(vertices.join(del, Seq("name"), "left_anti")),
+      PropertyGraph(Store.of(vertices.join(del, Seq("name"), "left_anti")).frame,
         Store.of(edgesN.join(del.select(col("name").as("src")), Seq("src"), "left_anti")
           .join(del.select(col("name").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"), col("rel"), col("eattrs"))))
+          .select(col("src"), col("dst"), col("rel"), col("eattrs"))).frame)
     case Cypher.SetAttrs(chains, wheres, sets) =>
       sets.foreach { case (_, attr, _) =>
         require(attr != "name", "cannot SET the identity attribute 'name'") }
@@ -1086,7 +1083,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
                 map(lit(attr), lit(value))))
               .otherwise(col("attrs")).as("attrs"))
       }
-      PropertyGraph.of(Store.of(v2), stores.fold(Store.of(edges))(_._2))
+      PropertyGraph(Store.of(v2).frame, Store.of(edges).frame)
     case _ => throw new IllegalArgumentException(
       s"not a mutating statement: $stmt")
   }
@@ -1465,14 +1462,6 @@ object PropertyGraph {
     attrs.getOrElse("name",
       esc(label.getOrElse("")) + attrs.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${esc(k)}=${esc(v)}" }.mkString("{", ",", "}"))
-  }
-
-  /** The graph over the stores `vertices` and `edges`, which its later
-    * MERGEs write. */
-  private def of(vertices: Store, edges: Store): PropertyGraph = {
-    val g = PropertyGraph(vertices.frame, edges.frame)
-    g.stores = Some((vertices, edges))
-    g
   }
 
   def empty(spark: SparkSession): PropertyGraph = {

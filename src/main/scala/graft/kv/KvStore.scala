@@ -1,9 +1,11 @@
 package graft.kv
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualTo, Expression, GreaterThan,
+  GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate, StartsWith}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import graft.core.{LocalRows, Store}
 
 /** DynamoDB-style KV surface (SURVEY §2.9 D1-D5 + §2.1 S1-S3; the
@@ -17,9 +19,9 @@ import graft.core.{LocalRows, Store}
   * the driver, the reference's per-node dict, with a key index sorted on
   * (pk, sk) in Spark's string order ([[graft.core.KeyIndex]]). A
   * point read is an index lookup, and each of the five query shapes a
-  * slice of the index plus a residual prefix or bound test, returned as
-  * one local relation over its rows, already in order — no plan is
-  * optimized and no Spark job runs. A store over any other frame (parquet)
+  * slice of the index, tested with the shape's own Catalyst predicate and
+  * returned as one local relation over its rows, already in order — no
+  * plan is optimized and no Spark job runs. A store over any other frame (parquet)
   * answers the same reads as Catalyst filters and a sort: hash
   * partitioning on `pk` is the ring, and a pk-partitioned / sk-sorted
   * parquet layout gives partition pruning and row-group min/max pruning
@@ -32,7 +34,7 @@ import graft.core.{LocalRows, Store}
   * order, and `desc` reverses the whole order.
   */
 final class KvStore private (store: Store) {
-  import KvStore.{key, sorted, u}
+  import KvStore.{PK, SK, key, sorted, str}
 
   /** The store as a frame: for a session store, the one local relation
     * over its held rows. */
@@ -71,77 +73,62 @@ final class KvStore private (store: Store) {
   }
 
   /** D1 `query_begins`: pk exact + sk prefix (server.py:113-126). */
-  def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame = {
-    val (p, pre) = (u(pk), u(skPrefix))
-    range(col("pk") === pk && col("sk").startsWith(skPrefix), desc, p, pre)(
-      Seq(pk, skPrefix), (kp, ks) => kp == p && ks.startsWith(pre), (_, _) => true)
-  }
+  def queryBegins(pk: String, skPrefix: String, desc: Boolean = false): DataFrame =
+    range(desc, pk, skPrefix)(EqualTo(PK, str(pk)), StartsWith(SK, str(skPrefix)))()
 
   /** D2 `query_pk_sk_begins`: both pk and sk by prefix (server.py:128-140). */
-  def queryPkSkBegins(pkPrefix: String, skPrefix: String, desc: Boolean = false): DataFrame = {
-    val (pp, sp) = (u(pkPrefix), u(skPrefix))
-    range(col("pk").startsWith(pkPrefix) && col("sk").startsWith(skPrefix), desc, pp, sp)(
-      Seq(pkPrefix, null), (kp, _) => kp.startsWith(pp), (_, ks) => ks.startsWith(sp))
-  }
+  def queryPkSkBegins(pkPrefix: String, skPrefix: String, desc: Boolean = false): DataFrame =
+    range(desc, pkPrefix, null)(StartsWith(PK, str(pkPrefix)))(StartsWith(SK, str(skPrefix)))
 
   /** D3 `query_between`: pk exact + sk in [from, to] inclusive
     * (server.py:143-154; BST walk datastructures.py:25-31). Callers pass real
     * bounds — the reference's `~~` +∞ sentinel (hash-db.py:101) is not needed. */
-  def queryBetween(pk: String, skFrom: String, skTo: String, desc: Boolean = false): DataFrame = {
-    val (p, lo, hi) = (u(pk), u(skFrom), u(skTo))
-    range(col("pk") === pk && col("sk").between(skFrom, skTo), desc, p, lo, hi)(
-      Seq(pk, skFrom), (kp, ks) => kp == p && ks.compareTo(hi) <= 0, (_, _) => true)
-  }
+  def queryBetween(pk: String, skFrom: String, skTo: String, desc: Boolean = false): DataFrame =
+    range(desc, pk, skFrom)(EqualTo(PK, str(pk)), LessThanOrEqual(SK, str(skTo)))(
+      GreaterThanOrEqual(SK, str(skFrom)))
 
   /** D4 `both_between`: pk range × sk range (server.py:156-168). */
   def bothBetween(pkFrom: String, pkTo: String, skFrom: String, skTo: String,
-                  desc: Boolean = false): DataFrame = {
-    val (plo, phi, lo, hi) = (u(pkFrom), u(pkTo), u(skFrom), u(skTo))
-    range(col("pk").between(pkFrom, pkTo) && col("sk").between(skFrom, skTo), desc,
-      plo, phi, lo, hi)(Seq(pkFrom, null), (kp, _) => kp.compareTo(phi) <= 0,
-      (_, ks) => ks.compareTo(lo) >= 0 && ks.compareTo(hi) <= 0)
-  }
+                  desc: Boolean = false): DataFrame =
+    range(desc, pkFrom, null)(LessThanOrEqual(PK, str(pkTo)))(GreaterThanOrEqual(PK, str(pkFrom)),
+      GreaterThanOrEqual(SK, str(skFrom)), LessThanOrEqual(SK, str(skTo)))
 
   /** D5 `query_before_than` (hash-db.py:71-76). */
   def queryBeforeThan(pk: String, skPrefix: String, bound: String,
-                      desc: Boolean = false): DataFrame = {
-    val (p, pre, b) = (u(pk), u(skPrefix), u(bound))
-    range(col("pk") === pk && col("sk").startsWith(skPrefix) && col("sk") < bound, desc,
-      p, pre, b)(Seq(pk, skPrefix),
-      (kp, ks) => kp == p && ks.startsWith(pre) && ks.compareTo(b) < 0, (_, _) => true)
-  }
+                      desc: Boolean = false): DataFrame =
+    range(desc, pk, skPrefix)(EqualTo(PK, str(pk)), StartsWith(SK, str(skPrefix)),
+      LessThan(SK, str(bound)))()
 
   /** D5 `query_greater_than` (hash-db.py:78-83). */
   def queryGreaterThan(pk: String, skPrefix: String, bound: String,
-                       desc: Boolean = false): DataFrame = {
-    val (p, pre, b) = (u(pk), u(skPrefix), u(bound))
-    range(col("pk") === pk && col("sk").startsWith(skPrefix) && col("sk") > bound, desc,
-      p, pre, b)(Seq(pk, skPrefix), (kp, ks) => kp == p && ks.startsWith(pre),
-      (_, ks) => ks.compareTo(b) > 0)
-  }
+                       desc: Boolean = false): DataFrame =
+    range(desc, pk, skPrefix)(EqualTo(PK, str(pk)), StartsWith(SK, str(skPrefix)))(
+      GreaterThan(SK, str(bound)))
 
-  // A read shape. Over a plan: the filter `cond`, sorted. Over held rows:
-  // the index slice from key `start` on while `more` holds of a key
-  // (pk, sk), its rows whose key `keep` also holds, sorted on the driver
-  // — the same rows as `cond`'s. A NULL argument in `args` matches no
-  // row, as in `cond`; so does a NULL sk (a NULL pk sorts before any
-  // start).
-  private def range(cond: Column, desc: Boolean, args: UTF8String*)(
-      start: Seq[String], more: (UTF8String, UTF8String) => Boolean,
-      keep: (UTF8String, UTF8String) => Boolean): DataFrame = store.rows match {
-    case None => sorted(df.filter(cond), desc)
-    case Some(held) =>
-      val hits = if (args.contains(null)) Vector.empty
-        else held.from(key, start).map { case (k, r) => (k(0).asInstanceOf[UTF8String],
-          k(1).asInstanceOf[UTF8String], r) }
-          .takeWhile { case (kp, ks, _) => more(kp, ks) }
-          .filter { case (kp, ks, _) => ks != null && keep(kp, ks) }.toVector
-      val asc = hits.sortWith { case ((p1, s1, _), (p2, s2, _)) =>
-        val c = s1.compareTo(s2)
-        c < 0 || (c == 0 && p1.compareTo(p2) < 0)
-      }.map(_._3)
-      GraftBridge.localFrame(held.spark, held.schema, if (desc) asc.reverse else asc)
-  }
+  // A read shape: the rows where the conjuncts `stop` and `rest` hold,
+  // ordered by sk. Over a plan: their filter, sorted. Over held rows: the
+  // index walked from key (pk, sk) `start` while `stop` holds, which it
+  // does of every row the shape reads and of no key after the first it
+  // fails, kept where `rest` holds, sorted on the driver. Both paths
+  // evaluate the same Catalyst tests, so a NULL argument or key matches
+  // no row in either, and every row read has a pk and an sk.
+  private def range(desc: Boolean, start: String*)(stop: Expression*)(rest: Expression*): DataFrame =
+    store.rows match {
+      case None => sorted(df.filter(GraftBridge.column((stop ++ rest).reduce(And))), desc)
+      case Some(held) =>
+        val schema = held.schema
+        def test(es: Seq[Expression]) = Predicate.createInterpreted(
+          es.foldLeft(Literal.TrueLiteral: Expression)(And).transform { case a: UnresolvedAttribute =>
+            BoundReference(schema.fieldIndex(a.name), schema(a.name).dataType, nullable = true)
+          })
+        val (more, keep) = (test(stop), test(rest))
+        val (p, s) = (schema.fieldIndex("pk"), schema.fieldIndex("sk"))
+        val asc = held.from(key, start).takeWhile(more.eval).filter(keep.eval).toVector.sortWith { (a, b) =>
+          val c = a.getUTF8String(s).compareTo(b.getUTF8String(s))
+          c < 0 || (c == 0 && a.getUTF8String(p).compareTo(b.getUTF8String(p)) < 0)
+        }
+        GraftBridge.localFrame(held.spark, schema, if (desc) asc.reverse else asc)
+    }
 
   /** S7 full dump. */
   def dump(): DataFrame = df
@@ -161,7 +148,10 @@ object KvStore {
 
   private val key = Seq("pk", "sk")
 
-  private def u(s: String): UTF8String = UTF8String.fromString(s)
+  private val PK = UnresolvedAttribute("pk")
+  private val SK = UnresolvedAttribute("sk")
+
+  private def str(v: String): Expression = Literal.create(v, StringType)
 
   // sk order, ties in pk order; `desc` reverses both
   private def sorted(d: DataFrame, desc: Boolean): DataFrame =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` API — the one place the engine
@@ -17,6 +18,8 @@ import org.apache.spark.sql.types.StructType
   *  - a DataFrame over a local relation whose rows are already in Catalyst
   *    form ([[graft.core.LocalRows]]), so a driver-held row store builds
   *    its frame without converting or copying a row;
+  *  - a session's SQL conf, to evaluate an expression on the driver
+  *    under it ([[graft.doc.DocStore.toJson]]);
   *  - for the driver-side fold of local plans ([[graft.core.LocalFold]]):
   *    a frame planned afresh (a new `QueryExecution`), and the NaN/-0.0
   *    normalization the hash aggregate applies to floating-point grouping
@@ -30,9 +33,19 @@ object GraftBridge {
     * than a key-index read. */
   def localFrame(spark: SparkSession, schema: StructType,
                  rows: Seq[InternalRow]): DataFrame = {
-    val relation = LocalRelation(DataTypeUtils.toAttributes(schema), rows.toVector)
+    val relation = LocalRelation(DataTypeUtils.toAttributes(schema), rows match {
+      case held: scala.collection.immutable.IndexedSeq[InternalRow] => held
+      case _ => rows.toVector
+    })
     relation.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], relation)
+  }
+
+  /** `f` of `spark`'s SQL conf, run with that conf as the one
+    * `SQLConf.get` reads, whichever session is active. */
+  def withConf[T](spark: SparkSession)(f: SQLConf => T): T = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    SQLConf.withExistingConf(conf)(f(conf))
   }
 
   def planAfresh(df: DataFrame): QueryExecution =

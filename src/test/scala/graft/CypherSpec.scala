@@ -432,6 +432,16 @@ class CypherSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("20"))
     intercept[IllegalArgumentException](
       g.execute("match (p:Person) set p.name = 'x'"))
+    // a caller's bare (src, dst, rel) edge frame: a MERGE after a SET
+    // keeps its new edge's properties
+    import spark.implicits._
+    val bare = PropertyGraph(
+      Seq(("x", "N", Map.empty[String, String])).toDF("name", "label", "attrs"),
+      Seq(("x", "x", "SELF")).toDF("src", "dst", "rel"))
+      .execute("match (n:N) set n.k = 'v'")
+      .merge("merge (x:N {name: 'x'})-[:R {w: '1'}]->(y:N {name: 'y'})")
+    assert(bare.query("match (a)-[:R {w: '1'}]->(b) return a, b")
+      .as[(String, String)].collect().toSeq == Seq(("x", "y")))
   }
 
   test("shortestPath: anchored BFS, band filter, target filters, length(p)") {

@@ -3,12 +3,13 @@ package graft
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.core.GraftCatalog
+import graft.core.{GraftCatalog, KeyIndex, LocalRows, Store}
 import graft.sql.HashQL
 
 /** The driver-held row store behind `HashDb`'s session writes
@@ -319,6 +320,45 @@ class SessionStoreSpec extends SparkSpec {
       countSeen()
       assert(seen.toArray.toSeq == Seq("count"), s"query executions: $seen")
     } finally spark.listenerManager.unregister(listener)
+
+    // held rows render under the session's JSON options, as a plan does,
+    // also after a rendering under other options
+    spark.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
+    try {
+      assert(db.getDocument("held", 1).exists(_.contains("\"c\":null")))
+      (0L to 6L).foreach(id => assert(db.getDocument("held", id) == db.getDocument("packed", id), s"id $id"))
+    } finally spark.conf.unset("spark.sql.jsonGenerator.ignoreNullFields")
+    assert(db.getDocument("held", 1).contains("""{"a":1.5,"b":1.0}"""))
+  }
+
+  test("a store's own frame gives back its rows; keyed ops after a SQL DELETE read the model") {
+    val schema = StructType(Seq(StructField("k", StringType), StructField("v", StringType)))
+    val s = Store(LocalRows(spark, schema, Seq(Row("a", "1"), Row("b", "2"))))
+      .upsert(Seq("k"), LocalRows(spark, schema, Seq(Row("a", "3"))))
+    assert(Store.of(s.frame).rows.exists(_ eq s.rows.get))
+    assert(!Store.of(s.frame.select("k", "v")).rows.exists(_ eq s.rows.get))
+
+    // a DELETE leaves rows with no key index: the keyed ops after it scan,
+    // then build one
+    val db = new HashDb(spark)
+    val docs = mutable.Map.empty[Long, String]
+    (1L to 60L).foreach { id => docs(id) = s"""{"n":$id}"""; db.saveDocument("c", id, docs(id)) }
+    // SQL gives id 1 a second row; the first stored wins a get
+    db.sql("insert into c (tag) values ('t')")
+    assert(db.catalog.table("c").filter($"id" === 1L).count() == 2)
+    val rnd = new Random(5)
+    (1 to 3).foreach { round =>
+      db.sql(s"delete from c where id % 7 = $round")
+      docs.keys.filter(_ % 7 == round).foreach(docs.remove)
+      (1 to 3 * KeyIndex.ScansPerBuild).foreach { k =>
+        val id = 1L + rnd.nextInt(70)
+        if (k % 3 == 0) {
+          docs(id) = s"""{"n":$k}"""
+          db.saveDocument("c", id, docs(id))
+        }
+        assert(db.getDocument("c", id) == docs.get(id), s"round $round, op $k, id $id")
+      }
+    }
   }
 
   test("a 50,000-write session reads its model, and its last ops are as fast as its first") {
