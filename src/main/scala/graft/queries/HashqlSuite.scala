@@ -485,6 +485,17 @@ object HashqlSuite extends Suite {
              |FROM customer GROUP BY c_nationkey
              |HAVING count(*) >= 30 AND max(c_acctbal) < 9990""".stripMargin)),
 
+    // HAVING is WHERE's predicate grammar over the aggregated frame: OR,
+    // BETWEEN, and an aggregate the select list does not project (it
+    // joins the same aggregation pass hidden and drops after the filter).
+    "hashql_having_or_between" -> Q(
+      (s, d) => run(s, d,
+        "select count(*) from customer group by customer.c_nationkey " +
+          "having min(customer.c_custkey) between 10 and 40 or count(*) < 5"),
+      Some("""SELECT c_nationkey, count(*) AS cnt
+             |FROM customer GROUP BY c_nationkey
+             |HAVING min(c_custkey) BETWEEN 10 AND 40 OR count(*) < 5""".stripMargin)),
+
     // DELETE (dialect growth; the reference clears KV ranges,
     // client.py:204-212, but has no SQL DELETE): example.py people replay,
     // the 29-year-olds deleted, survivors selected. Copy-on-write
@@ -1971,6 +1982,21 @@ object HashqlSuite extends Suite {
              |    ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rn
              |FROM orders WHERE o_orderkey <= 2000
              |QUALIFY rn <= 2""".stripMargin)),
+
+    // QUALIFY takes the same grammar: the first and third order per
+    // customer, an OR over the window output.
+    "hashql_qualify_or" -> Q(
+      (s, d) => run(s, d,
+        "select orders.o_custkey, orders.o_orderkey, " +
+          "row_number() over (partition by orders.o_custkey " +
+          "order by orders.o_totalprice desc, orders.o_orderkey) as rn " +
+          "from orders where orders.o_orderkey <= 2000 " +
+          "qualify rn = 1 or rn = 3"),
+      Some("""SELECT o_custkey, o_orderkey,
+             |  CAST(row_number() OVER (PARTITION BY o_custkey
+             |    ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rn
+             |FROM orders WHERE o_orderkey <= 2000
+             |QUALIFY rn = 1 OR rn = 3""".stripMargin)),
 
     // ORDER BY over expressions (round-11): sort keys run the full
     // scalar grammar over output columns; the trailing unique key keeps

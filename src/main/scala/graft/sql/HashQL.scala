@@ -68,9 +68,11 @@ import graft.fts.Fts
   *            [and|or …, AND over OR, parens group]]
   *     [group by t.f | <alias> | <expr> [, …]]   // a bare <expr> key
   *       // auto-projects under a reserved name and strips from output
-  *     [having count(*)|sum(t.f)|…|alias  =|<|>|<=|>=  v | <expr> [and …]]
-  *       // an aggregate spelled here needn't be projected (round 12)
-  *     [qualify <window alias|output>  =|<|>|<=|>=  v | <expr> [and …]]
+  *     [having <pred>]   // WHERE's grammar over the aggregated frame's
+  *       // output columns (a bare word is an output column, not a
+  *       // string); an aggregate call here needn't be projected
+  *     [qualify <pred>]  // the same over the windowed frame; an inline
+  *       // row_number()|rank()|…|ntile(n) over (…) is a window head
   *     [order by <expr> [asc|desc] [, …]] [limit n] [offset m]
   *   select … union [all] select … [union [all] select …]*
   *   create table t as select …[ union …]
@@ -685,16 +687,16 @@ object HashQL {
     * is Or(And(a,b), c). */
   final case class And(ps: Seq[Pred]) extends Pred
   final case class Or(ps: Seq[Pred]) extends Pred
-  /** `t.f in (select u.g from u [where …])` — membership against a
-    * one-column subquery, planned as a LEFT SEMI join (`not in (…)` as
-    * LEFT ANTI, i.e. NOT-EXISTS semantics — a null-producing subquery
-    * does not veto every row the way ANSI NOT IN does; the oracle
-    * mirrors with NOT EXISTS). Valid only as a top-level WHERE conjunct:
-    * a membership test under OR/parens would need a general subquery
-    * planner for one dialect corner — rejected at execution with a clear
-    * message. Dialect growth (the reference has no subqueries,
-    * server.py:456-476). */
-  final case class InSelect(ref: ColRef, sub: Select) extends Pred
+  /** `<expr> in (select u.g from u [where …])` — membership of a plain or
+    * computed head (`t.f`, `year(t.d)`, `sum(t.x)` in HAVING) against a
+    * one-column subquery, planned as a LEFT SEMI join keyed on the head
+    * (`not in (…)` as LEFT ANTI, i.e. NOT-EXISTS semantics — a
+    * null-producing subquery does not veto every row the way ANSI NOT IN
+    * does; the oracle mirrors with NOT EXISTS). A top-level conjunct
+    * plans as that join; under OR or NOT it becomes a flag join (see
+    * [[flaggedFilter]]). Dialect growth (the reference has no
+    * subqueries, server.py:456-476). */
+  final case class InSelect(e: Expr, sub: Select) extends Pred
   /** `(a, b) in (select x, y from …)` (round-15 — the multi-key
     * membership test, the composite-key dedup/decontamination idiom):
     * ONE semi join on ALL the key pairs as a WHERE conjunct, one flag
@@ -706,12 +708,6 @@ object HashQL {
       extends Pred {
     require(refs.length >= 2, "a tuple IN needs two or more columns")
   }
-  /** `<expr> in (select …)` — membership of a COMPUTED head (round-12:
-    * `where year(t.d) in (select …)`): same LEFT SEMI plan as
-    * [[InSelect]] (NOT → LEFT ANTI), keyed on the computed column —
-    * still one broadcastable probe. Top-level-conjunct or flag-join
-    * under OR, exactly like the plain-ref form. */
-  final case class InSelectExpr(e: Expr, sub: Select) extends Pred
   /** `[not] exists (select … from u [join …] [where …])` — correlated
     * existence test, the most common subquery form after IN. Correlation
     * rides in the subquery WHERE as [[ColEq]] conjuncts referencing an
@@ -723,12 +719,15 @@ object HashQL {
     * other subquery forms. Dialect growth (no subqueries in the
     * reference). */
   final case class ExistsSelect(sub: Select) extends Pred
-  /** `t.f <op> (select <agg> from u [where …])` — comparison against a
-    * SCALAR subquery (must produce exactly one row and one column: a
-    * global aggregate). Planned as a broadcast cross-join of the 1-row
-    * frame + a filter — the "above the average" idiom. Top-level-conjunct
-    * only, like [[InSelect]]. Dialect growth. */
-  final case class CmpSelect(ref: ColRef, op: String, sub: Select) extends Pred
+  /** `<expr> <op> (select <agg> from u [where …])` — comparison of a
+    * plain or computed head (`t.f`, `year(t.d)`, `sum(t.x)` in HAVING —
+    * the direct TPC-H Q11 spelling) against a SCALAR subquery (must
+    * produce exactly one row and one column: a global aggregate).
+    * Planned as a broadcast cross-join of the 1-row frame + a filter —
+    * the "above the average" idiom — or, correlated through `u.k = t.k`
+    * conjuncts, as a decorrelated left join (see [[scalarCompare]]).
+    * Dialect growth. */
+  final case class CmpSelect(e: Expr, op: String, sub: Select) extends Pred
   /** `t.a <op> any|all ( select u.v from u [where …] )` (round-13) — the
     * ANSI QUANTIFIED comparison. The subquery projects ONE column
     * (plain or computed). The lowering never joins row-to-row: the
@@ -775,33 +774,6 @@ object HashQL {
     * `TABLESAMPLE BERNOULLI` semantics without the nondeterminism.
     * Scan-side filter: at 100 TB this is a sampling pass at I/O rate. */
   final case class SampleBucket(ref: ColRef, permille: Int) extends Pred
-
-  /** HAVING conjunct: `column` addresses an OUTPUT column of the
-    * aggregated frame — the auto-alias of an agg call (`cnt`, `sum_x`) or
-    * a grouping column; the parser maps `count(*)`/`sum(t.f)`/… spellings
-    * to those aliases, so `having count(*) > 2` and `having cnt > 2` are
-    * the same predicate.
-    *
-    * `value` (round-12 growth): a literal, or a FULL scalar [[Expr]] over
-    * output columns — `having sum_x > cnt * 2`, `qualify rn <= n / 10`.
-    *
-    * `agg` (round-12 growth — the TPC-H Q18 idiom): when the target was
-    * SPELLED as an aggregate call (`having sum(t.f) > 300`), the parsed
-    * call rides along so a grouped select can compute it even when the
-    * select list does NOT project it — the executor adds it to the same
-    * agg pass under its auto-alias and drops it after the filter. */
-  final case class HavingPred(column: String, op: String, value: Any,
-                              agg: Option[SelectItem] = None)
-  /** A scalar-subquery RHS inside [[HavingPred.value]] (round-13) —
-    * `having sum(x) > ( select sum(x) * 0.0001 from … )`, the TPC-H Q11
-    * idiom spelled DIRECTLY. Lowered through the same [[scalarCompare]]
-    * broadcast plan as WHERE-side scalars (plan-only — EXPLAIN never
-    * executes it); the subquery is a global aggregate (1 row
-    * structurally), uncorrelated — the aggregated frame has no table
-    * names left to correlate against. CREATE AGG VIEW rejects HAVING
-    * wholesale (its bare-grouped-aggregation contract), subquery values
-    * included. */
-  final case class SubVal(sub: Select)
 
   sealed trait Stmt
   /** Multi-row INSERT (growth): `values (…), (…), …` — each row commits
@@ -1092,7 +1064,14 @@ object HashQL {
   final case class Select(items: Seq[SelectItem], table: String,
                           joins: Seq[JoinClause], wheres: Seq[Pred],
                           groupBy: Seq[ColRef],
-                          having: Seq[HavingPred] = Nil,
+                          // `having <pred>`: WHERE's predicates over the
+                          // aggregated frame's OUTPUT columns (a bare
+                          // word is one), top-level conjuncts. An
+                          // aggregate call reads the projected item
+                          // computing the same aggregate, or joins the
+                          // aggregation pass hidden (TPC-H Q18's
+                          // `having sum(l_quantity) > 300`)
+                          having: Seq[Pred] = Nil,
                           // sort keys are full scalar EXPRESSIONS over
                           // output columns (round-11 growth — `order by
                           // length(t.name) desc`); a bare ECol keeps the
@@ -1105,14 +1084,14 @@ object HashQL {
                           limit: Option[Int] = None,
                           distinct: Boolean = false,
                           offset: Option[Int] = None,
-                          // `qualify <output> op literal [and …]` —
-                          // post-window filtering (round-11; DuckDB's
-                          // QUALIFY): conjuncts over window aliases /
-                          // output columns, applied AFTER the windows
-                          // compute and before DISTINCT/ORDER BY. The
+                          // `qualify <pred>` — post-window filtering
+                          // (round-11; DuckDB's QUALIFY): HAVING's
+                          // predicates over the windowed frame's output
+                          // columns, applied AFTER the windows compute
+                          // and before DISTINCT/ORDER BY. The
                           // grouped-top-k idiom: `qualify rn <= 3`.
                           // Requires a window call in the select.
-                          qualify: Seq[HavingPred] = Nil,
+                          qualify: Seq[Pred] = Nil,
                           // `from <table> <alias>` / `join <table> <alias>`
                           // (round-12 growth — SELF-JOINS): (alias, real
                           // table) pairs; `table`/JoinClause.table hold
@@ -1357,11 +1336,10 @@ object HashQL {
     case FtsMatch(r, q) => FtsMatch(k.ref(r), q)
     case And(ps) => And(ps.map(k.pred))
     case Or(ps) => Or(ps.map(k.pred))
-    case InSelect(r, s) => InSelect(k.ref(r), k.sub(s))
+    case InSelect(e, s) => InSelect(k.expr(e), k.sub(s))
     case InSelectTuple(rs, s) => InSelectTuple(rs.map(k.ref), k.sub(s))
-    case InSelectExpr(e, s) => InSelectExpr(k.expr(e), k.sub(s))
     case ExistsSelect(s) => ExistsSelect(k.sub(s))
-    case CmpSelect(r, op, s) => CmpSelect(k.ref(r), op, k.sub(s))
+    case CmpSelect(e, op, s) => CmpSelect(k.expr(e), op, k.sub(s))
     case QuantCmp(r, op, q, s) => QuantCmp(k.ref(r), op, q, k.sub(s))
     case CmpNotTrue(i, op, o) => CmpNotTrue(k.ref(i), op, k.ref(o))
     case Not(x) => Not(k.pred(x))
@@ -1405,19 +1383,14 @@ object HashQL {
   }
 
   /** Map every reference-holding field of a SELECT: items, join keys and
-    * ON extras, WHERE, GROUP BY and grouping sets, HAVING/QUALIFY
-    * aggregates, UNNEST expressions and lateral bodies (as subqueries)
-    * through `k`; the fields that address OUTPUT columns — ORDER BY and
-    * DISTINCT ON keys, HAVING/QUALIFY values — through `out`. Derived
-    * bodies are self-contained and stay as they are. */
-  private[graft] def mapSelect(s: Select, k: Kids, out: Kids): Select = {
-    def having(h: HavingPred): HavingPred = h.copy(
-      value = h.value match {
-        case e: Expr => out.expr(e)
-        case SubVal(b) => SubVal(out.sub(b))
-        case v => v
-      },
-      agg = h.agg.map(mapItem(_, k)))
+    * ON extras, WHERE, GROUP BY and grouping sets, UNNEST expressions and
+    * lateral bodies (as subqueries) through `k`; the fields that address
+    * OUTPUT columns — HAVING and QUALIFY, ORDER BY and DISTINCT ON keys —
+    * through `out`. An aggregate call's argument inside HAVING/QUALIFY
+    * reads input rows, as [[refsOf]]'s `outputSide` sees it, so an `out`
+    * that differs from `k` maps it through `k` ([[rewriteAliases]]).
+    * Derived bodies are self-contained and stay as they are. */
+  private[graft] def mapSelect(s: Select, k: Kids, out: Kids): Select =
     s.copy(items = s.items.map(mapItem(_, k)),
       joins = s.joins.map(j => j.copy(l = k.ref(j.l), r = k.ref(j.r),
         extra = j.extra.map { case (l, op, rhs) =>
@@ -1425,13 +1398,12 @@ object HashQL {
       wheres = s.wheres.map(k.pred),
       groupBy = s.groupBy.map(k.ref),
       groupSets = s.groupSets.map(_.map(k.ref)),
-      having = s.having.map(having),
-      qualify = s.qualify.map(having),
+      having = s.having.map(out.pred),
+      qualify = s.qualify.map(out.pred),
       orderBy = s.orderBy.map { case (e, d, nf) => (out.expr(e), d, nf) },
       distinctOn = s.distinctOn.map(out.ref),
       laterals = s.laterals.map { case (n, b, o) => (n, k.sub(b), o) },
       unnests = s.unnests.map { case (n, c, e) => (n, c, k.expr(e)) })
-  }
 
   /** Kids that rewrite top-down at every depth: where `expr`/`pred` is
     * defined its result replaces the node (and is not descended into);
@@ -2181,11 +2153,14 @@ object HashQL {
       else comparison(exprTree())
 
     /** The ONE comparison grammar (see [[Cmp]]): any head — a plain ref,
-      * a doc-path, a computed expression, a lambda variable — then one
-      * operator switch. WHERE, CASE conditions and list_filter bodies all
-      * parse here. The subquery arms (quantified, scalar, IN-select over a
-      * plain ref) and FTS `~` key on a column, so they need a plain-ref
-      * head, as their lowerings do. */
+      * a doc-path, a computed expression, an aggregate call in HAVING, a
+      * lambda variable — then one operator switch. WHERE, HAVING, QUALIFY,
+      * CASE conditions and list_filter bodies all parse here. The
+      * IN-select and scalar-subquery arms ([[InSelect]], [[CmpSelect]])
+      * take any head. Two arms keep a plain-ref head: the quantified
+      * comparisons ([[QuantCmp]] — the non-equality-correlated rewrite
+      * builds [[CmpNotTrue]] over two columns) and FTS `~` ([[FtsMatch]]
+      * tokenizes one column). */
     private def comparison(head: Expr): Pred = {
       def refHead(form: String): ColRef = head match {
         case ECol(r) => r
@@ -2258,16 +2233,15 @@ object HashQL {
                     s"table(s) ${foreign.mkString(", ")} — spell the " +
                     "shape through EXISTS (exists (select 1 from … " +
                     "where inner.k = outer.k and inner.v = outer.v))")
-                if (o == "=") InSelect(ref, sub)
-                else Not(InSelect(ref, sub))
+                if (o == "=") InSelect(head, sub)
+                else Not(InSelect(head, sub))
               case _ => QuantCmp(ref, o, q, sub)
             }
           }
-          // `t.a <op> (select <agg> …)` — the scalar-subquery comparison
-          // (round-9 growth; `<>` is the same broadcast-compare plan,
-          // negated)
-          else if (subqueryNext)
-            CmpSelect(refHead(s"$o (select …)"), o, subquery())
+          // `<expr> <op> (select <agg> …)` — the scalar-subquery
+          // comparison (round-9 growth; `<>` is the same broadcast-compare
+          // plan, negated)
+          else if (subqueryNext) CmpSelect(head, o, subquery())
           else {
             // a computed head compares with a full expression, where a
             // bare word is a column (`sum_v * 2 > cnt` over a grouped
@@ -2282,13 +2256,8 @@ object HashQL {
           val lo = operand(); kw("and"); val hi = operand()
           And(Seq(Cmp(head, ">=", lo), Cmp(head, "<=", hi)))
         case "in" =>
-          if (subqueryNext) {
-            val sub = subquery()
-            head match {
-              case ECol(r) => InSelect(r, sub)
-              case e => InSelectExpr(e, sub)
-            }
-          } else {
+          if (subqueryNext) InSelect(head, subquery())
+          else {
             kw("(")
             val vs = scala.collection.mutable.ArrayBuffer(operand())
             while (is(",")) { next(); vs += operand() }
@@ -2308,15 +2277,34 @@ object HashQL {
     /** Lambda variables in scope while a list lambda's body parses. */
     private var lambdaVars: List[String] = Nil
 
+    /** Set while a HAVING or QUALIFY clause parses: its predicates
+      * address output columns, so a bare word on either side of a
+      * comparison is one (`having s > c * 2`, `qualify rn <= n - 1`). */
+    private var outputSide = false
+    /** While a QUALIFY clause parses: its select's item list, which an
+      * inline window head joins (see [[qualifyWindow]]). */
+    private var qualifyItems: Option[scala.collection.mutable.ArrayBuffer[SelectItem]] = None
+
+    /** Parse `body` with the clause state above set; a nested select
+      * parses with it cleared and the enclosing clause's restored after. */
+    private def inClause[T](output: Boolean,
+                            qualify: Option[scala.collection.mutable.ArrayBuffer[SelectItem]])
+                           (body: => T): T = {
+      val saved = (outputSide, qualifyItems)
+      outputSide = output; qualifyItems = qualify
+      try body finally { outputSide = saved._1; qualifyItems = saved._2 }
+    }
+
     /** A comparison's right-hand operand: the expression grammar, except
       * that a bare word keeps [[literal]]'s meaning — a string (`t.name =
       * alice`), not an output column — unless it names a lambda variable
       * in scope; bare NULL rejects there too. Typed temporals (`date
-      * '…'`) are the same literal either way. The right of `= <> < > <=
-      * >=` after a computed head is the one exception: a full expression
-      * (see [[comparison]]). */
+      * '…'`) are the same literal either way. Two exceptions take a full
+      * expression, where a bare word is a column: the right of `= <> < >
+      * <= >=` after a computed head (see [[comparison]]), and every
+      * operand in HAVING and QUALIFY. */
     private def operand(): Expr = {
-      val bareWord = peek.matches("[A-Za-z_][A-Za-z0-9_]*") &&
+      val bareWord = !outputSide && peek.matches("[A-Za-z_][A-Za-z0-9_]*") &&
         peekAt(1) != "(" && !peekAt(1).startsWith("'") && !is("case") &&
         !lambdaVars.contains(peek)
       if (bareWord) ELit(literal()) else exprTree()
@@ -2371,7 +2359,7 @@ object HashQL {
       }
     }
 
-    private def selectRest(): Select = {
+    private def selectRest(): Select = inClause(output = false, None) {
       // `select distinct …` — set semantics over the projected rows;
       // `select distinct on (k…) …` (round-13) — first-row-per-key
       // instead (Postgres/DuckDB), validated against ORDER BY below
@@ -3248,7 +3236,7 @@ object HashQL {
               "are unknown until execution)")
           val ks = items.toSeq.collect {
             case Field(r) => r
-            case ExprItem(e, a) if aggNodes(e).isEmpty => ColRef("", a)
+            case ExprItem(e, a) if aggNodes(_.expr(e)).isEmpty => ColRef("", a)
           }
           require(ks.nonEmpty,
             "GROUP BY ALL found no non-aggregate select items to group by")
@@ -3295,21 +3283,9 @@ object HashQL {
           gs.toSeq
         }
       } else Nil
-      val having = if (is("having")) {
-        next()
-        val hs = scala.collection.mutable.ArrayBuffer.empty[HavingPred]
-        var m = true
-        while (m) {
-          val (target, agg) = havingTarget()
-          val op = next() match {
-            case o @ ("=" | "<" | ">" | "<=" | ">=" | "<>") => o
-            case o => throw new IllegalArgumentException(s"unsupported having op: $o")
-          }
-          hs += HavingPred(target, op, havingValue(), agg)
-          if (is("and")) next() else m = false
-        }
-        hs.toSeq
-      } else Nil
+      val having =
+        if (is("having")) { next(); inClause(output = true, None)(preds()) }
+        else Nil
       // WINDOW clause (round-13): `window w as ( partition by … order
       // by … [frame] ) [, w2 as ( … )]` — named reusable window specs;
       // every `over w` reference substitutes here (validations run per
@@ -3330,48 +3306,12 @@ object HashQL {
           if (is(",")) next() else moreW = false
         }
       }
-      // QUALIFY (round-11): window-output conjuncts, HAVING's grammar
-      // over the post-window frame; windows-required is checked at
-      // lowering (where the item list is interpreted)
-      val qualify = if (is("qualify")) {
-        next()
-        val qs = scala.collection.mutable.ArrayBuffer.empty[HavingPred]
-        var m = true
-        var qwi = 0
-        while (m) {
-          // INLINE window calls (round-13): `qualify row_number() over
-          // (…) <= 3` without projecting the rank — the call joins the
-          // item list under a RESERVED alias the executor drops right
-          // after the QUALIFY filter runs; `over w` names compose (the
-          // clause resolves below, after QUALIFY parses)
-          val target: String =
-            if (Seq("row_number", "rank", "dense_rank", "percent_rank",
-                "cume_dist").exists(is) && peekAt(1) == "(") {
-              val fn = next().toLowerCase; kw("("); kw(")")
-              val w = windowSpec(fn, None)
-              val nm = s"graft_qw$qwi"; qwi += 1
-              items += w.copy(alias = Some(nm))
-              nm
-            } else if (is("ntile") && peekAt(1) == "(") {
-              next(); kw("(")
-              val t = next()
-              require(t.matches("[0-9]+") && t.toInt > 0,
-                s"ntile expects a positive bucket count, got $t")
-              kw(")")
-              val w = windowSpec("ntile", None, buckets = Some(t.toInt))
-              val nm = s"graft_qw$qwi"; qwi += 1
-              items += w.copy(alias = Some(nm))
-              nm
-            } else havingTarget()._1
-          val op = next() match {
-            case o @ ("=" | "<" | ">" | "<=" | ">=" | "<>") => o
-            case o => throw new IllegalArgumentException(s"unsupported qualify op: $o")
-          }
-          qs += HavingPred(target, op, havingValue())
-          if (is("and")) next() else m = false
-        }
-        qs.toSeq
-      } else Nil
+      // QUALIFY (round-11): HAVING's predicates over the post-window
+      // frame; windows-required is checked at lowering (where the item
+      // list is interpreted)
+      val qualify =
+        if (is("qualify")) { next(); inClause(output = true, Some(items))(preds()) }
+        else Nil
       // named-window resolution (round-13) — AFTER QUALIFY, so inline
       // qualify calls may reference WINDOW-clause names too
       if (windowSpecs.nonEmpty) items.mapInPlace {
@@ -3584,7 +3524,10 @@ object HashQL {
       "list_min", "list_max", "list_sum", "list_unique")
     private val arithOps = Seq("+", "-", "*", "/", "%", "||")
     private def exprFactor(): Expr =
-      if (is("(")) { next(); val e = exprTree(); kw(")"); e }
+      if (qualifyItems.isDefined && peekAt(1) == "(" &&
+          Seq("row_number", "rank", "dense_rank", "percent_rank", "cume_dist",
+            "ntile").exists(is)) qualifyWindow(qualifyItems.get)
+      else if (is("(")) { next(); val e = exprTree(); kw(")"); e }
       else if ((is("cast") || is("try_cast")) && peekAt(1) == "(") {
         // try_cast (round-15): DuckDB/Spark TRY_CAST — NULL on a failed
         // conversion where plain CAST raises under both engines' ANSI
@@ -3855,6 +3798,32 @@ object HashQL {
         ECol(ColRef("", next()))
       }
       else ELit(literal())
+
+    /** An INLINE window call in QUALIFY (round-13): `qualify row_number()
+      * over (…) <= 3` without projecting the rank. The call joins the
+      * item list under a RESERVED alias, read here as that column, and
+      * the executor drops it right after the QUALIFY filter runs; `over
+      * w` names compose (the WINDOW clause resolves after QUALIFY). */
+    private def qualifyWindow(items: scala.collection.mutable.ArrayBuffer[SelectItem]): Expr = {
+      val w =
+        if (is("ntile")) {
+          next(); kw("(")
+          val t = next()
+          require(t.matches("[0-9]+") && t.toInt > 0,
+            s"ntile expects a positive bucket count, got $t")
+          kw(")")
+          windowSpec("ntile", None, buckets = Some(t.toInt))
+        } else {
+          val fn = next().toLowerCase; kw("("); kw(")")
+          windowSpec(fn, None)
+        }
+      val nm = s"graft_qw${items.count {
+        case q: WinCall => q.alias.exists(_.startsWith("graft_qw"))
+        case _ => false
+      }}"
+      items += w.copy(alias = Some(nm))
+      ECol(ColRef("", nm))
+    }
 
     /** Consume `as <alias>` (required) and validate the alias shape. */
     private def aliasAfterAs(what: String): String = {
@@ -4164,39 +4133,6 @@ object HashQL {
         }
       kw(")"); a
     }
-
-    /** A HAVING target resolves to an OUTPUT column name: agg-call
-      * spellings map to the same auto-aliases the projection generates
-      * (`count(*)`→cnt, `sum(t.f)`→sum_f, …), a `t.f` grouping column to
-      * its bare name, and a bare identifier passes through (addressing an
-      * alias directly). Agg-call spellings ALSO return the parsed call —
-      * [[HavingPred.agg]] — so an unprojected aggregate can still be
-      * computed by the grouped select (round-12). */
-    private def havingTarget(): (String, Option[SelectItem]) =
-      if (is("count") ||
-          (Seq("sum", "avg", "min", "max").exists(is) && peekAt(1) == "(")) {
-        val a = plainAgg()
-        (a.alias, Some(a))
-      } else {
-        val t = next()
-        val i = t.indexOf('.')
-        (if (i > 0) t.substring(i + 1) else t, None)
-      }
-
-    /** HAVING/QUALIFY right-hand side (round-12 growth): a literal, or a
-      * full scalar expression over output columns (`cnt * 2`, `n / 10`);
-      * a plain literal keeps its raw value (the pre-grammar shape). */
-    private def havingValue(): Any =
-      // `having <agg> > ( select … )` (round-13) — a scalar-subquery RHS
-      if (is("(") && peekAt(1).equalsIgnoreCase("select")) {
-        next(); kw("select")
-        val sub = selectRest()
-        kw(")")
-        SubVal(sub)
-      } else exprTree() match {
-        case ELit(v) => v
-        case e => e
-      }
 
     private def createJoinRest(): CreateJoin = {
       val clauses = scala.collection.mutable.ArrayBuffer.empty[(String, ColRef, ColRef)]
@@ -4540,8 +4476,8 @@ object HashQL {
     // three-valued: !(null) stays null, so NOT over a null comparison
     // still drops the row — ANSI semantics on both engines
     case Not(p) => !predColumn(cat, p, env)
-    case _: InSelect | _: InSelectTuple | _: InSelectExpr | _: ExistsSelect |
-         _: CmpSelect | _: QuantCmp =>
+    case _: InSelect | _: InSelectTuple | _: ExistsSelect | _: CmpSelect |
+         _: QuantCmp =>
       // unreachable from WHERE (applyWheres plans conjunct forms as
       // semi/anti joins and OR/NOT trees through flaggedFilter) — this
       // guards the remaining Column-only surfaces: CASE conditions
@@ -4835,19 +4771,38 @@ object HashQL {
   private def exprRefs(e: Expr): Set[String] =
     refsOf(_.expr(e), outputSide = true).map(_.column).toSet
 
-  /** The distinct aggregate calls inside an expression tree (CASE
-    * conditions included — `case when sum(x) > 0 then …`), in first-
-    * occurrence order. */
-  private def aggNodes(e: Expr): Seq[EAgg] = {
+  /** The distinct aggregate calls a traversal reaches from `start`
+    * (`_.expr(e)`, `_.pred(p)`; CASE conditions included — `case when
+    * sum(x) > 0 then …`; subquery bodies excluded), in first-occurrence
+    * order. */
+  private def aggNodes(start: Kids => Any): Seq[EAgg] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[EAgg]
-    rewrite(expr = { case a: EAgg => out += a; a }).expr(e)
+    start(rewrite(expr = { case a: EAgg => out += a; a }))
     out.distinct.toSeq
   }
 
-  /** Replace each EAgg with a bare reference to its reserved aggregate
-    * output column — the post-aggregation rewrite. */
-  private def substAggs(e: Expr, m: Map[EAgg, String]): Expr =
-    rewrite(expr = { case a: EAgg => ECol(ColRef("", m(a))) }).expr(e)
+  /** Replace each EAgg with a bare reference to its aggregate output
+    * column — the post-aggregation rewrite. */
+  private def substAggs(m: Map[EAgg, String]): Kids =
+    rewrite(expr = { case a: EAgg => ECol(ColRef("", m(a))) })
+
+  /** The output column each aggregate call in an aggregating select's
+    * HAVING/QUALIFY `preds` reads: a projected item computing the same
+    * aggregate gives its own column (matched by the aggregate, not by
+    * its alias — `max(t.x) as min_x` never serves `min(t.x)`); any other
+    * call gets a hidden `graft_hv<i>` column, returned with its Column
+    * for the caller to add to the same aggregation pass and drop after
+    * the filters run. */
+  private def outputAggs(cat: GraftCatalog, items: Seq[SelectItem], preds: Seq[Pred])
+      : (Map[EAgg, String], Seq[(String, Column)]) = {
+    val projected = items.reverseIterator.collect {
+      case AggExprItem(fn, e, a) => EAgg(fn, e) -> a
+    }.toMap
+    val hidden = aggNodes(k => preds.map(k.pred)).filterNot(projected.contains)
+      .zipWithIndex.map { case (a, i) => a -> s"graft_hv$i" }
+    (projected ++ hidden,
+      hidden.map { case (a, n) => n -> aggColumnOf(cat, a, n) })
+  }
 
   private def aggColumnOf(cat: GraftCatalog, a: EAgg, name: String): Column =
     aggFn(a.fn)(exprColumn(cat, a.arg)).as(name)
@@ -4875,36 +4830,6 @@ object HashQL {
   private def scalarItemLeak(sub: Select, subTables: Set[String]): Seq[String] =
     refsOf(k => sub.items.map(mapItem(_, k))).map(_.table)
       .filter(t => t.nonEmpty && !subTables(t)).distinct
-
-  /** HAVING/QUALIFY right-hand side: a raw literal compares as ever; an
-    * [[Expr]] (round-12 — `having sum_x > cnt * 2`) lowers over the
-    * aggregated frame's OUTPUT columns (Compare.cmp's lit() passes a
-    * Column through untouched). */
-  /** Fold HAVING/QUALIFY conjuncts over a frame: literal and Expr RHSs
-    * are plain Filters; a [[SubVal]] RHS attaches its broadcast scalar
-    * through [[scalarCompare]] (1-row cross join, plan-only) before
-    * filtering and sheds the reserved columns — the round-13 direct
-    * TPC-H-Q11 spelling. */
-  private def applyHavingPreds(cat: GraftCatalog, df0: DataFrame,
-                               hs: Seq[HavingPred],
-                               registry: Option[JoinRegistry]): DataFrame =
-    hs.foldLeft(df0) { (d, h) =>
-      h.value match {
-        case SubVal(sub) =>
-          val (joined, cmpC, reserved) =
-            scalarCompare(cat, d, ColRef("", h.column), h.op, sub, registry)
-          joined.filter(cmpC).drop(reserved: _*)
-        case _ =>
-          d.filter(graft.core.Compare.cmp(col(h.column), h.op, hrhs(cat, h)))
-      }
-    }
-
-  private def hrhs(cat: GraftCatalog, h: HavingPred): Any = h.value match {
-    case _: SubVal => throw new IllegalStateException(
-      "subquery HAVING values lower through applyHavingPreds") // unreachable
-    case e: Expr => exprColumn(cat, e)
-    case v => v
-  }
 
   /** The OUTPUT column name a select item produces (the projection's
     * auto-aliases for aggregate/window calls) — ORDER BY ALL expands
@@ -6220,7 +6145,7 @@ object HashQL {
   /** Evaluate a query-shaped Stmt (Select or Union) to a frame. */
   /** Occurrences of table name `n` in a query AST — FROM, JOIN clauses,
     * and every subquery body (predicate arms, projected scalars,
-    * laterals, HAVING values), recursively.
+    * laterals, HAVING/QUALIFY predicates), recursively.
     * Drives the multi-reference CTE checkpoint decision. */
   private def tableRefCount(st: Stmt, n: String): Int = st match {
     case s: Select =>
@@ -6259,7 +6184,7 @@ object HashQL {
         s.distinct ||
         s.items.exists {
           case _: AggExprItem | _: WinCall | _: ScalarSubItem | _: ExistsItem => true
-          case e: ExprItem => aggNodes(e.expr).nonEmpty
+          case e: ExprItem => aggNodes(_.expr(e.expr)).nonEmpty
           case _ => false
         } || s.wheres.exists(subqueryPred)
     case Union(ss, all, _) => !all || ss.exists(heavyCte) // plain UNION dedups
@@ -6338,28 +6263,21 @@ object HashQL {
     var df = frame
     wheres.foreach {
       // membership subqueries plan as semi/anti joins on the filtered
-      // frame — Catalyst broadcasts the (typically dimension-sized)
-      // subquery side, so the 100 TB shape is one broadcast probe
-      case InSelect(ref, sub) =>
+      // frame — Catalyst broadcasts the subquery side, so the 100 TB
+      // shape is one broadcast probe; a computed head (round-12)
+      // evaluates scan-side inside the join condition
+      case InSelect(e, sub) =>
         val sf = subqueryFrame(cat, sub, registry)
-        df = df.join(sf, df(ref.column) === sf("graft_in_sub"), "left_semi")
+        df = df.join(sf, exprColumn(cat, e) === sf("graft_in_sub"), "left_semi")
+      case Not(InSelect(e, sub)) =>
+        val sf = subqueryFrame(cat, sub, registry)
+        df = df.join(sf, exprColumn(cat, e) === sf("graft_in_sub"), "left_anti")
       // multi-key membership (round-15): ONE semi join over ALL the key
       // pairs — the composite-key decontamination idiom. NULL keys
       // never match (FALSE ≡ UNKNOWN under WHERE).
       case InSelectTuple(refs, sub) =>
         val (sf, on) = tupleIn(cat, df, refs, sub, registry)
         df = df.join(sf, on, "left_semi")
-      case Not(InSelect(ref, sub)) =>
-        val sf = subqueryFrame(cat, sub, registry)
-        df = df.join(sf, df(ref.column) === sf("graft_in_sub"), "left_anti")
-      // computed-head membership (round-12): the key evaluates scan-side
-      // inside the join condition — same semi/anti probe
-      case InSelectExpr(e, sub) =>
-        val sf = subqueryFrame(cat, sub, registry)
-        df = df.join(sf, exprColumn(cat, e) === sf("graft_in_sub"), "left_semi")
-      case Not(InSelectExpr(e, sub)) =>
-        val sf = subqueryFrame(cat, sub, registry)
-        df = df.join(sf, exprColumn(cat, e) === sf("graft_in_sub"), "left_anti")
       case ExistsSelect(sub) =>
         df = existsJoin(cat, df, sub, registry, anti = false)
       case Not(ExistsSelect(sub)) =>
@@ -6367,8 +6285,8 @@ object HashQL {
       // scalar subquery compare — uncorrelated: broadcast the 1-row
       // aggregate (a scan-side filter against a broadcast value);
       // correlated (round-11): decorrelated to groupBy + one equi-join
-      case CmpSelect(ref, op, sub) =>
-        val (joined, cmpC, reserved) = scalarCompare(cat, df, ref, op, sub, registry)
+      case CmpSelect(e, op, sub) =>
+        val (joined, cmpC, reserved) = scalarCompare(cat, df, e, op, sub, registry)
         df = joined.filter(cmpC).drop(reserved: _*)
       // NON-EQUALITY-correlated quantifiers (round-14 — the r13 queue's
       // #5): the grouped-stats decorrelation cannot produce per-outer-
@@ -6444,14 +6362,7 @@ object HashQL {
     val flags = scala.collection.mutable.ArrayBuffer.empty[String]
     def newFlag(): String = { n += 1; val f = s"graft_flag_$n"; flags += f; f }
     val lowered = rewrite(pred = {
-      case InSelect(ref, sub) =>
-        val f = newFlag()
-        val sf = subqueryFrame(cat, sub, registry).distinct()
-          .withColumn(f, lit(true))
-        df = df.join(sf, df(ref.column) === sf("graft_in_sub"), "left")
-          .drop("graft_in_sub")
-        FlagPred(f)
-      case InSelectExpr(e, sub) =>
+      case InSelect(e, sub) =>
         val f = newFlag()
         val sf = subqueryFrame(cat, sub, registry).distinct()
           .withColumn(f, lit(true))
@@ -6468,13 +6379,13 @@ object HashQL {
         val f = newFlag()
         df = existsJoin(cat, df, sub, registry, anti = false, flagCol = Some(f))
         FlagPred(f)
-      case CmpSelect(ref, op, sub) =>
+      case CmpSelect(e, op, sub) =>
         val f = newFlag()
         // the flag keeps the RAW three-valued comparison (no coalesce to
         // false): a NULL lhs or NULL scalar stays NULL, so NOT over a
         // scalar compare drops those rows exactly like the conjunct
         // spelling and ANSI — see FlagPred's scaladoc
-        val (joined, cmpC, reserved) = scalarCompare(cat, df, ref, op, sub, registry)
+        val (joined, cmpC, reserved) = scalarCompare(cat, df, e, op, sub, registry)
         df = joined.withColumn(f, cmpC).drop(reserved: _*)
         FlagPred(f, threeValued = true)
       case QuantCmp(ref, op, quant, sub) =>
@@ -6607,8 +6518,9 @@ object HashQL {
     * scoping). */
   private def rewriteAliases(sel: Select, aliases: Set[String]): Select = {
     def aliased(r: ColRef): Boolean = aliases.contains(r.table)
-    // ORDER BY, DISTINCT ON and HAVING/QUALIFY values address OUTPUT
-    // columns — an aliased ref there maps to its restored output name
+    // ORDER BY, DISTINCT ON and HAVING/QUALIFY address OUTPUT columns —
+    // an aliased ref there maps to its restored output name, while an
+    // aggregate call's argument there reads input rows
     def outRef(r: ColRef): ColRef = if (aliased(r)) ColRef("", r.column) else r
     val itemsBuf = scala.collection.mutable.ArrayBuffer.empty[SelectItem]
     sel.items.foreach {
@@ -6645,12 +6557,14 @@ object HashQL {
     // a nested subquery's (and a lateral body's) own FROM names shadow
     // the outer aliases
     def subSel(s0: Select): Select = deepAliasMap(s0, aliases.diff(fromTables(s0)))
+    val in = rewrite(ref = aliasedRef(aliases), sub = subSel)
     mapSelect(sel.copy(items = itemsBuf.toSeq,
         groupBy = sel.groupBy.map(outRef),
         groupSets = sel.groupSets.map(_.map(outRef)),
         aliases = Nil),
-      rewrite(ref = aliasedRef(aliases), sub = subSel),
-      rewrite(ref = outRef, sub = subSel))
+      in,
+      rewrite(ref = outRef, sub = subSel,
+        expr = { case EAgg(fn, a) => EAgg(fn, in.expr(a)) }))
   }
 
   /** Pure ref rewrite for a NESTED subquery under outer aliases: every
@@ -6926,10 +6840,12 @@ object HashQL {
               "linking every source (a.k = b.k) — the plan still " +
               "contains a cartesian join")
         }
-        // aggregates SPELLED in HAVING but not projected (round-12 — the
-        // TPC-H Q18 idiom `having sum(l_quantity) > 300`): the grouped
-        // branch adds them to the same agg pass under their auto-aliases
-        // and records them here to DROP after the filter runs.
+        // an aggregating branch maps each aggregate call in HAVING and
+        // QUALIFY to the output column it reads ([[outputAggs]]); those
+        // the select list does not project (round-12 — the TPC-H Q18
+        // idiom `having sum(l_quantity) > 300`) join the same agg pass
+        // hidden and are recorded here to DROP after the filters run
+        var outAggs = Map.empty[EAgg, String]
         var havingDrop: Seq[String] = Nil
         // aggregates a window's OVER clause spells that the select list
         // does not produce (round-13 grouped windows) — same add-then-
@@ -6986,13 +6902,15 @@ object HashQL {
             // pass under a reserved name (one shuffle, partial-agg'd),
             // the arithmetic evaluates on the aggregated frame, and the
             // reserved columns drop from the output
-            val aggMap = postExprs.flatMap(e => aggNodes(e.expr)).distinct
+            val aggMap = postExprs.flatMap(e => aggNodes(_.expr(e.expr))).distinct
               .zipWithIndex.map { case (a, i) => a -> s"__ag$i" }.toMap
             val extraAggs = aggMap.toSeq.sortBy(_._2)
               .map { case (a, n) => aggColumnOf(cat, a, n) }
             val base = aggsRaw(cat, items)
-            // HAVING aggregates the select list does NOT produce: same
-            // agg pass (one shuffle), auto-aliased, dropped post-filter
+            val (hvMap, hvCols) = outputAggs(cat, items, having ++ qualify)
+            outAggs = hvMap
+            havingDrop = hvCols.map(_._1)
+            val havingAggs = hvCols.map(_._2)
             val itemAliases = items.flatMap {
               case AggExprItem(_, _, a) => Seq(a)
               case StringAggItem(_, _, a, _, _, _) => Seq(a)
@@ -7000,12 +6918,6 @@ object HashQL {
               case GroupingItem(_, a) => Seq(a)
               case _ => Seq.empty
             }.toSet
-            val havingAdds = having.flatMap(h => h.agg.map(h.column -> _))
-              .distinctBy(_._1)
-              .filterNot { case (n, _) =>
-                itemAliases.contains(n) || gs.exists(_.column == n) }
-            havingDrop = havingAdds.map(_._1)
-            val havingAggs = aggsRaw(cat, havingAdds.map(_._2))
             // window OVER-clause aggregate spellings (round-13 —
             // `rank() over (order by sum(t.x) desc)`): any dep the
             // select list does not already produce joins the SAME
@@ -7015,8 +6927,7 @@ object HashQL {
             val winAdds = items.collect { case w: WinCall => w }
               .flatMap(_.aggDeps).distinctBy(_._1)
               .filterNot { case (n, _) =>
-                itemAliases.contains(n) || gs.exists(_.column == n) ||
-                  havingAdds.exists(_._1 == n) }
+                itemAliases.contains(n) || gs.exists(_.column == n) }
             // EXPRESSION window keys in a grouped select (round-14 —
             // the r13 queue's #3): legal when the expression is a
             // function of the GROUPING KEYS (constant per group), in
@@ -7089,7 +7000,7 @@ object HashQL {
             postExprs.foreach(e => require(!aggd.columns.contains(e.alias),
               s"computed alias ${e.alias} collides with an output column"))
             postExprs.foldLeft(aggd)((d, e) =>
-              d.withColumn(e.alias, exprColumn(cat, substAggs(e.expr, aggMap))))
+              d.withColumn(e.alias, exprColumn(cat, substAggs(aggMap).expr(e.expr))))
               .drop(aggMap.values.toSeq: _*)
               // reserved graft_gk keys carry the BARE `group by <expr>`
               // spelling (no user-visible name) — stripped from the
@@ -7211,7 +7122,7 @@ object HashQL {
                      _: ArgExtremeItem => true
                 // an expression over aggregates is itself an aggregate
                 // output (`sum(a) / sum(b) as r`)
-                case e: ExprItem => aggNodes(e.expr).nonEmpty
+                case e: ExprItem => aggNodes(_.expr(e.expr)).nonEmpty
                 case _ => false
               }
               // all-aggregate select = global aggregation; a MIX of
@@ -7222,14 +7133,17 @@ object HashQL {
                 "aggregates cannot mix with plain fields without GROUP BY")
               if (items.nonEmpty && items.forall(isAggItem)) {
                 val aggExprs = items.collect {
-                  case e: ExprItem if aggNodes(e.expr).nonEmpty => e }
-                val aggMap = aggExprs.flatMap(e => aggNodes(e.expr)).distinct
+                  case e: ExprItem if aggNodes(_.expr(e.expr)).nonEmpty => e }
+                val aggMap = aggExprs.flatMap(e => aggNodes(_.expr(e.expr))).distinct
                   .zipWithIndex.map { case (a, i) => a -> s"__ag$i" }.toMap
+                val (hvMap, hvCols) = outputAggs(cat, items, having ++ qualify)
+                outAggs = hvMap
+                havingDrop = hvCols.map(_._1)
                 val aggAll = aggsRaw(cat, items) ++ aggMap.toSeq.sortBy(_._2)
-                  .map { case (a, n) => aggColumnOf(cat, a, n) }
+                  .map { case (a, n) => aggColumnOf(cat, a, n) } ++ hvCols.map(_._2)
                 val aggd = df.agg(aggAll.head, aggAll.tail: _*)
                 aggExprs.foldLeft(aggd)((d, e) => d.withColumn(e.alias,
-                  exprColumn(cat, substAggs(e.expr, aggMap))))
+                  exprColumn(cat, substAggs(aggMap).expr(e.expr))))
                   .drop(aggMap.values.toSeq: _*)
               }
               else {
@@ -7312,10 +7226,17 @@ object HashQL {
         val groupedWins =
           if (groupBy.nonEmpty) items.collect { case w: WinCall => w }
           else Nil
+        // HAVING and QUALIFY are WHERE over the frame they filter, their
+        // aggregate calls read as the output columns mapped above; a
+        // select that does not aggregate maps none, so an aggregate call
+        // there rejects in the lowering, as it does in WHERE
+        def outputPreds(ps: Seq[Pred]): Seq[Pred] =
+          if (outAggs.isEmpty) ps else ps.map(substAggs(outAggs).pred)
+        val (havingPs, qualifyPs) = (outputPreds(having), outputPreds(qualify))
         val (windowed, havingDone) =
           if (groupedWins.isEmpty) (out, false)
           else {
-            val h = applyHavingPreds(cat, out, having, registry)
+            val h = applyWheres(cat, out, havingPs, registry)
             // expression window keys reproduce on the aggregated frame
             // under their reserved names just before the windows read
             // them (round-14) — dropped with winDrop below
@@ -7323,7 +7244,7 @@ object HashQL {
               d.withColumn(p._1, p._2))
             val w = groupedWins.foldLeft(hp)((d, wc) =>
               d.withColumn(winAlias(wc), winColumn(wc)))
-            (w.drop((havingDrop ++ winDrop).distinct: _*), true)
+            (w.drop(winDrop.distinct: _*), true)
           }
         // a grouped select's outputs come out in select-list order: the
         // aggregation puts aggregates before post-aggregation items and
@@ -7361,19 +7282,17 @@ object HashQL {
               case w: WinCall if w.alias.exists(_.startsWith("graft_qw")) =>
                 w.alias.get
             }
-            applyHavingPreds(cat, afterWin, qualify, registry).drop(qwDrop: _*)
+            applyWheres(cat, afterWin, qualifyPs, registry).drop(qwDrop: _*)
           }
         // HAVING filters the aggregated frame's OUTPUT columns (Catalyst
         // plans it as Filter-over-Aggregate and pushes grouping-key
         // conjuncts below the aggregation — the same plan q_having
-        // proves); an aggregate referenced in HAVING is either projected
-        // in the select list, or (round-12) spelled as a call and added
-        // to the agg pass under its auto-alias — dropped again here.
+        // proves); the hidden HAVING/QUALIFY aggregates drop here.
         // (Already applied pre-window when the select has grouped
         // windows — the ordering invariant above.)
         val havinged =
-          if (havingDone) qualified
-          else applyHavingPreds(cat, qualified, having, registry)
+          (if (havingDone) qualified
+           else applyWheres(cat, qualified, havingPs, registry))
             .drop(havingDrop: _*)
         // DISTINCT over the projected (post-HAVING) rows — one
         // partial-agg shuffle on all output columns, exactly the
@@ -7540,7 +7459,9 @@ object HashQL {
       case _ => None
     }
 
-  /** Plan `t.f <op> (select <agg> from u [where …])` against `outer`.
+  /** Plan `<expr> <op> (select <agg> from u [where …])` against `outer`
+    * (the head evaluates over `outer`: a column, a computed expression, an
+    * aggregate HAVING reads from the aggregated frame).
     *
     * UNCORRELATED: the subquery must be a global aggregate (exactly one
     * row STRUCTURALLY — all items aggregates, no GROUP BY; ANSI errors
@@ -7561,12 +7482,12 @@ object HashQL {
     *
     * Returns (joined frame, the three-valued compare Column, reserved
     * columns to drop after filtering/flagging). */
-  private def scalarCompare(cat: GraftCatalog, outer: DataFrame, ref: ColRef,
+  private def scalarCompare(cat: GraftCatalog, outer: DataFrame, e: Expr,
                             op: String, sub: Select,
                             registry: Option[JoinRegistry])
       : (DataFrame, Column, Seq[String]) = {
     val (joined, v, dt, reserved) = scalarJoin(cat, outer, sub, registry)
-    val lhs = col(ref.column).try_cast(dt)
+    val lhs = exprColumn(cat, e).try_cast(dt)
     val cmpC =
       if (op == "<>") !(lhs === v)
       else graft.core.Compare.cmp(lhs, op, v)
@@ -7613,7 +7534,7 @@ object HashQL {
       case _: AggExprItem => true
       // an expression OVER aggregates (round-12 growth — TPC-H Q17's
       // `0.2 * avg(l_quantity)`) is itself a one-row scalar
-      case e: ExprItem => aggNodes(e.expr).nonEmpty
+      case e: ExprItem => aggNodes(_.expr(e.expr)).nonEmpty
       case _ => false
     },
       "a scalar subquery must be a global aggregate (select count/sum/avg/" +
@@ -7650,7 +7571,7 @@ object HashQL {
       * with sum/avg/min/max in play a matched all-NULL group is itself
       * NULL and must stay NULL. */
     def missValued(scalar: Column, ve: Expr): Column =
-      if (aggNodes(ve).forall(n => countFns(n.fn)))
+      if (aggNodes(_.expr(ve)).forall(n => countFns(n.fn)))
         coalesce(scalar, exprColumn(cat, missExpr(ve)))
       else scalar
     if (eqCorr.isEmpty && rangeCorr.isEmpty) {
@@ -7701,7 +7622,7 @@ object HashQL {
       val keyIdx = outerCols.zipWithIndex.toMap
       val keysDf = outer.select(outerCols.map(col): _*).distinct()
         .toDF(outerCols.indices.map(i => s"graft_sc_k$i"): _*)
-      val nodes = aggNodes(ve)
+      val nodes = aggNodes(_.expr(ve))
       nodes.foreach(n => require(exprTables(n.arg).subsetOf(subTables),
         s"a scalar subquery's aggregate argument must reference the " +
           s"subquery's own tables, got ${exprTables(n.arg).mkString(", ")}"))
@@ -7726,7 +7647,7 @@ object HashQL {
       val agged = matched
         .groupBy(outerCols.indices.map(i => col(s"graft_sc_k$i")): _*)
         .agg(aggCols.head, aggCols.tail: _*)
-        .withColumn("graft_scalar", exprColumn(cat, substAggs(ve, aggMap)))
+        .withColumn("graft_scalar", exprColumn(cat, substAggs(aggMap).expr(ve)))
         .drop(aggMap.values.toSeq: _*)
       val back = outerCols.indices.map(i =>
         outer(outerCols(i)) === agged(s"graft_sc_k$i")).reduce(_ && _)

@@ -291,6 +291,26 @@ class HashQLSpec extends SparkSpec {
     // unsupported op rejected cleanly
     intercept[IllegalArgumentException](
       HashQL.execute(cat, "select count(*) from h group by h.grp having count(*) ~ 'x'"))
+    // HAVING takes WHERE's whole predicate grammar over the aggregated
+    // frame (rows: DuckDB 1.0)
+    Seq("('a', 1)", "('a', 2)", "('b', 4)", "('b', null)", "('c', null)",
+      "('d', 5)", "('d', 6)", "('d', 7)")
+      .foreach(r => HashQL.execute(cat, s"insert into hn (g, x) values $r"))
+    def groups(having: String): Seq[String] =
+      HashQL.execute(cat, "select hn.g, count(*) from hn group by hn.g " +
+        s"having $having").get.select("g").as[String].collect().sorted.toSeq
+    assert(groups("count(*) = 1 or sum(hn.x) > 10") == Seq("c", "d"))
+    assert(groups("not (count(*) > 1)") == Seq("c"))
+    assert(groups("sum(hn.x) between 3 and 4") == Seq("a", "b"))
+    assert(groups("count(*) in (1, 3)") == Seq("c", "d"))
+    assert(groups("sum(hn.x) is null") == Seq("c"))
+    assert(groups("sum(hn.x) is not null") == Seq("a", "b", "d"))
+    assert(groups("sum(hn.x * 2) > 5") == Seq("a", "b", "d"))
+    assert(groups("count(hn.x) < count(*)") == Seq("b", "c"))
+    assert(groups("1 < count(*)") == Seq("a", "b", "d"))
+    assert(groups("hn.g in (select hn.g from hn where hn.x > 4)") == Seq("d"))
+    assert(groups("hn.g not in (select hn.g from hn where hn.x > 4) " +
+      "and count(*) > 1") == Seq("a", "b"))
   }
 
   test("delete removes only predicate-TRUE rows; NULL-predicate rows stay") {
@@ -2337,6 +2357,18 @@ class HashQLSpec extends SparkSpec {
       "select t.g, t.v, row_number() over (partition by t.g order by t.v desc) as rn, " +
         "count(*) over (partition by t.g) as n from t qualify rn <= n - 1").get
     assert(qe.select("v").as[Long].collect().sorted.toSeq == Seq(2L, 3L, 30L))
+    // a HAVING aggregate is matched by the aggregate, never by an alias
+    // another item happens to carry (rows: DuckDB 1.0)
+    Seq("('a', 1.5)", "('a', 2.0)", "('b', 4.0)", "('b', null)", "('c', 1.0)")
+      .foreach(r => HashQL.execute(cat, s"insert into tx (g, x) values $r"))
+    def groups(sql: String): Seq[String] =
+      HashQL.execute(cat, sql).get.select("g").as[String].collect().sorted.toSeq
+    assert(groups("select tx.g, max(tx.x) as min_x from tx group by tx.g " +
+      "having min(tx.x) < 1.8") == Seq("a", "c"))
+    assert(groups("select tx.g, sum(tx.x) as cnt from tx group by tx.g " +
+      "having count(*) = 2") == Seq("a", "b"))
+    assert(groups("select tx.g, count(*) as sum_x from tx group by tx.g " +
+      "having sum(tx.x) > 3") == Seq("a", "b"))
   }
 
   test("multi-column UPDATE SET: simultaneous semantics, duplicate targets reject") {
@@ -2373,6 +2405,19 @@ class HashQLSpec extends SparkSpec {
       "select t.g, count(*) over (partition by t.g) as wcnt from t " +
         "qualify wcnt < 3").get.select("g").as[String].collect().toSet
     assert(small == Set("b"))
+    // QUALIFY takes WHERE's predicate grammar too (rows: DuckDB 1.0)
+    val ends = HashQL.execute(cat,
+      "select t.g, t.v, row_number() over (partition by t.g " +
+        "order by t.v desc) as rn from t qualify rn = 1 or rn = 3 " +
+        "order by t.g, rn").get
+      .select("g", "v").as[(String, Long)].collect().toSeq
+    assert(ends == Seq(("a", 3L), ("a", 1L), ("b", 9L)))
+    // an aggregate call outside an aggregating select rejects as in WHERE,
+    // even where an output column carries its auto-alias
+    val agg = intercept[IllegalArgumentException](HashQL.execute(cat,
+      "select t.g, count(*) over (partition by t.g) as cnt from t " +
+        "qualify count(*) > 1"))
+    assert(agg.getMessage.contains("aggregate calls"), agg.getMessage)
     val e = intercept[IllegalArgumentException](HashQL.execute(cat,
       "select t.g from t qualify g = 'a'"))
     assert(e.getMessage.contains("no window"), e.getMessage)
@@ -3795,6 +3840,26 @@ class HashQLSpec extends SparkSpec {
         "qualify rn <= ( select min(hv.v) from hv ) " +
         "order by hv.g, hv.v").get.collect()
     assert(q.map(_.getString(0)).toSeq == Seq("a", "b", "c")) // rn ≤ 1
+    // a CORRELATED HAVING scalar: the subquery decorrelates against the
+    // aggregated frame's grouping key, and a group whose correlated set
+    // is empty (c) reads count 0 (rows: DuckDB 1.0)
+    Seq("a", "a", "a", "b").foreach(g =>
+      HashQL.execute(cat, s"insert into hu (g) values ('$g')"))
+    val corr = HashQL.execute(cat,
+      "select hv.g, count(*) from hv group by hv.g " +
+        "having count(*) > ( select count(*) from hu where hu.g = hv.g ) " +
+        "order by hv.g").get.collect()
+    assert(corr.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("b", 2L), ("c", 1L)))
+    // a computed head compares with a scalar subquery in WHERE as well
+    Seq(("2020-02-01", 1), ("2021-03-01", 3), ("2022-01-01", 5)).foreach {
+      case (d0, v) => HashQL.execute(cat,
+        s"insert into hd (d, v) values (timestamp '$d0', $v)") }
+    HashQL.execute(cat, "insert into yr (y) values (2020), (2021)")
+    val yr = HashQL.execute(cat,
+      "select hd.v from hd where year(hd.d) > ( select min(yr.y) from yr ) " +
+        "order by hd.v").get
+    assert(yr.as[Long].collect().toSeq == Seq(3L, 5L))
     // CREATE AGG VIEW definitions reject HAVING wholesale (subquery
     // values included) — the bare-grouped-aggregation contract
     val e = intercept[IllegalArgumentException](HashQL.execute(cat,

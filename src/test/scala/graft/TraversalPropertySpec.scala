@@ -86,11 +86,11 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
       Gen.zip(docRefGen, cmpOpGen, litGen).map {
         case (r, op, v) => Cmp(ECol(r), op, ELit(v)) },
       refGen.map(FtsMatch(_, "cat | dog")),
-      Gen.zip(refGen, subGen).map { case (r, s) => InSelect(r, s) },
+      Gen.zip(refGen, subGen).map { case (r, s) => InSelect(ECol(r), s) },
       Gen.zip(Gen.listOfN(2, refGen), subGen).map { case (rs, s) => InSelectTuple(rs, s) },
       Gen.zip(refGen, refGen).map { case (a, b) => Cmp(ECol(a), "=", ECol(b)) },
       subGen.map(ExistsSelect(_)),
-      Gen.zip(refGen, opGen, subGen).map { case (r, op, s) => CmpSelect(r, op, s) },
+      Gen.zip(refGen, opGen, subGen).map { case (r, op, s) => CmpSelect(ECol(r), op, s) },
       Gen.zip(refGen, opGen, Gen.oneOf("any", "all"), subGen).map {
         case (r, op, q, s) => QuantCmp(r, op, q, s) },
       Gen.zip(refGen, opGen, refGen).map { case (i, op, o) => CmpNotTrue(i, op, o) },
@@ -104,7 +104,9 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
         Gen.listOfN(2, sub).map(And(_)),
         Gen.listOfN(2, sub).map(Or(_)),
         sub.map(Not(_)),
-        Gen.zip(e, subGen).map { case (x, s) => InSelectExpr(x, s) },
+        // the subquery arms over a computed head
+        Gen.zip(e, subGen).map { case (x, s) => InSelect(x, s) },
+        Gen.zip(e, opGen, subGen).map { case (x, op, s) => CmpSelect(x, op, s) },
         e.map(BoolExpr(_)),
         // the one comparison over a computed head
         Gen.zip(e, cmpOpGen, e).map { case (l, op, r) => Cmp(l, op, r) })
@@ -146,9 +148,9 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
     jl <- refGen; jr <- refGen; xl <- refGen; xr <- refGen
     wheres <- Gen.listOfN(2, predGen(1))
     gb <- Gen.listOfN(1, refGen)
-    hv <- Gen.oneOf[Any](5L, ECol(ColRef("", "cnt")))
-    hagg <- Gen.oneOf(refGen.map(r => AggExprItem("sum", ECol(r), s"sum_${r.column}")),
-      Gen.const(AggExprItem("count_star", ELit(1L), "cnt")))
+    hv <- Gen.oneOf[Expr](ELit(5L), ECol(ColRef("", "cnt")))
+    hagg <- Gen.oneOf(refGen.map(r => EAgg("sum", ECol(r))),
+      Gen.const(EAgg("count_star", ELit(1L))))
     ob <- exprGen(1)
     don <- refGen
     lat <- subGen
@@ -157,10 +159,9 @@ class TraversalPropertySpec extends AnyFunSuite with PropertySampling {
   } yield Select(items, "t",
     Seq(JoinClause("u", jl, jr, extra = Seq((xl, "<", xr), (xl, "=", 3L)))),
     wheres, gb,
-    having = Seq(HavingPred(hagg.alias, ">", hv, Some(hagg)),
-      HavingPred("cnt", ">", SubVal(sv))),
+    having = Seq(Cmp(hagg, ">", hv), CmpSelect(hagg, ">", sv)),
     orderBy = Seq((ob, false, None)),
-    qualify = Seq(HavingPred("rn", "<=", ECol(ColRef("", "n")))),
+    qualify = Seq(Cmp(ECol(ColRef("", "rn")), "<=", ECol(ColRef("", "n")))),
     groupSets = Seq(gb, Nil),
     distinctOn = Seq(don),
     laterals = Seq(("lat", lat, false)),
